@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -23,10 +23,10 @@ import org.apache.spark.sql.functions._
   *  - events before a key's last DELETE are dead history and never
   *    leak into a re-inserted row.
   *
-  * Scale shape: one explode of post-images to (key, column, value)
-  * rows, one max_by aggregation per (key, column), one conditional-
-  * aggregation pivot back to rows, one join against base state — all
-  * shuffle-partitioned by key, no windows over whole tables, no
+  * Scale shape: one keyed aggregate over the batch's events and one
+  * full-outer join of its output against the (truncate-fenced) base,
+  * so the per-batch work is one shuffle of the events plus the join —
+  * no explode to cells, no pivot, no windows over whole tables, no
   * driver-side state. Skewed hot keys are bounded by events-per-key
   * and AQE skew splitting.
   */
@@ -43,8 +43,6 @@ object Changelog {
       table: String,
       keyCol: String,
       valueCols: Seq[String]): DataFrame = {
-    val spark = base.sparkSession
-
     val tableEvts = events.filter(col("table") === table)
 
     // TRUNCATE fence: a truncate at lsn T kills the base state and
@@ -68,56 +66,37 @@ object Changelog {
         col("lsn"), col("operation"), col("new_values"))
       .filter(col("__key").isNotNull)
 
-    // Last event per key decides existence; last DELETE per key fences
-    // off dead history.
-    val lastPerKey = evts
+    // One aggregate per key: the last event decides existence, the
+    // last DELETE fences off dead history, and per column the latest
+    // live cell — a post-image value other than the sentinel (which
+    // means "keep previous"). The struct keeps a column explicitly
+    // set to NULL distinguishable from "no cell", and carries the
+    // cell's lsn for the fence check below.
+    val isDelete = col("operation") === "DELETE"
+    val lastCells = valueCols.map { c =>
+      val v = col("new_values")(c)
+      val live = !isDelete && map_contains_key(col("new_values"), c) &&
+        (v.isNull || v =!= CdcEvent.UnchangedSentinel)
+      max_by(struct(col("lsn"), v.as("v")), when(live, col("lsn"))).as(s"__cell_$c")
+    }
+    val byKey = evts
       .groupBy("__key")
-      .agg(
-        max_by(col("operation"), col("lsn")).as("__last_op"),
-        max(when(col("operation") === "DELETE", col("lsn"))).as("__last_del"))
+      .agg(max_by(col("operation"), col("lsn")).as("__last_op"),
+        max(when(isDelete, col("lsn"))).as("__last_del") +: lastCells: _*)
 
-    // Live column assignments: post-image cells after the delete fence,
-    // sentinel cells dropped (they mean "keep previous").
-    val cells = evts
-      .join(lastPerKey, "__key")
-      .filter(col("operation") =!= "DELETE" &&
-        (col("__last_del").isNull || col("lsn") > col("__last_del")))
-      .select(col("__key"), col("lsn"), explode(col("new_values")).as(Seq("__col", "__val")))
-      .filter(col("__col") =!= keyCol && col("__col").isin(valueCols: _*))
-      .filter(col("__val").isNull || col("__val") =!= CdcEvent.UnchangedSentinel)
-      .groupBy("__key", "__col")
-      // struct wrapper: a column explicitly set to NULL must beat the
-      // base value, so "latest cell" must be distinguishable from
-      // "no cell" after the pivot.
-      .agg(max_by(struct(col("__val")), col("lsn")).as("__cell"))
-
-    val setCols = valueCols.map(c =>
-      first(when(col("__col") === c, col("__cell")), ignoreNulls = true).as(s"__set_$c"))
-    val pivoted = cells
-      .groupBy("__key")
-      .agg(setCols.head, setCols.tail: _*)
-
-    // Keys whose last event is not DELETE are upserts; they take the
-    // latest cell when one exists, else the base value (pre-existing
-    // keys whose every event left the column "[unchanged]").
-    val upsertKeys = lastPerKey.filter(col("__last_op") =!= "DELETE").select("__key")
-    val baseByKey = fencedBase.select(col(keyCol).as("__key") +: valueCols.map(c => col(c).as(s"__base_$c")): _*)
-
-    val upserts = upsertKeys
-      .join(pivoted, Seq("__key"), "left")
-      .join(baseByKey, Seq("__key"), "left")
-      .select(col("__key").as(keyCol) +: valueCols.map { c =>
-        when(col(s"__set_$c").isNotNull, col(s"__set_$c")("__val"))
-          .otherwise(col(s"__base_$c")).as(c)
+    // Base rows no event touched survive (no `__key`); a touched key
+    // survives unless its last event is DELETE, taking each column's
+    // latest cell after its last DELETE, else the base value (a
+    // pre-existing key whose every later event left the column
+    // "[unchanged]").
+    fencedBase
+      .join(byKey, col(keyCol) === col("__key"), "full_outer")
+      .filter(col("__key").isNull || col("__last_op") =!= "DELETE")
+      .select(coalesce(col("__key"), col(keyCol)).as(keyCol) +: valueCols.map { c =>
+        val cell = col(s"__cell_$c")
+        val live = cell("lsn") > coalesce(col("__last_del"), lit(Long.MinValue))
+        when(live, cell("v")).otherwise(col(c)).as(c)
       }: _*)
-
-    // Base rows not touched by any event survive unchanged; touched
-    // keys are replaced by their upsert row (or dropped if deleted).
-    val untouched = fencedBase
-      .join(evts.select(col("__key").as(keyCol)).distinct(), Seq(keyCol), "left_anti")
-      .select(col(keyCol) +: valueCols.map(col): _*)
-
-    untouched.unionByName(upserts)
   }
 
   /** Changelog → SCD type-2 history: one row per VERSION of each key,

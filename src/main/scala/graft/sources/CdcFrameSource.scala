@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.io.{DataInputStream, DataOutputStream, EOFException}
+import java.io.{BufferedInputStream, DataInputStream, DataOutputStream, EOFException}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util
 
@@ -74,7 +74,8 @@ final class CdcFrameScan(dir: String, maxFramesPerTrigger: Long, txnAtomic: Bool
     new CdcMicroBatchStream(dir, maxFramesPerTrigger, txnAtomic)
   override def toBatch: Batch = new Batch {
     override def planInputPartitions(): Array[InputPartition] =
-      Array(CdcFramePartition(dir, Long.MinValue, Long.MaxValue))
+      Array(CdcFramePartition(
+        CdcFrameFiles.frameFiles(dir).map(_.toAbsolutePath.toString), Long.MinValue, Long.MaxValue))
     override def createReaderFactory(): PartitionReaderFactory = CdcFrameReaderFactory
   }
 }
@@ -84,7 +85,10 @@ final case class LsnOffset(lsn: Long) extends Offset {
   override def json(): String = lsn.toString
 }
 
-final case class CdcFramePartition(dir: String, fromExclusive: Long, toInclusive: Long)
+/** The frames of `files` with `fromExclusive < lsn <= toInclusive`.
+  * The driver lists only the files whose LSN span overlaps the range,
+  * so a batch never opens a file it admits nothing from. */
+final case class CdcFramePartition(files: Seq[String], fromExclusive: Long, toInclusive: Long)
   extends InputPartition
 
 /** @param txnAtomic opt-in transaction-atomic emit (EXCEEDS the
@@ -180,14 +184,14 @@ final class CdcMicroBatchStream(dir: String, maxFramesPerTrigger: Long, txnAtomi
   private val PgBeginTag: Byte = 'B'.toByte
   private val nonTxnWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
 
-  override def reportLatestOffset(): Offset = {
-    val lsns = CdcFrameFiles.lsnsAfter(dir, Long.MinValue)
-    if (lsns.isEmpty) null else LsnOffset(lsns.last)
-  }
+  override def reportLatestOffset(): Offset =
+    CdcFrameFiles.latestLsn(dir).map(LsnOffset).orNull
 
-  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] =
-    Array(CdcFramePartition(
-      dir, start.asInstanceOf[LsnOffset].lsn, end.asInstanceOf[LsnOffset].lsn))
+  override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
+    val from = start.asInstanceOf[LsnOffset].lsn
+    val to = end.asInstanceOf[LsnOffset].lsn
+    Array(CdcFramePartition(CdcFrameFiles.filesOverlapping(dir, from, to), from, to))
+  }
 
   override def createReaderFactory(): PartitionReaderFactory = CdcFrameReaderFactory
 
@@ -207,14 +211,11 @@ final class CdcMicroBatchStream(dir: String, maxFramesPerTrigger: Long, txnAtomi
 object CdcFrameReaderFactory extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[CdcFramePartition]
+    // one stream = one ordered partition: the range's frames from the
+    // files the driver planned, in lsn order
     new PartitionReader[InternalRow] {
-      // one stream = one ordered partition; sort restores lsn order
-      // across files regardless of listing order
-      private val frames = CdcFrameFiles
-        .readDir(p.dir)
-        .filter(r => r._1 > p.fromExclusive && r._1 <= p.toInclusive)
-        .sortBy(_._1)
-        .iterator
+      private val frames =
+        CdcFrameFiles.read(p.files, p.fromExclusive, p.toInclusive).iterator
       private var current: (Long, Long, Array[Byte]) = _
       override def next(): Boolean =
         if (frames.hasNext) { current = frames.next(); true } else false
@@ -249,7 +250,7 @@ object CdcFrameFiles {
       StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
   }
 
-  private def frameFiles(dir: String): Seq[Path] = {
+  private[sources] def frameFiles(dir: String): Seq[Path] = {
     val d = Paths.get(dir)
     if (!Files.isDirectory(d)) Seq.empty
     else {
@@ -261,79 +262,84 @@ object CdcFrameFiles {
     }
   }
 
-  def readDir(dir: String): Seq[(Long, Long, Array[Byte])] =
-    frameFiles(dir).flatMap(readFile)
-
-  private def readFile(file: Path): Seq[(Long, Long, Array[Byte])] = {
-    val in = new DataInputStream(Files.newInputStream(file))
-    val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Array[Byte])]()
-    var eof = false
+  /** Walk one file's records through a buffered stream (one syscall
+    * per buffer, not per header field). `onRecord(lsn, ingestMicros,
+    * len, in)` must consume exactly the `len` payload bytes. A
+    * truncated record throws `EOFException`. */
+  private def eachRecord(file: Path)(onRecord: (Long, Long, Int, DataInputStream) => Unit): Unit = {
+    val in = new DataInputStream(new BufferedInputStream(Files.newInputStream(file)))
     try {
-      while (!eof) {
-        val lsn = try Some(in.readLong()) catch { case _: EOFException => eof = true; None }
-        lsn.foreach { l =>
-          val ts = in.readLong()
-          val len = in.readInt()
-          val payload = new Array[Byte](len)
-          in.readFully(payload)
-          buf += ((l, ts, payload))
+      var more = true
+      while (more) {
+        val lsn = try in.readLong() catch { case _: EOFException => more = false; 0L }
+        if (more) {
+          val ingestMicros = in.readLong()
+          onRecord(lsn, ingestMicros, in.readInt(), in)
         }
       }
     } finally in.close()
-    buf.toSeq
   }
 
-  /** Driver-side offset-planning cache: absolute file path →
-    * (size, mtimeMillis, (lsn, tag) pairs). The tag is each payload's
-    * FIRST byte — the pgoutput message tag ('B'/'C'/'I'/…; 0 for an
-    * empty payload) — read for free during the skip-scan so the
-    * txn-atomic planner can spot Commit frames without touching
-    * payload bodies. Frame files are immutable once atomically
-    * renamed into place, so (size, mtime) validates an entry; `write`
-    * REPLACE_EXISTING overwrites change both. Without this,
-    * `latestOffset` re-read every frame file's full payload on the
-    * driver at every trigger (ProcessingTime 0 ⇒ unbounded IO/fd
-    * churn as the feed directory grows). */
-  private[sources] val lsnCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long, Seq[(Long, Byte)])]()
+  /** The frames of `files` with `fromExclusive < lsn <= toInclusive`,
+    * in lsn order (files may be listed out of lsn order). Payload
+    * bodies outside the range are skipped, never copied. */
+  private[sources] def read(
+      files: Seq[String], fromExclusive: Long, toInclusive: Long): Seq[(Long, Long, Array[Byte])] = {
+    val buf = scala.collection.mutable.ArrayBuffer[(Long, Long, Array[Byte])]()
+    files.foreach(f => eachRecord(Paths.get(f)) { (lsn, ingestMicros, len, in) =>
+      if (lsn > fromExclusive && lsn <= toInclusive) {
+        val payload = new Array[Byte](len)
+        in.readFully(payload)
+        buf += ((lsn, ingestMicros, payload))
+      } else in.skipNBytes(len.toLong)
+    })
+    buf.sortBy(_._1).toSeq
+  }
 
-  /** (LSN, tag byte) in one file, skipping payload bodies; cached
-    * (see above). */
-  private def lsnsInFile(file: Path): Seq[(Long, Byte)] = {
+  /** One file's planning index: its (lsn, tag) list and LSN span. The
+    * tag is each payload's FIRST byte — the pgoutput message tag
+    * ('B'/'C'/'I'/…; 0 for an empty payload) — so the txn-atomic
+    * planner can spot Commit frames without touching payload bodies.
+    * An empty file has `minLsn > maxLsn` and overlaps no range. */
+  private[sources] final case class FileIndex(
+      size: Long, mtimeMillis: Long, frames: Seq[(Long, Byte)]) {
+    val minLsn: Long = if (frames.isEmpty) Long.MaxValue else frames.iterator.map(_._1).min
+    val maxLsn: Long = if (frames.isEmpty) Long.MinValue else frames.iterator.map(_._1).max
+  }
+
+  /** Driver-side planning cache: absolute file path → [[FileIndex]].
+    * Frame files are immutable once atomically renamed into place, so
+    * (size, mtime) validates an entry; `write`'s REPLACE_EXISTING
+    * overwrites change both. Each file is skip-scanned once; after
+    * that, planning a trigger costs O(files) — files whose `maxLsn`
+    * is at or below the start offset are passed over by their span
+    * alone, without touching their frame lists. */
+  private[sources] val lsnCache =
+    new java.util.concurrent.ConcurrentHashMap[String, FileIndex]()
+
+  private def indexOf(file: Path): FileIndex = {
     val key = file.toAbsolutePath.toString
     val size = Files.size(file)
     val mtime = Files.getLastModifiedTime(file).toMillis
     val hit = lsnCache.get(key)
-    if (hit != null && hit._1 == size && hit._2 == mtime) hit._3
+    if (hit != null && hit.size == size && hit.mtimeMillis == mtime) hit
     else {
-      val in = new DataInputStream(new java.io.BufferedInputStream(Files.newInputStream(file)))
       val buf = scala.collection.mutable.ArrayBuffer[(Long, Byte)]()
-      try {
-        var eof = false
-        while (!eof) {
-          val lsn = try Some(in.readLong()) catch { case _: EOFException => eof = true; None }
-          lsn.foreach { l =>
-            in.readLong() // ingestMicros
-            val len = in.readInt()
-            val tag = if (len > 0) in.readByte() else 0: Byte
-            in.skipNBytes(len.toLong - (if (len > 0) 1 else 0)) // EOFException on truncation, like readFully
-            buf += ((l, tag))
-          }
-        }
-      } finally in.close()
-      val lsns = buf.toSeq
-      lsnCache.put(key, (size, mtime, lsns))
-      lsns
+      eachRecord(file) { (lsn, _, len, in) =>
+        val tag = if (len > 0) in.readByte() else 0: Byte
+        in.skipNBytes(len.toLong - (if (len > 0) 1 else 0))
+        buf += ((lsn, tag))
+      }
+      val idx = FileIndex(size, mtime, buf.toSeq)
+      lsnCache.put(key, idx)
+      idx
     }
   }
 
-  /** (LSN, pgoutput tag) strictly after `from`, ascending (driver-side
-    * listing for offset planning). Payload bodies are never read here:
-    * per-file lists come from [[lsnsInFile]]'s skip-scan +
-    * immutability cache. Entries for files trimmed away
-    * (feedback-based deletion) are pruned so the cache tracks the
-    * live directory. */
-  def framesAfter(dir: String, from: Long): Seq[(Long, Byte)] = {
+  /** Every frame file of `dir` with its index. Entries for files
+    * trimmed away (feedback-based deletion) are pruned so the cache
+    * tracks the live directory. */
+  private def indexed(dir: String): Seq[(Path, FileIndex)] = {
     val files = frameFiles(dir)
     val live = files.map(_.toAbsolutePath.toString).toSet
     // prune only DIRECT children of this dir: a prefix match would
@@ -344,12 +350,28 @@ object CdcFrameFiles {
       val parent = Paths.get(k).getParent
       parent != null && parent.toString == dirAbs && !live.contains(k)
     }
-    files.flatMap(lsnsInFile).filter(_._1 > from).sortBy(_._1)
+    files.map(f => (f, indexOf(f)))
   }
+
+  /** (LSN, pgoutput tag) strictly after `from`, ascending (driver-side
+    * listing for offset planning). */
+  def framesAfter(dir: String, from: Long): Seq[(Long, Byte)] =
+    indexed(dir).filter(_._2.maxLsn > from)
+      .flatMap(_._2.frames.filter(_._1 > from)).sortBy(_._1)
 
   /** LSNs strictly after `from`, ascending. */
   def lsnsAfter(dir: String, from: Long): Seq[Long] =
     framesAfter(dir, from).map(_._1)
+
+  /** The newest LSN in `dir`, if it holds any frame. */
+  private[sources] def latestLsn(dir: String): Option[Long] =
+    indexed(dir).map(_._2).filter(_.frames.nonEmpty).map(_.maxLsn).maxOption
+
+  /** The files of `dir` whose LSN span overlaps `(from, to]`. */
+  private[sources] def filesOverlapping(dir: String, from: Long, to: Long): Seq[String] =
+    indexed(dir).collect {
+      case (f, i) if i.maxLsn > from && i.minLsn <= to => f.toAbsolutePath.toString
+    }
 
   /** Last committed LSN published to the capture side, if any. */
   def readFeedback(dir: String): Option[Long] = {
