@@ -47,20 +47,21 @@ object Changelog {
 
     // TRUNCATE fence: a truncate at lsn T kills the base state and
     // every event before T for the whole table — only re-inserts
-    // after the LAST truncate can contribute. The fence is a 1-row
-    // aggregate broadcast onto both inputs (one scalar per table —
-    // never a per-key shuffle; at 100 TB this is a map-side filter).
-    val lastTrunc = broadcast(
-      tableEvts.agg(
-        max(when(col("operation") === "TRUNCATE", col("lsn"))).as("__tr_lsn")))
-    val fencedBase = base.crossJoin(lastTrunc)
-      .filter(col("__tr_lsn").isNull).drop("__tr_lsn")
+    // after the LAST truncate can contribute. The fence is one scalar
+    // per table (never a per-key shuffle; at 100 TB this is a map-side
+    // filter), computed by a scalar subquery: every use of it is the
+    // same subquery, so it runs once per query and both inputs filter
+    // against its value. (A broadcast 1-row aggregate joined onto each
+    // input ran twice when `events` was cached, as it is in a
+    // micro-batch: adaptive execution reused neither the broadcast nor
+    // its scan of the cache.)
+    val lastTrunc = tableEvts
+      .agg(max(when(col("operation") === "TRUNCATE", col("lsn"))))
+      .scalar()
+    val fencedBase = base.filter(lastTrunc.isNull)
 
     val evts = tableEvts
-      .crossJoin(lastTrunc)
-      .filter(col("operation") =!= "TRUNCATE" &&
-        (col("__tr_lsn").isNull || col("lsn") > col("__tr_lsn")))
-      .drop("__tr_lsn")
+      .filter(col("operation") =!= "TRUNCATE" && (lastTrunc.isNull || col("lsn") > lastTrunc))
       .select(
         coalesce(col("new_values")(keyCol), col("old_values")(keyCol)).as("__key"),
         col("lsn"), col("operation"), col("new_values"))

@@ -3,8 +3,10 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.cdc._
+import graft.util.Jobs
 
 /** The end-to-end streaming slice (SURVEY §3.1 mapped to Structured
   * Streaming): ordered pgoutput frames → per-partition decode →
@@ -100,9 +102,23 @@ object CdcPipeline {
       sortByLsn = true, registryDir = registryDir)
 
   /** One micro-batch of the sink side: append the published wire
-    * events to the changelog and MERGE them into the state store.
-    * Idempotent per `batchId` — Structured Streaming replays the last
-    * uncommitted batch after a crash, so both effects guard on it:
+    * events to the changelog (K1) and MERGE them into the state store
+    * (K2). The two sinks are independent, so they run side by side
+    * ([[graft.util.Jobs.concurrently]]), both reading one cached copy
+    * of the batch.
+    *
+    * Decoded once: the decoder keeps per-stream state (relation
+    * registry, v2 streamed-transaction buffer), so the batch must not
+    * be decoded once per sink. Both sinks start on the still-empty
+    * cache; Spark's block locking lets the first task that reaches a
+    * partition decode and store it while the other sink's tasks wait
+    * for that block and read it. (Materializing the cache with a
+    * count before the fork gives the same guarantee for one more job
+    * per batch, and measured no faster.)
+    *
+    * Exactly-once: Structured Streaming replays the last uncommitted
+    * batch after a crash, so both effects are idempotent per
+    * `batchId`:
     *  - K1 writes to a `batch=<id>` subdirectory with OVERWRITE (a
     *    replay rewrites the same files; plain append would duplicate
     *    every event of the replayed batch);
@@ -110,7 +126,14 @@ object CdcPipeline {
     *    version >= batchId (the replayed MERGE already happened; it
     *    must ALSO not re-run because `latest` reads version N lazily
     *    while `write` overwrites the same directory — Spark deletes
-    *    the target before the scan runs, corrupting recovery). */
+    *    the target before the scan runs, corrupting recovery), and a
+    *    version becomes visible only when `LATEST` is renamed onto it
+    *    after its files are complete.
+    * When either sink throws, the other's Spark jobs are cancelled and
+    * awaited before the exception leaves this method, so the replay
+    * never races a stale write into `batch=<id>` or `v=<id>`; it finds
+    * each sink either done (K2 is then skipped, K1 rewritten) or not
+    * visible, and redoes it. */
   def processBatch(batch: DataFrame, batchId: Long, base: DataFrame,
       cfg: SinkConfig, store: StateStore): Unit = {
     val published = cfg.publishedTables
@@ -118,19 +141,20 @@ object CdcPipeline {
       .getOrElse(batch)
     val b = published.cache()
     try {
-      // K1: changelog sink, partitioned by table so downstream scans
-      // prune; repartition by (table, key) keeps a key's history in
-      // one file per batch (ordering within partition).
-      b.repartition(col("table"),
-          coalesce(col("new_values")(cfg.keyCol), col("old_values")(cfg.keyCol)))
-        .write.mode("overwrite").partitionBy("table")
-        .parquet(s"${cfg.eventsOutDir}/batch=$batchId")
-      // K2: state MERGE, guarded against replay.
-      if (store.latestVersion.forall(_ < batchId)) {
-        val current = store.latest(b.sparkSession).getOrElse(base)
-        val next = Changelog.apply(current, b, cfg.table, cfg.keyCol, cfg.valueCols)
-        store.write(next, batchId)
-      }
+      Jobs.concurrently(
+        // K1: changelog sink, partitioned by table so downstream scans
+        // prune; repartition by (table, key) keeps a key's history in
+        // one file per batch (ordering within partition).
+        () => b.repartition(col("table"),
+            coalesce(col("new_values")(cfg.keyCol), col("old_values")(cfg.keyCol)))
+          .write.mode("overwrite").partitionBy("table")
+          .parquet(s"${cfg.eventsOutDir}/batch=$batchId"),
+        // K2: state MERGE, guarded against replay.
+        () => if (store.latestVersion.forall(_ < batchId)) {
+          val current = store.latest(b.sparkSession).getOrElse(base)
+          store.write(Changelog.apply(current, b, cfg.table, cfg.keyCol, cfg.valueCols), batchId)
+        })
+      ()
     } finally { b.unpersist(); () }
   }
 
@@ -172,10 +196,13 @@ object CdcPipeline {
   }
 
   /** Versioned parquet state store with an atomically renamed LATEST
-    * pointer: write v=<batch>, then point LATEST at it. Replayed
-    * batches overwrite their own version — idempotent. */
+    * pointer: write v=<batch> and its schema, then point LATEST at it.
+    * Replayed batches overwrite their own version — idempotent. */
   final class StateStore(dir: String) {
     private val fs = new java.io.File(dir)
+
+    private def schemaFile(v: Long): java.nio.file.Path =
+      new java.io.File(fs, s"v=$v/_schema.json").toPath
 
     def latestVersion: Option[Long] = {
       val f = new java.io.File(fs, "LATEST")
@@ -183,11 +210,22 @@ object CdcPipeline {
       else None
     }
 
+    /** The latest version, read with the schema `write` recorded, so
+      * opening it runs no schema-inference job. (A version written
+      * without a schema file falls back to inference.) */
     def latest(spark: SparkSession): Option[DataFrame] =
-      latestVersion.map(v => spark.read.parquet(s"$dir/v=$v"))
+      latestVersion.map { v =>
+        val f = schemaFile(v)
+        val reader =
+          if (!java.nio.file.Files.exists(f)) spark.read
+          else spark.read.schema(DataType.fromJson(java.nio.file.Files.readString(f)).asInstanceOf[StructType])
+        reader.parquet(s"$dir/v=$v")
+      }
 
     def write(df: DataFrame, batchId: Long): Unit = {
       df.write.mode("overwrite").parquet(s"$dir/v=$batchId")
+      // `_`-prefixed: parquet listing skips it
+      java.nio.file.Files.writeString(schemaFile(batchId), df.schema.json)
       val tmp = new java.io.File(fs, s".LATEST.$batchId.tmp")
       java.nio.file.Files.write(tmp.toPath, batchId.toString.getBytes)
       java.nio.file.Files.move(tmp.toPath, new java.io.File(fs, "LATEST").toPath,

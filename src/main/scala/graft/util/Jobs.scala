@@ -1,5 +1,11 @@
 package graft.util
 
+import java.util.concurrent.{Callable, ExecutionException, ExecutorCompletionService, Executors, ThreadFactory, TimeUnit}
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
+
 /** Overlap INDEPENDENT eager Spark jobs (optimization guide §2.6).
   *
   * Spark's scheduler happily runs several jobs at once inside one
@@ -17,33 +23,61 @@ package graft.util
   */
 object Jobs {
 
+  private val ids = new AtomicLong()
+
+  /** Pool threads are named `graft-jobs-<n>`, so a thread dump of a
+    * stuck caller shows which thunk each thread is running. */
+  private val threads: ThreadFactory = (r: Runnable) =>
+    new Thread(r, s"graft-jobs-${ids.incrementAndGet()}")
+
   /** Run the thunks concurrently and return their results in order.
     * A failing thunk rethrows its ORIGINAL exception (not the
-    * ExecutionException wrapper) so error surfaces are unchanged. */
+    * ExecutionException wrapper) so error surfaces are unchanged.
+    *
+    * The thunks' Spark jobs carry a job tag unique to this call. When
+    * one thunk fails, the tag is cancelled (tasks interrupted) and the
+    * siblings' threads awaited BEFORE the exception is rethrown:
+    * interrupting the submitting thread alone does not stop the Spark job
+    * it submitted, so without the tag a failed caller's background
+    * jobs would outlive it — overlapping whatever runs next, or
+    * racing a retry's writes to the same output. */
   def concurrently[A](thunks: (() => A)*): Seq[A] =
     if (thunks.sizeIs <= 1) thunks.map(_()).toSeq
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
+      val sc = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession).map(_.sparkContext)
+      val tag = s"graft-jobs-call-${ids.incrementAndGet()}"
+      val pool = Executors.newFixedThreadPool(thunks.size, threads)
       try {
-        val futs = thunks.map(t =>
-          pool.submit(new java.util.concurrent.Callable[A] { def call(): A = t() }))
-        try
-          futs.map { f =>
-            try f.get()
-            catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-          }.toSeq
-        catch { case e: Throwable =>
-          // On failure, cancel the surviving siblings and WAIT for them
-          // below (shutdown alone neither cancels nor awaits), so a
-          // failed query's background Spark jobs cannot overlap — and
-          // contaminate the timing of — whatever runs next (ADVICE r21).
+        val done = new ExecutorCompletionService[A](pool)
+        val futs = thunks.map { t =>
+          done.submit(new Callable[A] { def call(): A = tagged(sc, tag)(t()) })
+        }
+        try {
+          // in completion order, so the first failure is seen at once
+          // rather than after every thunk before it has finished
+          thunks.foreach { _ =>
+            try done.take().get()
+            catch { case e: ExecutionException => throw e.getCause }
+          }
+          futs.map(_.get()).toSeq
+        } catch { case e: Throwable =>
+          sc.foreach(_.cancelJobsWithTag(tag, "a sibling in Jobs.concurrently failed"))
           futs.foreach(_.cancel(true))
-          throw e
+          throw e // after the finally below has awaited the siblings
         }
       } finally {
         pool.shutdown()
-        pool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
+        pool.awaitTermination(60, TimeUnit.SECONDS)
         ()
       }
     }
+
+  /** Run `body` with `tag` on every Spark job this thread submits. */
+  private def tagged[A](sc: Option[SparkContext], tag: String)(body: => A): A = sc match {
+    case None => body
+    case Some(c) =>
+      c.addJobTag(tag)
+      c.setInterruptOnCancel(true)
+      try body finally c.removeJobTag(tag)
+  }
 }

@@ -151,6 +151,90 @@ class StreamingSpec extends SparkSpec {
     assert(store.latestVersion.contains(0L))
   }
 
+  private def sinkCfg(streamId: String): CdcPipeline.SinkConfig =
+    CdcPipeline.SinkConfig(
+      streamId = streamId,
+      eventsOutDir = tmp("events"), stateDir = tmp("state"),
+      checkpointDir = tmp("chk"),
+      table = "users", keyCol = "id", valueCols = UsersFixture.Cols.tail,
+      publishedTables = Some(Set("users")))
+
+  /** Every fixture frame decoded into one wire batch (5 users events). */
+  private def goldenBatch = {
+    implicit val enc = org.apache.spark.sql.Encoders.product[CdcEvent]
+    CdcDecode.toWireDf(spark.createDataset(CdcDecode.decodeSeq(UsersFixture.frames)))
+  }
+
+  /** Replace the directory at `path` with a regular file, so a sink
+    * writing under it fails; returns an undo. */
+  private def breakDir(path: String): () => Unit = {
+    val p = java.nio.file.Paths.get(path)
+    Files.delete(p)
+    Files.write(p, Array[Byte](1))
+    () => { Files.delete(p); Files.createDirectory(p); () }
+  }
+
+  /** One sink fails while the other runs beside it; the failed batch
+    * leaves no partial state version visible, and replaying it with the
+    * same batch id once the fault is gone gives the golden result. */
+  private def crashThenReplay(streamId: String, broken: CdcPipeline.SinkConfig => String): Unit = {
+    val cfg = sinkCfg(streamId)
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batch = goldenBatch
+    val base = UsersFixture.baseState(spark)
+    val undo = breakDir(broken(cfg))
+    intercept[Exception](CdcPipeline.processBatch(batch, 0L, base, cfg, store))
+    undo()
+    // the sibling either finished (LATEST moved onto a whole version)
+    // or was cancelled before LATEST moved
+    store.latestVersion.foreach { v =>
+      assert(v == 0L)
+      assert(store.latest(spark).get.count() == goldenFinalState.size)
+    }
+    CdcPipeline.processBatch(batch, 0L, base, cfg, store)
+    assertGolden(cfg)
+    assert(spark.read.parquet(cfg.eventsOutDir).select("lsn").distinct().count() == 5)
+    assert(store.latestVersion.contains(0L))
+  }
+
+  test("changelog sink (K1) fails while the state MERGE (K2) runs: the replay is exactly-once") {
+    crashThenReplay("stream_k1_fail", _.eventsOutDir)
+  }
+
+  test("state MERGE (K2) fails while the changelog sink (K1) runs: the replay is exactly-once") {
+    crashThenReplay("stream_k2_fail", _.stateDir)
+  }
+
+  test("the MERGE's state read launches no Spark job and reads what a plain parquet read does") {
+    val cfg = sinkCfg("stream_state_read")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    CdcPipeline.processBatch(goldenBatch, 0L, UsersFixture.baseState(spark), cfg, store)
+    // job starts are delivered in order: once a marker job's start
+    // arrives, every job started before it has been counted
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("spark.job.description") == "marker")
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    val state = try {
+      val s = store.latest(spark).get
+      sc.setJobDescription("marker")
+      try spark.range(1).count() finally sc.setJobDescription(null)
+      assert(marker.await(30, java.util.concurrent.TimeUnit.SECONDS))
+      s
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get() == 0)
+    val plain = spark.read.parquet(s"${cfg.stateDir}/v=0")
+    assert(state.schema == plain.schema)
+    assert(state.collect().map(_.toSeq).sortBy(_.head.toString).toSeq ==
+      plain.collect().map(_.toSeq).sortBy(_.head.toString).toSeq)
+  }
+
   test("file feed decodes R-frame before changes even when file order disagrees with lsn order") {
     val feedDir = tmp("feed")
     val cfg = CdcPipeline.SinkConfig(
