@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Similarity}
+import graft.util.{Session, StageStats}
 
 /** Scale-stress harness for the dedup/ANN family (VERDICT r6 #2): the
   * 100 TB design claims rest on plan shape; this main turns them into
   * MEASUREMENTS by amplifying the sf0.1 corpus 10–50× with controlled
   * near-dup injection and timing the flagship operators at each scale,
-  * with per-task skew stats from a listener.
+  * with per-task skew stats from a listener ([[graft.util.StageStats]],
+  * which also prints every stage's profile to stderr as it completes).
   *
   * Amplification is deterministic (no RNG) and content-controlled.
   * Copy i of each document (new id = id·scale + i):
@@ -34,30 +35,6 @@ import graft.operators.{Dedup, Graph, Similarity}
   * rows, task count, max/median task ms — sub-quadratic growth and
   * bounded skew are the pass criteria, recorded in BASELINE.md. */
 object ScaleStress {
-
-  /** Records (stageId, duration) per successful task: the op-level
-    * max/med ratio alone cannot distinguish a genuine straggler (one
-    * task of a stage far beyond its siblings — a skew defect) from a
-    * uniformly WIDE stage (every task equally heavy — a volume cost,
-    * fixed by parallelism not by skew handling), so `measure` also
-    * reports the max task's own stage-internal median. */
-  private final class TaskStats extends SparkListener {
-    private val durations = new java.util.concurrent.ConcurrentLinkedQueue[(Int, java.lang.Long)]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-      if (t.taskInfo != null && t.taskInfo.successful)
-        durations.add((t.stageId, t.taskInfo.duration))
-    // job COUNT (not timing): the BPE scan-batching claim is "jobs ≈
-    // merges/maxPerScan + constant" — a scheduler fact, so it is
-    // counted at the scheduler, not inferred from wall time
-    private val jobCount = new java.util.concurrent.atomic.AtomicInteger(0)
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobCount.incrementAndGet(); () }
-    def jobs: Int = jobCount.get
-    def size: Int = durations.size
-    def slice(from: Int): Seq[(Int, Long)] = {
-      import scala.jdk.CollectionConverters._
-      durations.asScala.toSeq.map { case (s, d) => (s, d.longValue) }.drop(from)
-    }
-  }
 
   def amplifyDocs(docs: DataFrame, scale: Int): DataFrame =
     if (scale <= 1) docs.select("doc_id", "text")
@@ -115,88 +92,57 @@ object ScaleStress {
     val numeric = args.filter(_.forall(_.isDigit))
     val opFilter = args.filterNot(_.forall(_.isDigit)).toSeq
     val scales = if (numeric.nonEmpty) numeric.map(_.toInt).toSeq else Seq(1, 10, 50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // GRAFT_MEM_FRACTION: spark.memory.fraction is STATIC (read at
-    // SparkEnv init — spark.conf.set is too late), so the earlier-
-    // spill lever for heap-tight arms rides an env var. Default 0.6
-    // (Spark's own) everywhere; the 100× exact-PPJoin arm documents
-    // its setting in BASELINE.md.
     // DATA-PROPORTIONAL defaults (VERDICT r20 #1 — "partitions must
     // scale with data, not cores"; AQE coalesces down but cannot
     // split an under-partitioned aggregate):
     //  - reduce partitions grow with the amplification factor. The
     //    r20 evidence: 32 (=cpus) partitions carried the ≤100× arms
     //    but AGGREGATE_OUT_OF_MEMORY'd curation_v3/media_curation at
-    //    500×, where hand-set GRAFT_SHUFFLE_PARTITIONS=128 restored
-    //    the per-task volume the 100× legs carried. Derivation:
+    //    500×, where hand-set 128 shuffle partitions restored the
+    //    per-task volume the 100× legs carried. Derivation:
     //    cpus × ceil(maxScale/125), capped ×32 — 32 at ≤125×, 128 at
-    //    500×, matching both measured regimes. Env override retained.
+    //    500×, matching both measured regimes.
     //  - shuffle codec flips lz4 → zstd when the scratch estimate
     //    outgrows the disk: measured ~19.5 GB lz4 scratch at 200×
     //    (≈ 0.1 GB × scale) and ENOSPC above ~79 GB at 500×; zstd
     //    halves the text-heavy spill bytes for ~10-20% CPU. The flip
     //    triggers when est. scratch > 40% of the scratch volume's
     //    free space, so it also adapts to a fuller disk.
+    // A -Dspark.* property overrides either, or any static key such as
+    // spark.memory.fraction (the 100× exact-PPJoin arm's, BASELINE.md).
     val maxScale = scales.max
-    val derivedParts =
-      (cpus.toInt * math.min(32, math.max(1, math.ceil(maxScale / 125.0).toInt))).toString
+    val derivedParts = Session.cpus * math.min(32, math.max(1, math.ceil(maxScale / 125.0).toInt))
     val estScratchGb = 0.1 * maxScale
     val usableGb = new java.io.File(sys.props("java.io.tmpdir")).getUsableSpace / 1e9
     val derivedCodec = if (estScratchGb > 0.4 * usableGb) "zstd" else "lz4"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-stress")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", derivedParts))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.memory.fraction", sys.env.getOrElse("GRAFT_MEM_FRACTION", "0.6"))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_IO_CODEC", derivedCodec))
-      .getOrCreate()
+    // scratch stays on disk: see graft.util.LocalScratch
+    val spark = Session("graft-scale-stress", logLevel = "WARN", extras = Seq(
+      "spark.sql.shuffle.partitions" -> derivedParts.toString,
+      "spark.io.compression.codec" -> derivedCodec))
     System.err.println(
-      s"[stress] maxScale=$maxScale shuffle.partitions=${sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", derivedParts)} " +
-        f"codec=${sys.env.getOrElse("GRAFT_IO_CODEC", derivedCodec)} (est scratch $estScratchGb%.0f GB, free ${usableGb.toInt} GB)")
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
-    val stats = new TaskStats
+      s"[stress] maxScale=$maxScale shuffle.partitions=${spark.conf.get("spark.sql.shuffle.partitions")} " +
+        f"codec=${spark.conf.get("spark.io.compression.codec")} (est scratch $estScratchGb%.0f GB, free ${usableGb.toInt} GB)")
+    // every stage's line on stderr as it completes (crash-safe)
+    val stats = new StageStats(printFromMs = 0)
     spark.sparkContext.addSparkListener(stats)
 
     val results = scala.collection.mutable.ArrayBuffer[String]()
     // an op body may publish op-specific JSON fields (e.g. the trained
     // IVF-PQ audit's recall) — appended to its line, then cleared
     var extraFields: String = ""
-    def measure(op: String, scale: Int)(body: => Long): Unit =
-      if (opFilter.isEmpty || opFilter.exists(op.contains)) measureAll(op, scale)(body)
-    def measureAll(op: String, scale: Int)(body: => Long): Unit = {
+    def measure(op: String, scale: Int)(body: => Long): Unit = {
+      if (opFilter.nonEmpty && !opFilter.exists(op.contains)) return
       // drop lingering localCheckpoint blocks so ops don't interfere
-      val cached = spark.sparkContext.getPersistentRDDs.values
-      spark.catalog.clearCache()
-      cached.foreach(_.unpersist(blocking = true))
-      val from = stats.size
+      Session.isolate(spark)
+      val from = stats.mark
       val t0 = System.nanoTime()
       val rows = body
       val sec = (System.nanoTime() - t0) / 1e9
-      Thread.sleep(500) // let straggler TaskEnd events drain the bus
-      val staged = stats.slice(from)
-      val tasks = staged.map(_._2).sorted
-      val (maxMs, medMs) =
-        if (tasks.isEmpty) (0L, 0L)
-        else (tasks.last, tasks(tasks.size / 2))
-      // the max task's own stage: its internal median separates
-      // "straggler" (max ≫ stage med) from "uniform wide stage"
-      // (max ≈ stage med — a volume cost, not a skew defect)
-      val maxStageMed =
-        if (staged.isEmpty) 0L
-        else {
-          val maxStage = staged.maxBy(_._2)._1
-          val sib = staged.collect { case (s, d) if s == maxStage => d }.sorted
-          sib(sib.size / 2)
-        }
+      stats.settle()
+      val w = stats.since(from)
       val line =
-        f"""{"op":"$op","scale":$scale,"sec":$sec%.2f,"rows":$rows,"tasks":${tasks.size},""" +
-          s""""max_task_ms":$maxMs,"med_task_ms":$medMs,"max_stage_med_ms":$maxStageMed$extraFields}"""
+        f"""{"op":"$op","scale":$scale,"sec":$sec%.2f,"rows":$rows,"tasks":${w.tasks},""" +
+          s""""max_task_ms":${w.maxMs},"med_task_ms":${w.medianMs},"max_stage_med_ms":${w.maxStageMedianMs}$extraFields}"""
       extraFields = ""
       println(line)
       results += line
@@ -1238,7 +1184,7 @@ object ScaleStress {
       // latency). The refine claim under test: its extra cost is
       // output-bounded (refine rows/query + id-keyed attaches), a
       // small constant over the raw path, never a corpus-shaped term.
-      // each body builds its OWN spread corpus: measureAll drops all
+      // each body builds its OWN spread corpus: measure drops all
       // persisted blocks between ops (op isolation), and a dropped
       // localCheckpoint is unrecomputable — sharing would crash the
       // second op; the spread cost is identical in both arms, so the
@@ -1464,11 +1410,11 @@ object ScaleStress {
         // wall EQUAL within noise at local scale — the round-trip
         // savings matter on a real cluster's scheduling latency, not
         // on local[32].
-        val jobs0 = stats.jobs
+        val jobs0 = stats.mark.jobs
         val merges = operators.BpeTrainer.train(
           docs, "text", nMerges = 1000, maxPerScan = 64)
         extraFields =
-          s""","jobs":${stats.jobs - jobs0},"merges":${merges.length},"max_per_scan":64"""
+          s""","jobs":${stats.mark.jobs - jobs0},"merges":${merges.length},"max_per_scan":64"""
         merges.length.toLong
       }
       measure("bpe_train_seq", scale) {
@@ -1476,11 +1422,11 @@ object ScaleStress {
         // batching A/B: same corpus, same 1000 merges, one pair-count
         // scan per merge. Spec (BpeTrainerSpec) proves the SEQUENCE
         // equal; this measures what the batching buys at scale.
-        val jobs0 = stats.jobs
+        val jobs0 = stats.mark.jobs
         val merges = operators.BpeTrainer.train(
           docs, "text", nMerges = 1000, maxPerScan = 1)
         extraFields =
-          s""","jobs":${stats.jobs - jobs0},"merges":${merges.length},"max_per_scan":1"""
+          s""","jobs":${stats.mark.jobs - jobs0},"merges":${merges.length},"max_per_scan":1"""
         merges.length.toLong
       }
     }

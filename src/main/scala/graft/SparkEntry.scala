@@ -24,6 +24,14 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> q.run).toMap
 
+  /** The queries whose name contains any of `names` (none = all), by
+    * name. */
+  def select(names: Seq[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val hit = queries.toSeq.filter { case (n, _) => names.isEmpty || names.exists(n.contains) }.sortBy(_._1)
+    require(hit.nonEmpty, s"no query matches ${names.mkString(", ")}")
+    hit
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

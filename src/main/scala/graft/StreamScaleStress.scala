@@ -1,10 +1,11 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.streaming.StreamingOps
+import graft.util.Session
 
 /** Scale-stress harness for the STREAMING operators (VERDICT r12 #3 /
   * r13 #2): the batch family's 100 TB claims are measured by
@@ -43,18 +44,8 @@ object StreamScaleStress {
     val numeric = args.filter(_.forall(_.isDigit))
     val opFilter = args.filterNot(_.forall(_.isDigit)).toSeq
     val scales = if (numeric.nonEmpty) numeric.map(_.toInt).toSeq else Seq(10, 50)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-stream-scale-stress")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.streaming.numRecentProgressUpdates", "256")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Session("graft-stream-scale-stress", logLevel = "WARN",
+      extras = Seq("spark.sql.streaming.numRecentProgressUpdates" -> "256"))
 
     val work = java.nio.file.Files.createTempDirectory("graft-sss").toString
     val results = scala.collection.mutable.ArrayBuffer[String]()
@@ -67,7 +58,7 @@ object StreamScaleStress {
     def measure(op: String, scale: Int, feedDir: String, outputMode: String)(
         mkQuery: DataFrame => DataFrame): Unit = {
       if (opFilter.nonEmpty && !opFilter.exists(op.contains)) return
-      spark.catalog.clearCache()
+      Session.isolate(spark)
       val ckpt = s"$work/ckpt-$op-$scale"
       val stream = spark.readStream
         .schema(spark.read.parquet(feedDir).schema)

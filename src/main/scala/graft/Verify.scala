@@ -1,23 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
+
 import java.nio.file.{Files, Paths}
+
+import graft.util.Session
+import graft.util.Session.jsonString
+
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // fast shuffle scratch (see graft.util.LocalScratch / Bench)
-    val spark = graft.util.LocalScratch.configure(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("GRAFT_CODEGEN_CACHE", "5000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Session("graft-verify", fastScratch = true, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
     // Local-iteration escape hatch: GRAFT_VERIFY_ONLY=q6,q7 restricts
     // the dump to the named queries. The driver never sets it, so the
@@ -32,29 +25,10 @@ object Verify {
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // isolate queries: clearCache only empties the CacheManager —
-      // eager localCheckpoints (simhash/CC/fingerprint paths) pin
-      // RDD-level blocks it never touches, so unpersist those too or
-      // they accumulate across the full query sweep (same workaround
-      // as Bench.scala).
-      val cached = spark.sparkContext.getPersistentRDDs.values
-      spark.catalog.clearCache()
-      cached.foreach(_.unpersist(blocking = true))
+      Session.isolate(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -57,8 +57,8 @@ object LocalScratch {
       } catch { case _: Throwable => false }
     }
 
-  /** Apply to a session builder: sets spark.local.dir when a fast
-    * scratch dir is available; no-op otherwise.
+  /** The conf for fast scratch: `spark.local.dir` when a fast scratch
+    * dir is available; nothing otherwise.
     *
     * When the scratch medium is RAM-backed, block reads are also
     * switched from memory-mapping to plain reads
@@ -77,13 +77,11 @@ object LocalScratch {
     * multi-hundred-MB blocks would trade the mmap TLB cost for heap
     * pressure (ADVICE r21). The bench's blocks are KBs–MBs, far below
     * the cutoff, and anything above 128m is large enough that one
-    * map/unmap amortizes. `GRAFT_MMAP_THRESHOLD` overrides (any
-    * Spark byte string). */
-  def configure(b: org.apache.spark.sql.SparkSession.Builder): org.apache.spark.sql.SparkSession.Builder =
-    dir().fold(b) { d =>
-      val withDir = b.config("spark.local.dir", d)
-      val threshold = sys.env.get("GRAFT_MMAP_THRESHOLD")
-        .orElse(if (isRamBacked(d)) Some("128m") else None)
-      threshold.fold(withDir)(t => withDir.config("spark.storage.memoryMapThreshold", t))
+    * map/unmap amortizes. A `-Dspark.storage.memoryMapThreshold`
+    * system property overrides it (see [[Session]]). */
+  def conf(): Seq[(String, String)] =
+    dir().toSeq.flatMap { d =>
+      ("spark.local.dir" -> d) +:
+        (if (isRamBacked(d)) Seq("spark.storage.memoryMapThreshold" -> "128m") else Nil)
     }
 }
