@@ -1,6 +1,7 @@
 package graft
 
 import graft.util.Session
+import graft.util.Session.jsonString
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query wall
@@ -36,8 +37,7 @@ object Bench {
       System.gc()
       name -> (if (ok) elapsed else -1.0)
     }
-    def q(s: String): String = Session.jsonString(s)
-    val es = errors.map { case (k, v) => s"${q(k)}:${q(v)}" }.mkString("{", ",", "}")
+    val es = errors.map { case (k, v) => s"${jsonString(k)}:${jsonString(v)}" }.mkString("{", ",", "}")
     val total = results.collect { case (_, v) if v >= 0 => v }.sum
     // The stdout line must stay SHORT: the driver captures only the
     // last ~2000 chars of output (plus sbt's trailing "[success]"
@@ -46,10 +46,10 @@ object Bench {
     // `parsed: null`. So the line carries the total, every error, and
     // only the SLOWEST queries that fit a 1600-char budget; the
     // complete full-precision map goes to bench_out.json.
-    def entry(k: String, v: Double): String = f"${q(k)}:$v%.3f"
+    def entry(k: String, v: Double): String = f"${jsonString(k)}:$v%.3f"
     val desc = results.sortBy { case (_, v) => -v }
     val baseLen =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries_omitted":000,"queries":{},"errors":$es,"sf":${q(sfDir)}}""".length
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries_omitted":000,"queries":{},"errors":$es,"sf":${jsonString(sfDir)}}""".length
     var budget = 1600 - baseLen
     val shown = scala.collection.mutable.ArrayBuffer[String]()
     desc.foreach { case (k, v) =>
@@ -57,11 +57,11 @@ object Bench {
       if (budget - (e.length + 1) >= 0) { shown += e; budget -= e.length + 1 }
     }
     val line =
-      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries_omitted":${results.size - shown.size},"queries":${shown.mkString("{", ",", "}")},"errors":$es,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","n_queries":${results.size},"queries_omitted":${results.size - shown.size},"queries":${shown.mkString("{", ",", "}")},"errors":$es,"sf":${jsonString(sfDir)}}"""
     println(line)
-    val fullQs = results.map { case (k, v) => s"${q(k)}:$v" }.mkString("{", ",", "}")
+    val fullQs = results.map { case (k, v) => s"${jsonString(k)}:$v" }.mkString("{", ",", "}")
     val fullLine =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$es,"sf":${q(sfDir)}}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$fullQs,"errors":$es,"sf":${jsonString(sfDir)}}"""
     java.nio.file.Files.writeString(java.nio.file.Paths.get("bench_out.json"), fullLine)
     spark.stop()
   }

@@ -58,7 +58,9 @@ object StreamScaleStress {
     def measure(op: String, scale: Int, feedDir: String, outputMode: String)(
         mkQuery: DataFrame => DataFrame): Unit = {
       if (opFilter.nonEmpty && !opFilter.exists(op.contains)) return
-      Session.isolate(spark)
+      // CacheManager only: unpersisting would drop the localCheckpointed
+      // artifacts built outside `measure`, which cannot be recomputed
+      spark.catalog.clearCache()
       val ckpt = s"$work/ckpt-$op-$scale"
       val stream = spark.readStream
         .schema(spark.read.parquet(feedDir).schema)
