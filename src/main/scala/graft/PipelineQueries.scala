@@ -22,23 +22,6 @@ import graft.operators.{Dedup, Fingerprint, Graph, Multimodal, Report, Sampling,
   */
 object PipelineQueries {
 
-  // DuckDB fragment: distinct word n-gram (3) shingle list per doc.
-  // (private[graft]: PipelineQueries2's group-size query reuses the
-  // identical shingle definition so its oracle IS the same pipeline.)
-  private[graft] val duckShingles3 =
-    """list_distinct(list_transform(
-      |  generate_series(1, greatest(len(string_split(text,' ')) - 2, 0)),
-      |  i -> string_split(text,' ')[i] || ' ' || string_split(text,' ')[i+1] || ' ' || string_split(text,' ')[i+2]))"""
-      .stripMargin
-
-  // DuckDB fragment: the md5 hash bucket of Sampling.hashBucket —
-  // first 8 hex digits of md5("salt:key") as an integer, mod 100.
-  // Declared before first use (object vals initialize in order).
-  private[graft] val duckBucketOn = (salt: String, key: String) =>
-    s"""list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
-       |  i -> strpos('0123456789abcdef', substr(md5('$salt:' || CAST($key AS VARCHAR)), i, 1)) - 1)),
-       |  (h, c) -> h*16 + c) % 100""".stripMargin
-
   // ------------------------------------------------------- text stats
   private val qTextStats = Queries.Q(
     "p_text_stats",
@@ -161,7 +144,7 @@ object PipelineQueries {
   private val qNgramJaccard = Queries.Q(
     "p_ngram_jaccard_pairs",
     Some(s"""
-      WITH t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
+      WITH t AS (SELECT doc_id, ${OracleSql.shingles3} AS sh FROM documents),
       t2 AS (SELECT doc_id, sh, len(sh) AS l FROM t WHERE len(sh) > 0)
       SELECT a.doc_id AS id_a, b.doc_id AS id_b,
              CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE)
@@ -181,25 +164,11 @@ object PipelineQueries {
   private val qMinhashNearDup = Queries.Q(
     "p_minhash_near_dup_pairs",
     Some(s"""
-      WITH t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id)
-      SELECT id_a, id_b,
-             CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-               / len(list_distinct(list_concat(ta.sh, tb.sh))) AS jac
-      FROM cand
+      WITH ${OracleSql.minhashPairs()}
+      SELECT id_a, id_b, ${OracleSql.jaccard("ta.sh", "tb.sh")} AS jac
+      FROM pairs
       JOIN t2 ta ON ta.doc_id = id_a
       JOIN t2 tb ON tb.doc_id = id_b
-      WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-              / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5
       ORDER BY id_a, id_b"""),
     (s, dir) =>
       Queries.sortedSmall(
@@ -217,28 +186,8 @@ object PipelineQueries {
   private val qDupGroups = Queries.Q(
     "p_dup_groups",
     Some(s"""
-      WITH RECURSIVE t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs AS (SELECT id_a, id_b
-                FROM cand
-                JOIN t2 ta ON ta.doc_id = id_a
-                JOIN t2 tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e)
-                         UNION
-                         SELECT e.v, reach.r FROM reach JOIN e ON e.u = reach.node)
+      WITH RECURSIVE ${OracleSql.minhashPairs()},
+      ${OracleSql.closure("pairs", "id_a", "id_b")}
       SELECT node AS doc_id, MIN(r) AS group_id
       FROM reach GROUP BY node ORDER BY doc_id"""),
     (s, dir) =>
@@ -261,33 +210,13 @@ object PipelineQueries {
   private val qGroupSafeSplit = Queries.Q(
     "p_group_safe_split",
     Some(s"""
-      WITH RECURSIVE t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs AS (SELECT id_a, id_b
-                FROM cand
-                JOIN t2 ta ON ta.doc_id = id_a
-                JOIN t2 tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e)
-                         UNION
-                         SELECT e.v, reach.r FROM reach JOIN e ON e.u = reach.node),
+      WITH RECURSIVE ${OracleSql.minhashPairs()},
+      ${OracleSql.closure("pairs", "id_a", "id_b")},
       grp AS (SELECT node, MIN(r) AS group_id FROM reach GROUP BY node),
-      g AS (SELECT d.doc_id, COALESCE(grp.group_id, d.doc_id) AS group_id
-            FROM documents d LEFT JOIN grp ON grp.node = d.doc_id),
+      dg AS (SELECT d.doc_id, COALESCE(grp.group_id, d.doc_id) AS group_id
+             FROM documents d LEFT JOIN grp ON grp.node = d.doc_id),
       gb AS (SELECT doc_id, group_id,
-               ${duckBucketOn("split25", "group_id")} AS sb FROM g)
+               ${OracleSql.bucketOn("split25", "group_id")} AS sb FROM dg)
       SELECT doc_id, group_id,
              CASE WHEN sb < 80 THEN 'train' WHEN sb < 90 THEN 'val' ELSE 'test' END AS split
       FROM gb ORDER BY doc_id"""),
@@ -307,18 +236,11 @@ object PipelineQueries {
   // Same shingle/signature/banding parameters as
   // p_minhash_near_dup_pairs, so the audit rows ARE that query's
   // buckets. Corpus note: every doc has >= 10 tokens (verified), so
-  // no empty shingle sets reach the signature.
+  // no empty shingle set is dropped before the signature.
   private val qMinhashBucketAudit = Queries.Q(
     "p_minhash_bucket_audit",
     Some(s"""
-      WITH t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      sig AS (SELECT doc_id,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b)
+      WITH ${OracleSql.minhashBands()}
       SELECT CAST(band AS BIGINT) AS band, bh AS band_hash,
              CAST(COUNT(DISTINCT doc_id) AS BIGINT) AS n_ids
       FROM bands
@@ -349,20 +271,8 @@ object PipelineQueries {
   // ------------------------------------------------ simhash fingerprints
   private val qSimhash = Queries.Q(
     "p_simhash64",
-    Some("""
-      WITH toks AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk FROM documents),
-      words AS (SELECT doc_id, unnest(list_transform(tk, t -> substr(md5(t), 1, 16))) AS w FROM toks),
-      votes AS (
-        SELECT doc_id, g.generate_series AS i,
-               SUM(CASE WHEN (((strpos('0123456789abcdef', substr(w, 16 - g.generate_series // 4, 1)) - 1)
-                              >> (g.generate_series % 4)) & 1) = 1 THEN 1 ELSE -1 END) AS v
-        FROM words, generate_series(0, 63) g
-        GROUP BY doc_id, g.generate_series),
-      bits AS (SELECT doc_id, i, CASE WHEN v > 0 THEN 1 ELSE 0 END AS bit FROM votes),
-      nibbles AS (SELECT doc_id, i // 4 AS nib, CAST(SUM(bit << (i % 4)) AS INT) AS nv
-                  FROM bits GROUP BY doc_id, i // 4),
-      hexes AS (SELECT doc_id, string_agg(substr('0123456789abcdef', nv + 1, 1), '' ORDER BY nib DESC) AS simhash
-                FROM nibbles GROUP BY doc_id)
+    Some(s"""
+      WITH ${OracleSql.simhashes}
       SELECT doc_id, simhash FROM hexes ORDER BY doc_id"""),
     (s, dir) =>
       Queries.sortedSmall(
@@ -377,20 +287,8 @@ object PipelineQueries {
   // stage value-checked, all-integer output.
   private val qSimhashNearDup = Queries.Q(
     "p_simhash_near_dup",
-    Some("""
-      WITH toks AS (SELECT doc_id, list_distinct(string_split(text, ' ')) AS tk FROM documents),
-      words AS (SELECT doc_id, unnest(list_transform(tk, t -> substr(md5(t), 1, 16))) AS w FROM toks),
-      votes AS (
-        SELECT doc_id, g.generate_series AS i,
-               SUM(CASE WHEN (((strpos('0123456789abcdef', substr(w, 16 - g.generate_series // 4, 1)) - 1)
-                              >> (g.generate_series % 4)) & 1) = 1 THEN 1 ELSE -1 END) AS v
-        FROM words, generate_series(0, 63) g
-        GROUP BY doc_id, g.generate_series),
-      bits AS (SELECT doc_id, i, CASE WHEN v > 0 THEN 1 ELSE 0 END AS bit FROM votes),
-      nibbles AS (SELECT doc_id, i // 4 AS nib, CAST(SUM(bit << (i % 4)) AS INT) AS nv
-                  FROM bits GROUP BY doc_id, i // 4),
-      hexes AS (SELECT doc_id, string_agg(substr('0123456789abcdef', nv + 1, 1), '' ORDER BY nib DESC) AS simhash
-                FROM nibbles GROUP BY doc_id),
+    Some(s"""
+      WITH ${OracleSql.simhashes},
       bands AS (SELECT doc_id, simhash, b.generate_series AS band,
                   list_reduce(list_prepend(0, list_transform(generate_series(1, 4),
                     i -> strpos('0123456789abcdef', substr(simhash, b.generate_series*4 + i, 1)) - 1)),
@@ -442,16 +340,8 @@ object PipelineQueries {
   // yield no rows (corpus min is 10 — every doc contributes).
   private val qWinnowFingerprints = Queries.Q(
     "p_winnow_fingerprints",
-    Some("""
-      WITH toks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-      th AS (SELECT doc_id, list_transform(tk, t ->
-               list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
-                 i -> strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)), (h,c) -> h*16 + c)) AS th
-             FROM toks),
-      kgd AS (SELECT doc_id, list_transform(generate_series(1, len(th) - 2),
-                i -> ((((th[i] * 1000003) % 1000000007 + th[i+1]) * 1000003) % 1000000007 + th[i+2]) % 1000000007) AS kg
-              FROM th WHERE len(th) >= 6),
-      win AS (SELECT doc_id, kg, unnest(generate_series(1, len(kg) - 3)) AS j FROM kgd),
+    Some(s"""
+      WITH ${OracleSql.winnowWindows},
       sel AS (SELECT doc_id,
                 CAST(j - 1 + list_reduce(list_prepend(-1, generate_series(0, 3)),
                   (acc, t) -> CASE WHEN kg[CAST(j + t AS INT)] = list_min(list_slice(kg, j, j + 3)) THEN t ELSE acc END) AS BIGINT) AS pos,
@@ -475,16 +365,8 @@ object PipelineQueries {
   // with the benchmark side broadcast — the 100 TB plan.
   private val qContamination = Queries.Q(
     "p_contamination_pairs",
-    Some("""
-      WITH toks AS (SELECT doc_id, string_split(text,' ') AS tk FROM documents),
-      th AS (SELECT doc_id, list_transform(tk, t ->
-               list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
-                 i -> strpos('0123456789abcdef', substr(md5(t), i, 1)) - 1)), (h,c) -> h*16 + c)) AS th
-             FROM toks),
-      kgd AS (SELECT doc_id, list_transform(generate_series(1, len(th) - 2),
-                i -> ((((th[i] * 1000003) % 1000000007 + th[i+1]) * 1000003) % 1000000007 + th[i+2]) % 1000000007) AS kg
-              FROM th WHERE len(th) >= 6),
-      win AS (SELECT doc_id, kg, unnest(generate_series(1, len(kg) - 3)) AS j FROM kgd),
+    Some(s"""
+      WITH ${OracleSql.winnowWindows},
       fp AS (SELECT DISTINCT doc_id, list_min(list_slice(kg, j, j + 3)) AS fp FROM win),
       bench AS (SELECT doc_id AS bench_id, fp FROM fp WHERE doc_id < 5),
       corpus AS (SELECT doc_id AS corpus_id, fp FROM fp WHERE doc_id >= 5)
@@ -514,14 +396,12 @@ object PipelineQueries {
   // subsample, aggregated per (lang, split). Pure integer/md5
   // arithmetic ⇒ exact oracle; independent salts keep split and
   // sample decisions uncorrelated.
-  private val duckBucket = (salt: String) => duckBucketOn(salt, "doc_id")
-
   private val qHashSplit = Queries.Q(
     "p_hash_split",
     Some(s"""
       WITH b AS (SELECT lang,
-                   ${duckBucket("split25")} AS sb,
-                   ${duckBucket("sample7")} AS pb
+                   ${OracleSql.bucketOn("split25", "doc_id")} AS sb,
+                   ${OracleSql.bucketOn("sample7", "doc_id")} AS pb
                  FROM documents)
       SELECT lang,
              CASE WHEN sb < 80 THEN 'train' WHEN sb < 90 THEN 'val' ELSE 'test' END AS split,
@@ -583,24 +463,14 @@ object PipelineQueries {
         .transform(Queries.sortedSmall(_, "doc_id")))
 
   // ------------------------------------------------ brute-force top-k
-  private[graft] val duckCosine =
-    """list_sum(list_transform(list_zip(qv, embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-      |(sqrt(list_sum(list_transform(qv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-      | sqrt(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))))""".stripMargin
-
   private val qBruteTopK = Queries.Q(
     "p_brute_topk",
     Some(s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-      s AS (SELECT query_id, vec_id AS neighbor_id, $duckCosine AS sim
+      s AS (SELECT query_id, vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
             FROM q CROSS JOIN embeddings
             WHERE query_id != vec_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-        FROM s)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("sim", "DESC")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       Similarity.bruteForceTopK(
@@ -615,19 +485,14 @@ object PipelineQueries {
   // round differently.
   private val qBruteTopKL2 = Queries.Q(
     "p_l2_topk",
-    Some("""
+    Some(s"""
       WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
       s AS (SELECT query_id, vec_id AS neighbor_id,
               sqrt(list_sum(list_transform(list_zip(qv, embedding),
                 x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))) AS dist
             FROM q CROSS JOIN embeddings
             WHERE query_id != vec_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, dist FROM (
-        SELECT query_id, neighbor_id, dist,
-               row_number() OVER (PARTITION BY query_id ORDER BY dist ASC, neighbor_id) AS rnk
-        FROM s)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("dist", "ASC")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       Similarity.bruteForceTopKL2(
@@ -636,23 +501,15 @@ object PipelineQueries {
     })
 
   // ------------------------------------- sign-bucket LSH top-k (ANN)
-  private[graft] val duckSignBucket =
-    (0 until 8).map(i => s"(CASE WHEN embedding[${i + 1}] >= 0 THEN ${1L << i} ELSE 0 END)").mkString(" + ")
-
   private val qLshTopK = Queries.Q(
     "p_lsh_topk",
     Some(s"""
-      WITH e AS (SELECT vec_id, embedding, $duckSignBucket AS bucket FROM embeddings),
+      WITH e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket FROM embeddings),
       q AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id < 20),
-      s AS (SELECT query_id, e.vec_id AS neighbor_id, $duckCosine AS sim
+      s AS (SELECT query_id, e.vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
             FROM q JOIN e USING (bucket)
             WHERE query_id != e.vec_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-        FROM s)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("sim", "DESC")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       Similarity.lshTopK(
@@ -668,16 +525,9 @@ object PipelineQueries {
   // queries probe their 2 nearest cells. The oracle recomputes every
   // stage (assignment argmax via lexicographic struct-min, probe
   // ranking, in-cell top-k) with identical double arithmetic.
-  // Trained-centroid mode (spec-gated): float k-means means are
-  // aggregation-order-dependent, so when this flag is set the query
-  // DROPS its SQL oracle — the driver records a rows-only check
-  // instead of a guaranteed hash mismatch against the deterministic
-  // subset quantizer the oracle recomputes.
-  private val ivfTrained = sys.env.get("GRAFT_IVF_TRAINED").contains("1")
-
   private val qIvfTopK = Queries.Q(
     "p_ivf_topk",
-    if (ivfTrained) None else Some(s"""
+    Some(s"""
       WITH c AS (SELECT vec_id AS cent, embedding AS cv FROM embeddings WHERE vec_id < 16),
       a AS (SELECT e.vec_id, e.embedding, c.cent,
               list_sum(list_transform(list_zip(e.embedding, c.cv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
@@ -698,27 +548,12 @@ object PipelineQueries {
               (sqrt(list_sum(list_transform(qvec, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
                sqrt(list_sum(list_transform(cv2, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS sim
             FROM qv JOIN base USING (cell) WHERE query_id != neighbor_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-        FROM s)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("sim", "DESC")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
-      // GRAFT_IVF_TRAINED=1 swaps in the distributed k-means quantizer
-      // (Similarity.trainCentroids). Trained float means are
-      // aggregation-order-dependent, so that mode is spec-gated by
-      // recall-vs-brute, NOT oracle-gated — the driver's default path
-      // keeps the deterministic subset quantizer the oracle recomputes.
-      val (cents, cId, cVec) =
-        if (ivfTrained)
-          (Similarity.trainCentroids(emb, "vec_id", "embedding", nCells = 16, iters = 3),
-            "cent_id", "cent_vec")
-        else (emb.filter(col("vec_id") < 16), "vec_id", "embedding")
       Similarity.ivfTopK(
         emb.filter(col("vec_id") < 20), "vec_id", emb, "vec_id", "embedding",
-        centroids = cents, cId, cVec,
+        centroids = emb.filter(col("vec_id") < 16), "vec_id", "embedding",
         k = 10, nProbe = 2)
         .transform(Queries.sortedSmall(_, "query_id", "rank"))
     })
@@ -727,21 +562,16 @@ object PipelineQueries {
   private val qLshTopKMultiProbe = Queries.Q(
     "p_lsh_topk_multiprobe",
     Some(s"""
-      WITH e AS (SELECT vec_id, embedding, $duckSignBucket AS bucket FROM embeddings),
+      WITH e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket FROM embeddings),
       q0 AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id < 20),
       q AS (SELECT query_id, qv,
                    unnest(list_prepend(bucket,
                      list_transform(generate_series(0, 7), i -> xor(bucket, 1 << i)))) AS bucket
             FROM q0),
-      s AS (SELECT query_id, e.vec_id AS neighbor_id, $duckCosine AS sim
+      s AS (SELECT query_id, e.vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
             FROM q JOIN e USING (bucket)
             WHERE query_id != e.vec_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, sim FROM (
-        SELECT query_id, neighbor_id, sim,
-               row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
-        FROM s)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("sim", "DESC")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       Similarity.lshTopKMultiProbe(
@@ -754,7 +584,7 @@ object PipelineQueries {
   private val qEmbeddingNearDup = Queries.Q(
     "p_embedding_near_dup",
     Some(s"""
-      WITH e AS (SELECT vec_id, embedding, $duckSignBucket AS bucket FROM embeddings)
+      WITH e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket FROM embeddings)
       SELECT a.vec_id AS id_a, b.vec_id AS id_b,
              list_sum(list_transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
              (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
@@ -823,14 +653,13 @@ object PipelineQueries {
   // TextAnalysis.BpePattern) is the budget signal. tokens_csv
   // value-checks the tokenization itself, boundary for boundary,
   // against RE2: both engines use leftmost-first alternation.
-  private val duckBpe = TextAnalysis.BpePattern.replace("'", "''")
   private val qTokenCounts = Queries.Q(
     "p_token_counts",
     Some(s"""
       SELECT event_id,
              len(string_split(props, ' ')) AS ws_tokens,
-             len(regexp_extract_all(props, '$duckBpe', 0)) AS bpe_tokens,
-             array_to_string(regexp_extract_all(props, '$duckBpe', 0), '|') AS tokens_csv
+             len(regexp_extract_all(props, '${OracleSql.bpe}', 0)) AS bpe_tokens,
+             array_to_string(regexp_extract_all(props, '${OracleSql.bpe}', 0), '|') AS tokens_csv
       FROM events
       ORDER BY event_id"""),
     (s, dir) =>
@@ -872,30 +701,11 @@ object PipelineQueries {
   // the two-stage prefilter that bounds the O(df²) rerank at scale.
   private val qBm25TopK = Queries.Q(
     "p_bm25_topk",
-    Some("""
-      WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      dlt AS (SELECT doc_id, len(tk) AS dl FROM tok),
-      tf AS (SELECT term, doc_id, COUNT(*) AS tf
-             FROM (SELECT doc_id, unnest(tk) AS term FROM tok)
-             WHERE term IN ('spark', 'window', 'table')
-             GROUP BY term, doc_id),
-      bounded AS (SELECT term, doc_id, tf FROM (
-                    SELECT term, doc_id, tf,
-                           row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id) AS rn
-                    FROM tf)
-                  WHERE rn <= 50),
-      st AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n_docs,
-                    CAST(SUM(dl) AS HUGEINT) AS total_len FROM dlt),
-      cand AS (SELECT term, bounded.doc_id, bounded.tf, dlt.dl,
-                      10 * total_len * bounded.tf + 3 * total_len
-                        + 9 * CAST(dlt.dl AS HUGEINT) * n_docs AS d_denom
-               FROM bounded JOIN dlt USING (doc_id) CROSS JOIN st)
+    Some(s"""
+      WITH ${OracleSql.bm25Candidates}
       SELECT term, rank, doc_id, tf, dl FROM (
         SELECT a.term AS term, a.doc_id AS doc_id, a.tf AS tf, a.dl AS dl,
-               CAST(1 + SUM(CASE WHEN CAST(b.tf AS HUGEINT) * a.d_denom > CAST(a.tf AS HUGEINT) * b.d_denom
-                                   OR (CAST(b.tf AS HUGEINT) * a.d_denom = CAST(a.tf AS HUGEINT) * b.d_denom
-                                       AND b.doc_id < a.doc_id)
-                            THEN 1 ELSE 0 END) AS BIGINT) AS rank
+               ${OracleSql.bm25Rank} AS rank
         FROM cand a JOIN cand b ON a.term = b.term
         GROUP BY a.term, a.doc_id, a.tf, a.dl)
       WHERE rank <= 10
@@ -1075,7 +885,7 @@ object PipelineQueries {
   private val qStratifiedSample = Queries.Q(
     "p_stratified_sample",
     Some(s"""
-      WITH b AS (SELECT doc_id, lang, ${duckBucket("mix30")} AS sb FROM documents)
+      WITH b AS (SELECT doc_id, lang, ${OracleSql.bucketOn("mix30", "doc_id")} AS sb FROM documents)
       SELECT doc_id, lang FROM b
       WHERE sb < CASE WHEN lang = 'en' THEN 50 ELSE 10 END
       ORDER BY doc_id"""),
@@ -1290,30 +1100,9 @@ object PipelineQueries {
   private val qNearDupDedup = Queries.Q(
     "p_near_dup_dedup",
     Some(s"""
-      WITH RECURSIVE t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs AS (SELECT id_a, id_b
-                FROM cand
-                JOIN t2 ta ON ta.doc_id = id_a
-                JOIN t2 tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e)
-                         UNION
-                         SELECT e.v, reach.r FROM reach JOIN e ON e.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
+      WITH RECURSIVE ${OracleSql.minhashPairs()},
+      ${OracleSql.closure("pairs", "id_a", "id_b")},
+      ${OracleSql.losers()}
       SELECT doc_id, lang, source, n_chars FROM documents
       WHERE doc_id NOT IN (SELECT node FROM losers)
       ORDER BY doc_id"""),
@@ -1335,28 +1124,8 @@ object PipelineQueries {
   private val qNearDupBest = Queries.Q(
     "p_near_dup_best",
     Some(s"""
-      WITH RECURSIVE t AS (SELECT doc_id, $duckShingles3 AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs AS (SELECT id_a, id_b
-                FROM cand
-                JOIN t2 ta ON ta.doc_id = id_a
-                JOIN t2 tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e)
-                         UNION
-                         SELECT e.v, reach.r FROM reach JOIN e ON e.u = reach.node),
+      WITH RECURSIVE ${OracleSql.minhashPairs()},
+      ${OracleSql.closure("pairs", "id_a", "id_b")},
       comp AS (SELECT node, MIN(r) AS grp FROM reach GROUP BY node),
       q AS (SELECT c.node, c.grp, d.n_chars FROM comp c JOIN documents d ON d.doc_id = c.node),
       best AS (SELECT grp, node AS best FROM (
@@ -1466,7 +1235,7 @@ object PipelineQueries {
   // filter byte, one scanline, or one channel fails the hash.
   private val qPngPixelStats = Queries.Q(
     "p_png_pixel_stats",
-    Some("""
+    Some(s"""
       WITH dims AS (SELECT i, 1 + (i*7) % 16 AS w, 1 + (i*5) % 12 AS h,
                            CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
                     FROM generate_series(0, 47) t(i)),
@@ -1474,15 +1243,7 @@ object PipelineQueries {
       xs AS (SELECT i, w, h, ch, y, unnest(generate_series(0, w - 1)) AS x FROM ys),
       px AS (SELECT i, y, x, unnest(generate_series(0, ch - 1)) AS c FROM xs),
       v AS (SELECT i, y, x, c, (x*7 + y*13 + c*31 + i*3) % 256 AS v FROM px),
-      md AS (SELECT i, md5(string_agg(printf('%02x', v), '' ORDER BY y, x, c)) AS pixel_md5
-             FROM v GROUP BY i),
-      mn AS (SELECT i, c AS channel, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_val
-             FROM v GROUP BY i, c)
-      SELECT CAST(d.i AS BIGINT) AS img_id, CAST(d.w AS BIGINT) AS width,
-             CAST(d.h AS BIGINT) AS height, CAST(d.ch AS BIGINT) AS channels,
-             CAST(mn.channel AS BIGINT) AS channel, mn.mean_val, md.pixel_md5
-      FROM dims d JOIN mn ON mn.i = d.i JOIN md ON md.i = d.i
-      ORDER BY img_id, channel"""),
+      ${OracleSql.pixelStats("v")}"""),
     (s, dir) => {
       val imgs: Seq[(Long, Array[Byte])] = (0 until 48).map { i =>
         val (w, h) = (1 + (i * 7) % 16, 1 + (i * 5) % 12)
@@ -1629,7 +1390,7 @@ object PipelineQueries {
   private val qDecontaminate = Queries.Q(
     "p_decontaminate",
     Some(s"""
-      WITH b AS (SELECT doc_id, text, n_chars, ${duckBucket("split25")} AS sb FROM documents),
+      WITH b AS (SELECT doc_id, text, n_chars, ${OracleSql.bucketOn("split25", "doc_id")} AS sb FROM documents),
       hg AS (SELECT DISTINCT md5(array_to_string(w[i:i+4], ' ')) AS gh
              FROM (SELECT string_split(text, ' ') AS w FROM b WHERE sb >= 90) t,
                   unnest(generate_series(1, len(w) - 4)) AS s(i)
@@ -1663,7 +1424,7 @@ object PipelineQueries {
   private val qContaminationBySuite = Queries.Q(
     "p_contamination_by_suite",
     Some(s"""
-      WITH b AS (SELECT doc_id, text, source, ${duckBucket("split25")} AS sb FROM documents),
+      WITH b AS (SELECT doc_id, text, source, ${OracleSql.bucketOn("split25", "doc_id")} AS sb FROM documents),
       hg AS (SELECT DISTINCT source AS suite, md5(array_to_string(w[i:i+4], ' ')) AS gh
              FROM (SELECT source, string_split(text, ' ') AS w FROM b WHERE sb >= 90) t,
                   unnest(generate_series(1, len(w) - 4)) AS s(i)
@@ -1694,7 +1455,7 @@ object PipelineQueries {
   private val qSplitContamination = Queries.Q(
     "p_split_contamination",
     Some(s"""
-      WITH b AS (SELECT doc_id, text, ${duckBucket("split25")} AS sb FROM documents),
+      WITH b AS (SELECT doc_id, text, ${OracleSql.bucketOn("split25", "doc_id")} AS sb FROM documents),
       tg AS (SELECT DISTINCT md5(array_to_string(w[i:i+4], ' ')) AS gh
              FROM (SELECT string_split(text, ' ') AS w FROM b WHERE sb < 80) t,
                   unnest(generate_series(1, len(w) - 4)) AS s(i)
@@ -1797,9 +1558,9 @@ object PipelineQueries {
   private val qLshRecallAudit = Queries.Q(
     "p_lsh_recall_audit",
     Some(s"""
-      WITH e AS (SELECT vec_id, embedding, $duckSignBucket AS bucket FROM embeddings),
+      WITH e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket FROM embeddings),
       bq AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 20),
-      bs AS (SELECT query_id, vec_id AS neighbor_id, $duckCosine AS sim
+      bs AS (SELECT query_id, vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
              FROM bq q CROSS JOIN embeddings
              WHERE query_id != vec_id),
       brute AS (SELECT query_id, neighbor_id FROM (
@@ -1807,7 +1568,7 @@ object PipelineQueries {
                          row_number() OVER (PARTITION BY query_id ORDER BY sim DESC, neighbor_id) AS rnk
                   FROM bs) WHERE rnk <= 10),
       lq AS (SELECT vec_id AS query_id, embedding AS qv, bucket FROM e WHERE vec_id < 20),
-      ls AS (SELECT query_id, e.vec_id AS neighbor_id, $duckCosine AS sim
+      ls AS (SELECT query_id, e.vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
              FROM lq q JOIN e USING (bucket)
              WHERE query_id != e.vec_id),
       lsh AS (SELECT query_id, neighbor_id FROM (

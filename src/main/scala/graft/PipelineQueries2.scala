@@ -4,6 +4,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Graph, Importance, Similarity, TextAnalysis}
+import graft.util.Jobs
 
 /** Second pipeline-query wave — corpus-profiling surfaces over the
   * operators the first wave built: near-dup cluster size distribution
@@ -32,33 +33,13 @@ object PipelineQueries2 {
   private val qDupGroupSizes = Queries.Q(
     "p_dup_group_sizes",
     Some(s"""
-      WITH RECURSIVE t AS (SELECT doc_id, ${PipelineQueries.duckShingles3} AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
-      bands AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig, generate_series(0, 3) b),
-      cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands a JOIN bands b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs AS (SELECT id_a, id_b
-                FROM cand
-                JOIN t2 ta ON ta.doc_id = id_a
-                JOIN t2 tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e)
-                         UNION
-                         SELECT e.v, reach.r FROM reach JOIN e ON e.u = reach.node),
+      WITH RECURSIVE ${OracleSql.minhashPairs()},
+      ${OracleSql.closure("pairs", "id_a", "id_b")},
       comp AS (SELECT node, MIN(r) AS group_id FROM reach GROUP BY node),
-      g AS (SELECT group_id, COUNT(*) AS group_size FROM comp GROUP BY group_id)
+      sizes AS (SELECT group_id, COUNT(*) AS group_size FROM comp GROUP BY group_id)
       SELECT CAST(group_size AS BIGINT) AS group_size,
              COUNT(*) AS n_groups
-      FROM g GROUP BY group_size ORDER BY group_size"""),
+      FROM sizes GROUP BY group_size ORDER BY group_size"""),
     (s, dir) =>
       Graph.connectedComponents(
         Dedup.nearDupPairsShingled(Tables(s, dir).documents, "doc_id", "text",
@@ -246,20 +227,15 @@ object PipelineQueries2 {
   private val qSemanticDedup = Queries.Q(
     "p_semantic_dedup",
     Some(s"""
-      WITH RECURSIVE e AS (SELECT vec_id, embedding, ${PipelineQueries.duckSignBucket} AS bucket FROM embeddings),
+      WITH RECURSIVE e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket FROM embeddings),
       pairs AS (
         SELECT a.vec_id AS id_a, b.vec_id AS id_b
         FROM e a JOIN e b ON a.bucket = b.bucket AND a.vec_id < b.vec_id
         WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
               (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
                sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) >= 0.35),
-      g AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
+      ${OracleSql.closure("pairs", "id_a", "id_b")},
+      ${OracleSql.losers()}
       SELECT vec_id, CAST(label AS BIGINT) AS label FROM embeddings
       WHERE vec_id NOT IN (SELECT node FROM losers)
       ORDER BY vec_id"""),
@@ -384,22 +360,14 @@ object PipelineQueries2 {
   // p_avi_frame_stats; with this, every pixel decoder is oracle-gated.
   private val qBmpPixelStats = Queries.Q(
     "p_bmp_pixel_stats",
-    Some("""
+    Some(s"""
       WITH dims AS (SELECT i, 1 + (i*5) % 13 AS w, 1 + (i*3) % 9 AS h
                     FROM generate_series(0, 15) t(i)),
       ys AS (SELECT i, w, h, unnest(generate_series(0, h - 1)) AS y FROM dims),
       xs AS (SELECT i, w, h, y, unnest(generate_series(0, w - 1)) AS x FROM ys),
       cs AS (SELECT i, y, x, unnest(generate_series(0, 2)) AS c FROM xs),
       v AS (SELECT i, y, x, c, (x*11 + y*17 + c*29 + i*7) % 256 AS v FROM cs),
-      md AS (SELECT i, md5(string_agg(printf('%02x', v), '' ORDER BY y, x, c)) AS pixel_md5
-             FROM v GROUP BY i),
-      mn AS (SELECT i, c AS channel, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_val
-             FROM v GROUP BY i, c)
-      SELECT CAST(d.i AS BIGINT) AS img_id, CAST(d.w AS BIGINT) AS width,
-             CAST(d.h AS BIGINT) AS height, CAST(mn.channel AS BIGINT) AS channel,
-             mn.mean_val, md.pixel_md5
-      FROM dims d JOIN mn ON mn.i = d.i JOIN md ON md.i = d.i
-      ORDER BY img_id, channel"""),
+      ${OracleSql.pixelStats("v", channels = false)}"""),
     (s, dir) => {
       val imgs: Seq[(Long, Array[Byte])] = (0 until 16).map { i =>
         val (w, h) = (1 + (i * 5) % 13, 1 + (i * 3) % 9)
@@ -436,7 +404,7 @@ object PipelineQueries2 {
   // cross-checked against the JDK's independent reader in GifSpec.)
   private val qGifPixelStats = Queries.Q(
     "p_gif_pixel_stats",
-    Some("""
+    Some(s"""
       WITH dims AS (SELECT i, 2 + (i*5) % 11 AS w, 2 + (i*3) % 7 AS h
                     FROM generate_series(0, 11) t(i)),
       ys AS (SELECT i, w, h, unnest(generate_series(0, h - 1)) AS y FROM dims),
@@ -446,15 +414,7 @@ object PipelineQueries2 {
                unnest([0, 1, 2]) AS c,
                unnest([(pi*3) % 256, (pi*5 + 1) % 256, (pi*7 + 2) % 256]) AS v
              FROM px),
-      md AS (SELECT i, md5(string_agg(printf('%02x', v), '' ORDER BY y, x, c)) AS pixel_md5
-             FROM cs GROUP BY i),
-      mn AS (SELECT i, c AS channel, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_val
-             FROM cs GROUP BY i, c)
-      SELECT CAST(d.i AS BIGINT) AS img_id, CAST(d.w AS BIGINT) AS width,
-             CAST(d.h AS BIGINT) AS height, CAST(mn.channel AS BIGINT) AS channel,
-             mn.mean_val, md.pixel_md5
-      FROM dims d JOIN mn ON mn.i = d.i JOIN md ON md.i = d.i
-      ORDER BY img_id, channel"""),
+      ${OracleSql.pixelStats("cs", channels = false)}"""),
     (s, dir) => {
       val imgs: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
         val (w, h) = (2 + (i * 5) % 11, 2 + (i * 3) % 7)
@@ -721,25 +681,8 @@ object PipelineQueries2 {
   // shuffle + a per-document window over marked starts only.
   private val qDupSpans = Queries.Q(
     "p_dup_spans",
-    Some("""
-      WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      win AS (SELECT doc_id, g.i AS st, md5(array_to_string(tk[g.i+1:g.i+5], ' ')) AS h
-              FROM tok CROSS JOIN LATERAL (SELECT unnest(generate_series(0, len(tk) - 5)) AS i) g
-              WHERE len(tk) >= 5),
-      f AS (SELECT *, COUNT(*) OVER (PARTITION BY h) AS cnt,
-                   row_number() OVER (PARTITION BY h ORDER BY doc_id, st) AS rn
-            FROM win),
-      m AS (SELECT doc_id, st, st + 4 AS e FROM f WHERE cnt > 1 AND rn > 1),
-      isl AS (SELECT doc_id, st, e,
-                CASE WHEN max(e) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-                     OR st > max(e) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) + 1
-                     THEN 1 ELSE 0 END AS brk
-              FROM m),
-      g2 AS (SELECT *, SUM(brk) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id
-             FROM isl)
+    Some(s"""
+      WITH ${OracleSql.dupSpanIslands}
       SELECT doc_id, CAST(MIN(st) AS BIGINT) AS span_start,
              CAST(MAX(e) AS BIGINT) AS span_end,
              CAST(MAX(e) - MIN(st) + 1 AS BIGINT) AS span_tokens
@@ -791,22 +734,8 @@ object PipelineQueries2 {
   // untouched docs.
   private val qRemoveDupSpans = Queries.Q(
     "p_remove_dup_spans",
-    Some("""
-      WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      win AS (SELECT doc_id, g.i AS st, md5(array_to_string(tk[g.i+1:g.i+5], ' ')) AS h
-              FROM tok CROSS JOIN LATERAL (SELECT unnest(generate_series(0, len(tk) - 5)) AS i) g
-              WHERE len(tk) >= 5),
-      f AS (SELECT *, COUNT(*) OVER (PARTITION BY h) AS cnt,
-                   row_number() OVER (PARTITION BY h ORDER BY doc_id, st) AS rn FROM win),
-      m AS (SELECT doc_id, st, st + 4 AS e FROM f WHERE cnt > 1 AND rn > 1),
-      isl AS (SELECT doc_id, st, e,
-                CASE WHEN max(e) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) IS NULL
-                     OR st > max(e) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) + 1
-                     THEN 1 ELSE 0 END AS brk FROM m),
-      g2 AS (SELECT *, SUM(brk) OVER (PARTITION BY doc_id ORDER BY st
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS isl_id FROM isl),
+    Some(s"""
+      WITH ${OracleSql.dupSpanIslands},
       spans AS (SELECT doc_id, MIN(st) AS s, MAX(e) AS e2 FROM g2 GROUP BY doc_id, isl_id),
       cov AS (SELECT doc_id, unnest(generate_series(s, e2)) AS p FROM spans),
       tokpos AS (SELECT doc_id, unnest(tk) AS tok, generate_subscripts(tk, 1) - 1 AS p FROM tok),
@@ -879,7 +808,7 @@ object PipelineQueries2 {
   // both engines.
   private val qPqTopK = Queries.Q(
     "p_pq_topk",
-    Some("""
+    Some(s"""
       WITH cb AS (SELECT e.vec_id AS code, j.j AS subspace,
                          e.embedding[j.j*16+1 : j.j*16+16] AS subvec
                   FROM embeddings e CROSS JOIN LATERAL (SELECT unnest(generate_series(0, 3)) AS j) j
@@ -902,12 +831,7 @@ object PipelineQueries2 {
                FROM enc e JOIN qd q ON q.subspace = e.subspace AND q.code = e.code
                WHERE q.query_id != e.neighbor_id
                GROUP BY q.query_id, e.neighbor_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, approx_d2 FROM (
-        SELECT query_id, neighbor_id, approx_d2,
-               row_number() OVER (PARTITION BY query_id ORDER BY approx_d2 ASC, neighbor_id) AS rnk
-        FROM pair)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("approx_d2", "ASC", "pair")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       val cb = Similarity.pqCodebookFrom(
@@ -925,66 +849,10 @@ object PipelineQueries2 {
   // three gates' existing CTE logic — quality formula, fingerprint
   // groups, and the recursive-CTE minhash+CC loser set — and checks
   // every flag and the final kept verdict per document.
-  /** The factored curation-gate CTE chain, parameterized by source
-    * relation and a CTE-name suffix so a query can instantiate it
-    * TWICE (the lineage query runs it over two corpus snapshots).
-    * `("documents", "")` reproduces the original single-run text. */
-  private[graft] def duckCurationCtes(src: String, x: String) =
-    s"""t$x AS (SELECT doc_id, ${PipelineQueries.duckShingles3} AS sh FROM $src),
-      t2$x AS (SELECT doc_id, sh FROM t$x WHERE len(sh) > 0),
-      sig$x AS (SELECT doc_id, sh,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2$x),
-      bands$x AS (SELECT doc_id, b.generate_series AS band,
-                  md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh
-                FROM sig$x, generate_series(0, 3) b),
-      cand$x AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-               FROM bands$x a JOIN bands$x b ON a.band = b.band AND a.bh = b.bh AND a.doc_id < b.doc_id),
-      pairs$x AS (SELECT id_a, id_b FROM cand$x
-                JOIN t2$x ta ON ta.doc_id = id_a
-                JOIN t2$x tb ON tb.doc_id = id_b
-                WHERE CAST(len(list_intersect(ta.sh, tb.sh)) AS DOUBLE)
-                        / len(list_distinct(list_concat(ta.sh, tb.sh))) >= 0.5),
-      e$x AS (SELECT id_a AS u, id_b AS v FROM pairs$x
-            UNION SELECT id_b AS u, id_a AS v FROM pairs$x),
-      reach$x(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM e$x)
-                         UNION
-                         SELECT e$x.v, reach$x.r FROM reach$x JOIN e$x ON e$x.u = reach$x.node),
-      losers$x AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach$x GROUP BY node)
-                 WHERE node <> grp),
-      v$x AS (SELECT doc_id, text,
-                   len(string_split(text, ' ')) AS n,
-                   len(list_distinct(string_split(text, ' '))) AS nd,
-                   len(list_filter(string_split(text, ' '),
-                       tk -> list_contains(['the','a','an','and','or','of','to','in','is','it'], tk))) AS nstop
-            FROM $src),
-      r$x AS (SELECT doc_id, n,
-                   CASE WHEN n < 10 THEN 'too_short'
-                        WHEN CAST(length(text) - (n - 1) AS DOUBLE) / n > 10.0 THEN 'long_words'
-                        WHEN nstop = 0 THEN 'no_stopwords'
-                        WHEN 1.0 - CAST(nd AS DOUBLE) / n > 0.6 THEN 'repetitive'
-                        ELSE NULL END AS drop_reason
-            FROM v$x),
-      ex$x AS (SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp FROM $src),
-      exg$x AS (SELECT fp, MIN(doc_id) AS keep_id FROM ex$x GROUP BY fp),
-      exl$x AS (SELECT ex$x.doc_id FROM ex$x JOIN exg$x USING (fp) WHERE ex$x.doc_id <> exg$x.keep_id)"""
-
-  /** One run's per-doc decision row over the suffixed CTE chain —
-    * the lineage query's report side. */
-  private def duckReportCte(x: String) =
-    s"""rep$x AS (SELECT r$x.doc_id,
-             r$x.drop_reason IS NULL AS quality_keep, r$x.drop_reason,
-             r$x.doc_id IN (SELECT doc_id FROM exl$x) AS exact_dup_loser,
-             r$x.doc_id IN (SELECT node FROM losers$x) AS near_dup_loser,
-             (r$x.drop_reason IS NULL AND r$x.doc_id NOT IN (SELECT doc_id FROM exl$x)
-              AND r$x.doc_id NOT IN (SELECT node FROM losers$x)) AS kept
-           FROM r$x)"""
-
   private val qCurationReport = Queries.Q(
     "p_curation_report",
     Some(s"""
-      WITH RECURSIVE ${duckCurationCtes("documents", "")}
+      WITH RECURSIVE ${OracleSql.curationCtes("documents", "")}
       SELECT r.doc_id, CAST(r.n AS BIGINT) AS n_tokens,
              r.drop_reason IS NULL AS quality_keep, r.drop_reason,
              r.doc_id IN (SELECT doc_id FROM exl) AS exact_dup_loser,
@@ -1007,18 +875,13 @@ object PipelineQueries2 {
   private val qIncrementalDedup = Queries.Q(
     "p_incremental_dedup",
     Some(s"""
-      WITH t AS (SELECT doc_id, ${PipelineQueries.duckShingles3} AS sh FROM documents),
-      t2 AS (SELECT doc_id, sh FROM t WHERE len(sh) > 0),
-      sig AS (SELECT doc_id,
-                list_transform(generate_series(0, 11),
-                  j -> list_min(list_transform(sh, x -> md5(j || ':' || x)))) AS s
-              FROM t2),
+      WITH ${OracleSql.minhashBands()},
       ob AS (SELECT doc_id, b.generate_series AS band,
-               md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh, s
+               ${OracleSql.bandHash} AS bh, s
              FROM sig, generate_series(0, 3) b WHERE doc_id < 400),
       keepb AS (SELECT band, bh FROM ob GROUP BY band, bh HAVING COUNT(*) <= 1024),
       nb AS (SELECT doc_id, b.generate_series AS band,
-               md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh, s
+               ${OracleSql.bandHash} AS bh, s
              FROM sig, generate_series(0, 3) b WHERE doc_id >= 400),
       cand AS (SELECT DISTINCT nb.doc_id AS new_id, nb.s AS sa, ob.s AS sb
                FROM nb JOIN ob USING (band, bh) JOIN keepb USING (band, bh)),
@@ -1047,27 +910,10 @@ object PipelineQueries2 {
   // log-ratio estimator is spec-gated in ImportanceSpec instead; see
   // operators/Importance.scala scaladoc). Oracle replays the full
   // train→score→resample pipeline in SQL from the same md5 buckets.
-  private[graft] def duckGramBucket(sqlExpr: String, salt: String, dim: Int): String =
-    s"""list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
-       |  i -> strpos('0123456789abcdef', substr(md5('$salt:' || $sqlExpr), i, 1)) - 1)),
-       |  (h, c) -> h*16 + c) % $dim""".stripMargin
-
-  private val duckDsirCounts =
-    s"""tk AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-       |g AS (SELECT doc_id, lang,
-       |        unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-       |          i -> t[i] || ' ' || t[i+1])) AS gm
-       |      FROM tk),
-       |b AS (SELECT doc_id, lang, ${duckGramBucket("gm", "dsir", 512)} AS bucket FROM g),
-       |c AS (SELECT bucket,
-       |        CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS tgt_cnt,
-       |        CAST(COUNT(*) AS BIGINT) AS raw_cnt
-       |      FROM b GROUP BY 1)""".stripMargin
-
   private val qDsirWeights = Queries.Q(
     "p_dsir_weights",
     Some(s"""
-      WITH $duckDsirCounts
+      WITH ${OracleSql.dsirCounts}
       SELECT bucket, tgt_cnt, raw_cnt,
              CAST(tgt_cnt + 1 AS DOUBLE) / (raw_cnt + 1) AS ratio
       FROM c ORDER BY ratio DESC, bucket LIMIT 20"""),
@@ -1083,7 +929,7 @@ object PipelineQueries2 {
   private val qDsirResample = Queries.Q(
     "p_dsir_resample",
     Some(s"""
-      WITH $duckDsirCounts,
+      WITH ${OracleSql.dsirCounts},
       ds AS (SELECT b.doc_id,
                CAST(SUM(c.tgt_cnt) AS BIGINT) AS st,
                CAST(SUM(c.raw_cnt) AS BIGINT) AS sr
@@ -1132,35 +978,16 @@ object PipelineQueries2 {
   private val qHybridRrf = Queries.Q(
     "p_hybrid_rrf",
     Some(s"""
-      WITH tok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      dlt AS (SELECT doc_id, len(tk) AS dl FROM tok),
-      tf AS (SELECT term, doc_id, COUNT(*) AS tf
-             FROM (SELECT doc_id, unnest(tk) AS term FROM tok)
-             WHERE term IN ('spark', 'window', 'table')
-             GROUP BY term, doc_id),
-      bounded AS (SELECT term, doc_id, tf FROM (
-                    SELECT term, doc_id, tf,
-                           row_number() OVER (PARTITION BY term ORDER BY tf DESC, doc_id) AS rn
-                    FROM tf)
-                  WHERE rn <= 50),
-      st AS (SELECT CAST(COUNT(*) AS HUGEINT) AS n_docs,
-                    CAST(SUM(dl) AS HUGEINT) AS total_len FROM dlt),
-      cand AS (SELECT term, bounded.doc_id, bounded.tf, dlt.dl,
-                      10 * total_len * bounded.tf + 3 * total_len
-                        + 9 * CAST(dlt.dl AS HUGEINT) * n_docs AS d_denom
-               FROM bounded JOIN dlt USING (doc_id) CROSS JOIN st),
+      WITH ${OracleSql.bm25Candidates},
       lex AS (SELECT CAST(CASE term WHEN 'spark' THEN 0 WHEN 'window' THEN 1 ELSE 2 END AS BIGINT) AS query_id,
                      doc_id, rank AS rank_lex FROM (
                 SELECT a.term AS term, a.doc_id AS doc_id,
-                       CAST(1 + SUM(CASE WHEN CAST(b.tf AS HUGEINT) * a.d_denom > CAST(a.tf AS HUGEINT) * b.d_denom
-                                           OR (CAST(b.tf AS HUGEINT) * a.d_denom = CAST(a.tf AS HUGEINT) * b.d_denom
-                                               AND b.doc_id < a.doc_id)
-                                    THEN 1 ELSE 0 END) AS BIGINT) AS rank
+                       ${OracleSql.bm25Rank} AS rank
                 FROM cand a JOIN cand b ON a.term = b.term
                 GROUP BY a.term, a.doc_id)
               WHERE rank <= 10),
       q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 3),
-      sv AS (SELECT query_id, vec_id AS neighbor_id, ${PipelineQueries.duckCosine} AS sim
+      sv AS (SELECT query_id, vec_id AS neighbor_id, ${OracleSql.cosine} AS sim
              FROM q CROSS JOIN embeddings
              WHERE query_id != vec_id),
       vecr AS (SELECT query_id, neighbor_id AS doc_id, CAST(rnk AS BIGINT) AS rank_vec FROM (
@@ -1229,7 +1056,7 @@ object PipelineQueries2 {
   private val qSemanticContamination = Queries.Q(
     "p_semantic_contamination",
     Some(s"""
-      WITH e AS (SELECT vec_id, embedding, ${PipelineQueries.duckSignBucket} AS bucket,
+      WITH e AS (SELECT vec_id, embedding, ${OracleSql.signBucket} AS bucket,
                    list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
                      i -> strpos('0123456789abcdef', substr(md5('split25:' || CAST(vec_id AS VARCHAR)), i, 1)) - 1)),
                      (h, c) -> h*16 + c) % 100 AS sb
@@ -1237,7 +1064,7 @@ object PipelineQueries2 {
       tr AS (SELECT vec_id, embedding, bucket FROM e WHERE sb < 80),
       te AS (SELECT vec_id, embedding AS qv, bucket FROM e WHERE sb >= 90),
       p AS (SELECT te.vec_id AS test_id, tr.vec_id AS train_id,
-              ${PipelineQueries.duckCosine} AS sim
+              ${OracleSql.cosine} AS sim
             FROM te JOIN tr USING (bucket))
       SELECT test_id, train_id, sim FROM p
       WHERE sim >= 0.35
@@ -1259,55 +1086,11 @@ object PipelineQueries2 {
   // costs m map probes. Oracle composes both pipelines' CTEs; each
   // neighbor has exactly one cell so the probe join matches at most
   // once per (query, neighbor).
-  private val duckIvfPqCtes =
-    s"""ct AS (SELECT vec_id AS cent, embedding AS cv FROM embeddings WHERE vec_id < 16),
-      ca AS (SELECT e.vec_id, ct.cent,
-               list_sum(list_transform(list_zip(e.embedding, ct.cv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-               (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-                sqrt(list_sum(list_transform(ct.cv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS ccos
-             FROM embeddings e CROSS JOIN ct),
-      cell AS (SELECT vec_id, (min({'nc': -ccos, 'cent': cent})).cent AS cell FROM ca GROUP BY vec_id),
-      qp AS (SELECT vec_id AS query_id, cent AS cell FROM (
-               SELECT vec_id, cent, row_number() OVER (PARTITION BY vec_id ORDER BY ccos DESC, cent) AS rn
-               FROM ca WHERE vec_id < 20)
-             WHERE rn <= 2),
-      pcb AS (SELECT e.vec_id AS code, j.j AS subspace,
-                     e.embedding[j.j*16+1 : j.j*16+16] AS subvec
-              FROM embeddings e CROSS JOIN LATERAL (SELECT unnest(generate_series(0, 3)) AS j) j
-              WHERE e.vec_id < 16),
-      pcs AS (SELECT e.vec_id AS neighbor_id, j.j AS subspace,
-                     e.embedding[j.j*16+1 : j.j*16+16] AS sv
-              FROM embeddings e CROSS JOIN LATERAL (SELECT unnest(generate_series(0, 3)) AS j) j),
-      ped AS (SELECT pcs.neighbor_id, pcs.subspace, pcb.code,
-                list_sum(list_transform(list_zip(pcs.sv, pcb.subvec),
-                  x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)))) AS d2
-              FROM pcs JOIN pcb USING (subspace)),
-      penc AS (SELECT neighbor_id, subspace, (min({'d': d2, 'c': code})).c AS code
-               FROM ped GROUP BY neighbor_id, subspace),
-      pqd AS (SELECT neighbor_id AS query_id, subspace, code, d2 FROM ped WHERE neighbor_id < 20),
-      pair AS (SELECT q.query_id, e.neighbor_id,
-                 SUM(CASE WHEN q.subspace = 0 THEN q.d2 END) +
-                 SUM(CASE WHEN q.subspace = 1 THEN q.d2 END) +
-                 SUM(CASE WHEN q.subspace = 2 THEN q.d2 END) +
-                 SUM(CASE WHEN q.subspace = 3 THEN q.d2 END) AS approx_d2
-               FROM penc e
-               JOIN cell ce ON ce.vec_id = e.neighbor_id
-               JOIN qp ON qp.cell = ce.cell
-               JOIN pqd q ON q.subspace = e.subspace AND q.code = e.code
-                 AND q.query_id = qp.query_id
-               WHERE q.query_id != e.neighbor_id
-               GROUP BY q.query_id, e.neighbor_id)"""
-
   private val qIvfPqTopK = Queries.Q(
     "p_ivfpq_topk",
     Some(s"""
-      WITH $duckIvfPqCtes
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, approx_d2 FROM (
-        SELECT query_id, neighbor_id, approx_d2,
-               row_number() OVER (PARTITION BY query_id ORDER BY approx_d2 ASC, neighbor_id) AS rnk
-        FROM pair)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      WITH ${OracleSql.ivfPqCtes}
+      ${OracleSql.topK("approx_d2", "ASC", "pair")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       val cb = Similarity.pqCodebookFrom(
@@ -1332,7 +1115,7 @@ object PipelineQueries2 {
   private val qIvfPqRefined = Queries.Q(
     "p_ivfpq_refined",
     Some(s"""
-      WITH $duckIvfPqCtes,
+      WITH ${OracleSql.ivfPqCtes},
       cand AS (SELECT query_id, neighbor_id FROM (
                  SELECT query_id, neighbor_id,
                         row_number() OVER (PARTITION BY query_id ORDER BY approx_d2 ASC, neighbor_id) AS rnk
@@ -1344,12 +1127,7 @@ object PipelineQueries2 {
              FROM cand c
              JOIN embeddings q ON q.vec_id = c.query_id
              JOIN embeddings e ON e.vec_id = c.neighbor_id)
-      SELECT query_id, CAST(rnk AS BIGINT) AS rank, neighbor_id, dist FROM (
-        SELECT query_id, neighbor_id, dist,
-               row_number() OVER (PARTITION BY query_id ORDER BY dist ASC, neighbor_id) AS rnk
-        FROM ex)
-      WHERE rnk <= 10
-      ORDER BY query_id, rank"""),
+      ${OracleSql.topK("dist", "ASC", "ex")}"""),
     (s, dir) => {
       val emb = Tables(s, dir).embeddings
       val cb = Similarity.pqCodebookFrom(
@@ -1370,7 +1148,7 @@ object PipelineQueries2 {
   private val qIvfPqRecallAudit = Queries.Q(
     "p_ivfpq_recall_audit",
     Some(s"""
-      WITH $duckIvfPqCtes,
+      WITH ${OracleSql.ivfPqCtes},
       ivfpq AS (SELECT query_id, neighbor_id FROM (
                   SELECT query_id, neighbor_id,
                          row_number() OVER (PARTITION BY query_id ORDER BY approx_d2 ASC, neighbor_id) AS rnk
@@ -1465,43 +1243,7 @@ object PipelineQueries2 {
   private val qCurationV2 = Queries.Q(
     "p_curation_v2",
     Some(s"""
-      WITH RECURSIVE ${duckCurationCtes("documents", "")},
-      dtk AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-      dg AS (SELECT doc_id, lang,
-               unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                 i -> t[i] || ' ' || t[i+1])) AS gm
-             FROM dtk),
-      db AS (SELECT doc_id, lang, ${duckGramBucket("gm", "dsir", 512)} AS bucket FROM dg),
-      dc AS (SELECT bucket,
-               CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS tgt_cnt,
-               CAST(COUNT(*) AS BIGINT) AS raw_cnt
-             FROM db GROUP BY 1),
-      dds AS (SELECT db.doc_id,
-                CAST(SUM(dc.tgt_cnt) AS BIGINT) AS st,
-                CAST(SUM(dc.raw_cnt) AS BIGINT) AS sr
-              FROM db JOIN dc USING (bucket) GROUP BY 1),
-      daff AS (SELECT d.doc_id,
-                 CAST(COALESCE(dds.st, 0) + 1 AS DOUBLE) / (COALESCE(dds.sr, 0) + 1) AS affinity,
-                 COALESCE(dds.sr, 0) AS sum_raw
-               FROM documents d LEFT JOIN dds ON dds.doc_id = d.doc_id),
-      oct AS (SELECT vec_id AS cent, embedding AS cvv FROM embeddings WHERE vec_id < 16),
-      oca AS (SELECT e.vec_id, oct.cent,
-                list_sum(list_transform(list_zip(e.embedding, oct.cvv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-                (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-                 sqrt(list_sum(list_transform(oct.cvv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS ccos
-              FROM embeddings e CROSS JOIN oct),
-      ocell AS (SELECT vec_id, (min({'nc': -ccos, 'cent': cent})).cent AS cell FROM oca GROUP BY vec_id),
-      od AS (SELECT e.vec_id AS id, ocell.cell,
-               sqrt(list_sum(list_transform(list_zip(e.embedding, c2.cvv),
-                 x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))) AS dist
-             FROM embeddings e
-             JOIN ocell ON ocell.vec_id = e.vec_id
-             JOIN oct c2 ON c2.cent = ocell.cell),
-      orr AS (SELECT id,
-                row_number() OVER (PARTITION BY cell ORDER BY dist DESC, id) AS rn,
-                COUNT(*) OVER (PARTITION BY cell) AS nc
-              FROM od),
-      ofl AS (SELECT id FROM orr WHERE rn <= CAST(ceil(nc * 0.1) AS BIGINT))
+      WITH RECURSIVE ${OracleSql.curationV2Ctes}
       SELECT r.doc_id, CAST(r.n AS BIGINT) AS n_tokens,
              r.drop_reason IS NULL AS quality_keep, r.drop_reason,
              r.doc_id IN (SELECT doc_id FROM exl) AS exact_dup_loser,
@@ -1580,15 +1322,11 @@ object PipelineQueries2 {
     "p_curation_lineage",
     Some(s"""
       WITH RECURSIVE
-      old_docs AS (SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 3 THEN text || ' drifted crawl content here'
-                          ELSE text END AS text
-                   FROM documents WHERE doc_id % 10 != 0),
-      new_docs AS (SELECT doc_id, text FROM documents),
-      ${duckCurationCtes("old_docs", "_o")},
-      ${duckCurationCtes("new_docs", "_n")},
-      ${duckReportCte("_o")},
-      ${duckReportCte("_n")},
+      ${OracleSql.snapshots},
+      ${OracleSql.curationCtes("old_docs", "_o")},
+      ${OracleSql.curationCtes("new_docs", "_n")},
+      ${OracleSql.reportCte("_o")},
+      ${OracleSql.reportCte("_n")},
       fo AS (SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS old_fp FROM old_docs),
       fn AS (SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS new_fp FROM new_docs),
       d AS (SELECT COALESCE(fo.doc_id, fn.doc_id) AS doc_id,
@@ -1636,8 +1374,8 @@ object PipelineQueries2 {
           n = 3, k = 12, rowsPerBand = 3, threshold = 0.5)
       // The two report chains are INDEPENDENT and each runs an eager
       // CC loop during construction — built concurrently
-      // (Queries.concurrently, guide §2.6); same reports, same rows.
-      val Seq(ro, rn) = Queries.concurrently(
+      // (Jobs.concurrently, guide §2.6); same reports, same rows.
+      val Seq(ro, rn) = Jobs.concurrently(
         () => rep(oldDocs), () => rep(newDocs))
       operators.Curation.lineage(
         oldDocs, newDocs, ro, rn, "doc_id", "text")
@@ -1662,24 +1400,20 @@ object PipelineQueries2 {
     "p_incremental_curation",
     Some(s"""
       WITH RECURSIVE
-      old_docs AS (SELECT doc_id,
-                     CASE WHEN doc_id % 7 = 3 THEN text || ' drifted crawl content here'
-                          ELSE text END AS text
-                   FROM documents WHERE doc_id % 10 != 0),
-      new_docs AS (SELECT doc_id, text FROM documents),
-      ${duckCurationCtes("old_docs", "_o")},
-      ${duckReportCte("_o")},
+      ${OracleSql.snapshots},
+      ${OracleSql.curationCtes("old_docs", "_o")},
+      ${OracleSql.reportCte("_o")},
       fo AS (SELECT doc_id, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp FROM old_docs),
       fn AS (SELECT doc_id, text, md5(lower(regexp_replace(text, '\\s+', ' ', 'g'))) AS fp FROM new_docs),
       reusedx AS (SELECT fn.doc_id FROM fn JOIN fo ON fo.doc_id = fn.doc_id AND fo.fp = fn.fp),
       delta_docs AS (SELECT doc_id, text FROM fn WHERE doc_id NOT IN (SELECT doc_id FROM reusedx)),
-      ${duckCurationCtes("delta_docs", "_d")},
+      ${OracleSql.curationCtes("delta_docs", "_d")},
       ob2 AS (SELECT doc_id, b.generate_series AS band,
-                md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh, s
+                ${OracleSql.bandHash} AS bh, s
               FROM sig_o, generate_series(0, 3) b),
       keepb2 AS (SELECT band, bh FROM ob2 GROUP BY band, bh HAVING COUNT(*) <= 1024),
       nb2 AS (SELECT doc_id, b.generate_series AS band,
-                md5(s[b.generate_series*3+1] || '|' || s[b.generate_series*3+2] || '|' || s[b.generate_series*3+3]) AS bh, s
+                ${OracleSql.bandHash} AS bh, s
               FROM sig_d, generate_series(0, 3) b),
       candh AS (SELECT DISTINCT nb2.doc_id AS new_id, nb2.s AS sa, ob2.s AS sb
                 FROM nb2 JOIN ob2 USING (band, bh) JOIN keepb2 USING (band, bh)
@@ -1730,9 +1464,9 @@ object PipelineQueries2 {
       // contract; the checkpoint models exactly that within the one
       // timed run.
       // Both artifacts are INDEPENDENT jobs — materialized
-      // concurrently (Queries.concurrently, guide §2.6) instead of
+      // concurrently (Jobs.concurrently, guide §2.6) instead of
       // strictly serially; same artifacts, same rows.
-      val Seq(oldRep, oldIdx) = Queries.concurrently(
+      val Seq(oldRep, oldIdx) = Jobs.concurrently(
         () => operators.Curation.report(oldDocs, "doc_id", "text",
             n = 3, k = 12, rowsPerBand = 3, threshold = 0.5)
           .join(oldDocs.select(col("doc_id"),

@@ -18,7 +18,6 @@ object PipelineQueries3 {
   // the reference slice: ~40% of documents by salted md5 bucket —
   // the same deterministic device every sampling oracle uses
   private val refPred = Sampling.hashBucket(col("doc_id"), "lmref", 100) < 40
-  private val duckRefPred = s"(${PipelineQueries.duckBucketOn("lmref", "doc_id")}) < 40"
 
   // --------------------------------------- LM training artifact
   // Top-100 reference bigrams by count — the trained model's head,
@@ -28,7 +27,7 @@ object PipelineQueries3 {
   private val qLmBigramCounts = Queries.Q(
     "p_lm_bigram_counts",
     Some(s"""
-      WITH ref AS (SELECT doc_id, text FROM documents WHERE $duckRefPred),
+      WITH ref AS (SELECT doc_id, text FROM documents WHERE ${OracleSql.refPred}),
       rtok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM ref),
       rg AS (SELECT unnest(list_transform(
                generate_series(1, greatest(len(tk) - 1, 0)),
@@ -54,32 +53,8 @@ object PipelineQueries3 {
   private val qLmScoreAudit = Queries.Q(
     "p_lm_score_audit",
     Some(s"""
-      WITH ref AS (SELECT doc_id, text FROM documents WHERE $duckRefPred),
-      tgt AS (SELECT doc_id, text FROM documents WHERE NOT ($duckRefPred)),
-      rtok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM ref),
-      ttok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM tgt),
-      uni AS (SELECT w, COUNT(*) AS c1
-              FROM (SELECT unnest(tk) AS w FROM rtok) GROUP BY w),
-      rg AS (SELECT unnest(list_transform(
-               generate_series(1, greatest(len(tk) - 1, 0)),
-               i -> tk[i] || ' ' || tk[i + 1])) AS gram
-             FROM rtok),
-      bi AS (SELECT gram, COUNT(*) AS c2 FROM rg GROUP BY gram),
-      tg AS (SELECT doc_id, unnest(list_transform(
-               generate_series(1, greatest(len(tk) - 1, 0)),
-               i -> struct_pack(w1 := tk[i],
-                                gram := tk[i] || ' ' || tk[i + 1]))) AS s
-             FROM ttok),
-      per AS (SELECT t.doc_id,
-                CASE WHEN bi.c2 IS NOT NULL AND u1.c1 IS NOT NULL
-                     THEN 1 ELSE 0 END AS hit
-              FROM (SELECT doc_id, s.w1 AS w1, s.gram AS gram FROM tg) t
-              LEFT JOIN bi ON t.gram = bi.gram
-              LEFT JOIN uni u1 ON t.w1 = u1.w),
-      agg AS (SELECT doc_id,
-                COUNT(*) AS n_scored,
-                CAST(SUM(hit) AS BIGINT) AS n_hit
-              FROM per GROUP BY doc_id)
+      WITH tgt AS (SELECT doc_id, text FROM documents WHERE NOT (${OracleSql.refPred})),
+      ${OracleSql.lmHits("", "tgt")}
       SELECT d.doc_id,
              COALESCE(a.n_scored, CAST(0 AS BIGINT)) AS n_scored,
              COALESCE(a.n_hit, CAST(0 AS BIGINT)) AS n_hit,
@@ -101,13 +76,6 @@ object PipelineQueries3 {
     })
 
   // --------------------------------------- token-balanced sharding
-  // The md5 bucket fold of Sampling.hashBucket at an arbitrary
-  // modulus (PipelineQueries.duckBucketOn is the %-100 instance).
-  private def duckBucketMod(salt: String, key: String, m: Int) =
-    s"""list_reduce(list_prepend(0, list_transform(generate_series(1, 8),
-       |  i -> strpos('0123456789abcdef', substr(md5('$salt:' || CAST($key AS VARCHAR)), i, 1)) - 1)),
-       |  (h, c) -> h*16 + c) % $m""".stripMargin
-
   // Export sharding: every document → one of 8 shards, serpentine-
   // dealt by token count within 32 salted hash buckets (never a
   // global sort — see Shards scaladoc). Oracle replays the bucket,
@@ -118,7 +86,7 @@ object PipelineQueries3 {
       WITH b AS (
         SELECT doc_id,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               (${duckBucketMod("shard", "doc_id", 32)}) AS bucket
+               (${OracleSql.bucketOn("shard", "doc_id", 32)}) AS bucket
         FROM documents),
       r AS (
         SELECT doc_id, n_tokens,
@@ -144,7 +112,7 @@ object PipelineQueries3 {
       WITH b AS (
         SELECT doc_id,
                CAST(len(string_split(text, ' ')) AS BIGINT) AS n_tokens,
-               (${duckBucketMod("shard", "doc_id", 32)}) AS bucket
+               (${OracleSql.bucketOn("shard", "doc_id", 32)}) AS bucket
         FROM documents),
       r AS (
         SELECT doc_id, n_tokens,
@@ -176,70 +144,13 @@ object PipelineQueries3 {
   // LM hit-fraction gate (trained on the lmref 40% slice, scoring the
   // whole corpus; keep iff hit_frac >= 0.99 or unscorable). Oracle
   // composes the proven v2 CTE chains (curation gates via
-  // PipelineQueries2.duckCurationCtes, DSIR, outliers) with the
+  // OracleSql.curationCtes, DSIR, outliers) with the
   // p_lm_score_audit LM chain over all documents.
   private val qCurationV3 = Queries.Q(
     "p_curation_v3",
     Some(s"""
-      WITH RECURSIVE ${PipelineQueries2.duckCurationCtes("documents", "")},
-      dtk AS (SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-      dg AS (SELECT doc_id, lang,
-               unnest(list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                 i -> t[i] || ' ' || t[i+1])) AS gm
-             FROM dtk),
-      db AS (SELECT doc_id, lang, ${PipelineQueries2.duckGramBucket("gm", "dsir", 512)} AS bucket FROM dg),
-      dc AS (SELECT bucket,
-               CAST(SUM(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS tgt_cnt,
-               CAST(COUNT(*) AS BIGINT) AS raw_cnt
-             FROM db GROUP BY 1),
-      dds AS (SELECT db.doc_id,
-                CAST(SUM(dc.tgt_cnt) AS BIGINT) AS st,
-                CAST(SUM(dc.raw_cnt) AS BIGINT) AS sr
-              FROM db JOIN dc USING (bucket) GROUP BY 1),
-      daff AS (SELECT d.doc_id,
-                 CAST(COALESCE(dds.st, 0) + 1 AS DOUBLE) / (COALESCE(dds.sr, 0) + 1) AS affinity,
-                 COALESCE(dds.sr, 0) AS sum_raw
-               FROM documents d LEFT JOIN dds ON dds.doc_id = d.doc_id),
-      oct AS (SELECT vec_id AS cent, embedding AS cvv FROM embeddings WHERE vec_id < 16),
-      oca AS (SELECT e.vec_id, oct.cent,
-                list_sum(list_transform(list_zip(e.embedding, oct.cvv), x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE))) /
-                (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))) *
-                 sqrt(list_sum(list_transform(oct.cvv, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))) AS ccos
-              FROM embeddings e CROSS JOIN oct),
-      ocell AS (SELECT vec_id, (min({'nc': -ccos, 'cent': cent})).cent AS cell FROM oca GROUP BY vec_id),
-      od AS (SELECT e.vec_id AS id, ocell.cell,
-               sqrt(list_sum(list_transform(list_zip(e.embedding, c2.cvv),
-                 x -> (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE)) * (CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE))))) AS dist
-             FROM embeddings e
-             JOIN ocell ON ocell.vec_id = e.vec_id
-             JOIN oct c2 ON c2.cent = ocell.cell),
-      orr AS (SELECT id,
-                row_number() OVER (PARTITION BY cell ORDER BY dist DESC, id) AS rn,
-                COUNT(*) OVER (PARTITION BY cell) AS nc
-              FROM od),
-      ofl AS (SELECT id FROM orr WHERE rn <= CAST(ceil(nc * 0.1) AS BIGINT)),
-      lref AS (SELECT doc_id, text FROM documents WHERE $duckRefPred),
-      lrt AS (SELECT doc_id, string_split(text, ' ') AS tk FROM lref),
-      luni AS (SELECT w, COUNT(*) AS c1
-               FROM (SELECT unnest(tk) AS w FROM lrt) GROUP BY w),
-      lrg AS (SELECT unnest(list_transform(
-                generate_series(1, greatest(len(tk) - 1, 0)),
-                i -> tk[i] || ' ' || tk[i + 1])) AS gram
-              FROM lrt),
-      lbi AS (SELECT gram, COUNT(*) AS c2 FROM lrg GROUP BY gram),
-      ltg AS (SELECT doc_id, unnest(list_transform(
-                generate_series(1, greatest(len(t) - 1, 0)),
-                i -> struct_pack(w1 := t[i], gram := t[i] || ' ' || t[i + 1]))) AS s
-              FROM dtk),
-      lper AS (SELECT t.doc_id,
-                 CASE WHEN lbi.c2 IS NOT NULL AND u1.c1 IS NOT NULL
-                      THEN 1 ELSE 0 END AS hit
-               FROM (SELECT doc_id, s.w1 AS w1, s.gram AS gram FROM ltg) t
-               LEFT JOIN lbi ON t.gram = lbi.gram
-               LEFT JOIN luni u1 ON t.w1 = u1.w),
-      lagg AS (SELECT doc_id, COUNT(*) AS n_scored,
-                 CAST(SUM(hit) AS BIGINT) AS n_hit
-               FROM lper GROUP BY doc_id),
+      WITH RECURSIVE ${OracleSql.curationV2Ctes},
+      ${OracleSql.lmHits("l", "documents")},
       lsc AS (SELECT d.doc_id,
                 CASE WHEN a.n_scored > 0
                      THEN CAST(a.n_hit AS DOUBLE) / a.n_scored END AS lm_hit_frac,
@@ -288,20 +199,6 @@ object PipelineQueries3 {
   // ppm is exact integer arithmetic: binary-magnitude length bins
   // (length(bin(n)) — a float log2 would round differently at powers
   // of two), integer-division stopword deciles, (n·1e6) div N ppm.
-  private def duckDriftBuckets(src: String) =
-    s"""SELECT 'len_bin' AS feature,
-          CAST(length(bin(len(string_split(text, ' ')))) AS VARCHAR) AS bucket
-        FROM $src
-        UNION ALL
-        SELECT 'stop_decile',
-          CAST(CASE WHEN n > 0 THEN (s * 10) // n ELSE -1 END AS VARCHAR)
-        FROM (SELECT len(string_split(text, ' ')) AS n,
-                len(list_filter(string_split(text, ' '),
-                  t -> list_contains(['the','a','an','and','or','of','to','in','is','it'], t))) AS s
-              FROM $src)
-        UNION ALL
-        SELECT 'lang', COALESCE(CAST(lang AS VARCHAR), '∅') FROM $src"""
-
   private val qCorpusDrift = Queries.Q(
     "p_corpus_drift",
     Some(s"""
@@ -311,9 +208,9 @@ object PipelineQueries3 {
              FROM documents WHERE doc_id % 10 <> 0),
       newc AS (SELECT doc_id, text, lang FROM documents),
       ob AS (SELECT feature, bucket, CAST(COUNT(*) AS BIGINT) AS old_n
-             FROM (${duckDriftBuckets("oldc")}) GROUP BY 1, 2),
+             FROM (${OracleSql.driftBuckets("oldc")}) GROUP BY 1, 2),
       nb AS (SELECT feature, bucket, CAST(COUNT(*) AS BIGINT) AS new_n
-             FROM (${duckDriftBuckets("newc")}) GROUP BY 1, 2),
+             FROM (${OracleSql.driftBuckets("newc")}) GROUP BY 1, 2),
       ot AS (SELECT feature, SUM(old_n) AS t FROM ob GROUP BY 1),
       nt AS (SELECT feature, SUM(new_n) AS t FROM nb GROUP BY 1),
       j AS (SELECT COALESCE(ob.feature, nb.feature) AS feature,
@@ -396,29 +293,7 @@ object PipelineQueries3 {
   private val qCcnetBuckets = Queries.Q(
     "p_ccnet_buckets",
     Some(s"""
-      WITH ref AS (SELECT doc_id, text FROM documents WHERE $duckRefPred),
-      rtok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM ref),
-      uni AS (SELECT w, COUNT(*) AS c1
-              FROM (SELECT unnest(tk) AS w FROM rtok) GROUP BY w),
-      rg AS (SELECT unnest(list_transform(
-               generate_series(1, greatest(len(tk) - 1, 0)),
-               i -> tk[i] || ' ' || tk[i + 1])) AS gram
-             FROM rtok),
-      bi AS (SELECT gram, COUNT(*) AS c2 FROM rg GROUP BY gram),
-      ttok AS (SELECT doc_id, string_split(text, ' ') AS tk FROM documents),
-      tg AS (SELECT doc_id, unnest(list_transform(
-               generate_series(1, greatest(len(tk) - 1, 0)),
-               i -> struct_pack(w1 := tk[i], gram := tk[i] || ' ' || tk[i + 1]))) AS s
-             FROM ttok),
-      per AS (SELECT t.doc_id,
-                CASE WHEN bi.c2 IS NOT NULL AND u1.c1 IS NOT NULL
-                     THEN 1 ELSE 0 END AS hit
-              FROM (SELECT doc_id, s.w1 AS w1, s.gram AS gram FROM tg) t
-              LEFT JOIN bi ON t.gram = bi.gram
-              LEFT JOIN uni u1 ON t.w1 = u1.w),
-      agg AS (SELECT doc_id, COUNT(*) AS n_scored,
-                CAST(SUM(hit) AS BIGINT) AS n_hit
-              FROM per GROUP BY doc_id),
+      WITH ${OracleSql.lmHits("", "documents")},
       sc AS (SELECT doc_id,
                CAST(n_hit AS DOUBLE) / n_scored AS hit_frac
              FROM agg WHERE n_scored > 0),
@@ -481,68 +356,17 @@ object PipelineQueries3 {
   // ≥11 (no coincidental pairs).
   private val qImageNearDup = Queries.Q(
     "p_image_near_dup",
-    Some("""
-      WITH imgs AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) AS w, 10 + ((i // 3) % 4) AS h,
-               CASE (i // 3) % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
-        FROM generate_series(0, 17) t(i)),
-      cells AS (
-        SELECT i, b, v, ch, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM imgs, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, gx, gy,
-               CASE WHEN ch >= 3 THEN (f0 + f1 + f2) // 3 ELSE f0 END AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40
-                           WHEN v = 2 AND (sx + sy) % 11 = 0 THEN 25
-                           ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        -- two 32-bit halves: DuckDB range-checks << so 1<<63 is not
-        -- assemblable in one BIGINT; Hamming sums over halves anyway
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS dh_lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS dh_hi
-        FROM bits GROUP BY i)
-      SELECT id_a, id_b, hamming FROM (
-        SELECT CAST(x.i AS BIGINT) AS id_a, CAST(y.i AS BIGINT) AS id_b,
-               CAST(bit_count(xor(x.dh_lo, y.dh_lo)) +
-                    bit_count(xor(x.dh_hi, y.dh_hi)) AS BIGINT) AS hamming
-        FROM hs x JOIN hs y ON x.i < y.i)
-      WHERE hamming <= 3
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.images18()},
+      ${OracleSql.gridHash("", "px", "i")}
+      ${OracleSql.hammingRows}"""),
     (s, dir) => {
-      val imgs: Seq[(Long, Array[Byte])] = (0 until 18).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h) = (12 + b, 10 + b % 4)
-        val ch = Seq(1, 3, 2, 4)(b % 4)
-        (i.toLong, operators.Multimodal.encodePng(w, h, ch,
-          (x, y, c) => (x * 17 + y * 29 + c * 37 + b * 53) % 180 +
-            (if (v == 1) 40 else if (v == 2 && (x + y) % 11 == 0) 25 else 0),
-          y => (y + i) % 5))
-      }
+      import s.implicits._
       // undecodable payloads flow through as NULL hashes and must be
       // dropped, never paired
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        18L -> "not an image at all".getBytes("UTF-8"),
-        19L -> Array[Byte](0x1, 0x2, 0x3))
-      import s.implicits._
       operators.Multimodal.imageNearDupPairs(
-        (imgs ++ junk).toDF("img_id", "payload"), "img_id", "payload",
+        (MediaFixtures.images18(upscale = false) ++ MediaFixtures.imageJunk)
+          .toDF("img_id", "payload"), "img_id", "payload",
         maxHamming = 3)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -557,74 +381,18 @@ object PipelineQueries3 {
   // discipline on the multimodal column.
   private val qImageDedup = Queries.Q(
     "p_image_dedup",
-    Some("""
-      WITH RECURSIVE imgs AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) AS w, 10 + ((i // 3) % 4) AS h,
-               CASE (i // 3) % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
-        FROM generate_series(0, 17) t(i)),
-      cells AS (
-        SELECT i, b, v, ch, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM imgs, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, gx, gy,
-               CASE WHEN ch >= 3 THEN (f0 + f1 + f2) // 3 ELSE f0 END AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40
-                           WHEN v = 2 AND (sx + sy) % 11 = 0 THEN 25
-                           ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS dh_lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS dh_hi
-        FROM bits GROUP BY i),
-      pairs AS (
-        SELECT x.i AS id_a, y.i AS id_b
-        FROM hs x JOIN hs y ON x.i < y.i
-        WHERE bit_count(xor(x.dh_lo, y.dh_lo)) +
-              bit_count(xor(x.dh_hi, y.dh_hi)) <= 3),
-      g AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
-      SELECT CAST(i AS BIGINT) AS img_id,
-             CASE WHEN i >= 18 THEN 'other' ELSE 'png' END AS kind
-      FROM generate_series(0, 19) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY img_id"""),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.images18()},
+      ${OracleSql.gridHash("", "px", "i")},
+      ${OracleSql.hammingPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
+      ${OracleSql.keptRows("img_id", "png", 18)}"""),
     (s, dir) => {
-      val imgs: Seq[(Long, Array[Byte])] = (0 until 18).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h) = (12 + b, 10 + b % 4)
-        val ch = Seq(1, 3, 2, 4)(b % 4)
-        (i.toLong, operators.Multimodal.encodePng(w, h, ch,
-          (x, y, c) => (x * 17 + y * 29 + c * 37 + b * 53) % 180 +
-            (if (v == 1) 40 else if (v == 2 && (x + y) % 11 == 0) 25 else 0),
-          y => (y + i) % 5))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        18L -> "not an image at all".getBytes("UTF-8"),
-        19L -> Array[Byte](0x1, 0x2, 0x3))
       import s.implicits._
       operators.Multimodal.dedupImageNearDups(
-        (imgs ++ junk).toDF("img_id", "payload"), "img_id", "payload",
+        (MediaFixtures.images18(upscale = false) ++ MediaFixtures.imageJunk)
+          .toDF("img_id", "payload"), "img_id", "payload",
         maxHamming = 3)
         .select(col("img_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -642,72 +410,15 @@ object PipelineQueries3 {
   // flip, resample, or luma rule fails the hash.
   private val qVideoNearDup = Queries.Q(
     "p_video_near_dup",
-    Some("""
-      WITH vids AS (
-        SELECT i, (i // 2) AS b, (i % 2) AS v,
-               12 + (i // 2) % 3 AS w, 10 + (i // 2) % 2 AS h,
-               4 + (i // 2) % 3 AS nf
-        FROM generate_series(0, 9) t(i)),
-      fr AS (SELECT i, b, v, w, h, unnest(generate_series(0, nf - 1, 2)) AS f
-             FROM vids),
-      cells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM fr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40 ELSE 0 END +
-                      CASE WHEN v = 1 AND (sx + sy) % 3 = 0
-                                AND (b = 0 OR f = 2) THEN 25
-                           ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
-      ns AS (SELECT i, COUNT(*) AS n FROM hs GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hs x JOIN hs y
-               ON x.f = y.f AND x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i)
-      SELECT CAST(ia AS BIGINT) AS id_a, CAST(ib AS BIGINT) AS id_b,
-             CAST(nm AS BIGINT) AS n_match,
-             CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) AS match_frac
-      FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-      WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.videos10},
+      ${OracleSql.gridHash("", "px", "i", "f")},
+      ${OracleSql.setOverlap(by = Seq("f"))}
+      ${OracleSql.overlapRows}"""),
     (s, dir) => {
-      val vids: Seq[(Long, Array[Byte])] = (0 until 10).map { i =>
-        val b = i / 2
-        val v = i % 2
-        val (w, h, nf) = (12 + b % 3, 10 + b % 2, 4 + b % 3)
-        // re-encode shift (+40, hash-invariant) everywhere; a LOCAL
-        // edit (+25 on a sparse mask) on every frame of family 0 (its
-        // pair must fall BELOW the threshold) and on frame 2 of the
-        // rest (partial match: frac 1/2 or 2/3, exercising the
-        // boundary from both sides)
-        (i.toLong, operators.Multimodal.encodeAvi(w, h, nf,
-          (f, x, y, c) => (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-            (if (v == 1) 40 else 0) +
-            (if (v == 1 && (x + y) % 3 == 0 && (b == 0 || f == 2)) 25 else 0),
-          topDown = i % 2 == 1))
-      }
       import s.implicits._
       operators.Multimodal.videoNearDupPairs(
-        vids.toDF("video_id", "payload"), "video_id", "payload",
+        MediaFixtures.videos10.toDF("video_id", "payload"), "video_id", "payload",
         stride = 2, minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -724,52 +435,13 @@ object PipelineQueries3 {
   // recursive closure.
   private val qImageDedupBest = Queries.Q(
     "p_image_dedup_best",
-    Some("""
-      WITH RECURSIVE imgs AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) AS w, 10 + ((i // 3) % 4) AS h,
-               CASE (i // 3) % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
-        FROM generate_series(0, 17) t(i)),
-      cells AS (
-        SELECT i, b, v, ch, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM imgs, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, gx, gy,
-               CASE WHEN ch >= 3 THEN (f0 + f1 + f2) // 3 ELSE f0 END AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40
-                           WHEN v = 2 AND (sx + sy) % 11 = 0 THEN 25
-                           ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS dh_lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS dh_hi
-        FROM bits GROUP BY i),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.images18()},
+      ${OracleSql.gridHash("", "px", "i")},
       qual AS (SELECT i, CASE WHEN v = 1 THEN 4 * w * h ELSE w * h END AS q
                FROM imgs),
-      pairs AS (
-        SELECT x.i AS id_a, y.i AS id_b
-        FROM hs x JOIN hs y ON x.i < y.i
-        WHERE bit_count(xor(x.dh_lo, y.dh_lo)) +
-              bit_count(xor(x.dh_hi, y.dh_hi)) <= 3),
-      g AS (SELECT id_a AS u, id_b AS v FROM pairs
-            UNION SELECT id_b AS u, id_a AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
+      ${OracleSql.hammingPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
       comp AS (SELECT node, MIN(r) AS grp FROM reach GROUP BY node),
       best AS (SELECT node FROM (
                  SELECT comp.node,
@@ -779,36 +451,12 @@ object PipelineQueries3 {
                WHERE rn = 1),
       losers AS (SELECT node FROM comp
                  WHERE node NOT IN (SELECT node FROM best))
-      SELECT CAST(i AS BIGINT) AS img_id,
-             CASE WHEN i >= 18 THEN 'other' ELSE 'png' END AS kind
-      FROM generate_series(0, 19) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY img_id"""),
+      ${OracleSql.keptRows("img_id", "png", 18)}"""),
     (s, dir) => {
-      val imgs: Seq[(Long, Array[Byte])] = (0 until 18).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h) = (12 + b, 10 + b % 4)
-        val ch = Seq(1, 3, 2, 4)(b % 4)
-        def base(x: Int, y: Int, c: Int): Int =
-          (x * 17 + y * 29 + c * 37 + b * 53) % 180
-        val png =
-          if (v == 1) // 2× NN upscale + uniform shift: same hash, 4× pixels
-            operators.Multimodal.encodePng(2 * w, 2 * h, ch,
-              (x, y, c) => base(x / 2, y / 2, c) + 40, y => (y + i) % 5)
-          else
-            operators.Multimodal.encodePng(w, h, ch,
-              (x, y, c) => base(x, y, c) +
-                (if (v == 2 && (x + y) % 11 == 0) 25 else 0),
-              y => (y + i) % 5)
-        (i.toLong, png)
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        18L -> "not an image at all".getBytes("UTF-8"),
-        19L -> Array[Byte](0x1, 0x2, 0x3))
       import s.implicits._
       operators.Multimodal.dedupImageNearDupsBest(
-        (imgs ++ junk).toDF("img_id", "payload"), "img_id", "payload",
+        (MediaFixtures.images18(upscale = true) ++ MediaFixtures.imageJunk)
+          .toDF("img_id", "payload"), "img_id", "payload",
         maxHamming = 3)
         .select(col("img_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -824,80 +472,19 @@ object PipelineQueries3 {
   // the NOT IN — the p_image_dedup discipline on the video column.
   private val qVideoDedup = Queries.Q(
     "p_video_dedup",
-    Some("""
-      WITH RECURSIVE vids AS (
-        SELECT i, (i // 2) AS b, (i % 2) AS v,
-               12 + (i // 2) % 3 AS w, 10 + (i // 2) % 2 AS h,
-               4 + (i // 2) % 3 AS nf
-        FROM generate_series(0, 9) t(i)),
-      fr AS (SELECT i, b, v, w, h, unnest(generate_series(0, nf - 1, 2)) AS f
-             FROM vids),
-      cells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM fr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40 ELSE 0 END +
-                      CASE WHEN v = 1 AND (sx + sy) % 3 = 0
-                                AND (b = 0 OR f = 2) THEN 25
-                           ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
-      ns AS (SELECT i, COUNT(*) AS n FROM hs GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hs x JOIN hs y
-               ON x.f = y.f AND x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i),
-      pairs AS (
-        SELECT ia, ib
-        FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      g AS (SELECT ia AS u, ib AS v FROM pairs
-            UNION SELECT ib AS u, ia AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
-      SELECT CAST(i AS BIGINT) AS video_id,
-             CASE WHEN i >= 10 THEN 'other' ELSE 'avi' END AS kind
-      FROM generate_series(0, 11) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY video_id"""),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.videos10},
+      ${OracleSql.gridHash("", "px", "i", "f")},
+      ${OracleSql.setOverlap(by = Seq("f"))},
+      ${OracleSql.overlapPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
+      ${OracleSql.keptRows("video_id", "avi", 10)}"""),
     (s, dir) => {
-      val vids: Seq[(Long, Array[Byte])] = (0 until 10).map { i =>
-        val b = i / 2
-        val v = i % 2
-        val (w, h, nf) = (12 + b % 3, 10 + b % 2, 4 + b % 3)
-        (i.toLong, operators.Multimodal.encodeAvi(w, h, nf,
-          (f, x, y, c) => (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-            (if (v == 1) 40 else 0) +
-            (if (v == 1 && (x + y) % 3 == 0 && (b == 0 || f == 2)) 25 else 0),
-          topDown = i % 2 == 1))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        10L -> "definitely not a video".getBytes("UTF-8"),
-        11L -> Array[Byte](0x4, 0x5, 0x6))
       import s.implicits._
       operators.Multimodal.dedupVideoNearDups(
-        (vids ++ junk).toDF("video_id", "payload"), "video_id", "payload",
+        (MediaFixtures.videos10 ++ MediaFixtures.videoJunk(10))
+          .toDF("video_id", "payload"), "video_id", "payload",
         stride = 2, minFrac = 0.5)
         .select(col("video_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -918,7 +505,7 @@ object PipelineQueries3 {
   // cross-joins with xor+bit_count.
   private val qVideoImageMatches = Queries.Q(
     "p_video_image_matches",
-    Some("""
+    Some(s"""
       WITH vids AS (
         SELECT i, i AS b, 12 + i % 3 AS w, 10 + i % 2 AS h, 4 + i % 3 AS nf
         FROM generate_series(0, 3) t(i)),
@@ -933,19 +520,7 @@ object PipelineQueries3 {
                 (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 +
                 (sx*17 + sy*29 + 74 + f*41 + b*53) % 180) // 3 AS luma
         FROM vcell),
-      vbits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM vpx a JOIN vpx n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                             AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      vhs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY i, f),
+      ${OracleSql.gridHash("v", "vpx", "i", "f")},
       imgs AS (
         SELECT j,
                CASE WHEN j IN (1, 4) THEN 1 WHEN j = 2 THEN 2
@@ -970,23 +545,11 @@ object PipelineQueries3 {
                 (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh +
                 (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh) // 3 AS luma
         FROM icell),
-      ibits AS (
-        SELECT a.j, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM ipx a JOIN ipx n ON n.j = a.j AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      ihs AS (
-        SELECT j,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY j)
+      ${OracleSql.gridHash("i", "ipx", "j")}
       SELECT video_id, frame_idx, img_id, hamming FROM (
         SELECT CAST(v.i AS BIGINT) AS video_id, CAST(v.f AS BIGINT) AS frame_idx,
                CAST(im.j AS BIGINT) AS img_id,
-               CAST(bit_count(xor(v.lo, im.lo)) +
-                    bit_count(xor(v.hi, im.hi)) AS BIGINT) AS hamming
+               CAST(${OracleSql.hamming("v", "im")} AS BIGINT) AS hamming
         FROM vhs v, ihs im)
       WHERE hamming <= 3
       ORDER BY video_id, frame_idx, img_id"""),
@@ -1023,77 +586,18 @@ object PipelineQueries3 {
   // fixture (incl. its junk rows), so the queries cross-check.
   private val qAudioDedup = Queries.Q(
     "p_audio_dedup",
-    Some("""
-      WITH RECURSIVE clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               400 + (i // 3) * 37 AS nf, 1 + (i // 3) % 2 AS ch
-        FROM generate_series(0, 11) t(i)),
-      fr AS (SELECT i, b, v, nf, ch, unnest(generate_series(0, nf - 1)) AS f
-             FROM clips),
-      cs AS (SELECT i, b, v, nf, f, unnest(generate_series(0, ch - 1)) AS c
-             FROM fr),
-      smp AS (
-        SELECT i, nf, f,
-               (((f*31 + c*17 + b*101) % 4001) - 2000) *
-               CASE WHEN v = 1 THEN 3
-                    WHEN v = 2 AND b = 0 AND ((f * 65) // nf) % 2 = 0 THEN 4
-                    WHEN v = 2 AND b <> 0 AND (f * 10) // nf = 3 THEN 4
-                    ELSE 1 END AS s
-        FROM cs),
-      win AS (
-        SELECT c.i, c.nf, w, (w * c.nf) // 65 AS lo, ((w + 1) * c.nf) // 65 AS hi
-        FROM clips c, generate_series(0, 64) ws(w)),
-      e AS (
-        SELECT win.i, win.w, (win.hi - win.lo) AS len, SUM(ABS(smp.s)) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.f >= win.lo AND smp.f < win.hi
-        GROUP BY win.i, win.w, win.hi, win.lo),
-      bits AS (
-        SELECT a.i, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS dh_lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS dh_hi
-        FROM bits GROUP BY i),
-      pairs AS (
-        SELECT x.i AS ia, y.i AS ib
-        FROM hs x JOIN hs y ON x.i < y.i
-        WHERE bit_count(xor(x.dh_lo, y.dh_lo)) +
-              bit_count(xor(x.dh_hi, y.dh_hi)) <= 3),
-      g AS (SELECT ia AS u, ib AS v FROM pairs
-            UNION SELECT ib AS u, ia AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
-      SELECT CAST(i AS BIGINT) AS clip_id,
-             CASE WHEN i >= 12 THEN 'other' ELSE 'wav' END AS kind
-      FROM generate_series(0, 13) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY clip_id"""),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.clips12},
+      ${OracleSql.envelopeHash("", "e", "i")},
+      ${OracleSql.hammingPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
+      ${OracleSql.keptRows("clip_id", "wav", 12)}"""),
     (s, dir) => {
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (nf, ch) = (400 + b * 37, 1 + b % 2)
-        (i.toLong, operators.Multimodal.encodeWav(ch, 8000, nf,
-          (c, f) => (((f * 31 + c * 17 + b * 101) % 4001) - 2000) *
-            (if (v == 1) 3
-            else if (v == 2 && b == 0 && (f * 65) / nf % 2 == 0) 4
-            else if (v == 2 && b != 0 && (f * 10) / nf == 3) 4
-            else 1)))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not audio".getBytes("UTF-8"),
-        13L -> Array[Byte](0x7, 0x8))
       import s.implicits._
       operators.Multimodal.dedupAudioNearDups(
-        (clips ++ junk).toDF("clip_id", "payload"), "clip_id", "payload",
+        (MediaFixtures.clips12 ++ MediaFixtures.audioJunk(12))
+          .toDF("clip_id", "payload"), "clip_id", "payload",
         maxHamming = 3)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -1114,72 +618,15 @@ object PipelineQueries3 {
   // fractions.
   private val qVideoNearDupShifted = Queries.Q(
     "p_video_near_dup_shifted",
-    Some("""
-      WITH vids AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) % 3 AS w, 10 + (i // 3) % 2 AS h,
-               6 + (i // 3) AS nf0
-        FROM generate_series(0, 11) t(i)),
-      fr AS ( -- physical frames carry CONTENT index f (trim shifts it)
-        SELECT i, b, v, w, h,
-               unnest(generate_series(CASE WHEN v = 1 THEN 2 ELSE 0 END,
-                                      nf0 - 1)) AS f
-        FROM vids),
-      cells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM fr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 3 <> 0
-                           THEN 25 ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i)
-      SELECT CAST(ia AS BIGINT) AS id_a, CAST(ib AS BIGINT) AS id_b,
-             CAST(nm AS BIGINT) AS n_match,
-             CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) AS match_frac
-      FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-      WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.videosShifted12()},
+      ${OracleSql.gridHash("", "px", "i", "f")},
+      ${OracleSql.setOverlap()}
+      ${OracleSql.overlapRows}"""),
     (s, dir) => {
-      val vids: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h, nf0) = (12 + b % 3, 10 + b % 2, 6 + b)
-        val trim = if (v == 1) 2 else 0
-        (i.toLong, operators.Multimodal.encodeAvi(w, h, nf0 - trim,
-          (pf, x, y, c) => {
-            val f = pf + trim // trimmed copies shift CONTENT, not layout
-            (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-              (if (v == 2 && (x + y) % 3 == 0 && f % 3 != 0) 25 else 0)
-          },
-          topDown = i % 2 == 1))
-      }
       import s.implicits._
       operators.Multimodal.videoNearDupPairsShifted(
-        vids.toDF("video_id", "payload"), "video_id", "payload",
+        MediaFixtures.videosShifted12.toDF("video_id", "payload"), "video_id", "payload",
         stride = 1, minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -1196,68 +643,15 @@ object PipelineQueries3 {
   // envelope-gradient bits, both hash halves, and the pair set.
   private val qAudioNearDup = Queries.Q(
     "p_audio_near_dup",
-    Some("""
-      WITH clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               400 + (i // 3) * 37 AS nf, 1 + (i // 3) % 2 AS ch
-        FROM generate_series(0, 11) t(i)),
-      fr AS (SELECT i, b, v, nf, ch, unnest(generate_series(0, nf - 1)) AS f
-             FROM clips),
-      cs AS (SELECT i, b, v, nf, f, unnest(generate_series(0, ch - 1)) AS c
-             FROM fr),
-      smp AS (
-        SELECT i, nf, f,
-               (((f*31 + c*17 + b*101) % 4001) - 2000) *
-               CASE WHEN v = 1 THEN 3
-                    WHEN v = 2 AND b = 0 AND ((f * 65) // nf) % 2 = 0 THEN 4
-                    WHEN v = 2 AND b <> 0 AND (f * 10) // nf = 3 THEN 4
-                    ELSE 1 END AS s
-        FROM cs),
-      win AS (
-        SELECT c.i, c.nf, w, (w * c.nf) // 65 AS lo, ((w + 1) * c.nf) // 65 AS hi
-        FROM clips c, generate_series(0, 64) ws(w)),
-      e AS (
-        SELECT win.i, win.w, (win.hi - win.lo) AS len, SUM(ABS(smp.s)) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.f >= win.lo AND smp.f < win.hi
-        GROUP BY win.i, win.w, win.hi, win.lo),
-      bits AS (
-        SELECT a.i, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS dh_lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS dh_hi
-        FROM bits GROUP BY i)
-      SELECT id_a, id_b, hamming FROM (
-        SELECT CAST(x.i AS BIGINT) AS id_a, CAST(y.i AS BIGINT) AS id_b,
-               CAST(bit_count(xor(x.dh_lo, y.dh_lo)) +
-                    bit_count(xor(x.dh_hi, y.dh_hi)) AS BIGINT) AS hamming
-        FROM hs x JOIN hs y ON x.i < y.i)
-      WHERE hamming <= 3
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.clips12},
+      ${OracleSql.envelopeHash("", "e", "i")}
+      ${OracleSql.hammingRows}"""),
     (s, dir) => {
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (nf, ch) = (400 + b * 37, 1 + b % 2)
-        // encodeWav's sample callback is (channel, frame)
-        (i.toLong, operators.Multimodal.encodeWav(ch, 8000, nf,
-          (c, f) => (((f * 31 + c * 17 + b * 101) % 4001) - 2000) *
-            (if (v == 1) 3
-            else if (v == 2 && b == 0 && (f * 65) / nf % 2 == 0) 4
-            else if (v == 2 && b != 0 && (f * 10) / nf == 3) 4
-            else 1)))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not audio".getBytes("UTF-8"),
-        13L -> Array[Byte](0x7, 0x8))
       import s.implicits._
       operators.Multimodal.audioNearDupPairs(
-        (clips ++ junk).toDF("clip_id", "payload"), "clip_id", "payload",
+        (MediaFixtures.clips12 ++ MediaFixtures.audioJunk(12))
+          .toDF("clip_id", "payload"), "clip_id", "payload",
         maxHamming = 3)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -1278,89 +672,15 @@ object PipelineQueries3 {
   // and the overlap fractions.
   private val qAudioNearDupShifted = Queries.Q(
     "p_audio_near_dup_shifted",
-    Some("""
-      WITH clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               500 + (i // 3) * 61 AS nf0, 1 + (i // 3) % 2 AS ch,
-               CASE WHEN i % 3 = 1 THEN 128 ELSE 0 END AS trim
-        FROM generate_series(0, 11) t(i)),
-      phys AS (SELECT *, nf0 - trim AS pn FROM clips),
-      segs AS (
-        SELECT i, ch, s, s * 128 AS sfrom, LEAST(s * 128 + 128, pn) AS sto
-        FROM phys, generate_series(0, 10) ss(s)
-        WHERE s * 128 + 65 <= pn),
-      win AS (
-        SELECT i, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
-      fr AS (
-        SELECT i, b, v, ch, trim, unnest(generate_series(0, pn - 1)) AS f
-        FROM phys),
-      fm AS ( -- per-frame gain multiplier (physical segment masks)
-        SELECT i, b, trim, f, ch,
-               CASE WHEN v = 1 THEN 3
-                    WHEN v = 2 AND f % 128 < 64 AND
-                         CASE WHEN b % 2 = 0 THEN (f // 128) % 3 <> 0
-                              ELSE (f // 128) % 2 = 1 END
-                    THEN 4 ELSE 1 END AS mult
-        FROM fr),
-      cs AS (SELECT i, b, trim, f, mult, unnest(generate_series(0, ch - 1)) AS c
-             FROM fm),
-      smp AS ( -- total |amplitude| per (clip, frame) over channels
-        SELECT i, f,
-               SUM(ABS(((((f + trim) * 31 + c * 17 + b * 101) % 4001) - 2000)
-                       * mult)) AS aamp
-        FROM cs GROUP BY i, f),
-      e AS (
-        SELECT win.i, win.s, win.w, (win.wt - win.wf) AS len,
-               SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.f >= win.wf AND smp.f < win.wt
-        GROUP BY win.i, win.s, win.w, win.wt, win.wf),
-      bits AS (
-        SELECT a.i, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.s = a.s AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, s),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i)
-      SELECT CAST(ia AS BIGINT) AS id_a, CAST(ib AS BIGINT) AS id_b,
-             CAST(nm AS BIGINT) AS n_match,
-             CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) AS match_frac
-      FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-      WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.clipsShifted12()},
+      ${OracleSql.envelopeHash("", "e", "i", "s")},
+      ${OracleSql.setOverlap()}
+      ${OracleSql.overlapRows}"""),
     (s, dir) => {
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (nf0, ch) = (500 + b * 61, 1 + b % 2)
-        val trim = if (v == 1) 128 else 0
-        def base(c: Int, cf: Int): Int = (((cf * 31 + c * 17 + b * 101) % 4001) - 2000)
-        (i.toLong, operators.Multimodal.encodeWav(ch, 8000, nf0 - trim,
-          (c, f) => {
-            val mult =
-              if (v == 1) 3
-              else if (v == 2 && f % 128 < 64 &&
-                (if (b % 2 == 0) (f / 128) % 3 != 0 else (f / 128) % 2 == 1)) 4
-              else 1
-            base(c, f + trim) * mult
-          }))
-      }
       import s.implicits._
       operators.Multimodal.audioNearDupPairsShifted(
-        clips.toDF("clip_id", "payload"), "clip_id", "payload",
+        MediaFixtures.clipsShifted12.toDF("clip_id", "payload"), "clip_id", "payload",
         segFrames = 128, minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })

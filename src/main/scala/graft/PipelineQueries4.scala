@@ -28,85 +28,19 @@ object PipelineQueries4 {
   // hash overlap clears the 0.5 gate.
   private val qVideoDedupShifted = Queries.Q(
     "p_video_dedup_shifted",
-    Some("""
-      WITH RECURSIVE vids AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) % 3 AS w, 10 + (i // 3) % 2 AS h,
-               6 + (i // 3) AS nf0
-        FROM generate_series(0, 11) t(i)),
-      fr AS ( -- physical frames carry CONTENT index f (trim shifts it)
-        SELECT i, b, v, w, h,
-               unnest(generate_series(CASE WHEN v = 1 THEN 2 ELSE 0 END,
-                                      nf0 - 1)) AS f
-        FROM vids),
-      cells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM fr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 3 <> 0
-                           THEN 25 ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i),
-      pairs AS (
-        SELECT ia, ib
-        FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      g AS (SELECT ia AS u, ib AS v FROM pairs
-            UNION SELECT ib AS u, ia AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
-      SELECT CAST(i AS BIGINT) AS video_id,
-             CASE WHEN i >= 12 THEN 'other' ELSE 'avi' END AS kind
-      FROM generate_series(0, 13) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY video_id"""),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.videosShifted12()},
+      ${OracleSql.gridHash("", "px", "i", "f")},
+      ${OracleSql.setOverlap()},
+      ${OracleSql.overlapPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
+      ${OracleSql.keptRows("video_id", "avi", 12)}"""),
     (s, dir) => {
-      val vids: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h, nf0) = (12 + b % 3, 10 + b % 2, 6 + b)
-        val trim = if (v == 1) 2 else 0
-        (i.toLong, operators.Multimodal.encodeAvi(w, h, nf0 - trim,
-          (pf, x, y, c) => {
-            val f = pf + trim // trimmed copies shift CONTENT, not layout
-            (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-              (if (v == 2 && (x + y) % 3 == 0 && f % 3 != 0) 25 else 0)
-          },
-          topDown = i % 2 == 1))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not a video".getBytes("UTF-8"),
-        13L -> Array[Byte](0x4, 0x5, 0x6))
       import s.implicits._
       operators.Multimodal.dedupVideoNearDupsShifted(
-        (vids ++ junk).toDF("video_id", "payload"), "video_id", "payload",
+        (MediaFixtures.videosShifted12 ++ MediaFixtures.videoJunk(12))
+          .toDF("video_id", "payload"), "video_id", "payload",
         stride = 1, minFrac = 0.5)
         .select(col("video_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -120,102 +54,19 @@ object PipelineQueries4 {
   // trim+gain copies the whole-clip hash misses collapse here.
   private val qAudioDedupShifted = Queries.Q(
     "p_audio_dedup_shifted",
-    Some("""
-      WITH RECURSIVE clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               500 + (i // 3) * 61 AS nf0, 1 + (i // 3) % 2 AS ch,
-               CASE WHEN i % 3 = 1 THEN 128 ELSE 0 END AS trim
-        FROM generate_series(0, 11) t(i)),
-      phys AS (SELECT *, nf0 - trim AS pn FROM clips),
-      segs AS (
-        SELECT i, ch, s, s * 128 AS sfrom, LEAST(s * 128 + 128, pn) AS sto
-        FROM phys, generate_series(0, 10) ss(s)
-        WHERE s * 128 + 65 <= pn),
-      win AS (
-        SELECT i, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
-      fr AS (
-        SELECT i, b, v, ch, trim, unnest(generate_series(0, pn - 1)) AS f
-        FROM phys),
-      fm AS ( -- per-frame gain multiplier (physical segment masks)
-        SELECT i, b, trim, f, ch,
-               CASE WHEN v = 1 THEN 3
-                    WHEN v = 2 AND f % 128 < 64 AND
-                         CASE WHEN b % 2 = 0 THEN (f // 128) % 3 <> 0
-                              ELSE (f // 128) % 2 = 1 END
-                    THEN 4 ELSE 1 END AS mult
-        FROM fr),
-      cs AS (SELECT i, b, trim, f, mult, unnest(generate_series(0, ch - 1)) AS c
-             FROM fm),
-      smp AS ( -- total |amplitude| per (clip, frame) over channels
-        SELECT i, f,
-               SUM(ABS(((((f + trim) * 31 + c * 17 + b * 101) % 4001) - 2000)
-                       * mult)) AS aamp
-        FROM cs GROUP BY i, f),
-      e AS (
-        SELECT win.i, win.s, win.w, (win.wt - win.wf) AS len,
-               SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.f >= win.wf AND smp.f < win.wt
-        GROUP BY win.i, win.s, win.w, win.wt, win.wf),
-      bits AS (
-        SELECT a.i, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.s = a.s AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, s),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i),
-      pairs AS (
-        SELECT ia, ib
-        FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      g AS (SELECT ia AS u, ib AS v FROM pairs
-            UNION SELECT ib AS u, ia AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
-      SELECT CAST(i AS BIGINT) AS clip_id,
-             CASE WHEN i >= 12 THEN 'other' ELSE 'wav' END AS kind
-      FROM generate_series(0, 13) t(i)
-      WHERE i NOT IN (SELECT node FROM losers)
-      ORDER BY clip_id"""),
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.clipsShifted12()},
+      ${OracleSql.envelopeHash("", "e", "i", "s")},
+      ${OracleSql.setOverlap()},
+      ${OracleSql.overlapPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
+      ${OracleSql.keptRows("clip_id", "wav", 12)}"""),
     (s, dir) => {
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (nf0, ch) = (500 + b * 61, 1 + b % 2)
-        val trim = if (v == 1) 128 else 0
-        def base(c: Int, cf: Int): Int = (((cf * 31 + c * 17 + b * 101) % 4001) - 2000)
-        (i.toLong, operators.Multimodal.encodeWav(ch, 8000, nf0 - trim,
-          (c, f) => {
-            val mult =
-              if (v == 1) 3
-              else if (v == 2 && f % 128 < 64 &&
-                (if (b % 2 == 0) (f / 128) % 3 != 0 else (f / 128) % 2 == 1)) 4
-              else 1
-            base(c, f + trim) * mult
-          }))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not audio".getBytes("UTF-8"),
-        13L -> Array[Byte](0x7, 0x8))
       import s.implicits._
       operators.Multimodal.dedupAudioNearDupsShifted(
-        (clips ++ junk).toDF("clip_id", "payload"), "clip_id", "payload",
+        (MediaFixtures.clipsShifted12 ++ MediaFixtures.audioJunk(12))
+          .toDF("clip_id", "payload"), "clip_id", "payload",
         segFrames = 128, minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -235,73 +86,20 @@ object PipelineQueries4 {
   // ≤3-Hamming value-pair counts.
   private val qVideoNearDupShiftedTol = Queries.Q(
     "p_video_near_dup_shifted_tol",
-    Some("""
-      WITH vids AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) % 3 AS w, 10 + (i // 3) % 2 AS h,
-               6 + (i // 3) AS nf0
-        FROM generate_series(0, 11) t(i)),
-      fr AS (
-        SELECT i, b, v, w, h,
-               unnest(generate_series(CASE WHEN v = 1 THEN 2 ELSE 0 END,
-                                      nf0 - 1)) AS f
-        FROM vids),
-      cells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM fr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      px AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 3 <> 0
-                           THEN 25 ELSE 0 END AS sh
-                    FROM cells))),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.i < y.i
-              AND bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) <= 3
-             GROUP BY x.i, y.i)
+    Some(s"""
+      WITH ${OracleSql.videosShifted12()},
+      ${OracleSql.gridHash("", "px", "i", "f")},
+      ${OracleSql.setOverlap(maxHamming = 3)}
       SELECT CAST(ia AS BIGINT) AS id_a, CAST(ib AS BIGINT) AS id_b,
              CAST(nm AS BIGINT) AS n_match,
-             LEAST(1.0, CAST(nm AS DOUBLE) / LEAST(na.n, nb.n)) AS match_frac
+             LEAST(1.0, ${OracleSql.overlapFrac}) AS match_frac
       FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-      WHERE LEAST(1.0, CAST(nm AS DOUBLE) / LEAST(na.n, nb.n)) >= 0.5
+      WHERE LEAST(1.0, ${OracleSql.overlapFrac}) >= 0.5
       ORDER BY id_a, id_b"""),
     (s, dir) => {
-      val vids: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h, nf0) = (12 + b % 3, 10 + b % 2, 6 + b)
-        val trim = if (v == 1) 2 else 0
-        (i.toLong, operators.Multimodal.encodeAvi(w, h, nf0 - trim,
-          (pf, x, y, c) => {
-            val f = pf + trim
-            (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-              (if (v == 2 && (x + y) % 3 == 0 && f % 3 != 0) 25 else 0)
-          },
-          topDown = i % 2 == 1))
-      }
       import s.implicits._
       operators.Multimodal.videoNearDupPairsShifted(
-        vids.toDF("video_id", "payload"), "video_id", "payload",
+        MediaFixtures.videosShifted12.toDF("video_id", "payload"), "video_id", "payload",
         stride = 1, minFrac = 0.5, maxHamming = 3)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -317,7 +115,7 @@ object PipelineQueries4 {
   // hash halves for BOTH catalogs, and the ≤3-Hamming match NOT IN.
   private val qIncrementalImageDedup = Queries.Q(
     "p_incremental_image_dedup",
-    Some("""
+    Some(s"""
       WITH ims(id, b, mode, is_new) AS (
         SELECT * FROM (VALUES
           (0, 0, 0, 0), (1, 1, 0, 0), (2, 2, 0, 0),
@@ -341,28 +139,13 @@ object PipelineQueries4 {
                            WHEN mode = 2 AND (sx + sy) % 11 = 0 THEN 25
                            ELSE 0 END AS sh
                     FROM cells))),
-      bits AS (
-        SELECT a.id, a.is_new, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.id = a.id AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT id, is_new,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY id, is_new),
+      ${OracleSql.gridHash("", "px", "id", "is_new")},
       matched AS (
         SELECT DISTINCT n.id
         FROM hs n JOIN hs h
           ON n.is_new = 1 AND h.is_new = 0
-         AND bit_count(xor(n.lo, h.lo)) + bit_count(xor(n.hi, h.hi)) <= 3)
-      SELECT CAST(i AS BIGINT) AS img_id,
-             CASE WHEN i = 103 THEN 'other' ELSE 'png' END AS kind
-      FROM (SELECT unnest([100, 101, 102, 103]) AS i)
-      WHERE i NOT IN (SELECT id FROM matched)
-      ORDER BY img_id"""),
+         AND ${OracleSql.hamming("n", "h")} <= 3)
+      ${OracleSql.incrementKept("img_id", "png", Seq(100, 101, 102, 103), matched = "id")}"""),
     (s, dir) => {
       def base(b: Int)(x: Int, y: Int, c: Int): Int =
         (x * 17 + y * 29 + c * 37 + b * 53) % 180
@@ -406,7 +189,7 @@ object PipelineQueries4 {
   // carve-out like the lossy-codec paths need.
   private val qAudioVideoMatches = Queries.Q(
     "p_audio_video_matches",
-    Some("""
+    Some(s"""
       WITH srcs(side, id, b, trim, nf, ch, gain) AS (
         SELECT * FROM (VALUES
           (0, 0, 0, 0, 512, 1, 1), (0, 1, 1, 0, 640, 2, 1),
@@ -414,15 +197,7 @@ object PipelineQueries4 {
           (1, 0, 0, 128, 256, 1, 1), (1, 1, 1, 128, 256, 2, 3),
           (1, 2, 2, 64, 256, 1, 1), (1, 3, 3, 384, 256, 2, 3),
           (1, 4, 9, 0, 256, 1, 1))),
-      segs AS (
-        SELECT side, id, s, s * 128 AS sfrom, LEAST(s * 128 + 128, nf) AS sto
-        FROM srcs, generate_series(0, 7) ss(s)
-        WHERE s * 128 + 65 <= nf),
-      win AS (
-        SELECT side, id, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
+      ${OracleSql.segmentWindows("", "srcs", "nf", 7, "side", "id")},
       fr AS (
         SELECT side, id, b, trim, ch, gain, unnest(generate_series(0, nf - 1)) AS f
         FROM srcs),
@@ -433,25 +208,8 @@ object PipelineQueries4 {
                SUM(ABS(((((f + trim) * 53 + c * 17 + b * 101) % 3989) - 1994)
                        * gain)) AS aamp
         FROM cs GROUP BY side, id, f),
-      e AS (
-        SELECT win.side, win.id, win.s, win.w, (win.wt - win.wf) AS len,
-               SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.side = win.side AND smp.id = win.id
-                         AND smp.f >= win.wf AND smp.f < win.wt
-        GROUP BY win.side, win.id, win.s, win.w, win.wt, win.wf),
-      bits AS (
-        SELECT a.side, a.id, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.side = a.side AND n.id = a.id AND n.s = a.s
-                         AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT side, id, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY side, id, s),
+      ${OracleSql.segmentEnergies("", "side", "id")},
+      ${OracleSql.envelopeHash("", "e", "side", "id", "s")},
       hset AS (SELECT DISTINCT side, id, lo, hi FROM hs),
       ns AS (SELECT id, COUNT(*) AS n FROM hset WHERE side = 1 GROUP BY id),
       mm AS (SELECT v.id AS vid, c.id AS cid, COUNT(*) AS nm
@@ -515,7 +273,7 @@ object PipelineQueries4 {
   // overlap NOT IN.
   private val qIncrementalVideoDedup = Queries.Q(
     "p_incremental_video_dedup",
-    Some("""
+    Some(s"""
       WITH vids(side, id, b, w, h, nf, trim, shift) AS (
         SELECT * FROM (VALUES
           (0, 0, 0, 12, 10, 6, 0, 0),
@@ -539,35 +297,9 @@ object PipelineQueries4 {
                 (sx*17 + sy*29 + 37 + cf*41 + b*53) % 180 + shift AS f1,
                 (sx*17 + sy*29 + 74 + cf*41 + b*53) % 180 + shift AS f2
               FROM cells)),
-      bits AS (
-        SELECT a.side, a.id, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.side = a.side AND n.id = a.id AND n.f = a.f
-                           AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT side, id, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY side, id, f),
-      hset AS (SELECT DISTINCT side, id, lo, hi FROM hs),
-      ns AS (SELECT side, id, COUNT(*) AS n FROM hset GROUP BY side, id),
-      mm AS (SELECT n.id AS nid, o.id AS oid, COUNT(*) AS nm
-             FROM hset n JOIN hset o
-               ON n.side = 1 AND o.side = 0 AND n.lo = o.lo AND n.hi = o.hi
-             GROUP BY n.id, o.id),
-      matched AS (
-        SELECT DISTINCT mm.nid
-        FROM mm JOIN ns nn ON nn.side = 1 AND nn.id = mm.nid
-                JOIN ns no ON no.side = 0 AND no.id = mm.oid
-        WHERE CAST(mm.nm AS DOUBLE) / LEAST(nn.n, no.n) >= 0.5)
-      SELECT CAST(i AS BIGINT) AS video_id,
-             CASE WHEN i = 103 THEN 'other' ELSE 'avi' END AS kind
-      FROM (SELECT unnest([100, 101, 102, 103]) AS i)
-      WHERE i NOT IN (SELECT nid FROM matched)
-      ORDER BY video_id"""),
+      ${OracleSql.gridHash("", "px", "side", "id", "f")},
+      ${OracleSql.indexMatches}
+      ${OracleSql.incrementKept("video_id", "avi", Seq(100, 101, 102, 103))}"""),
     (s, dir) => {
       def pix(b: Int, shift: Int, trim: Int)(pf: Int, x: Int, y: Int, c: Int): Int =
         (x * 17 + y * 29 + c * 37 + (pf + trim) * 41 + b * 53) % 180 + shift
@@ -604,7 +336,7 @@ object PipelineQueries4 {
   // min-normalized set overlap.
   private val qIncrementalAudioDedup = Queries.Q(
     "p_incremental_audio_dedup",
-    Some("""
+    Some(s"""
       WITH clips(side, id, b, nf, ch, trim, gain) AS (
         SELECT * FROM (VALUES
           (0, 0, 0, 640, 1, 0, 1),
@@ -612,15 +344,7 @@ object PipelineQueries4 {
           (0, 2, 2, 896, 1, 0, 1),
           (1, 100, 0, 512, 1, 128, 3),
           (1, 101, 9, 640, 1, 0, 1))),
-      segs AS (
-        SELECT side, id, s, s * 128 AS sfrom, LEAST(s * 128 + 128, nf) AS sto
-        FROM clips, generate_series(0, 7) ss(s)
-        WHERE s * 128 + 65 <= nf),
-      win AS (
-        SELECT side, id, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
+      ${OracleSql.segmentWindows("", "clips", "nf", 7, "side", "id")},
       fr AS (
         SELECT side, id, b, ch, trim, gain, unnest(generate_series(0, nf - 1)) AS f
         FROM clips),
@@ -631,41 +355,10 @@ object PipelineQueries4 {
                SUM(ABS(((((f + trim) * 53 + c * 17 + b * 101) % 3989) - 1994)
                        * gain)) AS aamp
         FROM cs GROUP BY side, id, f),
-      e AS (
-        SELECT win.side, win.id, win.s, win.w, (win.wt - win.wf) AS len,
-               SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.side = win.side AND smp.id = win.id
-                         AND smp.f >= win.wf AND smp.f < win.wt
-        GROUP BY win.side, win.id, win.s, win.w, win.wt, win.wf),
-      bits AS (
-        SELECT a.side, a.id, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.side = a.side AND n.id = a.id AND n.s = a.s
-                         AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT side, id, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY side, id, s),
-      hset AS (SELECT DISTINCT side, id, lo, hi FROM hs),
-      ns AS (SELECT side, id, COUNT(*) AS n FROM hset GROUP BY side, id),
-      mm AS (SELECT n.id AS nid, o.id AS oid, COUNT(*) AS nm
-             FROM hset n JOIN hset o
-               ON n.side = 1 AND o.side = 0 AND n.lo = o.lo AND n.hi = o.hi
-             GROUP BY n.id, o.id),
-      matched AS (
-        SELECT DISTINCT mm.nid
-        FROM mm JOIN ns nn ON nn.side = 1 AND nn.id = mm.nid
-                JOIN ns no ON no.side = 0 AND no.id = mm.oid
-        WHERE CAST(mm.nm AS DOUBLE) / LEAST(nn.n, no.n) >= 0.5)
-      SELECT CAST(i AS BIGINT) AS clip_id,
-             CASE WHEN i = 103 THEN 'other' ELSE 'wav' END AS kind
-      FROM (SELECT unnest([100, 101, 102, 103]) AS i)
-      WHERE i NOT IN (SELECT nid FROM matched)
-      ORDER BY clip_id"""),
+      ${OracleSql.segmentEnergies("", "side", "id")},
+      ${OracleSql.envelopeHash("", "e", "side", "id", "s")},
+      ${OracleSql.indexMatches}
+      ${OracleSql.incrementKept("clip_id", "wav", Seq(100, 101, 102, 103))}"""),
     (s, dir) => {
       def base(b: Int)(c: Int, f: Int): Int =
         (((f * 53 + c * 17 + b * 101) % 3989) - 1994)
@@ -704,7 +397,7 @@ object PipelineQueries4 {
   // channel counts, cycling per-row filters within every pass).
   private val qPngInterlacedStats = Queries.Q(
     "p_png_interlaced_stats",
-    Some("""
+    Some(s"""
       WITH dims AS (SELECT i, 1 + (i*7) % 19 AS w, 1 + (i*5) % 14 AS h,
                            CASE i % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
                     FROM generate_series(0, 23) t(i)),
@@ -712,15 +405,7 @@ object PipelineQueries4 {
       xs AS (SELECT i, w, h, ch, y, unnest(generate_series(0, w - 1)) AS x FROM ys),
       px AS (SELECT i, y, x, unnest(generate_series(0, ch - 1)) AS c FROM xs),
       v AS (SELECT i, y, x, c, (x*11 + y*23 + c*31 + i*3) % 256 AS v FROM px),
-      md AS (SELECT i, md5(string_agg(printf('%02x', v), '' ORDER BY y, x, c)) AS pixel_md5
-             FROM v GROUP BY i),
-      mn AS (SELECT i, c AS channel, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_val
-             FROM v GROUP BY i, c)
-      SELECT CAST(d.i AS BIGINT) AS img_id, CAST(d.w AS BIGINT) AS width,
-             CAST(d.h AS BIGINT) AS height, CAST(d.ch AS BIGINT) AS channels,
-             CAST(mn.channel AS BIGINT) AS channel, mn.mean_val, md.pixel_md5
-      FROM dims d JOIN mn ON mn.i = d.i JOIN md ON md.i = d.i
-      ORDER BY img_id, channel"""),
+      ${OracleSql.pixelStats("v")}"""),
     (s, dir) => {
       val imgs: Seq[(Long, Array[Byte])] = (0 until 24).map { i =>
         val (w, h) = (1 + (i * 7) % 19, 1 + (i * 5) % 14)
@@ -762,7 +447,7 @@ object PipelineQueries4 {
   // palettes (the opaque-tail rule on the wire).
   private val qPngPaletteStats = Queries.Q(
     "p_png_palette_stats",
-    Some("""
+    Some(s"""
       WITH dims AS (SELECT i, 1 + (i*7) % 19 AS w, 1 + (i*5) % 14 AS h,
                            3 + i % 14 AS n,
                            CASE WHEN i % 2 = 1 THEN 4 ELSE 3 END AS ch,
@@ -778,15 +463,7 @@ object PipelineQueries4 {
                           ELSE CASE WHEN j < alen THEN (j*40 + i) % 256 ELSE 255 END
                    END AS v
             FROM (SELECT *, (x*3 + y*7 + i) % n AS j FROM px)),
-      md AS (SELECT i, md5(string_agg(printf('%02x', v), '' ORDER BY y, x, c)) AS pixel_md5
-             FROM v GROUP BY i),
-      mn AS (SELECT i, c AS channel, CAST(SUM(v) AS DOUBLE) / COUNT(*) AS mean_val
-             FROM v GROUP BY i, c)
-      SELECT CAST(d.i AS BIGINT) AS img_id, CAST(d.w AS BIGINT) AS width,
-             CAST(d.h AS BIGINT) AS height, CAST(d.ch AS BIGINT) AS channels,
-             CAST(mn.channel AS BIGINT) AS channel, mn.mean_val, md.pixel_md5
-      FROM dims d JOIN mn ON mn.i = d.i JOIN md ON md.i = d.i
-      ORDER BY img_id, channel"""),
+      ${OracleSql.pixelStats("v")}"""),
     (s, dir) => {
       val imgs: Seq[(Long, Array[Byte])] = (0 until 16).map { i =>
         val (w, h) = (1 + (i * 7) % 19, 1 + (i * 5) % 14)
@@ -894,173 +571,25 @@ object PipelineQueries4 {
   // logs.
   private val qMediaCuration = Queries.Q(
     "p_media_curation",
-    Some("""
+    Some(s"""
       WITH RECURSIVE
-      imgs AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) AS w, 10 + ((i // 3) % 4) AS h,
-               CASE (i // 3) % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
-        FROM generate_series(0, 17) t(i)),
-      icells AS (
-        SELECT i, b, v, ch, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM imgs, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      ipx AS (
-        SELECT i, gx, gy,
-               CASE WHEN ch >= 3 THEN (f0 + f1 + f2) // 3 ELSE f0 END AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40
-                           WHEN v = 2 AND (sx + sy) % 11 = 0 THEN 25
-                           ELSE 0 END AS sh
-                    FROM icells))),
-      ibits AS (
-        SELECT a.i, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM ipx a JOIN ipx n ON n.i = a.i AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      ihs AS (
-        SELECT i,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY i),
-      ipairs AS (
-        SELECT x.i AS ia, y.i AS ib
-        FROM ihs x JOIN ihs y ON x.i < y.i
-         AND bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) <= 3),
-      ig AS (SELECT ia AS u, ib AS v FROM ipairs
-             UNION SELECT ib AS u, ia AS v FROM ipairs),
-      ireach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM ig)
-                          UNION
-                          SELECT ig.v, ireach.r FROM ireach JOIN ig ON ig.u = ireach.node),
-      ilosers AS (SELECT node, MIN(r) AS grp FROM ireach GROUP BY node
-                  HAVING node <> MIN(r)),
-      vvids AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               12 + (i // 3) % 3 AS w, 10 + (i // 3) % 2 AS h,
-               6 + (i // 3) AS nf0
-        FROM generate_series(0, 11) t(i)),
-      vfr AS (
-        SELECT i, b, v, w, h,
-               unnest(generate_series(CASE WHEN v = 1 THEN 2 ELSE 0 END,
-                                      nf0 - 1)) AS f
-        FROM vvids),
-      vcells AS (
-        SELECT i, f, b, v, gx, gy, ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM vfr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      vpx AS (
-        SELECT i, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 3 <> 0
-                           THEN 25 ELSE 0 END AS sh
-                    FROM vcells))),
-      vbits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM vpx a JOIN vpx n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                            AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      vhs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY i, f),
-      vhset AS (SELECT DISTINCT i, lo, hi FROM vhs),
-      vns AS (SELECT i, COUNT(*) AS n FROM vhset GROUP BY i),
-      vmm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-              FROM vhset x JOIN vhset y
-                ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-              GROUP BY x.i, y.i),
-      vpairs AS (
-        SELECT ia, ib
-        FROM vmm JOIN vns na ON na.i = vmm.ia JOIN vns nb ON nb.i = vmm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      vg AS (SELECT ia AS u, ib AS v FROM vpairs
-             UNION SELECT ib AS u, ia AS v FROM vpairs),
-      vreach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM vg)
-                          UNION
-                          SELECT vg.v, vreach.r FROM vreach JOIN vg ON vg.u = vreach.node),
-      vlosers AS (SELECT node, MIN(r) AS grp FROM vreach GROUP BY node
-                  HAVING node <> MIN(r)),
-      aclips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               500 + (i // 3) * 61 AS nf0, 1 + (i // 3) % 2 AS ch,
-               CASE WHEN i % 3 = 1 THEN 128 ELSE 0 END AS trim
-        FROM generate_series(0, 11) t(i)),
-      aphys AS (SELECT *, nf0 - trim AS pn FROM aclips),
-      asegs AS (
-        SELECT i, ch, s, s * 128 AS sfrom, LEAST(s * 128 + 128, pn) AS sto
-        FROM aphys, generate_series(0, 10) ss(s)
-        WHERE s * 128 + 65 <= pn),
-      awin AS (
-        SELECT i, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM asegs, generate_series(0, 64) ws(w)),
-      afr AS (
-        SELECT i, b, v, ch, trim, unnest(generate_series(0, pn - 1)) AS f
-        FROM aphys),
-      afm AS (
-        SELECT i, b, trim, f, ch,
-               CASE WHEN v = 1 THEN 3
-                    WHEN v = 2 AND f % 128 < 64 AND
-                         CASE WHEN b % 2 = 0 THEN (f // 128) % 3 <> 0
-                              ELSE (f // 128) % 2 = 1 END
-                    THEN 4 ELSE 1 END AS mult
-        FROM afr),
-      acs AS (SELECT i, b, trim, f, mult, unnest(generate_series(0, ch - 1)) AS c
-              FROM afm),
-      asmp AS (
-        SELECT i, f,
-               SUM(ABS(((((f + trim) * 31 + c * 17 + b * 101) % 4001) - 2000)
-                       * mult)) AS aamp
-        FROM acs GROUP BY i, f),
-      ae AS (
-        SELECT awin.i, awin.s, awin.w, (awin.wt - awin.wf) AS len,
-               SUM(asmp.aamp) AS e
-        FROM awin JOIN asmp ON asmp.i = awin.i AND asmp.f >= awin.wf
-                           AND asmp.f < awin.wt
-        GROUP BY awin.i, awin.s, awin.w, awin.wt, awin.wf),
-      abits AS (
-        SELECT a.i, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM ae a JOIN ae n ON n.i = a.i AND n.s = a.s AND n.w = a.w + 1
-        WHERE a.w < 64),
-      ahs AS (
-        SELECT i, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY i, s),
-      ahset AS (SELECT DISTINCT i, lo, hi FROM ahs),
-      ans AS (SELECT i, COUNT(*) AS n FROM ahset GROUP BY i),
-      amm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-              FROM ahset x JOIN ahset y
-                ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-              GROUP BY x.i, y.i),
-      apairs AS (
-        SELECT ia, ib
-        FROM amm JOIN ans na ON na.i = amm.ia JOIN ans nb ON nb.i = amm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      ag AS (SELECT ia AS u, ib AS v FROM apairs
-             UNION SELECT ib AS u, ia AS v FROM apairs),
-      areach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM ag)
-                          UNION
-                          SELECT ag.v, areach.r FROM areach JOIN ag ON ag.u = areach.node),
-      alosers AS (SELECT node, MIN(r) AS grp FROM areach GROUP BY node
-                  HAVING node <> MIN(r)),
+      ${OracleSql.images18("i")},
+      ${OracleSql.gridHash("i", "ipx", "i")},
+      ${OracleSql.hammingPairs("i")},
+      ${OracleSql.closure("ipairs", "ia", "ib", "ig", "ireach")},
+      ${OracleSql.losers("ireach", "ilosers")},
+      ${OracleSql.videosShifted12("v")},
+      ${OracleSql.gridHash("v", "vpx", "i", "f")},
+      ${OracleSql.setOverlap("v")},
+      ${OracleSql.overlapPairs("v")},
+      ${OracleSql.closure("vpairs", "ia", "ib", "vg", "vreach")},
+      ${OracleSql.losers("vreach", "vlosers")},
+      ${OracleSql.clipsShifted12("a")},
+      ${OracleSql.envelopeHash("a", "ae", "i", "s")},
+      ${OracleSql.setOverlap("a")},
+      ${OracleSql.overlapPairs("a")},
+      ${OracleSql.closure("apairs", "ia", "ib", "ag", "areach")},
+      ${OracleSql.losers("areach", "alosers")},
       allm(id, kind) AS (
         SELECT i, 'png' FROM generate_series(0, 17) t(i)
         UNION ALL SELECT i + 100, 'avi' FROM generate_series(0, 11) t(i)
@@ -1079,59 +608,16 @@ object PipelineQueries4 {
       FROM allm LEFT JOIN losr ON losr.id = allm.id
       ORDER BY media_id"""),
     (s, dir) => {
-      val images: Seq[(Long, Array[Byte])] = (0 until 18).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h) = (12 + b, 10 + b % 4)
-        val ch = Seq(1, 3, 2, 4)(b % 4)
-        def base(x: Int, y: Int, c: Int): Int =
-          (x * 17 + y * 29 + c * 37 + b * 53) % 180
-        val png =
-          if (v == 1) // 2x NN upscale + uniform shift: same hash
-            operators.Multimodal.encodePng(2 * w, 2 * h, ch,
-              (x, y, c) => base(x / 2, y / 2, c) + 40, y => (y + i) % 5)
-          else
-            operators.Multimodal.encodePng(w, h, ch,
-              (x, y, c) => base(x, y, c) +
-                (if (v == 2 && (x + y) % 11 == 0) 25 else 0),
-              y => (y + i) % 5)
-        (i.toLong, png)
-      }
-      val videos: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (w, h, nf0) = (12 + b % 3, 10 + b % 2, 6 + b)
-        val trim = if (v == 1) 2 else 0
-        (100L + i, operators.Multimodal.encodeAvi(w, h, nf0 - trim,
-          (pf, x, y, c) => {
-            val f = pf + trim
-            (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-              (if (v == 2 && (x + y) % 3 == 0 && f % 3 != 0) 25 else 0)
-          },
-          topDown = i % 2 == 1))
-      }
-      val audios: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val (nf0, ch) = (500 + b * 61, 1 + b % 2)
-        val trim = if (v == 1) 128 else 0
-        def base(c: Int, cf: Int): Int = (((cf * 31 + c * 17 + b * 101) % 4001) - 2000)
-        (200L + i, operators.Multimodal.encodeWav(ch, 8000, nf0 - trim,
-          (c, f) => {
-            val mult =
-              if (v == 1) 3
-              else if (v == 2 && f % 128 < 64 &&
-                (if (b % 2 == 0) (f / 128) % 3 != 0 else (f / 128) % 2 == 1)) 4
-              else 1
-            base(c, f + trim) * mult
-          }))
-      }
-      val junk: Seq[(Long, Array[Byte])] = Seq(
+      def from(first: Long, family: MediaFixtures.Payloads): MediaFixtures.Payloads =
+        family.map { case (i, payload) => (first + i, payload) }
+      val junk: MediaFixtures.Payloads = Seq(
         300L -> "not media at all".getBytes("UTF-8"),
         301L -> Array[Byte](0x1, 0x2, 0x3))
       import s.implicits._
       operators.Multimodal.mediaCurationReport(
-        (images ++ videos ++ audios ++ junk).toDF("media_id", "payload"),
+        (MediaFixtures.images18(upscale = true) ++
+          from(100, MediaFixtures.videosShifted12) ++
+          from(200, MediaFixtures.clipsShifted12) ++ junk).toDF("media_id", "payload"),
         "media_id", "payload",
         imageMaxHamming = 3, videoStride = 1, videoMinFrac = 0.5,
         audioSegFrames = 128, audioMinFrac = 0.5)
@@ -1147,7 +633,7 @@ object PipelineQueries4 {
   // frame hash and recomputes hamming(f−1, f) > 16 per frame.
   private val qVideoShots = Queries.Q(
     "p_video_shots",
-    Some("""
+    Some(s"""
       WITH vids(i, b, w, h, nf, cut1, cut2) AS (
         SELECT * FROM (VALUES
           (0, 0, 12, 10, 10, 3, 7),
@@ -1171,22 +657,10 @@ object PipelineQueries4 {
                 ((sx*(2+scene) + sy*(3+2*scene) + 37 + b*53) * (scene*97+13)) % 180 AS f1,
                 ((sx*(2+scene) + sy*(3+2*scene) + 74 + b*53) * (scene*97+13)) % 180 AS f2
               FROM cells)),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f)
+      ${OracleSql.gridHash("", "px", "i", "f")}
       SELECT CAST(cur.i AS BIGINT) AS video_id, CAST(cur.f AS INT) AS frame_idx
       FROM hs cur JOIN hs prev ON prev.i = cur.i AND prev.f = cur.f - 1
-      WHERE bit_count(xor(cur.lo, prev.lo)) + bit_count(xor(cur.hi, prev.hi)) > 16
+      WHERE ${OracleSql.hamming("cur", "prev")} > 16
       ORDER BY video_id, frame_idx"""),
     (s, dir) => {
       val cuts = Seq((3, 7), (4, 7), (3, 99), (99, 99))

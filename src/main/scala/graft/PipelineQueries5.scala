@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.util.Jobs
+
 /** Round-20 pipeline queries: G.711 µ-law/A-law decode (exact table
   * expansion — fully oracle-checkable like IMA-ADPCM), arbitrary-
   * offset audio trim tolerance (sliding probe-side segment hashes
@@ -98,7 +100,7 @@ object PipelineQueries5 {
   // best-alignment selection.
   private val qAudioNearDupOffset = Queries.Q(
     "p_audio_near_dup_offset",
-    Some("""
+    Some(s"""
       WITH clips(id, nf, mult, sh, b, addc) AS (
         SELECT * FROM (VALUES
           (0, 500, 1, 0, 31, 101), (1, 463, 3, 37, 31, 101),
@@ -126,18 +128,7 @@ object PipelineQueries5 {
         FROM we
         LEFT JOIN pre a ON a.id = we.id AND a.f = we.wt - 1
         LEFT JOIN pre bb ON bb.id = we.id AND bb.f = we.wf - 1),
-      bits AS (
-        SELECT a.id, a.p, a.w AS bb_,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM en a JOIN en n ON n.id = a.id AND n.p = a.p AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT id, p,
-               bit_or(CASE WHEN bit = 1 AND bb_ < 32
-                           THEN (CAST(1 AS BIGINT) << bb_) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb_ >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb_ - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY id, p),
+      ${OracleSql.envelopeHash("", "en", "id", "p")},
       cat AS (SELECT id AS cid, p // 128 AS k, lo, hi FROM hs WHERE p % 128 = 0),
       catn AS (SELECT cid, COUNT(*) AS nc FROM cat GROUP BY cid),
       prbn AS (SELECT id AS pid, p % 128 AS r, COUNT(*) AS np
@@ -308,7 +299,7 @@ object PipelineQueries5 {
   // opener's hash as two 32-bit halves (DuckDB range-checks 1<<63).
   private val qVideoShotFrames = Queries.Q(
     "p_video_shot_frames",
-    Some("""
+    Some(s"""
       WITH vids(i, b, w, h, nf, cut1, cut2) AS (
         SELECT * FROM (VALUES
           (0, 0, 12, 10, 10, 3, 7),
@@ -332,24 +323,12 @@ object PipelineQueries5 {
                 ((sx*(2+scene) + sy*(3+2*scene) + 37 + b*53) * (scene*97+13)) % 180 AS f1,
                 ((sx*(2+scene) + sy*(3+2*scene) + 74 + b*53) * (scene*97+13)) % 180 AS f2
               FROM cells)),
-      bits AS (
-        SELECT a.i, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM px a JOIN px n ON n.i = a.i AND n.f = a.f AND n.gy = a.gy
-                           AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      hs AS (
-        SELECT i, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, f),
+      ${OracleSql.gridHash("", "px", "i", "f")},
       reps AS (
         SELECT cur.i, cur.f, cur.lo, cur.hi
         FROM hs cur LEFT JOIN hs prev ON prev.i = cur.i AND prev.f = cur.f - 1
         WHERE prev.f IS NULL OR
-              bit_count(xor(cur.lo, prev.lo)) + bit_count(xor(cur.hi, prev.hi)) > 16)
+              ${OracleSql.hamming("cur", "prev")} > 16)
       SELECT CAST(i AS BIGINT) AS video_id,
              CAST(ROW_NUMBER() OVER (PARTITION BY i ORDER BY f) - 1 AS INT) AS shot_idx,
              CAST(f AS INT) AS frame_idx,
@@ -381,79 +360,12 @@ object PipelineQueries5 {
         .transform(Queries.sortedSmall(_, "video_id", "frame_idx"))
     })
 
-  /** Shared two-run media fixture for the incremental + lineage
-    * queries: an OLD corpus (3 image families of 3, 2 video families
-    * of 3, 2 audio families of 3 + an audio singleton, junk) and a
-    * NEW corpus with unchanged ids, a changed image (fresh content),
-    * a changed audio that became a trim of ITS OWN old content (the
-    * same-id-exclusion pin), a removed image, and additions that
-    * near-dup history (one per modality), pair within the delta
-    * (an image pair), or are fresh. Content is the p_media_curation
-    * formula family, so the oracles rebuild every hash bit. */
-  private object MediaTwoRuns {
-    import operators.Multimodal._
-    def img(b: Int, v: Int): Array[Byte] = {
-      val (w, h) = (12 + b, 10 + b % 4)
-      val ch = Seq(1, 3, 2, 4)(b % 4)
-      def base(x: Int, y: Int, c: Int): Int = (x * 17 + y * 29 + c * 37 + b * 53) % 180
-      if (v == 1)
-        encodePng(2 * w, 2 * h, ch, (x, y, c) => base(x / 2, y / 2, c) + 40,
-          y => (y + b) % 5)
-      else
-        encodePng(w, h, ch,
-          (x, y, c) => base(x, y, c) + (if (v == 2 && (x + y) % 11 == 0) 25 else 0),
-          y => (y + b) % 5)
-    }
-    def vid(b: Int, v: Int): Array[Byte] = {
-      val (w, h, nf0) = (12 + b % 3, 10 + b % 2, 8 + b % 2)
-      val trim = if (v == 1) 2 else if (v == 3) 4 else 0
-      encodeAvi(w, h, nf0 - trim, (pf, x, y, c) => {
-        val f = pf + trim
-        (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180 +
-          (if (v == 2 && (x + y) % 3 == 0 && f % 2 == 1) 25 else 0)
-      }, topDown = (b + v) % 2 == 1)
-    }
-    def aud(b: Int, v: Int): Array[Byte] = {
-      val (nf0, ch) = (500 + b * 61, 1 + b % 2)
-      val trim = if (v == 1) 128 else if (v == 3) 256 else 0
-      val gain = if (v == 1) 3 else if (v == 3) 2 else 1
-      encodeWav(ch, 8000, nf0 - trim, (c, f) => {
-        val mult =
-          if (v == 2 && f % 128 < 64 && (f / 128) % 2 == 1) 4 else gain
-        ((((f + trim) * 31 + c * 17 + b * 101) % 4001) - 2000) * mult
-      })
-    }
-    val oldImgs = Seq((0, 0, 0), (1, 0, 1), (2, 0, 2), (3, 1, 0), (4, 1, 1),
-      (5, 1, 2), (6, 2, 0), (7, 2, 1), (8, 2, 2))
-    val newImgs = Seq((0, 0, 0), (1, 0, 1), (3, 1, 0), (4, 1, 1), (5, 1, 2),
-      (6, 2, 0), (7, 2, 1), (2, 7, 0), (10, 1, 0), (11, 8, 0), (12, 8, 1))
-    val oldVids = Seq((100, 0, 0), (101, 0, 1), (102, 0, 2), (103, 1, 0),
-      (104, 1, 1), (105, 1, 2))
-    val newVids = oldVids ++ Seq((110, 0, 3), (111, 9, 0))
-    val oldAuds = Seq((200, 0, 0), (201, 0, 1), (202, 0, 2), (203, 1, 0),
-      (204, 1, 1), (205, 1, 2), (206, 5, 0))
-    val newAuds = Seq((200, 0, 0), (201, 0, 1), (202, 0, 2), (203, 1, 0),
-      (204, 1, 1), (205, 1, 2), (206, 5, 1), (210, 0, 3))
-    def corpus(imgs: Seq[(Int, Int, Int)], vids: Seq[(Int, Int, Int)],
-        auds: Seq[(Int, Int, Int)], junks: Seq[(Long, Array[Byte])]): Seq[(Long, Array[Byte])] =
-      imgs.map { case (id, b, v) => (id.toLong, img(b, v)) } ++
-        vids.map { case (id, b, v) => (id.toLong, vid(b, v)) } ++
-        auds.map { case (id, b, v) => (id.toLong, aud(b, v)) } ++ junks
-    def oldCorpus: Seq[(Long, Array[Byte])] =
-      corpus(oldImgs, oldVids, oldAuds,
-        Seq(300L -> "not media at all".getBytes("UTF-8")))
-    def newCorpus: Seq[(Long, Array[Byte])] =
-      corpus(newImgs, newVids, newAuds,
-        Seq(300L -> "not media at all".getBytes("UTF-8"),
-          301L -> Array[Byte](0x1, 0x2, 0x3)))
-  }
-
   /** The shared hash-derivation + old/new chain SQL of the two-run
     * media oracles (DuckDB rebuilds every image dHash, video frame
     * hash and audio segment envelope for BOTH corpora from the
     * fixture formulas, then both runs' pair sets and closures). The
     * incremental and lineage queries append different tails. */
-  private val twoRunsSqlPrefix: String = """
+  private val twoRunsSqlPrefix: String = s"""
       WITH RECURSIVE
       imgs(c, id, b, v) AS (
         SELECT * FROM (VALUES
@@ -481,35 +393,8 @@ object PipelineQueries5 {
       imgd AS (SELECT c, id, b, v, 12 + b AS w, 10 + b % 4 AS h,
                       CASE b % 4 WHEN 0 THEN 1 WHEN 1 THEN 3 WHEN 2 THEN 2 ELSE 4 END AS ch
                FROM imgs),
-      icells AS (
-        SELECT c, id, b, v, ch, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM imgd, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      ipx AS (
-        SELECT c, id, gx, gy,
-               CASE WHEN ch >= 3 THEN (f0 + f1 + f2) // 3 ELSE f0 END AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 1 THEN 40
-                           WHEN v = 2 AND (sx + sy) % 11 = 0 THEN 25
-                           ELSE 0 END AS sh
-                    FROM icells))),
-      ibits AS (
-        SELECT a.c, a.id, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM ipx a JOIN ipx n ON n.c = a.c AND n.id = a.id AND n.gy = a.gy
-                            AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      ihs AS (
-        SELECT c, id,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM ibits GROUP BY c, id),
+      ${OracleSql.imageGrid("i", "imgd", "c", "id")},
+      ${OracleSql.gridHash("i", "ipx", "c", "id")},
       -- ---- video frame-hash sets
       vmeta AS (SELECT c, id, b, v, 12 + b % 3 AS w, 10 + b % 2 AS h,
                        8 + b % 2 AS nf0,
@@ -518,33 +403,9 @@ object PipelineQueries5 {
       vfr AS (SELECT c, id, b, v, w, h,
                      unnest(generate_series(trim, nf0 - 1)) AS f
               FROM vmeta),
-      vcells AS (
-        SELECT c, id, f, b, v, gx, gy,
-               ((gx * w) // 9) AS sx, ((gy * h) // 8) AS sy
-        FROM vfr, generate_series(0, 8) gxs(gx), generate_series(0, 7) gys(gy)),
-      vpx AS (
-        SELECT c, id, f, gx, gy, (f0 + f1 + f2) // 3 AS luma
-        FROM (SELECT *,
-                (sx*17 + sy*29 + f*41 + b*53) % 180 + sh AS f0,
-                (sx*17 + sy*29 + 37 + f*41 + b*53) % 180 + sh AS f1,
-                (sx*17 + sy*29 + 74 + f*41 + b*53) % 180 + sh AS f2
-              FROM (SELECT *,
-                      CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 2 = 1
-                           THEN 25 ELSE 0 END AS sh
-                    FROM vcells))),
-      vbits AS (
-        SELECT a.c, a.id, a.f, (a.gy * 8 + a.gx) AS bb,
-               CASE WHEN n.luma > a.luma THEN 1 ELSE 0 END AS bit
-        FROM vpx a JOIN vpx n ON n.c = a.c AND n.id = a.id AND n.f = a.f
-                            AND n.gy = a.gy AND n.gx = a.gx + 1
-        WHERE a.gx < 8),
-      vhs AS (
-        SELECT c, id, f,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM vbits GROUP BY c, id, f),
+      ${OracleSql.videoGrid("v", "vfr",
+        "CASE WHEN v = 2 AND (sx + sy) % 3 = 0 AND f % 2 = 1 THEN 25 ELSE 0 END", "c", "id")},
+      ${OracleSql.gridHash("v", "vpx", "c", "id", "f")},
       vhset AS (SELECT DISTINCT c, id, lo, hi FROM vhs),
       vns AS (SELECT c, id, COUNT(*) AS n FROM vhset GROUP BY c, id),
       -- ---- audio segment-envelope hash sets
@@ -552,15 +413,7 @@ object PipelineQueries5 {
                        CASE v WHEN 1 THEN 128 WHEN 3 THEN 256 ELSE 0 END AS trim
                 FROM auds),
       aphys AS (SELECT *, nf0 - trim AS pn FROM ameta),
-      asegs AS (
-        SELECT c, id, ch, s, s * 128 AS sfrom, LEAST(s * 128 + 128, pn) AS sto
-        FROM aphys, generate_series(0, 10) ss(s)
-        WHERE s * 128 + 65 <= pn),
-      awin AS (
-        SELECT c, id, s, w,
-               sfrom + (w * (sto - sfrom)) // 65 AS wf,
-               sfrom + ((w + 1) * (sto - sfrom)) // 65 AS wt
-        FROM asegs, generate_series(0, 64) ws(w)),
+      ${OracleSql.segmentWindows("a", "aphys", "pn", 10, "c", "id")},
       afr AS (
         SELECT c, id, b, v, ch, trim, unnest(generate_series(0, pn - 1)) AS f
         FROM aphys),
@@ -574,25 +427,8 @@ object PipelineQueries5 {
                SUM(ABS(((((f + trim) * 31 + ck * 17 + b * 101) % 4001) - 2000)
                        * mult)) AS aamp
         FROM acs GROUP BY c, id, f),
-      ae AS (
-        SELECT awin.c, awin.id, awin.s, awin.w, (awin.wt - awin.wf) AS len,
-               SUM(asmp.aamp) AS e
-        FROM awin JOIN asmp ON asmp.c = awin.c AND asmp.id = awin.id
-                           AND asmp.f >= awin.wf AND asmp.f < awin.wt
-        GROUP BY awin.c, awin.id, awin.s, awin.w, awin.wt, awin.wf),
-      abits AS (
-        SELECT a.c, a.id, a.s, a.w AS bb,
-               CASE WHEN n.e * a.len > a.e * n.len THEN 1 ELSE 0 END AS bit
-        FROM ae a JOIN ae n ON n.c = a.c AND n.id = a.id AND n.s = a.s
-                           AND n.w = a.w + 1
-        WHERE a.w < 64),
-      ahs AS (
-        SELECT c, id, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM abits GROUP BY c, id, s),
+      ${OracleSql.segmentEnergies("a", "c", "id")},
+      ${OracleSql.envelopeHash("a", "ae", "c", "id", "s")},
       ahset AS (SELECT DISTINCT c, id, lo, hi FROM ahs),
       ans AS (SELECT c, id, COUNT(*) AS n FROM ahset GROUP BY c, id),
       -- ---- per-corpus pair sets and closures (one template, both
@@ -600,7 +436,7 @@ object PipelineQueries5 {
       ipairs AS (
         SELECT x.c, x.id AS ia, y.id AS ib
         FROM ihs x JOIN ihs y ON y.c = x.c AND x.id < y.id
-         AND bit_count(xor(x.lo, y.lo)) + bit_count(xor(x.hi, y.hi)) <= 3),
+         AND ${OracleSql.hamming("x", "y")} <= 3),
       vpairs AS (
         SELECT vmm.c, ia, ib
         FROM (SELECT x.c, x.id AS ia, y.id AS ib, COUNT(*) AS nm
@@ -665,25 +501,19 @@ object PipelineQueries5 {
   // rows), the delta-restricted chains, and the index matches.
   private val qIncrementalMediaCuration = Queries.Q(
     "p_incremental_media_curation",
-    Some(twoRunsSqlPrefix + """,
+    Some(twoRunsSqlPrefix + s""",
       delta AS (SELECT id FROM fams WHERE c = 'n'
                 AND id NOT IN (SELECT id FROM reused)),
       dpairs AS (
         SELECT p.ia, p.ib FROM allpairs p
         WHERE p.c = 'n' AND p.ia IN (SELECT id FROM delta)
           AND p.ib IN (SELECT id FROM delta)),
-      dg AS (SELECT ia AS u, ib AS w2 FROM dpairs
-             UNION SELECT ib, ia FROM dpairs),
-      dreach(node, r) AS (
-        SELECT u, u FROM (SELECT DISTINCT u FROM dg)
-        UNION
-        SELECT dg.w2, dreach.r FROM dreach JOIN dg ON dg.u = dreach.node),
-      dlosers AS (SELECT node, MIN(r) AS grp FROM dreach GROUP BY node
-                  HAVING node <> MIN(r)),
+      ${OracleSql.closure("dpairs", "ia", "ib", "dg", "dreach")},
+      ${OracleSql.losers("dreach", "dlosers")},
       ihist AS (
         SELECT n.id AS nid, MIN(o.id) AS oid
         FROM ihs n JOIN ihs o ON n.c = 'n' AND o.c = 'o' AND o.id <> n.id
-         AND bit_count(xor(n.lo, o.lo)) + bit_count(xor(n.hi, o.hi)) <= 3
+         AND ${OracleSql.hamming("n", "o")} <= 3
         WHERE n.id IN (SELECT id FROM delta)
         GROUP BY n.id),
       vhist AS (
@@ -735,8 +565,8 @@ object PipelineQueries5 {
       ORDER BY media_id"""),
     (s, dir) => {
       import s.implicits._
-      val old = MediaTwoRuns.oldCorpus.toDF("media_id", "payload")
-      val nw = MediaTwoRuns.newCorpus.toDF("media_id", "payload")
+      val old = MediaFixtures.TwoRuns.oldCorpus.toDF("media_id", "payload")
+      val nw = MediaFixtures.TwoRuns.newCorpus.toDF("media_id", "payload")
       // History artifacts MATERIALIZED once (eager localCheckpoint,
       // rows identical — the text twin qIncrementalCuration's r21
       // pattern): the incremental operator consumes oldReport from
@@ -746,9 +576,9 @@ object PipelineQueries5 {
       // persisted parquet between runs; the checkpoint models exactly
       // that within the one timed run.
       // The four artifacts are INDEPENDENT jobs — materialized
-      // concurrently (Queries.concurrently, guide §2.6) instead of
+      // concurrently (Jobs.concurrently, guide §2.6) instead of
       // strictly serially; same artifacts, same rows.
-      val Seq(oldReport, imgIdx, vidIdx, audIdx) = Queries.concurrently(
+      val Seq(oldReport, imgIdx, vidIdx, audIdx) = Jobs.concurrently(
         () => operators.Multimodal.mediaCurationReport(
           old, "media_id", "payload",
           imageMaxHamming = 3, videoStride = 1, videoMinFrac = 0.5,
@@ -775,7 +605,7 @@ object PipelineQueries5 {
   // two-run fixture; the oracle rebuilds BOTH runs' full reports.
   private val qMediaCurationLineage = Queries.Q(
     "p_media_curation_lineage",
-    Some(twoRunsSqlPrefix + """,
+    Some(twoRunsSqlPrefix + s""",
       status AS (
         SELECT COALESCE(o.id, n.id) AS id,
                CASE WHEN o.id IS NULL THEN 'added'
@@ -813,16 +643,16 @@ object PipelineQueries5 {
       ORDER BY media_id"""),
     (s, dir) => {
       import s.implicits._
-      val old = MediaTwoRuns.oldCorpus.toDF("media_id", "payload")
-      val nw = MediaTwoRuns.newCorpus.toDF("media_id", "payload")
+      val old = MediaFixtures.TwoRuns.oldCorpus.toDF("media_id", "payload")
+      val nw = MediaFixtures.TwoRuns.newCorpus.toDF("media_id", "payload")
       def rep(df: org.apache.spark.sql.DataFrame) =
         operators.Multimodal.mediaCurationReport(df, "media_id", "payload",
           imageMaxHamming = 3, videoStride = 1, videoMinFrac = 0.5,
           audioSegFrames = 128, audioMinFrac = 0.5)
       // The two report chains are INDEPENDENT and each carries eager
       // decode/CC work during construction — built concurrently
-      // (Queries.concurrently, guide §2.6); same reports, same rows.
-      val Seq(ro, rn) = Queries.concurrently(
+      // (Jobs.concurrently, guide §2.6); same reports, same rows.
+      val Seq(ro, rn) = Jobs.concurrently(
         () => rep(old), () => rep(nw))
       operators.Multimodal.mediaCurationLineage(
         old, nw, ro, rn, "media_id", "payload")
@@ -859,101 +689,15 @@ object PipelineQueries5 {
   // segments.
   private val qAudioResamplePairs = Queries.Q(
     "p_audio_resample_pairs",
-    Some("""
-      WITH clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               260 * (4 + (i // 3)) AS L, 1 + (i // 3) % 2 AS ch,
-               4 + (i // 3) AS nseg
-        FROM generate_series(0, 11) t(i)),
-      lg AS ( -- logical source frames (shared by all rates of a family)
-        SELECT i, b, v, ch, unnest(generate_series(0, L - 1)) AS g
-        FROM clips),
-      lm AS ( -- edit = CONTENT REPLACEMENT (shifted source phase) in
-              -- masked segments of v2; gain 3 on v1
-        SELECT i, b, ch, g,
-               CASE WHEN v = 2 AND
-                         CASE WHEN b % 2 = 0 THEN (g // 260) % 3 <> 0
-                              ELSE (g // 260) % 2 = 1 END
-                    THEN g + 7777 ELSE g END AS ge,
-               CASE WHEN v = 1 THEN 3 ELSE 1 END AS mult
-        FROM lg),
-      cs AS (SELECT i, b, g, ge, mult, unnest(generate_series(0, ch - 1)) AS c
-             FROM lm),
-      smp AS ( -- total |amplitude| per (clip, logical frame) over channels;
-               -- quadratic-phase source (g² decorrelates families/segments)
-        SELECT i, g,
-               SUM(ABS(((((ge * ge) % 4001) * (31 + b) + ge * 7 + c * 17
-                         + b * 101) % 4001 - 2000) * mult)) AS aamp
-        FROM cs GROUP BY i, g),
-      segs AS (SELECT i, unnest(generate_series(0, nseg - 1)) AS s FROM clips),
-      win AS ( -- time window w of segment s in LOGICAL frames: every
-               -- fixture rate is an ideal integer resample with a
-               -- 65-divisible segFrames, so all 65 physical windows
-               -- have equal length and each engine comparison
-               -- E_{w+1}·len_w > E_w·len_{w+1} reduces to
-               -- sign(E_{w+1} − E_w) of these logical energies
-        SELECT i, s, w, s * 260 + w * 4 AS wf, s * 260 + w * 4 + 4 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
-      e AS (
-        SELECT win.i, win.s, win.w, SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.g >= win.wf AND smp.g < win.wt
-        GROUP BY win.i, win.s, win.w),
-      bits AS (
-        SELECT a.i, a.s, a.w AS bb,
-               CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.s = a.s AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, s),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i)
-      SELECT CAST(ia AS BIGINT) AS id_a, CAST(ib AS BIGINT) AS id_b,
-             CAST(nm AS BIGINT) AS n_match,
-             CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) AS match_frac
-      FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-      WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5
-      ORDER BY id_a, id_b"""),
+    Some(s"""
+      WITH ${OracleSql.resampleClips},
+      ${OracleSql.envelopeHash("", "e", "i", "s")},
+      ${OracleSql.setOverlap()}
+      ${OracleSql.overlapRows}"""),
     (s, dir) => {
-      def u(b: Int)(c: Int, ge: Int): Int =
-        ((ge * ge % 4001) * (31 + b) + ge * 7 + c * 17 + b * 101) % 4001 - 2000
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val L = 260 * (4 + b)
-        val ch = 1 + b % 2
-        def smp(c: Int, g: Int): Int = {
-          val edited = v == 2 &&
-            (if (b % 2 == 0) (g / 260) % 3 != 0 else (g / 260) % 2 == 1)
-          val gain = if (v == 1) 3 else 1
-          u(b)(c, if (edited) g + 7777 else g) * gain
-        }
-        val wav = v match {
-          case 0 => operators.Multimodal.encodeWav(ch, 8000, 2 * L,
-            (c, f) => smp(c, f / 2))
-          case 1 => operators.Multimodal.encodeWav(ch, 16000, 4 * L,
-            (c, f) => smp(c, f / 4))
-          case _ => operators.Multimodal.encodeWav(ch, 4000, L,
-            (c, f) => smp(c, f))
-        }
-        (i.toLong, wav)
-      }
-      val extra: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not audio".getBytes("UTF-8"),
-        13L -> Array[Byte](0x7, 0x8),
-        // 900 Hz: derived segFrames = 900·65/1000 = 58 < 65 → NULL
-        14L -> operators.Multimodal.encodeWav(1, 900, 1800, (c, f) => u(0)(c, f)))
       import s.implicits._
       operators.Multimodal.audioNearDupPairsResampled(
-        (clips ++ extra).toDF("clip_id", "payload"), "clip_id", "payload",
+        MediaFixtures.resampleClips.toDF("clip_id", "payload"), "clip_id", "payload",
         msPerSeg = 65, minFrac = 0.5)
         .transform(Queries.sortedSmall(_, "id_a", "id_b"))
     })
@@ -965,103 +709,22 @@ object PipelineQueries5 {
   // gate), junk and the sub-65-derived 900 Hz clip always keep.
   private val qAudioResampleDedup = Queries.Q(
     "p_audio_resample_dedup",
-    Some("""
-      WITH RECURSIVE clips AS (
-        SELECT i, (i // 3) AS b, (i % 3) AS v,
-               260 * (4 + (i // 3)) AS L, 1 + (i // 3) % 2 AS ch,
-               4 + (i // 3) AS nseg
-        FROM generate_series(0, 11) t(i)),
-      lg AS (
-        SELECT i, b, v, ch, unnest(generate_series(0, L - 1)) AS g
-        FROM clips),
-      lm AS (
-        SELECT i, b, ch, g,
-               CASE WHEN v = 2 AND
-                         CASE WHEN b % 2 = 0 THEN (g // 260) % 3 <> 0
-                              ELSE (g // 260) % 2 = 1 END
-                    THEN g + 7777 ELSE g END AS ge,
-               CASE WHEN v = 1 THEN 3 ELSE 1 END AS mult
-        FROM lg),
-      cs AS (SELECT i, b, g, ge, mult, unnest(generate_series(0, ch - 1)) AS c
-             FROM lm),
-      smp AS (
-        SELECT i, g,
-               SUM(ABS(((((ge * ge) % 4001) * (31 + b) + ge * 7 + c * 17
-                         + b * 101) % 4001 - 2000) * mult)) AS aamp
-        FROM cs GROUP BY i, g),
-      segs AS (SELECT i, unnest(generate_series(0, nseg - 1)) AS s FROM clips),
-      win AS (
-        SELECT i, s, w, s * 260 + w * 4 AS wf, s * 260 + w * 4 + 4 AS wt
-        FROM segs, generate_series(0, 64) ws(w)),
-      e AS (
-        SELECT win.i, win.s, win.w, SUM(smp.aamp) AS e
-        FROM win JOIN smp ON smp.i = win.i AND smp.g >= win.wf AND smp.g < win.wt
-        GROUP BY win.i, win.s, win.w),
-      bits AS (
-        SELECT a.i, a.s, a.w AS bb,
-               CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.i = a.i AND n.s = a.s AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT i, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY i, s),
-      hset AS (SELECT DISTINCT i, lo, hi FROM hs),
-      ns AS (SELECT i, COUNT(*) AS n FROM hset GROUP BY i),
-      mm AS (SELECT x.i AS ia, y.i AS ib, COUNT(*) AS nm
-             FROM hset x JOIN hset y
-               ON x.lo = y.lo AND x.hi = y.hi AND x.i < y.i
-             GROUP BY x.i, y.i),
-      pairs AS (
-        SELECT ia, ib
-        FROM mm JOIN ns na ON na.i = mm.ia JOIN ns nb ON nb.i = mm.ib
-        WHERE CAST(nm AS DOUBLE) / LEAST(na.n, nb.n) >= 0.5),
-      g AS (SELECT ia AS u, ib AS v FROM pairs
-            UNION SELECT ib AS u, ia AS v FROM pairs),
-      reach(node, r) AS (SELECT u, u FROM (SELECT DISTINCT u FROM g)
-                         UNION
-                         SELECT g.v, reach.r FROM reach JOIN g ON g.u = reach.node),
-      losers AS (SELECT node FROM (SELECT node, MIN(r) AS grp FROM reach GROUP BY node)
-                 WHERE node <> grp)
+    Some(s"""
+      WITH RECURSIVE ${OracleSql.resampleClips},
+      ${OracleSql.envelopeHash("", "e", "i", "s")},
+      ${OracleSql.setOverlap()},
+      ${OracleSql.overlapPairs()},
+      ${OracleSql.closure("pairs", "ia", "ib")},
+      ${OracleSql.losers()}
       SELECT CAST(i AS BIGINT) AS clip_id,
              CASE WHEN i IN (12, 13) THEN 'other' ELSE 'wav' END AS kind
       FROM generate_series(0, 14) t(i)
       WHERE i NOT IN (SELECT node FROM losers)
       ORDER BY clip_id"""),
     (s, dir) => {
-      def u(b: Int)(c: Int, ge: Int): Int =
-        ((ge * ge % 4001) * (31 + b) + ge * 7 + c * 17 + b * 101) % 4001 - 2000
-      val clips: Seq[(Long, Array[Byte])] = (0 until 12).map { i =>
-        val b = i / 3
-        val v = i % 3
-        val L = 260 * (4 + b)
-        val ch = 1 + b % 2
-        def smp(c: Int, g: Int): Int = {
-          val edited = v == 2 &&
-            (if (b % 2 == 0) (g / 260) % 3 != 0 else (g / 260) % 2 == 1)
-          val gain = if (v == 1) 3 else 1
-          u(b)(c, if (edited) g + 7777 else g) * gain
-        }
-        val wav = v match {
-          case 0 => operators.Multimodal.encodeWav(ch, 8000, 2 * L,
-            (c, f) => smp(c, f / 2))
-          case 1 => operators.Multimodal.encodeWav(ch, 16000, 4 * L,
-            (c, f) => smp(c, f / 4))
-          case _ => operators.Multimodal.encodeWav(ch, 4000, L,
-            (c, f) => smp(c, f))
-        }
-        (i.toLong, wav)
-      }
-      val extra: Seq[(Long, Array[Byte])] = Seq(
-        12L -> "definitely not audio".getBytes("UTF-8"),
-        13L -> Array[Byte](0x7, 0x8),
-        14L -> operators.Multimodal.encodeWav(1, 900, 1800, (c, f) => u(0)(c, f)))
       import s.implicits._
       operators.Multimodal.dedupAudioNearDupsResampled(
-        (clips ++ extra).toDF("clip_id", "payload"), "clip_id", "payload",
+        MediaFixtures.resampleClips.toDF("clip_id", "payload"), "clip_id", "payload",
         msPerSeg = 65, minFrac = 0.5)
         .select(col("clip_id"),
           operators.Multimodal.mediaKind(col("payload")).as("kind"))
@@ -1080,7 +743,7 @@ object PipelineQueries5 {
   // exactness regime (130/520/1040 derived frames).
   private val qIncrementalAudioResample = Queries.Q(
     "p_incremental_audio_resample",
-    Some("""
+    Some(s"""
       WITH clips(side, id, b, ch, nseg, gain) AS (
         SELECT * FROM (VALUES
           (0, 0, 0, 1, 4, 1),
@@ -1105,43 +768,17 @@ object PipelineQueries5 {
       win AS (
         SELECT side, id, s, w, s * 130 + w * 2 AS wf, s * 130 + w * 2 + 2 AS wt
         FROM segs, generate_series(0, 64) ws(w)),
-      e AS (
-        SELECT win.side, win.id, win.s, win.w, SUM(smp.aamp) AS e
+      e AS ( -- equal-length windows, as in OracleSql.resampleClips
+        SELECT win.side, win.id, win.s, win.w, (win.wt - win.wf) AS len,
+               SUM(smp.aamp) AS e
         FROM win JOIN smp ON smp.side = win.side AND smp.id = win.id
                          AND smp.g >= win.wf AND smp.g < win.wt
-        GROUP BY win.side, win.id, win.s, win.w),
-      bits AS (
-        SELECT a.side, a.id, a.s, a.w AS bb,
-               CASE WHEN n.e > a.e THEN 1 ELSE 0 END AS bit
-        FROM e a JOIN e n ON n.side = a.side AND n.id = a.id AND n.s = a.s
-                         AND n.w = a.w + 1
-        WHERE a.w < 64),
-      hs AS (
-        SELECT side, id, s,
-               bit_or(CASE WHEN bit = 1 AND bb < 32
-                           THEN (CAST(1 AS BIGINT) << bb) ELSE 0 END) AS lo,
-               bit_or(CASE WHEN bit = 1 AND bb >= 32
-                           THEN (CAST(1 AS BIGINT) << (bb - 32)) ELSE 0 END) AS hi
-        FROM bits GROUP BY side, id, s),
-      hset AS (SELECT DISTINCT side, id, lo, hi FROM hs),
-      ns AS (SELECT side, id, COUNT(*) AS n FROM hset GROUP BY side, id),
-      mm AS (SELECT n.id AS nid, o.id AS oid, COUNT(*) AS nm
-             FROM hset n JOIN hset o
-               ON n.side = 1 AND o.side = 0 AND n.lo = o.lo AND n.hi = o.hi
-             GROUP BY n.id, o.id),
-      matched AS (
-        SELECT DISTINCT mm.nid
-        FROM mm JOIN ns nn ON nn.side = 1 AND nn.id = mm.nid
-                JOIN ns no ON no.side = 0 AND no.id = mm.oid
-        WHERE CAST(mm.nm AS DOUBLE) / LEAST(nn.n, no.n) >= 0.5)
-      SELECT CAST(i AS BIGINT) AS clip_id,
-             CASE WHEN i = 104 THEN 'other' ELSE 'wav' END AS kind
-      FROM (SELECT unnest([100, 101, 102, 103, 104]) AS i)
-      WHERE i NOT IN (SELECT nid FROM matched)
-      ORDER BY clip_id"""),
+        GROUP BY win.side, win.id, win.s, win.w, win.wt, win.wf),
+      ${OracleSql.envelopeHash("", "e", "side", "id", "s")},
+      ${OracleSql.indexMatches}
+      ${OracleSql.incrementKept("clip_id", "wav", Seq(100, 101, 102, 103, 104))}"""),
     (s, dir) => {
-      def u(b: Int)(c: Int, g: Int): Int =
-        ((g * g % 4001) * (31 + b) + g * 7 + c * 17 + b * 101) % 4001 - 2000
+      val u = MediaFixtures.resampleSample _
       def at(rate: Int, rep: Int, b: Int, ch: Int, nseg: Int, gain: Int) =
         operators.Multimodal.encodeWav(ch, rate, 130 * nseg * rep,
           (c, f) => u(b)(c, f / rep) * gain)

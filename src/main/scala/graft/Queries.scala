@@ -58,21 +58,6 @@ object Queries {
     s"$base/$name-${spark.sparkContext.applicationId}"
   }
 
-  /** Materialize several INDEPENDENT eager artifacts concurrently
-    * (optimization guide §2.6 — overlap independent jobs): Spark's
-    * scheduler happily runs several jobs at once inside one
-    * application, and actions are only sequential because the driver
-    * calls them sequentially. The incremental queries build their
-    * history artifacts with eager `localCheckpoint`s that otherwise
-    * run strictly one-after-another during query construction, each
-    * a multi-stage job whose short stages leave most cores idle; a
-    * thread pool sized to the artifact count lets each job's tasks
-    * back-fill executors freed by the others' straggler tails (FIFO
-    * scheduling = exactly the back-fill behaviour wanted). Rows are
-    * identical — only job submission overlap changes. */
-  def concurrently[A](thunks: (() => A)*): Seq[A] =
-    graft.util.Jobs.concurrently(thunks: _*)
-
   /** The TPC-H revenue term, computed entirely in exact decimal:
     * the 2dp operands cast exactly to decimal(9,2), multiplied without
     * rescale. Never cast a computed double product to decimal — DuckDB

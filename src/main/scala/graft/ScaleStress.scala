@@ -340,7 +340,7 @@ object ScaleStress {
           // scale; 1024 under-splits them at 500×)
           operators.Multimodal.videoNearDupPairsShifted(
             spark.read.parquet(feed), "vid_id", "payload", stride = 4,
-            chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "256").toInt).count()
+            chunkSize = 256).count()
         }
         // FRAMES-linearity leg (the r17 verdict's exact question —
         // the pre-fix form was quadratic in frames PER VIDEO, which
@@ -430,14 +430,14 @@ object ScaleStress {
         }
         // the trim-tolerant segment-set form on the SAME feed: 31
         // 128-frame segments per 4000-frame clip, exact set overlap.
-        // GRAFT_SHIFTED_CHUNK: A/B lever for the r19 chunk-cell fix —
-        // a huge value forces k=1 everywhere (the pre-fix single-cell
+        // chunkSize is the A/B lever for the r19 chunk-cell fix — a
+        // huge value forces k=1 everywhere (the pre-fix single-cell
         // join shape) for same-session comparison.
         measure("audio_near_dup_shifted", scale) {
           operators.Multimodal.audioNearDupPairsShifted(
             spark.read.parquet(feed), "clip_id", "payload",
             segFrames = 128,
-            chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "1024").toInt).count()
+            chunkSize = 1024).count()
         }
         // ARBITRARY-offset form, own feed: the shared feed's linear
         // sawtooth has a ~1.3-frame period — DEGENERATE for sliding
@@ -449,7 +449,7 @@ object ScaleStress {
         // fixed-phase forms), rest unique. hop=1 emits ~3873 sliding
         // hashes per 4000-frame clip — the documented ~128× probe-
         // volume price of full trim tolerance (catalog side stays
-        // single-phase). GRAFT_OFFSET_HOP trades it back.
+        // single-phase). A larger hop trades it back.
         val offFeed = s"${sys.props("java.io.tmpdir")}/graft-awoffeed-$scale"
         locally {
           import spark.implicits._
@@ -481,7 +481,7 @@ object ScaleStress {
           operators.Multimodal.audioNearDupPairsOffset(
             spark.read.parquet(offFeed), "clip_id", "payload",
             segFrames = 128,
-            hop = sys.env.getOrElse("GRAFT_OFFSET_HOP", "1").toInt).count()
+            hop = 1).count()
         }
       }
       // ---- sample-rate-tolerant near-dup (r20): the ms-segmentation
@@ -528,7 +528,7 @@ object ScaleStress {
             // neutral, max-task/stage-median 1.50→1.12 (this feed's
             // flood cells are smaller than the shifted arm's, so the
             // finer chunk balances where 1024 under-splits)
-            chunkSize = sys.env.getOrElse("GRAFT_RESAMPLE_CHUNK", "256").toInt).count()
+            chunkSize = 256).count()
         }
       }
       // ---- r19 media extensions: MJPEG decode volume, audio-in-video
@@ -581,7 +581,7 @@ object ScaleStress {
             operators.Multimodal.videoNearDupPairsShifted(
               spark.read.parquet(feed), "vid_id", "payload",
               stride = 4, minFrac = 0.5, maxHamming = 3,
-              chunkSize = sys.env.getOrElse("GRAFT_SHIFTED_CHUNK", "128").toInt).count()
+              chunkSize = 128).count()
           }
         }
         // audio-in-video containment: 200 videos per unit scale with
@@ -938,11 +938,11 @@ object ScaleStress {
         // heap or ≥4× reducers both do, and reducers are the shape a
         // cluster actually has).
         val prev = spark.conf.get("spark.sql.shuffle.partitions")
-        // GRAFT_NGRAM_REDUCERS: reducer-count A/B lever for the ≥64×
-        // arms (r14 measured 256 sufficient to avoid the OOM; the
-        // open question is whether more reducers shrink the overlap
-        // agg's per-task state below the spill point — r14 #3)
-        val reducers = sys.env.getOrElse("GRAFT_NGRAM_REDUCERS", "256")
+        // reducer count of the ≥64× arms (r14 measured 256 sufficient
+        // to avoid the OOM; the open question is whether more reducers
+        // shrink the overlap agg's per-task state below the spill
+        // point — r14 #3)
+        val reducers = 256
         if (scale >= 64) spark.conf.set("spark.sql.shuffle.partitions", reducers)
         try {
           val pairs = Dedup.ngramJaccardPairs(

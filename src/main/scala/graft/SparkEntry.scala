@@ -10,11 +10,21 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * for the exactness rules).
   */
 object SparkEntry {
-  private def all: Seq[Queries.Q] =
-    Queries.relational ++ Queries2.relational2 ++ Queries3.relational3 ++
-      Queries4.relational4 ++ CdcQueries.all ++ PipelineQueries.all ++
-      PipelineQueries2.all ++ PipelineQueries3.all ++ PipelineQueries4.all ++
-      PipelineQueries5.all
+  private[graft] def all: Seq[Queries.Q] =
+    distinctNames(
+      Queries.relational ++ Queries2.relational2 ++ Queries3.relational3 ++
+        Queries4.relational4 ++ CdcQueries.all ++ PipelineQueries.all ++
+        PipelineQueries2.all ++ PipelineQueries3.all ++ PipelineQueries4.all ++
+        PipelineQueries5.all)
+
+  /** `qs`, refused if two share a name: the name maps below would
+    * otherwise keep only the last of them, and the suite would shrink
+    * unnoticed. */
+  private[graft] def distinctNames(qs: Seq[Queries.Q]): Seq[Queries.Q] = {
+    val dups = qs.groupBy(_.name).collect { case (name, same) if same.size > 1 => name }
+    require(dups.isEmpty, s"duplicate query names: ${dups.toSeq.sorted.mkString(", ")}")
+    qs
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =

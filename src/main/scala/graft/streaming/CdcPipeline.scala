@@ -37,11 +37,6 @@ object CdcPipeline {
       valueCols: Seq[String],
       publishedTables: Option[Set[String]] = None) // F1 publication filter
 
-  /** Decode a streaming Dataset of frames (source-agnostic: memory
-    * stream for tests, file/Kafka feed in production). */
-  def decode(frames: Dataset[CdcFrame], streamId: String): Dataset[CdcEvent] =
-    CdcDecode.decode(frames, streamId)
-
   /** Frame stream from a parquet directory feed (the simplest durable
     * CDC transport: the capture side drops frame files, we tail them).
     *

@@ -23,7 +23,7 @@ class StreamingSpec extends SparkSpec {
       stream: MemoryStream[CdcFrame],
       cfg: CdcPipeline.SinkConfig,
       batches: Seq[Seq[CdcFrame]]): Unit = {
-    val events = CdcPipeline.decode(stream.toDS().coalesce(1), cfg.streamId)
+    val events = CdcDecode.decode(stream.toDS().coalesce(1), cfg.streamId)
     val q = CdcPipeline.run(events, UsersFixture.baseState(spark), cfg)
     try batches.foreach { b => stream.addData(b); q.processAllAvailable() }
     finally q.stop()
@@ -276,7 +276,7 @@ class StreamingSpec extends SparkSpec {
 
     // run 1: admission cap 3 forces multiple micro-batches
     val q1 = CdcPipeline.run(
-      CdcPipeline.decode(
+      CdcDecode.decode(
         CdcPipeline.framesFromCdcSource(spark, feedDir, maxFramesPerTrigger = 3),
         cfg.streamId),
       UsersFixture.baseState(spark), cfg)
@@ -291,7 +291,7 @@ class StreamingSpec extends SparkSpec {
     // "crash", then restart from the SAME checkpoint with new frames
     CdcFrameFiles.write(feedDir, "0002", frames.drop(7))
     val q2 = CdcPipeline.run(
-      CdcPipeline.decode(
+      CdcDecode.decode(
         CdcPipeline.framesFromCdcSource(spark, feedDir, maxFramesPerTrigger = 3),
         cfg.streamId),
       UsersFixture.baseState(spark), cfg)
@@ -377,7 +377,7 @@ class StreamingSpec extends SparkSpec {
     CdcDecode.resetStream("stream_ct")
     val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
     val counts = CdcDecode
-      .withCommitEventTime(CdcPipeline.decode(stream.toDS().coalesce(1), "stream_ct"))
+      .withCommitEventTime(CdcDecode.decode(stream.toDS().coalesce(1), "stream_ct"))
       .withWatermark("event_time", "10 minutes")
       .groupBy(window(col("event_time"), "10 minutes"))
       .agg(count(lit(1)).as("n"))
@@ -755,7 +755,7 @@ class StreamingSpec extends SparkSpec {
   test("console sink (P3) runs a micro-batch without error") {
     val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
     CdcDecode.resetStream("stream_console")
-    val events = CdcPipeline.decode(stream.toDS().coalesce(1), "stream_console")
+    val events = CdcDecode.decode(stream.toDS().coalesce(1), "stream_console")
     val q = CdcPipeline.consoleSink(events, numRows = 5)
     try { stream.addData(UsersFixture.frames); q.processAllAvailable() }
     finally q.stop()
@@ -781,7 +781,7 @@ class StreamingSpec extends SparkSpec {
   test("awaitWithShutdownHook (C4) blocks until the query stops, then returns") {
     val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
     CdcDecode.resetStream("stream_hook")
-    val events = CdcPipeline.decode(stream.toDS().coalesce(1), "stream_hook")
+    val events = CdcDecode.decode(stream.toDS().coalesce(1), "stream_hook")
     val q = CdcPipeline.consoleSink(events)
     val waiter = new Thread(() => CdcPipeline.awaitWithShutdownHook(q))
     waiter.start()
@@ -799,7 +799,7 @@ class StreamingSpec extends SparkSpec {
     CdcDecode.resetStream("stream_console")
     val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
     val q = CdcPipeline.consoleSink(
-      CdcPipeline.decode(stream.toDS().coalesce(1), "stream_console"), numRows = 5)
+      CdcDecode.decode(stream.toDS().coalesce(1), "stream_console"), numRows = 5)
     try {
       stream.addData(UsersFixture.frames)
       q.processAllAvailable()
@@ -811,7 +811,7 @@ class StreamingSpec extends SparkSpec {
     CdcDecode.resetStream("stream_c4")
     val s2 = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
     val q2 = CdcPipeline.consoleSink(
-      CdcPipeline.decode(s2.toDS().coalesce(1), "stream_c4"), numRows = 5)
+      CdcDecode.decode(s2.toDS().coalesce(1), "stream_c4"), numRows = 5)
     val waiter = new Thread(() => CdcPipeline.awaitWithShutdownHook(q2))
     waiter.start()
     assert(q2.isActive)

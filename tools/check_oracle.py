@@ -9,6 +9,10 @@ DuckDB against the same sfDir parquet tables, and compares:
 row count, column names (sorted), and a value hash computed after
 sorting columns by name and rows by all columns — mirroring the
 driver's described compare as closely as we can.
+
+Also writes <verifyOutDir>/digests.json: per query, the sha256 value
+hash of the Spark output and of the DuckDB oracle result, so two
+Verify runs (say, before and after a change) compare with one `diff`.
 """
 import sys, json, glob, os
 import duckdb
@@ -40,6 +44,7 @@ def main(sf_dir, out_dir):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
     oracle = json.load(open(os.path.join(out_dir, "oracle_sql.json")))
     results = {}
+    digests = {}
     for name in sorted(os.listdir(out_dir)):
         d = os.path.join(out_dir, name)
         if not os.path.isdir(d):
@@ -51,6 +56,8 @@ def main(sf_dir, out_dir):
             continue
         spark_names = tbl.column_names
         spark_rows = [tuple(r[c] for c in spark_names) for r in tbl.to_pylist()]
+        hs = table_digest(spark_names, spark_rows)
+        digests[name] = {"spark": hs}
         if name not in oracle:
             results[name] = {"status": "ROWS_ONLY", "rows": len(spark_rows)}
             continue
@@ -68,21 +75,22 @@ def main(sf_dir, out_dir):
         except Exception as e:
             results[name] = {"status": "ORACLE_ERROR", "error": str(e)[:300]}
             continue
+        hd = table_digest(duck_names, duck_rows)
+        digests[name]["duck"] = hd
         r = {
             "rows_match": len(spark_rows) == len(duck_rows),
             "schema_match": sorted(spark_names) == sorted(duck_names),
             "spark_rows": len(spark_rows), "duck_rows": len(duck_rows),
         }
-        if r["schema_match"]:
-            hs = table_digest(spark_names, spark_rows)
-            hd = table_digest(duck_names, duck_rows)
-            r["hash_match"] = hs == hd
-        else:
-            r["hash_match"] = False
+        r["hash_match"] = r["schema_match"] and hs == hd
+        if not r["schema_match"]:
             r["spark_cols"] = sorted(spark_names)
             r["duck_cols"] = sorted(duck_names)
         r["status"] = "OK" if r["rows_match"] and r["schema_match"] and r["hash_match"] else "MISMATCH"
         results[name] = r
+    with open(os.path.join(out_dir, "digests.json"), "w") as f:
+        json.dump(digests, f, indent=1, sort_keys=True)
+        f.write("\n")
     n_ok = sum(1 for v in results.values() if v["status"] == "OK")
     for name, v in results.items():
         print(f"{v['status']:>14}  {name}  " +
