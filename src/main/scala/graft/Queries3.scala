@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Queries.{Q, sortedSmall, sortedSmallBy}
+import graft.Queries.{Q, sortedSmall}
 import graft.util.Exact.dec
 
 /** Fourth relational wave — grouping/reshaping operators the first

@@ -1,10 +1,9 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Queries.{Q, sortedSmall, sortedSmallBy}
+import graft.Queries.{Q, sortedSmall}
 import graft.util.Exact.{dec, dec2, dsum}
 
 /** Fifth relational wave — analytic shapes the earlier waves didn't

@@ -89,12 +89,14 @@ object CdcDecode {
   /** Decode a dataset of frames. `dropMalformed=true` skips frames
     * that throw [[PgOutput.MalformedFrame]] (PERMISSIVE-style);
     * otherwise the task fails (FAILFAST). `sortByLsn` restores the
-    * stream's total order within each partition before decoding (file
-    * feeds list files in name/mtime order, not lsn order; a Relation
-    * frame must decode before its changes) — the sort buffers the
-    * partition, which is admission-bounded in a micro-batch
-    * (`maxFilesPerTrigger`). `registryDir` persists Relation frames
-    * for JVM-restart recovery (see [[decoderFor]]). */
+    * stream's total order within each partition before decoding, for
+    * frames read from plain parquet (`spark.read.parquet` lists files
+    * in name order, not lsn order; a Relation frame must decode before
+    * its changes) — ScaleStress's `cdc_decode_throughput` arm reads
+    * its feed that way. The sort buffers the whole partition. The
+    * `graft-cdc` source already emits frames in lsn order.
+    * `registryDir` persists Relation frames for JVM-restart recovery
+    * (see [[decoderFor]]). */
   def decode(
       frames: Dataset[CdcFrame],
       streamId: String,

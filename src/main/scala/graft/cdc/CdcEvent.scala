@@ -1,7 +1,5 @@
 package graft.cdc
 
-import org.apache.spark.sql.types._
-
 /** Row-change event — the engine's unit of data, mirroring the
   * reference's CDCEvent record (see /root/reference/utils/cdc_event.py:6-25
   * for the field inventory; SURVEY.md §1.1).
@@ -51,15 +49,4 @@ object CdcEvent {
     * Lossy on the wire; the MERGE materializer treats it as
     * "keep previous value" (SURVEY.md §7.3). */
   val UnchangedSentinel = "[unchanged]"
-
-  /** Wire StructType of the event envelope (FIXTURES.md §A.2). */
-  val wireSchema: StructType = StructType(Seq(
-    StructField("operation", StringType, nullable = false),
-    StructField("schema", StringType, nullable = false),
-    StructField("table", StringType, nullable = false),
-    StructField("columns", ArrayType(StringType, containsNull = false), nullable = false),
-    StructField("old_values", MapType(StringType, StringType, valueContainsNull = true), nullable = true),
-    StructField("new_values", MapType(StringType, StringType, valueContainsNull = true), nullable = true),
-    StructField("lsn", LongType, nullable = false),
-    StructField("timestamp", TimestampType, nullable = false)))
 }

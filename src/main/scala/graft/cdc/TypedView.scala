@@ -57,21 +57,4 @@ object TypedView {
     events.select(
       keep.map(col) ++
         schema.fields.map(f => typedField(col(imageCol), f.name, f.dataType, permissive)): _*)
-
-  /** [[project]] with the schema derived FROM THE WIRE — the relation
-    * registry's per-column (oid, typmod) through [[PgTypes.schemaFor]]
-    * plus any 'Y'-announced custom type names. No caller schema: this
-    * is the end-to-end closure of the reference's unused-`type_id`
-    * flaw (SURVEY §1.2). The registries are decode-time metadata (a
-    * handful of rows per table), so passing them driver-side is free
-    * at any scale; callers that need overrides keep using [[project]]
-    * with an explicit `StructType`. */
-  def projectWire(
-      events: DataFrame,
-      imageCol: String,
-      rel: PgOutput.RelationInfo,
-      types: collection.Map[Int, PgOutput.TypeInfo] = Map.empty,
-      keep: Seq[String] = Seq.empty,
-      permissive: Boolean = true): DataFrame =
-    project(events, imageCol, PgTypes.schemaFor(rel, types), keep, permissive)
 }

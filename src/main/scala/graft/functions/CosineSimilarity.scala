@@ -573,12 +573,8 @@ object GraftFunctions {
 
 /** `spark.sql.extensions` entry point (SURVEY §7.2: custom Catalyst
   * work registered via `SparkSessionExtensions`) — the function
-  * library plus the opt-in range-join bin rewrite (dormant until
-  * `spark.graft.rangeJoin.binWidth` is set; see
-  * [[graft.plans.RangeJoinBinRewrite]]). */
+  * library. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
+  override def apply(ext: SparkSessionExtensions): Unit =
     GraftFunctions.descriptors.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(_ => graft.plans.RangeJoinBinRewrite)
-  }
 }

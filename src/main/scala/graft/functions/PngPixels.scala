@@ -66,7 +66,7 @@ private[graft] object PngDecode {
     var paletted = false
     var plte: Array[Byte] = null
     var trns: Array[Byte] = null
-    var idat = new java.io.ByteArrayOutputStream()
+    val idat = new java.io.ByteArrayOutputStream()
     var chunks = 0
     var sawEnd = false
     while (!sawEnd && pos + 8 <= b.length && chunks < 10000) {

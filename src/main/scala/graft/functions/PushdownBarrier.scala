@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, graftBridge}
+import org.apache.spark.sql.{DataFrame, graftBridge}
 import org.apache.spark.sql.catalyst.expressions.LeafExpression
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block.BlockHelper

@@ -331,8 +331,10 @@ object Curation {
     * one fingerprint-keyed full-outer join; everything else is two
     * id-keyed left joins of decision rows (booleans + a reason
     * string — the text never rides any lineage shuffle) and pure
-    * row-local CASE logic. Bucket the report tables by id and the
-    * recurring lineage run is exchange-free. */
+    * row-local CASE logic. Write the report tables with
+    * `bucketBy(n, id).sortBy(id).saveAsTable` and the recurring
+    * lineage run is exchange-free (IncrementalCurationSpec asserts
+    * the plan). */
   def lineage(
       oldDocs: DataFrame, newDocs: DataFrame,
       oldReport: DataFrame, newReport: DataFrame,

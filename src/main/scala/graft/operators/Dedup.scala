@@ -64,19 +64,15 @@ object Dedup {
         min(col(idCol)).as("keep_id"),
         count(lit(1)).as("n_copies"))
 
-  /** Per-doc minhash signature of `k` hashes over distinct tokens.
-    * Each h_j is the lexicographic minimum of seed-j md5 hex hashes
-    * over the array — the classic minwise-permutation estimator;
-    * strings order the same in Spark, DuckDB and Java, so signatures
-    * are portable. */
-  def minhashSignature(docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
-    minhashSignatureOver(docs, idCol, array_distinct(tokens(col(textCol))), k)
-
-  /** Minhash signature over an arbitrary precomputed shingle/token
-    * array expression. Small-vocabulary corpora MUST shingle first:
-    * unigram token sets collide massively (measured: 44% of all doc
-    * pairs at jaccard >= 0.7 on the driver corpus), while n-gram
-    * shingle space keeps only true near-dups together.
+  /** Per-doc minhash signature of `k` hashes over a precomputed
+    * shingle/token array expression. Each h_j is the lexicographic
+    * minimum of seed-j md5 hex hashes over the array — the classic
+    * minwise-permutation estimator; strings order the same in Spark,
+    * DuckDB and Java, so signatures are portable. Small-vocabulary
+    * corpora MUST shingle first: unigram token sets collide
+    * massively (measured: 44% of all doc pairs at jaccard >= 0.7 on
+    * the sf test corpus), while n-gram shingle space keeps only true
+    * near-dups together.
     *
     * The k minima are computed by the fused one-pass kernel
     * ([[graft.functions.MinhashSignature]] — bit-identical to the
@@ -206,33 +202,6 @@ object Dedup {
     val inter = size(array_intersect(a, b)).cast("double")
     val uni   = size(array_union(a, b)).cast("double")
     when(uni === 0d, lit(0d)).otherwise(inter / uni)
-  }
-
-  /** Near-duplicate pairs: minhash/LSH candidates verified by exact
-    * token-set Jaccard >= `threshold`. The verify join only touches
-    * candidate ids, so full documents are shipped once per candidate,
-    * not per band.
-    *
-    * `maxBucket` is the candidate-generation bucket cap (see
-    * [[minhashCandidatePairs]]): band buckets larger than it are
-    * DROPPED, which can lose true near-dup pairs on flood-prone
-    * corpora. Callers opt in to the cap explicitly here; audit what a
-    * given cap loses with [[minhashBucketOverflow]] over
-    * [[minhashSignature]]. */
-  def nearDupPairs(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int, rowsPerBand: Int, threshold: Double,
-      maxBucket: Int = 1024): DataFrame = {
-    val sig   = minhashSignature(docs, idCol, textCol, k)
-    val cand  = minhashCandidatePairs(sig, idCol, k, rowsPerBand, maxBucket)
-    val toks  = docs.select(
-      col(idCol), array_distinct(tokens(col(textCol))).as("toks"))
-    cand
-      .join(toks.select(col(idCol).as("id_a"), col("toks").as("toks_a")), "id_a")
-      .join(toks.select(col(idCol).as("id_b"), col("toks").as("toks_b")), "id_b")
-      .withColumn("jac", jaccard(col("toks_a"), col("toks_b")))
-      .filter(col("jac") >= threshold)
-      .select("id_a", "id_b", "jac")
   }
 
   /** The shared shingle frontier (id, sh) both near-dup operators
@@ -892,13 +861,6 @@ object Dedup {
   private def simhashBand(sh: Column, b: Int): Column =
     conv(substring(sh, b * 4 + 1, 4), 16, 10).cast("long")
 
-  /** Hamming distance between two simhashes (hex form): four 16-bit
-    * xor + popcount terms, fully codegen'd. */
-  def simhashHamming(a: Column, b: Column): Column =
-    (0 until 4)
-      .map(i => bit_count(simhashBand(a, i).bitwiseXOR(simhashBand(b, i))))
-      .reduce(_ + _).cast("long")
-
   /** Near-duplicate pairs by simhash Hamming distance — the pairing
     * stage on top of [[simhash64ByKey]], via the classic 4-block
     * pigeonhole (Manku/Jarvelin web-dedup): two 64-bit hashes within
@@ -1040,24 +1002,6 @@ object Dedup {
           .reduce(_ + _).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
-
-  /** Audit companion of [[simhashNearDupPairs]]: the (band, bv)
-    * blocks its `maxBucket` cap would drop, as (band, bv, n_ids).
-    * Empty output = the cap lost nothing. Pure size aggregation —
-    * no member lists, safe at any block size (mirrors
-    * [[minhashBucketOverflow]]). */
-  def simhashBlockOverflow(
-      docs: DataFrame, idCol: String, textCol: String,
-      maxBucket: Int = 65536): DataFrame = {
-    val sh = simhash64ByKey(docs, idCol, textCol, "__sh")
-    sh.select(
-      col(idCol).as("id"),
-      posexplode(array((0 until 4).map(b => simhashBand(col("__sh"), b)): _*))
-        .as(Seq("band", "bv")))
-      .groupBy("band", "bv")
-      .agg(countDistinct(col("id")).as("n_ids"))
-      .filter(col("n_ids") > maxBucket)
   }
 
   /** The reference corpus's distinct simhash blocks, (band, bv) —

@@ -1074,43 +1074,6 @@ object Multimodal {
   private def prbFJoin(prb: DataFrame, cat: DataFrame): DataFrame =
     prb.join(cat.hint("shuffle_hash"), Seq("__dh"))
 
-  /** INCREMENTAL audio dedup with ARBITRARY-offset tolerance —
-    * [[dedupAudioAgainstIndex]] with the increment probed by its
-    * DENSE sliding hash set ([[audioSlidingDHashes]], hop = 1 for
-    * full tolerance) instead of single-phase segments. The persisted
-    * [[audioSegmentHashIndex]] is UNCHANGED — the catalog side stays
-    * single-phase, so index size and history cost don't move; only
-    * the increment pays the probe density. Set-overlap semantics
-    * against frozen history: the denominator min(|H(new)|, |H(old)|)
-    * resolves to the INDEX clip's hash-set size (the sliding set is
-    * far larger by construction), so the fraction reads "how much of
-    * the historical clip appears in the new one" — a new clip that
-    * is a trim of an indexed clip matches every full catalog segment
-    * regardless of the trim's offset. */
-  def dedupAudioAgainstIndexOffset(
-      newDocs: DataFrame, idCol: String, payloadCol: String, index: DataFrame,
-      segFrames: Int, hop: Int = 1, minFrac: Double = 0.5,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    require(segFrames >= 65,
-      s"segFrames=$segFrames must be >= 65 (one frame per envelope window)")
-    require(hop >= 1, s"hop=$hop must be positive")
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    require(maxBucket > 1, s"maxBucket=$maxBucket must exceed 1")
-    require(chunkSize > 0, s"chunkSize=$chunkSize must be positive")
-    val probe = newDocs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(newDocs))
-      .select(col(idCol).as("__nid"),
-        audioSlidingDHashes(col(payloadCol), segFrames, hop).as("__sw"))
-      .filter(col("__sw").isNotNull && size(col("__sw")) > 0)
-      .select(col("__nid"), explode(col("__sw.dhash")).as("__dh"))
-      .distinct()
-    newDocs.join(
-      setOverlapIdsAgainstIndex(probe, index, idCol,
-        minFrac, maxBucket, chunkSize, excludeSameId = false),
-      Seq(idCol), "left_anti")
-  }
-
   /** Video near-dup DEDUP output — [[dedupImageNearDups]] for the
     * video column: [[videoNearDupPairs]] (frame-aligned) →
     * [[Graph.connectedComponents]] → keep each cluster's smallest-id
@@ -2012,32 +1975,6 @@ object Multimodal {
       st => st.getField("reps"))
   }
 
-  /** SHOT-KEYED video near-dup pairs — [[videoNearDupPairsShifted]]
-    * with the hash SET reduced to one representative per shot
-    * ([[videoShotFrameDHashes]]): videos pair when ≥ `minFrac` of
-    * the smaller side's SHOT fingerprints match, so re-cuts that
-    * stretch or shorten scenes (same scenes, different durations —
-    * which skew the per-frame distinct-hash sets whenever scenes
-    * carry internal motion) still pair at full containment. Composes
-    * with the audited [[hashSetOverlapPairs]] core UNCHANGED — same
-    * flood cap, same chunk-cell machinery, same output shape
-    * (id_a, id_b, n_match, match_frac). `cutHamming` is the shot
-    * detector's threshold; `maxHamming` the (optional) near-match
-    * band on representative hashes. */
-  def videoNearDupPairsShotKeyed(
-      docs: DataFrame, idCol: String, payloadCol: String,
-      cutHamming: Int = 16, minFrac: Double = 0.5, maxHamming: Int = 0,
-      maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
-    val hashes = docs
-      .select(col(idCol), col(payloadCol))
-      .repartition(Dedup.pinnedParts(docs)) // decode frontier spread
-      .select(col(idCol),
-        videoShotFrameDHashes(col(payloadCol), cutHamming).as("__sh"))
-      .filter(col("__sh").isNotNull && size(col("__sh")) > 0)
-      .select(col(idCol), explode(col("__sh.dhash")).as("__dh"))
-    hashSetOverlapPairs(hashes, idCol, minFrac, maxHamming, maxBucket, chunkSize)
-  }
-
   /** REAL frame sampling for AVI and animated-GIF payloads: every
     * `stride`-th frame's index + mean RGB brightness
     * (`array<struct<frame_idx, mean>>`, one decode pass, pixels never
@@ -2461,7 +2398,6 @@ object Multimodal {
     def le(n: Int): ByteBuffer = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
     val spb = samplesPerBlock
     val blockAlign = 4 * channels + (spb - 1) / 2 * channels
-    val nBlocks = (nFrames + spb - 1) / spb
     val fmt = le(20)
       .putShort(17).putShort(channels.toShort)
       .putInt(sampleRate)

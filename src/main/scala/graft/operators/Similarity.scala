@@ -521,8 +521,6 @@ object Similarity {
     require(m > 0 && ks > 0, s"m=$m and ks=$ks must be positive")
     require(iters >= 0, s"iters=$iters must be non-negative")
     val subs = subVectors(corpus, idCol, vecCol, "__id", m)
-    val seedOrder = Seq(col("__r"), col("__sid"))
-    val wSeed = Window.partitionBy(col("subspace")).orderBy(seedOrder: _*)
     val init = corpus
       .select(col(idCol).cast("string").as("__sid"), col(vecCol))
       .withColumn("__r", md5(col("__sid")))
@@ -814,26 +812,9 @@ object Similarity {
     * corpus×centroid argmax pass twice, once per join side. Ordering
     * is IDENTICAL to uniformPerKey's (md5(salt:id) with the
     * string-cast id tiebreak), so the draw matches what the delegated
-    * form and the streaming sampler would select. A flooded cell is
-    * the dominant-key case of [[Sampling.perKeyCap]]'s skew note.
+    * form would select. A flooded cell is the dominant-key case of
+    * [[Sampling.perKeyCap]]'s skew note.
     * Output: (id, cell) for the selected members. */
-  /** Per-row nearest-centroid cell as a pure COLUMN over a
-    * driver-side centroid list — the STATELESS form of
-    * [[assignCells]] for streams (a streaming plan cannot run the
-    * batch groupBy argmax without state). `least` over
-    * (-cosine, cent) struct literals reproduces the batch min-struct
-    * ordering exactly — highest cosine wins, smallest centroid id
-    * breaks ties — and both forms evaluate the same fused cosine
-    * kernel, so assignment is bit-identical (StreamingSpec diffs
-    * them). The centroid list is a ≤nCells driver artifact, same
-    * contract as the IVF probe side's broadcast. */
-  def assignCellColumn(vec: Column, cents: Seq[(Long, Seq[Float])]): Column = {
-    require(cents.nonEmpty, "need at least one centroid")
-    least(cents.map { case (cid, cv) =>
-      struct((-cosine(vec, typedLit(cv))).as("nc"), lit(cid).as("cent"))
-    }: _*).getField("cent")
-  }
-
   def cellBalancedSample(
       corpus: DataFrame, idCol: String, vecCol: String,
       centroids: DataFrame, centIdCol: String, centVecCol: String,

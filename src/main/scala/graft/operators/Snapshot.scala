@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   * shuffle join on the id aligns the two versions. No window, no
   * driver state; downstream stages join the id list back to whichever
   * snapshot they need (`added`/`changed` → the new one). At cluster
-  * scale, bucketing both snapshot tables by id ([[Bucketing]]) makes
-  * the recurring diff exchange-free.
+  * scale, writing both snapshot tables bucketed by id
+  * (`bucketBy(n, id).saveAsTable`) makes the recurring diff
+  * exchange-free.
   */
 object Snapshot {
 
@@ -48,12 +49,4 @@ object Snapshot {
           .otherwise("unchanged").as("status"),
         col("old_fp"), col("new_fp"))
   }
-
-  /** One-row-per-status rollup of [[diff]] — the dashboard number. */
-  def diffSummary(
-      oldSnap: DataFrame, newSnap: DataFrame,
-      idCol: String, textCol: String): DataFrame =
-    diff(oldSnap, newSnap, idCol, textCol)
-      .groupBy("status")
-      .agg(count(lit(1)).as("n_docs"))
 }

@@ -359,10 +359,6 @@ object CdcFrameFiles {
     indexed(dir).filter(_._2.maxLsn > from)
       .flatMap(_._2.frames.filter(_._1 > from)).sortBy(_._1)
 
-  /** LSNs strictly after `from`, ascending. */
-  def lsnsAfter(dir: String, from: Long): Seq[Long] =
-    framesAfter(dir, from).map(_._1)
-
   /** The newest LSN in `dir`, if it holds any frame. */
   private[sources] def latestLsn(dir: String): Option[Long] =
     indexed(dir).map(_._2).filter(_.frames.nonEmpty).map(_.maxLsn).maxOption

@@ -22,7 +22,7 @@ import graft.util.Jobs
   * the reference's ack-after-enqueue (up to 1000 events lost on crash,
   * utils/postgre_cdc_consumer.py:99 + cdc_consumer.py:16).
   *
-  * Backpressure (X1): `maxFilesPerTrigger`/`maxOffsetsPerTrigger`
+  * Backpressure (X1): the `graft-cdc` source's `maxFramesPerTrigger`
   * admission instead of a blocking bounded queue.
   */
 object CdcPipeline {
@@ -37,34 +37,12 @@ object CdcPipeline {
       valueCols: Seq[String],
       publishedTables: Option[Set[String]] = None) // F1 publication filter
 
-  /** Frame stream from a parquet directory feed (the simplest durable
-    * CDC transport: the capture side drops frame files, we tail them).
-    *
-    * One replication stream is totally ordered, so the feed is
-    * coalesced to ONE partition: the file source would otherwise split
-    * a batch's frames across up to `maxFilesPerTrigger` partitions,
-    * letting change frames decode before their Relation frame (silent
-    * unknown-relation drops) and racing concurrent tasks on the
-    * per-stream decoder registry. Frames may still arrive out of lsn
-    * order WITHIN the partition (file listing order ≠ lsn order) —
-    * decode with `sortByLsn = true` ([[CdcDecode.decode]]), which
-    * sorts each (admission-bounded) micro-batch partition. */
-  def framesFromParquetDir(spark: SparkSession, dir: String, maxFilesPerTrigger: Int = 16): Dataset[CdcFrame] = {
-    import org.apache.spark.sql.Encoders
-    implicit val enc = Encoders.product[CdcFrame]
-    spark.readStream
-      .schema(Encoders.product[CdcFrame].schema)
-      .option("maxFilesPerTrigger", maxFilesPerTrigger) // X1 admission control
-      .parquet(dir)
-      .as[CdcFrame]
-      .coalesce(1)
-  }
-
   /** Frame stream from the DSv2 `graft-cdc` source (LSN offsets in
     * the checkpoint, `commit` publishes feedback, admission-capped —
     * the full-fidelity S1 replication-loop mapping; see
     * [[graft.sources.CdcFrameProvider]]). The source emits one
-    * ordered partition per stream, so no coalesce is needed.
+    * LSN-ordered partition per stream, so a Relation frame always
+    * decodes before the changes that name it.
     *
     * `txnAtomic = true` opts into transaction-atomic batches: the
     * planned end offset only lands on Commit-frame LSNs, so no
@@ -83,18 +61,6 @@ object CdcPipeline {
       .load()
       .as[CdcFrame]
   }
-
-  /** Decode a parquet-directory frame feed with the ordering contract
-    * enforced: one partition per stream, frames sorted by lsn within
-    * each micro-batch, Relation frames snapshotted to `registryDir`
-    * (survives JVM restart — [[CdcDecode.decode]]). */
-  def decodeFileFeed(
-      spark: SparkSession, dir: String, streamId: String,
-      maxFilesPerTrigger: Int = 16,
-      registryDir: Option[String] = None): Dataset[CdcEvent] =
-    CdcDecode.decode(
-      framesFromParquetDir(spark, dir, maxFilesPerTrigger), streamId,
-      sortByLsn = true, registryDir = registryDir)
 
   /** One micro-batch of the sink side: append the published wire
     * events to the changelog (K1) and MERGE them into the state store
@@ -168,14 +134,6 @@ object CdcPipeline {
       .start()
   }
 
-  /** Console sink for ad-hoc observation (reference P3: the worker's
-    * pretty-printer, cdc_consumer.py:58-68). */
-  def consoleSink(events: Dataset[CdcEvent], numRows: Int = 20): StreamingQuery =
-    CdcDecode.toWireDf(events)
-      .writeStream.format("console")
-      .option("numRows", numRows).option("truncate", false)
-      .start()
-
   /** The C4 stop action, exposed so its behavior is testable without
     * a JVM shutdown: stops the query if (and only if) still active. */
   private[streaming] def shutdownHook(query: StreamingQuery): Thread =
@@ -206,15 +164,13 @@ object CdcPipeline {
     }
 
     /** The latest version, read with the schema `write` recorded, so
-      * opening it runs no schema-inference job. (A version written
-      * without a schema file falls back to inference.) */
+      * opening it runs no schema-inference job. `write` records the
+      * schema before `LATEST` can point at a version, so a missing
+      * schema file fails here with a `NoSuchFileException` naming it. */
     def latest(spark: SparkSession): Option[DataFrame] =
       latestVersion.map { v =>
-        val f = schemaFile(v)
-        val reader =
-          if (!java.nio.file.Files.exists(f)) spark.read
-          else spark.read.schema(DataType.fromJson(java.nio.file.Files.readString(f)).asInstanceOf[StructType])
-        reader.parquet(s"$dir/v=$v")
+        val schema = DataType.fromJson(java.nio.file.Files.readString(schemaFile(v)))
+        spark.read.schema(schema.asInstanceOf[StructType]).parquet(s"$dir/v=$v")
       }
 
     def write(df: DataFrame, batchId: Long): Unit = {

@@ -5,62 +5,12 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming operator layer over event streams (SURVEY §2.9 streaming
-  * rows): watermarked exact dedup, windowed aggregation, and
-  * stream–static enrichment. All built-ins — state store, watermark
+  * rows): per-key samples and counts, near-dup gates and candidate
+  * detection, and the online curation gates (importance,
+  * contamination, LM perplexity, drift). State store, watermark
   * eviction and incremental planning come from Structured Streaming.
   */
 object StreamingOps {
-
-  /** Exact streaming dedup: drop events whose `idCols` repeat within
-    * the watermark horizon. State is bounded by the watermark (old
-    * keys are evicted), so this runs indefinitely at constant memory
-    * per key-horizon — the scale-safe streaming form of
-    * `dropDuplicates`. */
-  def dedupWithinWatermark(
-      events: DataFrame,
-      eventTimeCol: String,
-      watermark: String,
-      idCols: Seq[String]): DataFrame =
-    events
-      .withWatermark(eventTimeCol, watermark)
-      .dropDuplicatesWithinWatermark(idCols)
-
-  /** Tumbling-window counts/sums per event type — the streaming
-    * aggregation slice: partial aggregation per micro-batch, state
-    * store holds open windows, watermark closes and emits them. */
-  def windowedEventStats(
-      events: DataFrame,
-      eventTimeCol: String,
-      watermark: String,
-      windowLen: String): DataFrame =
-    events
-      .withWatermark(eventTimeCol, watermark)
-      .groupBy(window(col(eventTimeCol), windowLen), col("event_type"))
-      .agg(count(lit(1)).as("n_events"), sum(col("value")).as("total_value"))
-
-  /** Session windows: group a key's events into activity sessions
-    * separated by at least `gap` of silence (`session_window` — state
-    * store merges overlapping windows as events arrive, watermark
-    * closes sessions `gap` past the last event). The sessionization
-    * primitive behind user-journey and burst analysis; state per key
-    * is one open session, watermark-bounded like every op here. */
-  def sessionStats(
-      events: DataFrame,
-      eventTimeCol: String,
-      watermark: String,
-      gap: String,
-      keyCol: String): DataFrame =
-    events
-      .withWatermark(eventTimeCol, watermark)
-      .groupBy(session_window(col(eventTimeCol), gap), col(keyCol))
-      .agg(
-        count(lit(1)).as("n_events"),
-        sum(col("value")).as("total_value"))
-      .select(
-        col(keyCol),
-        col("session_window.start").as("session_start"),
-        col("session_window.end").as("session_end"),
-        col("n_events"), col("total_value"))
 
   /** Output row of [[runningCounts]]: per-key totals after each
     * micro-batch. */
@@ -181,50 +131,6 @@ object StreamingOps {
       count.update(total)
       Iterator(KeyCount(key, total, n))
     }
-  }
-
-  /** Stream–stream inner join within an event-time interval — the
-    * attribution shape (impressions ⋈ clicks within N minutes):
-    * rows match when `keyEq` holds AND the right event lands in
-    * `[leftTime, leftTime + within]`.
-    *
-    * Both sides carry watermarks and the join condition bounds event
-    * time in BOTH directions, so Structured Streaming derives a state
-    * eviction horizon for each side: buffered rows are dropped once
-    * no future match can reach them. Without the time bound the join
-    * state grows forever — that variant is deliberately not offered.
-    * State is key-partitioned in the state store; scale-out is by
-    * key hash, same as every stateful op here.
-    *
-    * Column names must be distinct across the two sides (rename
-    * before calling) — the time predicate references them unqualified. */
-  def streamStreamIntervalJoin(
-      left: DataFrame,
-      leftTimeCol: String,
-      leftWatermark: String,
-      right: DataFrame,
-      rightTimeCol: String,
-      rightWatermark: String,
-      keyEq: Column,
-      within: String): DataFrame = {
-    val l = left.withWatermark(leftTimeCol, leftWatermark)
-    val r = right.withWatermark(rightTimeCol, rightWatermark)
-    l.join(r,
-      keyEq &&
-        col(rightTimeCol) >= col(leftTimeCol) &&
-        col(rightTimeCol) <= col(leftTimeCol) + expr(s"INTERVAL $within"))
-  }
-
-  /** Stream–static enrichment: attach dimension attributes to a
-    * stream. The static side is re-read per micro-batch (picks up
-    * slowly changing dims); broadcast when dimension-sized. */
-  def enrich(
-      stream: DataFrame,
-      dim: DataFrame,
-      joinCols: Seq[String],
-      broadcastDim: Boolean = true): DataFrame = {
-    val d = if (broadcastDim) broadcast(dim) else dim
-    stream.join(d, joinCols, "left")
   }
 
   /** INCREMENTAL near-dup dedup: drop streaming documents whose
@@ -393,32 +299,6 @@ object StreamingOps {
     stream.filter(frac.isNull || frac < minFrac)
   }
 
-  /** STREAMING cross-modal AUDIO gate — drop an arriving VIDEO iff at
-    * least `minFrac` of its PCM soundtrack's segment hashes
-    * ([[graft.operators.Multimodal.videoAudioSegmentDHashes]] — the
-    * 'auds'-track twin of the WAV form, one envelope kernel) hit a
-    * banned-AUDIO catalog's block bitmaps
-    * ([[graft.operators.Multimodal.audioSegmentBlockBitmaps]] over
-    * the WAV catalog — the SAME 32 KB artifact, because soundtrack
-    * and clip segments hash through one kernel). The trust-and-safety
-    * verb "block uploads that embed this known audio", batch or
-    * stream, PURE per-row: no join, no watermark, no state. Segment
-    * probes are pigeonhole-complete for Hamming ≤3; block
-    * coincidences over-count (high-recall — `minFrac` is the
-    * precision lever); tolerance to leading trims is modulo
-    * segFrames. Videos without a decodable PCM track are KEPT
-    * (absence of evidence, the family rule). */
-  def dropVideosWithKnownAudio(
-      stream: DataFrame, payloadCol: String,
-      refBitmaps: Array[Array[Long]], segFrames: Int,
-      minFrac: Double = 0.5): DataFrame = {
-    require(minFrac > 0 && minFrac <= 1, s"minFrac=$minFrac outside (0,1]")
-    val frac = graft.functions.GraftFunctions.blockBitmapMatchFrac(
-      graft.operators.Multimodal.videoAudioSegmentDHashes(col(payloadCol), segFrames)
-        .getField("dhash"), refBitmaps)
-    stream.filter(frac.isNull || frac < minFrac)
-  }
-
   /** STREAMING media curation VERDICTS — the per-row twin of
     * [[graft.operators.Multimodal.mediaCurationReport]] against
     * FROZEN per-kind catalogs: one pass adds (kind, verdict, reason)
@@ -472,80 +352,6 @@ object StreamingOps {
           .when(isDup, "image_near_dup")
           .when(kind === "other" || matchedFrac.isNull, "undecodable")
           .otherwise("unique"))
-  }
-
-  /** Misra–Gries summary state of one shard: tracked item → counter,
-    * plus the total decrement count that bounds every estimate. */
-  final case class MgState(counts: Map[String, Long], decrements: Long)
-
-  /** One tracked heavy-hitter candidate after a micro-batch:
-    * the true frequency f(item) within the shard satisfies
-    * `min_count <= f <= max_count`. */
-  final case class HeavyHitter(
-      shard: Int, item: String, min_count: Long, max_count: Long)
-
-  /** Streaming heavy hitters with BOUNDED state — the Misra–Gries
-    * frequent-items summary (Misra & Gries, "Finding Repeated
-    * Elements", 1982) as an arbitrary-state streaming op. The naive
-    * alternative (stateful count per distinct item) grows state with
-    * stream CARDINALITY — unbounded on an open-vocabulary column; a
-    * Misra–Gries summary holds at most `k` counters per shard
-    * FOREVER, and still guarantees every item with shard frequency
-    * > N/(k+1) is tracked, with per-item bounds
-    * `count <= f <= count + decrements`.
-    *
-    * Sharding: items hash into `shards` groups (`groupByKey` on the
-    * shard id), each holding an independent summary in the state
-    * store — state is `shards × k` counters TOTAL regardless of
-    * stream length or cardinality, checkpointed/restored like every
-    * stateful op, scaled out by shard hash. A skew-heavy item lands
-    * wholly in its one shard, where it dominates that summary — the
-    * guarantee degrades gracefully per shard, never globally.
-    *
-    * Per batch each shard folds its items through the classic update
-    * (increment tracked / adopt free slot / decrement all when full)
-    * and emits its surviving candidates with current bounds
-    * (update-mode semantics: downstream keeps the latest row per
-    * (shard, item)). Exact counts for the survivors, when needed,
-    * are one targeted second pass filtered to the candidate set —
-    * the standard two-pass pattern this summary exists to enable. */
-  def heavyHitters(
-      events: DataFrame, itemCol: String,
-      shards: Int, k: Int): Dataset[HeavyHitter] = {
-    require(shards > 0 && k > 0, s"need shards>0, k>0; got $shards, $k")
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .select(
-        pmod(hash(col(itemCol)), lit(shards)).as("shard"),
-        col(itemCol).cast("string").as("item"))
-      .as[(Int, String)]
-      .groupByKey(_._1)
-      .flatMapGroupsWithState[MgState, HeavyHitter](
-        OutputMode.Update, GroupStateTimeout.NoTimeout) {
-        (shard: Int, batch: Iterator[(Int, String)], state: GroupState[MgState]) =>
-          val st = batch.foldLeft(state.getOption.getOrElse(MgState(Map.empty, 0L))) {
-            (s, row) => mgFold(s, row._2, k)
-          }
-          state.update(st)
-          st.counts.iterator.map { case (item, n) =>
-            HeavyHitter(shard, item, n, n + st.decrements)
-          }
-      }
-  }
-
-  /** One Misra–Gries update step (pure — the unit the streaming op
-    * folds and the property tests exercise directly): increment a
-    * tracked item, adopt a free slot, or — with all `k` slots taken —
-    * decrement every counter by one (dropping zeros) and charge the
-    * unseen item to the same global decrement. */
-  private[streaming] def mgFold(st: MgState, item: String, k: Int): MgState = {
-    val c = st.counts
-    if (c.contains(item)) st.copy(counts = c.updated(item, c(item) + 1L))
-    else if (c.size < k) st.copy(counts = c.updated(item, 1L))
-    else MgState(
-      c.map { case (i, n) => (i, n - 1L) }.filter(_._2 > 0L),
-      st.decrements + 1L)
   }
 
   /** One minhash-LSH candidate pair discovered in the stream:
@@ -1059,26 +865,4 @@ object StreamingOps {
     graft.operators.Drift.buckets(docs, textCol, langCol)
       .groupBy("feature", "bucket")
       .agg(count(lit(1)).as("n"))
-
-  /** STREAMING cluster-balanced sample — the incremental form of
-    * [[graft.operators.Similarity.cellBalancedSample]]: assign each
-    * arriving embedding to its nearest-centroid cell with the
-    * STATELESS [[graft.operators.Similarity.assignCellColumn]]
-    * expression (centroids are a fixed trained artifact, collected
-    * once — ≤ nCells driver rows, the same contract as
-    * importanceFilterStream's counts), then maintain the hash-min-k
-    * sample per cell with [[uniformSampleStream]]. Because hash-min-k
-    * is a MONOTONE statistic and the md5 rank matches the batch
-    * window's ordering exactly, after ANY stream prefix each cell's
-    * sample equals the batch operator over everything seen — the
-    * running topic-balanced coreset of an unbounded embedding stream,
-    * at ≤ perCellK·nCells state forever (spec-diffed). */
-  def cellBalancedSampleStream(
-      events: DataFrame, idCol: String, vecCol: String,
-      centroids: Seq[(Long, Seq[Float])],
-      perCellK: Int, salt: String): Dataset[KeySample] =
-    uniformSampleStream(
-      events.withColumn("cell",
-        graft.operators.Similarity.assignCellColumn(col(vecCol), centroids)),
-      "cell", idCol, perCellK, salt)
 }

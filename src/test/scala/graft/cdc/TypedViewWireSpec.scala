@@ -57,7 +57,7 @@ class TypedViewWireSpec extends SparkSpec {
       "PG allows precision 1000; beyond Spark's 38 keeps the safe default")
   }
 
-  test("projectWire types the wire images end-to-end without a caller schema") {
+  test("the wire-derived schema (PgTypes.schemaFor) types the wire images end-to-end") {
     val d = new PgOutput.Decoder
     d.decodeAll(E.typeMsg(909090, "public", "mood_enum"), 1L, 0L)
     d.decodeAll(E.relation(rel), 2L, 0L)
@@ -68,8 +68,8 @@ class TypedViewWireSpec extends SparkSpec {
       WText("\\xcafe"), WText("happy"))
     val evt = d.decodeAll(E.insert(RelId, row), 3L, 0L).head
     val events = CdcDecode.toWireDf(spark.createDataset(Seq(evt))(CdcDecode.cdcEventEncoder))
-    val typed = TypedView.projectWire(
-      events, "new_values", d.relationRegistry(RelId), d.typeRegistry, keep = Seq("lsn"))
+    val typed = TypedView.project(events, "new_values",
+      PgTypes.schemaFor(d.relationRegistry(RelId), d.typeRegistry), keep = Seq("lsn"))
     val out = typed.collect().head
     assert(typed.schema("id").dataType == IntegerType && out.getAs[Int]("id") == 7)
     assert(out.getAs[Long]("qty") == 900000000000L)

@@ -176,7 +176,8 @@ class MinhashSignatureSpec extends SparkSpec {
     val docs = Seq((1L, "the quick brown fox jumps over the lazy dog"),
       (2L, "pack my box with five dozen liquor jugs"),
       (3L, "")).toDF("doc_id", "text")
-    val sig = graft.operators.Dedup.minhashSignature(docs, "doc_id", "text", K)
+    val sig = graft.operators.Dedup.minhashSignatureOver(
+      docs, "doc_id", array_distinct(graft.operators.Dedup.tokens(col("text"))), K)
     assert(sig.columns.toSeq == "doc_id" +: (0 until K).map(j => s"h$j"))
     val refCols = (0 until K).map(j =>
       hofMin(j, array_distinct(split(col("text"), " "))).as(s"h$j"))

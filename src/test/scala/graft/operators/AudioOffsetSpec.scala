@@ -8,10 +8,8 @@ import graft.functions.{AudioEnvelope, WavDecode}
 /** Arbitrary-offset audio trim tolerance: the prefix-sum kernel is
   * bit-identical to the reference window walk, sliding hashes at
   * hop = segFrames reproduce the single-phase segment hashes
-  * (aligned-case equivalence), non-multiple trims pair at full
-  * containment where the fixed-phase form reads zero, and the
-  * incremental index form drops offset-trimmed copies against an
-  * UNCHANGED persisted index. */
+  * (aligned-case equivalence), and non-multiple trims pair at full
+  * containment where the fixed-phase form reads zero. */
 class AudioOffsetSpec extends SparkSpec {
 
   /** Quadratic-phase (chirp-like) fixture signal: a LINEAR sawtooth
@@ -91,25 +89,4 @@ class AudioOffsetSpec extends SparkSpec {
       "a 37-frame trim needs hop=1 — the documented granularity trade")
   }
 
-  test("incremental: offset-trimmed copy drops against the UNCHANGED index") {
-    import spark.implicits._
-    val history = Seq(10L -> clip(500)).toDF("id", "payload")
-    val index = Multimodal.audioSegmentHashIndex(history, "id", "payload", 128)
-      .cache()
-    val increment = Seq(
-      20L -> clip(463, mult = 2, shift = 37), // trimmed+gained copy of history
-      21L -> clip(400, b = 37))               // fresh content
-      .toDF("id", "payload")
-    val keptPlain = Multimodal.dedupAudioAgainstIndex(
-      increment, "id", "payload", index, 128)
-      .select("id").as[Long].collect().toSet
-    assert(keptPlain == Set(20L, 21L),
-      "single-phase probe misses the 37-frame trim (the r19 gap)")
-    val keptOffset = Multimodal.dedupAudioAgainstIndexOffset(
-      increment, "id", "payload", index, 128)
-      .select("id").as[Long].collect().toSet
-    assert(keptOffset == Set(21L),
-      "dense probe drops the trimmed copy; fresh content survives")
-    index.unpersist()
-  }
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
-import graft.functions.{AviDecode, GraftFunctions}
+import graft.functions.AviDecode
 
 /** Round-19 AVI extensions: MJPEG frame decode (the compressed
   * legacy-AVI class reachable with the shipped JDK JPEG reader) and
@@ -176,50 +176,6 @@ class AviAudioMjpegSpec extends SparkSpec {
     assert(badHd != null && badHd.audChannels == 0 &&
       badHd.frameOffsets.length == 2,
       "bad ADPCM geometry must drop only the audio track")
-  }
-
-  test("streaming cross-modal audio gate: drops videos embedding banned audio, keeps mute/fresh/junk, zero state") {
-    import spark.implicits._
-    def base(b: Int)(c: Int, f: Int): Int = (((f * 53 + c * 17 + b * 101) % 3989) - 1994)
-    // banned catalog: ONE WAV clip — its 32 KB bitmaps gate videos
-    // because soundtrack and clip segments hash through one kernel
-    val banned = Multimodal.audioSegmentBlockBitmaps(
-      Seq(100L -> Multimodal.encodeWav(2, 8000, 640, base(0))).toDF("clip_id", "payload"),
-      "payload", 128)
-    val arrivals = Seq(
-      // soundtrack = the banned clip, segment-trimmed AND gain x3: drop
-      0L -> Multimodal.encodeAvi(8, 6, 2, (f, x, y, c) => (x + y + f + c) % 200,
-        audioChannels = 2, audioRate = 8000, audioFrames = 512,
-        audioSample = (c, f) => base(0)(c, f + 128) * 3),
-      // structurally fresh soundtrack: keep
-      1L -> Multimodal.encodeAvi(8, 6, 2, (f, x, y, c) => (x + y + f + c) % 200,
-        audioChannels = 1, audioRate = 8000, audioFrames = 640,
-        audioSample = (c, f) => ((f * 173 + c * 13 + 999) % 3797) - 1898),
-      // mute video and junk: no PCM track, kept
-      2L -> Multimodal.encodeAvi(8, 6, 2, (f, x, y, c) => (x + y + f + c) % 200),
-      3L -> "junk".getBytes("UTF-8"))
-    val keptBatch = graft.streaming.StreamingOps.dropVideosWithKnownAudio(
-      arrivals.toDF("video_id", "payload"), "payload", banned, segFrames = 128)
-      .select("video_id").collect().map(_.getLong(0)).toSet
-    assert(keptBatch == Set(1L, 2L, 3L), s"batch gate verdicts: got $keptBatch")
-    // streaming form: join-free pure expression, zero state rows
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropVideosWithKnownAudio(
-      stream.toDS().toDF("video_id", "payload"), "payload", banned, segFrames = 128)
-    assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
-      "the bitmap gate must be join-free")
-    val ckpt = java.nio.file.Files.createTempDirectory("avgate").toString
-    val q = out.writeStream.format("memory").queryName("av_gate_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(arrivals)
-      q.processAllAvailable()
-      val keptStream = spark.table("av_gate_out")
-        .select("video_id").collect().map(_.getLong(0)).toSet
-      assert(keptStream == keptBatch, "stream verdicts must equal the batch gate")
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 0L)
-    } finally q.stop()
   }
 
   test("streaming media curation verdicts: per-kind catalog gates in one pass, zero state") {

@@ -121,8 +121,11 @@ class IncrementalCurationSpec extends SparkSpec {
     def rep(dd: DataFrame) = Curation.report(dd, "doc_id", "text",
       n = 3, k = 12, rowsPerBand = 3, threshold = 0.5)
     val dir = java.nio.file.Files.createTempDirectory("lin_bkt").toString
-    Bucketing.writeBucketed(rep(old), "lin_old_rep", s"$dir/old", "doc_id", 4)
-    Bucketing.writeBucketed(rep(docs), "lin_new_rep", s"$dir/new", "doc_id", 4)
+    def writeBucketed(dd: DataFrame, table: String): Unit =
+      dd.write.mode("overwrite").option("path", s"$dir/$table")
+        .bucketBy(4, "doc_id").sortBy("doc_id").format("parquet").saveAsTable(table)
+    writeBucketed(rep(old), "lin_old_rep")
+    writeBucketed(rep(docs), "lin_new_rep")
     // tiny test tables would broadcast (bypassing bucketing) and AQE
     // hides the tree inside leaf stage nodes — pin both off so the
     // structural assert sees the real fact-fact shape

@@ -5,9 +5,8 @@ import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** Shot-keyed frame sampling: representatives agree with the boundary
-  * detector by construction, one fingerprint per scene regardless of
-  * scene duration, and time-stretched re-cuts pair at containment 1.0
-  * through the UNCHANGED set-overlap core. */
+  * detector by construction, and there is one fingerprint per scene
+  * regardless of scene duration. */
 class ShotKeyedSpec extends SparkSpec {
 
   /** Scene-keyed gradient content (the p_video_shots structure) with
@@ -41,19 +40,6 @@ class ShotKeyedSpec extends SparkSpec {
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(reps.forall { case (_, f, h) => all(f) == h },
       "each representative carries its own frame's hash")
-  }
-
-  test("time-stretched re-cut pairs at 1.0 on shot fingerprints") {
-    import spark.implicits._
-    val docs = Seq(
-      0L -> clip(Seq(3, 4, 3)),            // scenes of 3/4/3 frames
-      1L -> clip(Seq(6, 2, 5)),            // same scenes, re-timed
-      2L -> clip(Seq(4, 4, 4), b = 9),     // unrelated content
-      3L -> "junk".getBytes("UTF-8"))
-      .toDF("id", "payload")
-    val pairs = Multimodal.videoNearDupPairsShotKeyed(docs, "id", "payload")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(3))).toSet
-    assert(pairs == Set((0L, 1L, 1.0)), s"got $pairs")
   }
 
   test("one representative per scene regardless of duration") {

@@ -95,23 +95,23 @@ class FrameCacheSpec extends SparkSpec {
     assert(first == expected(5L to 15L))
   }
 
-  test("lsnsAfter prunes only direct children: a nested stream's cache survives") {
+  test("framesAfter prunes only direct children: a nested stream's cache survives") {
     val outer = Files.createTempDirectory("cdcf_outer").toString
     val inner = Paths.get(outer, "sub").toString
     CdcFrameFiles.write(outer, "a", Seq(frame(1)))
     CdcFrameFiles.write(inner, "b", Seq(frame(2)))
     // populate both caches
-    assert(CdcFrameFiles.lsnsAfter(outer, 0) == Seq(1L))
-    assert(CdcFrameFiles.lsnsAfter(inner, 0) == Seq(2L))
+    assert(CdcFrameFiles.framesAfter(outer, 0).map(_._1) == Seq(1L))
+    assert(CdcFrameFiles.framesAfter(inner, 0).map(_._1) == Seq(2L))
     val innerKey = Paths.get(inner, "b.cdcf").toAbsolutePath.toString
     assert(CdcFrameFiles.lsnCache.containsKey(innerKey))
     // outer trigger must NOT evict the nested stream's entries
-    CdcFrameFiles.lsnsAfter(outer, 0)
+    CdcFrameFiles.framesAfter(outer, 0)
     assert(CdcFrameFiles.lsnCache.containsKey(innerKey),
       "outer-dir prune evicted a nested stream's cache entry")
     // trimmed files in the SAME dir are still pruned
     Files.delete(Paths.get(outer, "a.cdcf"))
-    CdcFrameFiles.lsnsAfter(outer, 0)
+    CdcFrameFiles.framesAfter(outer, 0)
     val outerKey = Paths.get(outer, "a.cdcf").toAbsolutePath.toString
     assert(!CdcFrameFiles.lsnCache.containsKey(outerKey),
       "deleted file's cache entry not pruned")
