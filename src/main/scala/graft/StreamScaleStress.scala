@@ -366,7 +366,7 @@ object StreamScaleStress {
         // artifact build
         val maxPpl = graft.operators.LanguageModel.perplexity(
             docs0, "doc_id", "text", uniDf, biDf)
-          .agg(expr("approx_percentile(ppl, 0.5)")).head.getDouble(0)
+          .agg(expr("approx_percentile(ppl, 0.5)")).head().getDouble(0)
         measure("stream_lm_gate", scale, feedDir, "append") { s =>
           StreamingOps.perplexityFilterStream(
             s, "text", u, b, nTot, voc, maxPpl = maxPpl)

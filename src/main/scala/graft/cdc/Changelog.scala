@@ -23,80 +23,118 @@ import org.apache.spark.sql.functions._
   *  - events before a key's last DELETE are dead history and never
   *    leak into a re-inserted row.
   *
-  * Scale shape: one keyed aggregate over the batch's events and one
+  * Scale shape: one keyed aggregate pass over the events and one
   * full-outer join of its output against the (truncate-fenced) base,
-  * so the per-batch work is one shuffle of the events plus the join —
-  * no explode to cells, no pivot, no windows over whole tables, no
+  * so the work is one shuffle of the events plus the join — no
+  * explode to cells, no pivot, no windows over whole tables, no
   * driver-side state. Skewed hot keys are bounded by events-per-key
   * and AQE skew splitting.
   */
 object Changelog {
 
-  /** Apply a batch of wire-envelope events (layout of
-    * [[CdcDecode.toWireDf]]) to `base`, returning the new state.
-    * `base` and the result share the layout: `keyCol` plus
-    * `valueCols`, all strings (typed views cast downstream).
+  /** Apply one batch of wire-envelope events (layout of
+    * [[CdcDecode.toWireDf]]) to `base`, returning the new state:
+    * [[applyBatches]] with every event in one batch. `base` and the
+    * result share the layout: `keyCol` plus `valueCols`, all strings
+    * (typed views cast downstream).
     */
   def apply(
       base: DataFrame,
       events: DataFrame,
       table: String,
       keyCol: String,
+      valueCols: Seq[String]): DataFrame =
+    applyBatches(base, events.withColumn("batch", lit(0L)), table, keyCol, valueCols)
+
+  /** Apply ordered batches of wire events to `base` in one pass: the
+    * same result as folding [[apply]] over the batches in `batch`
+    * order, each batch applied in `lsn` order. `events` carries a
+    * long `batch` column, as the changelog's `batch=<id>` directories
+    * read under their root do; lsns may repeat across batches.
+    *
+    * The fold, per key: a batch whose last event on the key is a
+    * DELETE removes the key, so its cells, the older batches' cells
+    * and the base row are dead for every later batch; a later batch's
+    * cell wins over an earlier one's; and within a batch a cell counts
+    * only past the batch's last DELETE of the key, else the value
+    * falls through to the batches before it. So the events aggregate
+    * per (key, batch) as [[apply]] always did, then per key, and one
+    * join against the base covers the whole sequence.
+    */
+  def applyBatches(
+      base: DataFrame,
+      events: DataFrame,
+      table: String,
+      keyCol: String,
       valueCols: Seq[String]): DataFrame = {
     val tableEvts = events.filter(col("table") === table)
+    val pos = struct(col("batch"), col("lsn"))
 
-    // TRUNCATE fence: a truncate at lsn T kills the base state and
-    // every event before T for the whole table — only re-inserts
-    // after the LAST truncate can contribute. The fence is one scalar
-    // per table (never a per-key shuffle; at 100 TB this is a map-side
-    // filter), computed by a scalar subquery: every use of it is the
-    // same subquery, so it runs once per query and both inputs filter
-    // against its value. (A broadcast 1-row aggregate joined onto each
-    // input ran twice when `events` was cached, as it is in a
-    // micro-batch: adaptive execution reused neither the broadcast nor
-    // its scan of the cache.)
+    // TRUNCATE fence: a truncate at position (batch, lsn) T kills the
+    // base state and every event before T for the whole table — only
+    // re-inserts after the LAST truncate can contribute. The fence is
+    // one scalar per table (never a per-key shuffle; at 100 TB this is
+    // a map-side filter), computed by a scalar subquery: every use of
+    // it is the same subquery, so it runs once per query and both
+    // inputs filter against its value. (A broadcast 1-row aggregate
+    // joined onto each input ran twice when `events` was cached:
+    // adaptive execution reused neither the broadcast nor its scan of
+    // the cache.)
     val lastTrunc = tableEvts
-      .agg(max(when(col("operation") === "TRUNCATE", col("lsn"))))
+      .agg(max(when(col("operation") === "TRUNCATE", pos)))
       .scalar()
     val fencedBase = base.filter(lastTrunc.isNull)
 
     val evts = tableEvts
-      .filter(col("operation") =!= "TRUNCATE" && (lastTrunc.isNull || col("lsn") > lastTrunc))
+      .filter(col("operation") =!= "TRUNCATE" && (lastTrunc.isNull || pos > lastTrunc))
       .select(
         coalesce(col("new_values")(keyCol), col("old_values")(keyCol)).as("__key"),
-        col("lsn"), col("operation"), col("new_values"))
+        col("batch"), col("lsn"), col("operation"), col("new_values"))
       .filter(col("__key").isNotNull)
 
-    // One aggregate per key: the last event decides existence, the
-    // last DELETE fences off dead history, and per column the latest
-    // live cell — a post-image value other than the sentinel (which
-    // means "keep previous"). The struct keeps a column explicitly
-    // set to NULL distinguishable from "no cell", and carries the
-    // cell's lsn for the fence check below.
+    // Per (key, batch): the last event decides existence, the last
+    // DELETE fences off the batch's dead history, and per column the
+    // latest live cell — a post-image value other than the sentinel
+    // (which means "keep previous"). The struct keeps a column
+    // explicitly set to NULL distinguishable from "no cell".
     val isDelete = col("operation") === "DELETE"
-    val lastCells = valueCols.map { c =>
+    val batchCells = valueCols.map { c =>
       val v = col("new_values")(c)
       val live = !isDelete && map_contains_key(col("new_values"), c) &&
         (v.isNull || v =!= CdcEvent.UnchangedSentinel)
       max_by(struct(col("lsn"), v.as("v")), when(live, col("lsn"))).as(s"__cell_$c")
     }
-    val byKey = evts
-      .groupBy("__key")
+    val byBatch = evts
+      .groupBy("__key", "batch")
       .agg(max_by(col("operation"), col("lsn")).as("__last_op"),
-        max(when(isDelete, col("lsn"))).as("__last_del") +: lastCells: _*)
+        max(when(isDelete, col("lsn"))).as("__last_del") +: batchCells: _*)
+
+    // Per key: the last batch decides existence, the last batch that
+    // deleted the key fences off everything before it, and per column
+    // the latest batch's cell past that batch's own last DELETE.
+    val keyCells = valueCols.map { c =>
+      val cell = col(s"__cell_$c")
+      val live = cell("lsn") > coalesce(col("__last_del"), lit(Long.MinValue))
+      max_by(struct(col("batch"), cell("v").as("v")), when(live, col("batch"))).as(s"__cell_$c")
+    }
+    val byKey = byBatch
+      .groupBy("__key")
+      .agg(max_by(col("__last_op"), col("batch")).as("__last_op"),
+        max(when(col("__last_op") === "DELETE", col("batch"))).as("__dead") +: keyCells: _*)
 
     // Base rows no event touched survive (no `__key`); a touched key
     // survives unless its last event is DELETE, taking each column's
-    // latest cell after its last DELETE, else the base value (a
-    // pre-existing key whose every later event left the column
-    // "[unchanged]").
+    // latest cell after the key's last deleting batch, else the base
+    // value (a pre-existing key whose every later event left the
+    // column "[unchanged]") unless a batch deleted the key.
     fencedBase
       .join(byKey, col(keyCol) === col("__key"), "full_outer")
       .filter(col("__key").isNull || col("__last_op") =!= "DELETE")
       .select(coalesce(col("__key"), col(keyCol)).as(keyCol) +: valueCols.map { c =>
         val cell = col(s"__cell_$c")
-        val live = cell("lsn") > coalesce(col("__last_del"), lit(Long.MinValue))
-        when(live, cell("v")).otherwise(col(c)).as(c)
+        val dead = col("__dead")
+        when(cell("batch") > coalesce(dead, lit(Long.MinValue)), cell("v"))
+          .when(dead.isNull, col(c)).as(c)
       }: _*)
   }
 

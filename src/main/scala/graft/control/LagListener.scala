@@ -10,14 +10,7 @@ import org.apache.spark.sql.streaming.StreamingQueryListener._
   * progress — rows/sec, batch durations, input backlog — per query.
   * Attach with `spark.streams.addListener(new LagListener)`. */
 final class LagListener extends StreamingQueryListener {
-
-  final case class Progress(
-      batchId: Long,
-      numInputRows: Long,
-      inputRowsPerSecond: Double,
-      processedRowsPerSecond: Double,
-      durationMs: Long,
-      totalInputRows: Long)
+  import LagListener.Progress
 
   private val state = new ConcurrentHashMap[java.util.UUID, Progress]()
 
@@ -42,4 +35,15 @@ final class LagListener extends StreamingQueryListener {
   }
 
   override def onQueryTerminated(event: QueryTerminatedEvent): Unit = ()
+}
+
+object LagListener {
+
+  final case class Progress(
+      batchId: Long,
+      numInputRows: Long,
+      inputRowsPerSecond: Double,
+      processedRowsPerSecond: Double,
+      durationMs: Long,
+      totalInputRows: Long)
 }

@@ -54,7 +54,7 @@ object BloomPrune {
       new XxHash64(Seq(graftBridge.expression(small(key)))),
       CatLit(expectedItems), CatLit(numBits)).toAggregateExpression()
     small.select(graftBridge.column(agg).as("bf"))
-      .head.getAs[Array[Byte]](0)
+      .head().getAs[Array[Byte]](0)
   }
 
   /** Codegen'd membership probe of `key` against a built filter. */

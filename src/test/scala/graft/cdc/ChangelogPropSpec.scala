@@ -3,6 +3,7 @@ package graft.cdc
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.types.StructType
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 
@@ -15,7 +16,9 @@ import graft.SparkSpec
   * sentinels, explicit NULLs and absent columns, keys carried only in
   * `old_values`, events for another table, empty batches and an empty
   * base. Row multisets are compared, so a duplicated or lost row
-  * fails too. */
+  * fails too. [[Changelog.applyBatches]] over a sequence of such
+  * batches, compacted into a new base at random points as the state
+  * store does, equals folding [[Changelog.apply]] over them. */
 class ChangelogPropSpec extends SparkSpec {
 
   private val cols = Seq("name", "status")
@@ -80,6 +83,32 @@ class ChangelogPropSpec extends SparkSpec {
       Prop(got == want) :| s"base=$baseRows events=$events got=$got want=$want"
     }
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(40), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  /** A batch sequence; each batch says whether the state store
+    * compacts its tail after it. */
+  private val sequenceGen: Gen[List[(List[Row], Boolean)]] =
+    Gen.chooseNum(0, 4).flatMap(n => Gen.listOfN(n, Gen.zip(batchGen, Gen.oneOf(false, true))))
+
+  test("applyBatches over a tail, compacted at random points, equals folding apply over the batches") {
+    val prop = Prop.forAll(baseGen, sequenceGen) { (baseRows, seq) =>
+      val base = spark.createDataFrame(baseRows.asJava, baseSchema)
+      val batches = seq.map { case (evs, _) => spark.createDataFrame(evs.asJava, eventSchema) }
+      val want = rows(batches.foldLeft(base)(Changelog.apply(_, _, "t", "id", cols)))
+      def merge(snapshot: DataFrame, tail: List[DataFrame]): DataFrame =
+        if (tail.isEmpty) snapshot
+        else Changelog.applyBatches(snapshot, tail.reduce(_ union _), "t", "id", cols)
+      // a snapshot and the batches after it, as the state store keeps them
+      val (snapshot, tail) = seq.zip(batches).zipWithIndex
+        .foldLeft((base, List.empty[DataFrame])) { case ((snap, tail), (((_, compact), b), i)) =>
+          val t = tail :+ b.withColumn("batch", lit(i.toLong))
+          if (compact) (merge(snap, t), Nil) else (snap, t)
+        }
+      val got = rows(merge(snapshot, tail))
+      Prop(got == want) :| s"base=$baseRows batches=$seq got=$got want=$want"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop)
     assert(res.passed, res.status.toString)
   }
 }

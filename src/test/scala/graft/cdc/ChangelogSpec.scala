@@ -72,6 +72,30 @@ class ChangelogSpec extends SparkSpec {
       Set(("1", "reborn", "active"), ("2", "two", "active")))
   }
 
+  private def stateOfBatches(batches: Seq[Seq[(String, Long, String, Map[String, String])]]) =
+    Changelog.applyBatches(base,
+      batches.zipWithIndex.map { case (b, i) => wireEvents(b).withColumn("batch", lit(i.toLong)) }
+        .reduce(_ union _), "t", "id", cols)
+      .collect().map(r => (r.getString(0), r.getString(1), r.getString(2))).toSet
+
+  test("applyBatches: a deleting batch fences off the base row and older batches; batch order beats lsn order") {
+    assert(stateOfBatches(Seq(
+      Seq(("UPDATE", 7, "t", Map("id" -> "1", "name" -> "b0", "status" -> CdcEvent.UnchangedSentinel))),
+      Seq(("DELETE", 5, "t", Map("id" -> "1"))),
+      // lower lsns than the batches before, yet applied after them
+      Seq(("INSERT", 1, "t", Map("id" -> "1", "status" -> "back")),
+        ("UPDATE", 2, "t", Map("id" -> "2", "name" -> CdcEvent.UnchangedSentinel, "status" -> "s2"))))) ==
+      Set(("1", null, "back"), ("2", "two", "s2")))
+    // a delete that is not a batch's last event on the key fences only
+    // that batch's older cells: the column falls through to the batch before
+    assert(stateOfBatches(Seq(
+      Seq(("UPDATE", 1, "t", Map("id" -> "1", "name" -> "b0", "status" -> "s0"))),
+      Seq(("UPDATE", 2, "t", Map("id" -> "1", "name" -> "dead", "status" -> "dead")),
+        ("DELETE", 3, "t", Map("id" -> "1")),
+        ("INSERT", 4, "t", Map("id" -> "1", "name" -> CdcEvent.UnchangedSentinel, "status" -> "s1"))))) ==
+      Set(("1", "b0", "s1"), ("2", "two", "active")))
+  }
+
   test("last event wins in lsn order, not input order") {
     assert(stateOf(Seq(
       ("UPDATE", 5, "t", Map("id" -> "1", "name" -> "late", "status" -> "s2")),

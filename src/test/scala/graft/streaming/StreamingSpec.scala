@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -145,12 +147,8 @@ class StreamingSpec extends SparkSpec {
     val undo = breakDir(broken(cfg))
     intercept[Exception](CdcPipeline.processBatch(batch, 0L, base, cfg, store))
     undo()
-    // the sibling either finished (LATEST moved onto a whole version)
-    // or was cancelled before LATEST moved
-    store.latestVersion.foreach { v =>
-      assert(v == 0L)
-      assert(store.latest(spark).get.count() == goldenFinalState.size)
-    }
+    // the manifest moves only after both writes completed
+    assert(store.latestVersion.isEmpty)
     CdcPipeline.processBatch(batch, 0L, base, cfg, store)
     assertGolden(cfg)
     assert(spark.read.parquet(cfg.eventsOutDir).select("lsn").distinct().count() == 5)
@@ -169,6 +167,9 @@ class StreamingSpec extends SparkSpec {
     val cfg = sinkCfg("stream_state_read")
     val store = new CdcPipeline.StateStore(cfg.stateDir)
     CdcPipeline.processBatch(goldenBatch, 0L, UsersFixture.baseState(spark), cfg, store)
+    // the state is the base snapshot with batch 0 as its tail
+    val m = store.manifest.get
+    assert(m.tail == Seq(0L) && m.snapshot == -1L)
     // job starts are delivered in order: once a marker job's start
     // arrives, every job started before it has been counted
     val sc = spark.sparkContext
@@ -189,10 +190,136 @@ class StreamingSpec extends SparkSpec {
       s
     } finally sc.removeSparkListener(listener)
     assert(jobs.get() == 0)
-    val plain = spark.read.parquet(s"${cfg.stateDir}/v=0")
+    // the same as the MERGE over plain (schema-inferring) parquet reads
+    val plain = Changelog.apply(spark.read.parquet(s"${cfg.stateDir}/v=-1"),
+      spark.read.parquet(s"${cfg.eventsOutDir}/batch=0"), cfg.table, cfg.keyCol, cfg.valueCols)
     assert(state.schema == plain.schema)
     assert(state.collect().map(_.toSeq).sortBy(_.head.toString).toSeq ==
       plain.collect().map(_.toSeq).sortBy(_.head.toString).toSeq)
+    assert(state.orderBy(col("id").cast("int")).collect().map(_.toSeq).toSeq == goldenFinalState)
+  }
+
+  /** The golden events, one batch per event (lsn order). */
+  private def goldenEventBatches: Seq[org.apache.spark.sql.DataFrame] = {
+    val all = goldenBatch
+    all.select("lsn").orderBy("lsn").collect().map(_.getLong(0)).toSeq
+      .map(l => all.filter(col("lsn") === l))
+  }
+
+  /** Run `batches` as batch ids 0.. through processBatch, calling
+    * `each(id)` after each. */
+  private def runEach(cfg: CdcPipeline.SinkConfig, store: CdcPipeline.StateStore,
+      batches: Seq[org.apache.spark.sql.DataFrame])(each: Long => Unit = _ => ()): Unit =
+    batches.zipWithIndex.foreach { case (b, i) =>
+      CdcPipeline.processBatch(b, i.toLong, UsersFixture.baseState(spark), cfg, store)
+      each(i.toLong)
+    }
+
+  test("a fault before the manifest moves: the replay is exactly-once") {
+    val cfg = sinkCfg("stream_manifest_fault")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    runEach(cfg, store, batches.take(2))()
+    // the manifest's temporary file cannot be written: K1 (and any
+    // compaction) completed, but the manifest still ends at batch 1
+    val tmpFile = java.nio.file.Paths.get(cfg.stateDir, ".MANIFEST.2.tmp")
+    Files.createDirectory(tmpFile)
+    intercept[java.io.IOException](
+      CdcPipeline.processBatch(batches(2), 2L, UsersFixture.baseState(spark), cfg, store))
+    assert(store.latestVersion.contains(1L))
+    Files.delete(tmpFile)
+    CdcPipeline.processBatch(batches(2), 2L, UsersFixture.baseState(spark), cfg, store)
+    runEach(cfg, store, batches)()
+    assertGolden(cfg)
+    assert(store.latestVersion.contains(4L))
+  }
+
+  test("a compaction that fails while K1 runs: the replay is exactly-once") {
+    val cfg = sinkCfg("stream_compaction_fault")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    // run up to the first batch that compacts
+    var id = 0
+    while (store.manifest.forall(m => !store.compacts(m))) {
+      CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store)
+      id += 1
+    }
+    assert(id < batches.size)
+    val m = store.manifest.get
+    // the compaction cannot open the snapshot it reads
+    val schema = java.nio.file.Paths.get(cfg.stateDir, s"v=${m.snapshot}", "_schema.json")
+    val hidden = java.nio.file.Paths.get(cfg.stateDir, "schema.hidden")
+    Files.move(schema, hidden)
+    intercept[java.nio.file.NoSuchFileException](
+      CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store))
+    assert(store.manifest.contains(m))
+    Files.move(hidden, schema)
+    runEach(cfg, store, batches)()
+    assert(store.manifest.get.snapshot >= id - 1L, s"the replayed batch $id compacted")
+    assertGolden(cfg)
+    assert(spark.read.parquet(cfg.eventsOutDir).select("lsn").distinct().count() == 5)
+  }
+
+  test("a replayed batch that the manifest already holds rewrites nothing") {
+    val cfg = sinkCfg("stream_replay_noop")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    CdcPipeline.processBatch(goldenBatch, 0L, UsersFixture.baseState(spark), cfg, store)
+    def files(dir: String): Seq[(String, java.nio.file.attribute.FileTime)] = {
+      val w = Files.walk(java.nio.file.Paths.get(dir))
+      try w.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => p.toString -> Files.getLastModifiedTime(p)).toSeq.sorted
+      finally w.close()
+    }
+    val before = (files(s"${cfg.eventsOutDir}/batch=0"), files(cfg.stateDir))
+    Thread.sleep(20) // a rewrite would carry a later mtime
+    CdcPipeline.processBatch(goldenBatch, 0L, UsersFixture.baseState(spark), cfg, store)
+    assert((files(s"${cfg.eventsOutDir}/batch=0"), files(cfg.stateDir)) == before)
+    assertGolden(cfg)
+  }
+
+  test("compactions keep at most two snapshot versions; a restart between the manifest move and the delete stays golden") {
+    val cfg = sinkCfg("stream_snapshot_gc")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    val backup = java.nio.file.Paths.get(tmp("state_backup"))
+    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
+      val w = Files.walk(from)
+      try w.iterator().asScala.foreach { p =>
+        val q = to.resolve(from.relativize(p).toString)
+        if (Files.isDirectory(p)) Files.createDirectories(q)
+        else Files.copy(p, q, java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      } finally w.close()
+    }
+    var snapshots = Set.empty[Long]
+    var restarted = false
+    runEach(cfg, store, batches) { id =>
+      val m = store.manifest.get
+      snapshots += m.snapshot
+      assert(store.versions.size <= 2, store.versions)
+      assert(store.versions.contains(m.snapshot))
+      if (!restarted && snapshots.size == 3) {
+        // crash after the manifest moved and before the delete: the
+        // deleted version is back, then the stream restarts and
+        // replays the batch
+        restarted = true
+        val gone = snapshots.min
+        assert(!store.versions.contains(gone))
+        copyTree(backup.resolve(s"v=$gone"), java.nio.file.Paths.get(cfg.stateDir, s"v=$gone"))
+        assert(store.versions.size == 3)
+        val restart = new CdcPipeline.StateStore(cfg.stateDir)
+        CdcPipeline.processBatch(batches(id.toInt), id, UsersFixture.baseState(spark), cfg, restart)
+        assert(restart.manifest.contains(m))
+      }
+      store.versions.foreach(v =>
+        copyTree(java.nio.file.Paths.get(cfg.stateDir, s"v=$v"), backup.resolve(s"v=$v")))
+    }
+    assert(restarted, s"three snapshots over five batches: $snapshots")
+    assertGolden(cfg)
+    // the next manifest move deletes the leftover
+    CdcPipeline.processBatch(goldenBatch.limit(0), batches.size.toLong,
+      UsersFixture.baseState(spark), cfg, store)
+    assert(store.versions.size <= 2, store.versions)
+    assertGolden(cfg)
   }
 
   test("DSv2 graft-cdc source: LSN offsets, admission cap, restart, and feedback commit") {
