@@ -256,7 +256,7 @@ object PipelineQueries {
       val sh = toks.select(
         col("doc_id"),
         // fused distinct-shingle kernel (r22) — same values as
-        // array_distinct(wordShinglesFromTokens(...)), one pass
+        // array_distinct of the positional word n-grams, one pass
         graft.functions.GraftFunctions.distinctShingles(col("__toks"), 3).as("sh"))
       val sig = Dedup.minhashSignatureOver(sh, "doc_id", col("sh"), 12)
       Dedup.minhashBucketOverflow(sig, "doc_id", k = 12, rowsPerBand = 3, maxBucket = 1)
@@ -749,7 +749,7 @@ object PipelineQueries {
   // than the raw code arrays keep the compare scalar; the codes
   // themselves are pure IEEE double ops + explicit truncation on both
   // engines (DuckDB CAST rounds — trunc() first; see
-  // Similarity.quantizeInt8).
+  // graft.functions.QuantizeInt8Summary).
   private val qEmbeddingQuantize = Queries.Q(
     "p_embedding_quantize",
     Some("""

@@ -11,8 +11,7 @@ import graft.operators.{LanguageModel, Sampling, Shards}
   * Oracle-gated surfaces are the engine-exact ones (the trained
   * counts; hit/backoff tallies; the single-division `hit_frac`);
   * the `ln`/`exp`-bearing avg_logprob/ppl are spec-gated
-  * (LanguageModelSpec), the
-  * [[graft.operators.Importance.logRatioWeights]] precedent. */
+  * (LanguageModelSpec). */
 object PipelineQueries3 {
 
   // the reference slice: ~40% of documents by salted md5 bucket —

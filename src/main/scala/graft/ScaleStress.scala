@@ -161,9 +161,9 @@ object ScaleStress {
       // the simhash arm — 60% of its wall was the harness, not the
       // operator). A real corpus at any scale is many-file parquet;
       // feeding the ops the same shape makes the arms measure the
-      // OPERATOR. StreamScaleStress and the cdc feed already did
-      // this; prior rounds' batch numbers carry the fused amplify
-      // tax uniformly (same-session A/B deltas remain valid).
+      // OPERATOR. The cdc feed already did this; prior rounds' batch
+      // numbers carry the fused amplify tax uniformly (same-session
+      // A/B deltas remain valid).
       val docs = {
         val dir = s"${sys.props("java.io.tmpdir")}/graft-amp-docs-$scale"
         amplifyDocs(docs0, scale)
@@ -395,14 +395,12 @@ object ScaleStress {
         } finally spark.conf.set(
           "spark.sql.parquet.columnarReaderBatchSize", prevBatch)
       }
-      // ---- audio near-dup pairs at decode volume (r18 — the stream
-      // gate had arms, the batch pairs op did not): 500 mono 8 kHz
+      // ---- audio near-dup pairs at decode volume (r18): 500 mono 8 kHz
       // 4000-frame WAVs per unit scale (~8 KB each), gain-rescaled
       // 3-member families every 10 ids (the envelope hash is
-      // gain-invariant by cross-multiplication ⇒ Hamming 0), same
-      // formula family as the stream arm's fixture. Same pigeonhole
-      // join as image/simhash — the claim is decode volume + the
-      // audited block/chunk machinery, nothing op-specific.
+      // gain-invariant by cross-multiplication ⇒ Hamming 0). Same
+      // pigeonhole join as image/simhash — the claim is decode volume +
+      // the audited block/chunk machinery, nothing op-specific.
       if (opFilter.isEmpty || opFilter.exists(f =>
           "audio_near_dup".contains(f) || "audio_near_dup_shifted".contains(f) ||
             "audio_near_dup_offset".contains(f))) {

@@ -147,31 +147,6 @@ object CdcDecode {
         timestamp_micros(col("timestampMicros")).as("timestamp"))
   }
 
-  /** Event-time view of a decoded CDC stream: `event_time` is the
-    * enclosing transaction's COMMIT timestamp (the source's clock,
-    * from the Begin frame body) with ingest time as the fallback for
-    * non-transactional frames or legacy empty-body Begins. This is
-    * the column to `withWatermark` on: late-data reasoning keyed on
-    * when the change COMMITTED at the source, not on when this engine
-    * happened to ingest it (the reference's wall-clock stamp,
-    * utils/cdc_event.py:14, cannot distinguish the two — SURVEY
-    * §1.4).
-    *
-    * Restart caveat: the decoder's open-transaction state (the Begin
-    * frame's commit timestamp) lives in the per-JVM decoder, and the
-    * registry snapshot replays only Relation frames. If a micro-batch
-    * boundary splits a transaction AND the JVM restarts between those
-    * batches, the tail frames re-decode with no Begin in sight and
-    * fall back to ingest time — one transaction, two event-time
-    * semantics. Run the source with `txnAtomic=1` when commit event
-    * time must survive restarts: batches then never split a
-    * transaction, so the Begin is always replayed with its tail. */
-  def withCommitEventTime(events: Dataset[CdcEvent]): DataFrame = {
-    import org.apache.spark.sql.functions._
-    events.toDF().withColumn("event_time",
-      timestamp_micros(coalesce(col("commitMicros"), col("timestampMicros"))))
-  }
-
   /** Fixture helper: frames as a one-partition Dataset (a replication
     * stream is a single ordered partition by construction). */
   def framesDataset(spark: SparkSession, frames: Seq[CdcFrame]): Dataset[CdcFrame] = {

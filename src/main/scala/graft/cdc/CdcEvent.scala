@@ -40,8 +40,9 @@ final case class CdcEvent(
     // for the change, i.e. the event time streaming watermarks should
     // key on. None for non-transactional frames or legacy empty-body
     // Begins; downstream falls back to `timestampMicros` (ingest
-    // time) via [[CdcDecode.withCommitEventTime]]. The reference has
-    // no equivalent: it stamps consumer wall clock (cdc_event.py:14).
+    // time): `coalesce(commitMicros, timestampMicros)`. The reference
+    // has no equivalent: it stamps consumer wall clock
+    // (cdc_event.py:14).
     commitMicros: Option[Long] = None)
 
 object CdcEvent {

@@ -17,7 +17,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *  - dispatch on the first byte: R (relation), I/U/D (changes),
   *    B/C (transaction markers, deliberately dropped — reference
   *    :32-37), T (truncate), M (message), Y (type → registry),
-  *    O (origin → metadata), S/E/c/A (v2 streamed txns), anything
+  *    O (origin, consumed), S/E/c/A (v2 streamed txns), anything
   *    else → no event;
   *  - Relation: u32 id, NUL-terminated namespace + name, replica
   *    identity byte, u16 column count, per column (u8 flags,
@@ -114,11 +114,10 @@ object PgOutput {
     private val streamMaxLsn = scala.collection.mutable.Map[Int, Long]()
     private val streamSeenLsn = scala.collection.mutable.Map[Int, scala.collection.mutable.Set[Long]]()
     private var abortDiscards = 0L
-    // 'Y' Type registry + the 'O' Origin currently replaying — pure
-    // metadata, no events (values surface through the getters below;
-    // typed-projection layers can map custom-type OIDs to names)
+    // 'Y' Type registry — pure metadata, no events (values surface
+    // through the getters below; typed-projection layers can map
+    // custom-type OIDs to names)
     private val types = scala.collection.mutable.Map[Int, TypeInfo]()
-    private var origin: Option[String] = None
 
     /** Registered relations (read-only view). */
     def relationRegistry: collection.Map[Int, RelationInfo] = relations
@@ -146,11 +145,6 @@ object PgOutput {
 
     /** Custom types announced by 'Y' Type messages (read-only view). */
     def typeRegistry: collection.Map[Int, TypeInfo] = types
-
-    /** Name carried by the most recent 'O' Origin message — the
-      * upstream node whose changes are being replayed (cascading
-      * replication / bidirectional setups); None until one arrives. */
-    def currentOrigin: Option[String] = origin
 
     /** Decode one frame. Relation messages update the registry and
       * yield no event; B/C markers are dropped; I/U/D yield an event
@@ -269,12 +263,11 @@ object PgOutput {
           types(id) = TypeInfo(id, readCString(buf), readCString(buf))
           Seq.empty
         // Origin ('O', cascading/bidirectional replication): Int64
-        // origin commit LSN, origin name. Surfaced as metadata
-        // ([[currentOrigin]]) — a filter on it is how multi-master
-        // consumers break replication loops; no event of its own.
+        // origin commit LSN, origin name. Consumed and dropped: it
+        // yields no event of its own.
         case 'O' =>
-          buf.getLong // commit LSN on the origin node (informational)
-          origin = Some(readCString(buf))
+          buf.getLong // commit LSN on the origin node
+          readCString(buf)
           Seq.empty
         // ---- v2 streamed-transaction frames (PG14+ `streaming on`) ----
         // Stream Start: Int32 xid, Int8 first-segment flag. Segments of

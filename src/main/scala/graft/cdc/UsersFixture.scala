@@ -73,16 +73,6 @@ object UsersFixture {
     }
   }
 
-  /** Protocol v2 streamed-transaction fixture (PG14+ `streaming on`):
-    * two interleaved in-progress transactions — xid 777 spans two
-    * segments (INSERT id 5, then UPDATE id 5 plus a subtransaction
-    * INSERT id 7 under xid 778), xid 888 carries INSERT id 6. The
-    * subtransaction aborts (id 7 vanishes), 777 stream-commits (its
-    * two surviving events emit with txn id = first 'S' frame's LSN
-    * and the source commit time), and 888 fully aborts (id 6 never
-    * existed). Bit-deterministic like [[frames]], so the decode is
-    * oracle-checkable as literal expected rows. */
-  val T4 = "2026-01-02 10:00:03"
   /** [[T4]] as Unix µs (2026-01-02T10:00:03Z). */
   val T4Micros = 1767348003000000L
 

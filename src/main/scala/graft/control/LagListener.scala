@@ -15,10 +15,6 @@ final class LagListener extends StreamingQueryListener {
   private val state = new ConcurrentHashMap[java.util.UUID, Progress]()
 
   def progressOf(id: java.util.UUID): Option[Progress] = Option(state.get(id))
-  def snapshot: Map[java.util.UUID, Progress] = {
-    import scala.jdk.CollectionConverters._
-    state.asScala.toMap
-  }
 
   override def onQueryStarted(event: QueryStartedEvent): Unit = ()
 

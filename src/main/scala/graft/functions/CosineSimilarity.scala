@@ -350,15 +350,6 @@ object GraftFunctions {
     graftBridge.column(AviAudioSegmentDHashes(
       graftBridge.expression(payload), graftBridge.expression(segFrames)))
 
-  /** Column-API form of [[BlockBitmapMatchFrac]]: fraction of a
-    * hash array whose pigeonhole blocks hit the 4×65,536-bit catalog
-    * bitmaps (32 KB constructor-state artifact, O(1) probes). Not
-    * SQL-registered — the bitmaps are a JVM artifact, not a SQL
-    * argument (the [[BackoffLmScore]] pattern). */
-  def blockBitmapMatchFrac(hashes: Column, bitmaps: Array[Array[Long]]): Column =
-    graftBridge.column(BlockBitmapMatchFrac(
-      graftBridge.expression(hashes), bitmaps))
-
   private[graft] val descriptors: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
     Seq(
       (

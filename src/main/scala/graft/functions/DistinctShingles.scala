@@ -104,7 +104,8 @@ object ShingleKernel {
   private[functions] val Space: UTF8String = UTF8String.fromString(" ")
 }
 
-/** `wordShinglesFromTokens(toks, n)` fused: ALL word n-grams in
+/** `wordShinglesFromTokens(toks, n)` (the higher-order chain kept in
+  * the test tree as `DedupOracle`) fused: ALL word n-grams in
   * position order WITH multiplicity — the LM / DSIR / boilerplate
   * statistic (near-dup shingling dedups; different semantics,
   * deliberately). Same bit-exact edge semantics as the chain it

@@ -140,9 +140,8 @@ object Curation {
     * same role `isTarget` plays for DSIR) and scores EVERY document
     * with [[LanguageModel.perplexity]]; the gate keeps a document iff
     * its bigram hit fraction reaches `minHitFrac` OR it has no
-    * scorable bigram position (flag what you can prove — the
-    * [[LanguageModel.perplexityFilter]] contract). hit_frac is the
-    * engine-exact LM surface (one IEEE division), so the WHOLE
+    * scorable bigram position (flag only what you can prove). hit_frac
+    * is the engine-exact LM surface (one IEEE division), so the WHOLE
     * decision log stays oracle-gated; the `ln`-bearing ppl ranking
     * remains spec-gated in LanguageModelSpec. Reference-slice
     * documents naturally score ~1 (their bigrams trained the model)

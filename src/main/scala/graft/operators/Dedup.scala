@@ -91,12 +91,8 @@ object Dedup {
           (0 until k).map(j => element_at(col("__sig"), lit(j + 1)).as(s"h$j")): _*)
 
   /** Un-partitioned (id, band, band_hash) membership rows — the
-    * map-side banding shared by the batch pipeline (which
-    * pre-shuffles on the bucket key, see [[bandRows]]) and the
-    * streaming candidate op ([[graft.streaming.StreamingOps
-    * .nearDupCandidatesStream]], which shuffles via its own
-    * `groupByKey` — banding MUST be identical on both paths for the
-    * stream≡batch candidate equivalence to hold). */
+    * map-side banding that [[bandRows]] pre-shuffles on the bucket
+    * key. */
   def bandMembership(
       sig: DataFrame, idCol: String, k: Int, rowsPerBand: Int): DataFrame = {
     require(k % rowsPerBand == 0,
@@ -214,8 +210,8 @@ object Dedup {
     *    Shuffling raw (id, text) first distributes it across cores.
     *  - Tokens materialize as their OWN projection so the shingle
     *    lambda slices an attribute, not an inlined `split` (which
-    *    re-evaluates per output element, O(tokens²) — see
-    *    [[wordShinglesFromTokens]]). CollapseProject leaves the two
+    *    re-evaluates per output element, O(tokens²)).
+    *    CollapseProject leaves the two
     *    projections alone: the split is non-cheap and referenced
     *    more than once.
     *  - SECOND repartition, directly above the shingle projection:
@@ -464,30 +460,6 @@ object Dedup {
           .when(b < trainPct + valPct, "val")
           .otherwise("test"))
   }
-
-  /** Word n-gram (shingle) array: tokens i..i+n-1 joined by a space.
-    * Documents shorter than n tokens yield an empty array (guarded:
-    * an unguarded `sequence(1, size-(n-1))` would step DOWN through 0
-    * and blow up under ANSI mode).
-    *
-    * `toks` MUST be a materialized attribute (a projected column),
-    * not an inline expression: `slice(toks, i, n)` inside the lambda
-    * evaluates `toks` per OUTPUT ELEMENT, so an inlined `split(text)`
-    * turns O(tokens) shingling into O(tokens²) — and higher-order
-    * functions run interpreted, so nothing saves it. See
-    * [[wordShingles]] for the inline-from-text convenience. */
-  def wordShinglesFromTokens(toks: Column, n: Int): Column =
-    when(size(toks) >= n,
-      transform(
-        sequence(lit(1), size(toks) - (n - 1)),
-        i => array_join(slice(toks, i, lit(n)), " ")))
-      .otherwise(array().cast("array<string>"))
-
-  /** [[wordShinglesFromTokens]] over an inline tokenization — fine
-    * for tests/small frames; the dedup pipelines project tokens into
-    * a column first (see the attribute warning there). */
-  def wordShingles(text: Column, n: Int): Column =
-    wordShinglesFromTokens(tokens(text), n)
 
   /** All-pairs EXACT n-gram Jaccard >= threshold via prefix-filtered
     * inverted-index join (the PPJoin/AllPairs family) — lossless and
@@ -774,52 +746,10 @@ object Dedup {
       .select("id_a", "id_b", "jac")
   }
 
-  /** SimHash vote vector: ONE pass over the distinct tokens, each
-    * token contributing ±1 to all 64 bit positions via a single
-    * `aggregate` + `zip_with` (vs 64 independent aggregate passes —
-    * the round-1 version — whose expression tree was O(64·tokens)
-    * traversals). Bit i of a token = bit (i%4) of hex nibble
-    * (16 − i/4) of its 16-hex-char md5 prefix. */
-  def simhashVotes(text: Column): Column = {
-    val toks = array_distinct(tokens(text))
-    val words = transform(toks, t => substring(md5(t), 1, 16))
-    def bitVote(w: Column, i: Int): Column = {
-      val nibble = conv(substring(w, 16 - i / 4, 1), 16, 10).cast("int")
-      when(shiftright(nibble, i % 4).bitwiseAND(1) === 1, 1).otherwise(-1)
-    }
-    aggregate(
-      words,
-      array_repeat(lit(0), 64),
-      (acc, w) => zip_with(acc, array((0 until 64).map(i => bitVote(w, i)): _*), (a, b) => a + b))
-  }
-
-  /** 16-hex-char (lowercase) SimHash from a 64-int vote vector: bit i
-    * set iff votes(i) > 0. Keep votes in a materialized column before
-    * calling this (it references the vote array 64 times — cheap on an
-    * attribute, pathological on the full aggregate expression). */
-  def simhashHexFromVotes(votes: Column): Column = {
-    def bit(i: Int): Column = when(element_at(votes, i + 1) > 0, 1).otherwise(0)
-    val hexChars = (0 until 16).map { p => // p=0 → most-significant nibble (bits 63..60)
-      val base = (15 - p) * 4
-      lower(conv((bit(base + 3) * 8 + bit(base + 2) * 4 + bit(base + 1) * 2 + bit(base)).cast("string"), 10, 16))
-    }
-    concat(hexChars: _*)
-  }
-
-  /** 64-bit SimHash over tokens as a lowercase 16-hex-char string
-    * (lowercase matches every other fingerprint in this module and
-    * common oracle hex conventions). Adds/removes a `__simhash_votes`
-    * scratch column so the vote aggregate is evaluated once per row. */
-  def withSimhash64(docs: DataFrame, textCol: String, outCol: String): DataFrame =
-    docs
-      .withColumn("__simhash_votes", simhashVotes(col(textCol)))
-      .withColumn(outCol, simhashHexFromVotes(col("__simhash_votes")))
-      .drop("__simhash_votes")
-
   /** SimHash per key via explode + 64 codegen'd SUM aggregates — the
-    * scale path. Semantically identical to [[withSimhash64]], but
-    * Spark's higher-order functions (the `aggregate`/`zip_with` vote
-    * loop) evaluate interpreted per element and dominated the bench
+    * scale path. It replaced an `aggregate`/`zip_with` vote loop
+    * (kept in the test tree as its reference): Spark's higher-order
+    * functions evaluate interpreted per element and dominated the bench
     * (59 s at sf0.1); exploding distinct tokens and voting with plain
     * conditional sums keeps the whole pipeline in whole-stage codegen
     * and turns the per-doc loop into one hash aggregation — the same
@@ -1002,35 +932,6 @@ object Dedup {
           .reduce(_ + _).cast("long").as("hamming"))
       .filter(col("hamming") <= maxHamming)
       .distinct()
-  }
-
-  /** The reference corpus's distinct simhash blocks, (band, bv) —
-    * the membership table for INCREMENTAL dedup (filter new/streaming
-    * documents against an already-ingested corpus, see
-    * [[graft.streaming.StreamingOps.dropSimhashNearDups]]).
-    *
-    * Hard size bound: 4 bands × ≤65536 distinct 16-bit values =
-    * ≤262,144 rows REGARDLESS of corpus size, so the table always
-    * broadcasts — reference-corpus scale never touches the join
-    * plan. By the pigeonhole contract, a new doc within Hamming ≤3
-    * of ANY reference doc shares at least one block; blocks shared
-    * coincidentally make this a high-recall prefilter whose
-    * precision is tuned downstream (verify the survivors' matches
-    * with [[simhashNearDupPairs]]/[[editDistanceVerify]] if drops
-    * must be exact). */
-  def simhashBlockTable(docs: DataFrame, idCol: String, textCol: String): DataFrame =
-    simhash64ByKey(docs, idCol, textCol, "__sh")
-      .select(posexplode(array((0 until 4).map(b => simhashBand(col("__sh"), b)): _*))
-        .as(Seq("band", "bv")))
-      .distinct()
-
-  /** The four 16-bit simhash blocks of `textCol` as columns __b0..__b3
-    * (map-side only — usable on a streaming DataFrame). */
-  def withSimhashBlocks(df: DataFrame, textCol: String): DataFrame = {
-    val sh = withSimhash64(df, textCol, "__sh")
-    sh.select(
-      df.columns.toIndexedSeq.map(col) ++
-        (0 until 4).map(b => simhashBand(col("__sh"), b).as(s"__b$b")): _*)
   }
 
   /** Edit-distance verify stage: given CANDIDATE pairs (id_a, id_b)
@@ -1359,8 +1260,8 @@ object Dedup {
     * unguarded descending `sequence` throws under ANSI). The window
     * TEXT never leaves the projection; only the 128-bit md5 rides
     * the shuffle. `toks` is materialized as an attribute first so
-    * the per-window `slice` is O(k), not O(tokens) (see
-    * [[wordShinglesFromTokens]] for the same trap). */
+    * the per-window `slice` is O(k), not O(tokens) (an inlined
+    * `split` would be re-evaluated per window). */
   private def windowHashes(
       docs: DataFrame, idCol: String, textCol: String, k: Int): DataFrame =
     docs

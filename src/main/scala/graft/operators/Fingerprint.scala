@@ -174,7 +174,7 @@ object Fingerprint {
       .select(
         col(idCol),
         // fused distinct-shingle kernel (r22) — same values as
-        // array_distinct(wordShinglesFromTokens(...)), one pass
+        // array_distinct of the positional word n-grams, one pass
         explode(graft.functions.GraftFunctions.distinctShingles(col("__tk"), n))
           .as("__gram"))
       .select(col(idCol), md5(col("__gram")).as("__gh"))
@@ -212,38 +212,6 @@ object Fingerprint {
       .groupBy(col(idCol), col("suite"))
       .agg(count(lit(1)).as("n_hit"))
   }
-
-  /** The distinct held-out gram-md5 SET as a one-column frame
-    * (`gh` — 32-hex md5 of each word `n`-gram appearing in any
-    * held-out document). This is the persistable eval-suite artifact
-    * the streaming decontamination gates probe
-    * ([[graft.streaming.StreamingOps.contaminationHitsStream]] joins
-    * it; [[gramBloomFilter]] compresses it): eval suites freeze
-    * rarely, so a recurring pipeline builds this once per freeze and
-    * reuses it across every run and every stream. */
-  def heldOutGrams(
-      heldOut: DataFrame, idCol: String, textCol: String, n: Int): DataFrame =
-    gramHashes(heldOut, idCol, textCol, n)
-      .select(col("__gh").as("gh")).distinct()
-
-  /** A serialized Bloom filter over [[heldOutGrams]] — the compact
-    * form of the held-out gram set for MAP-SIDE membership probes
-    * (built with Spark's native `BloomFilterAggregate` via
-    * [[BloomPrune.buildFilter]]; no false negatives ever). Size
-    * `numBits` against the per-DOCUMENT false-positive budget, not
-    * the per-gram one: a clean document is wrongly dropped iff ANY
-    * of its |grams| probes false-positives, so P(FP drop) ≤
-    * |grams(doc)| · fpp. At ~28 bits/gram fpp ≈ 1e-6, putting a
-    * 1000-gram document's wrong-drop chance under 0.1% — and a
-    * false positive only ever OVER-drops (the conservative
-    * direction decontamination already chose). Returns null when
-    * the held-out split has no grams. */
-  def gramBloomFilter(
-      heldOut: DataFrame, idCol: String, textCol: String, n: Int,
-      expectedItems: Long, numBits: Long): Array[Byte] =
-    BloomPrune.buildFilter(
-      heldOutGrams(heldOut, idCol, textCol, n), "gh",
-      expectedItems, numBits)
 
   /** Decontamination REMOVAL — the action [[ngramContamination]]'s
     * detection exists to license, in the conservative GPT-3 direction

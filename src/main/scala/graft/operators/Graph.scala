@@ -12,35 +12,27 @@ import org.apache.spark.sql.functions._
   * and B~C often arrive without A~C). This is the resolution step of
   * every large-scale dedup system.
   *
-  * Two algorithms, same contract:
+  * [[connectedComponents]] is min-label CONTRACTION. Each round
+  * labels every node with the min of its neighborhood (and itself),
+  * then rewrites the edge list to label space: intra-label edges
+  * vanish, so |E| shrinks geometrically (a near-dup family that is
+  * clique-ish contracts to nothing in one round; a path halves per
+  * round → O(log n) rounds). The original-node → label mapping is
+  * NOT composed per round: post-round-1 label tables (residue-sized)
+  * are folded right-to-left at convergence and applied to the
+  * V-sized round-1 labels exactly once. After round 1, all work is
+  * proportional to the SURVIVING edge set — on real dedup graphs a
+  * tiny residue — so both the E-sized and the V-sized costs are paid
+  * ~once, not once per round. The symmetrized edge list is
+  * deliberately NOT deduplicated: min aggregation is
+  * duplicate-insensitive and the contraction's own per-round
+  * `distinct` runs on the shrunken set, so no E-sized distinct
+  * shuffle is paid up front.
   *
-  *  - [[connectedComponents]] — min-label CONTRACTION (the default).
-  *    Each round labels every node with the min of its neighborhood
-  *    (and itself), then rewrites the edge list to label space:
-  *    intra-label edges vanish, so |E| shrinks geometrically (a
-  *    near-dup family that is clique-ish contracts to nothing in one
-  *    round; a path halves per round → O(log n) rounds). The
-  *    original-node → label mapping is NOT composed per round:
-  *    post-round-1 label tables (residue-sized) are folded
-  *    right-to-left at convergence and applied to the V-sized
-  *    round-1 labels exactly once. After round 1, all work is
-  *    proportional to the SURVIVING edge set — on real dedup graphs
-  *    a tiny residue — so both the E-sized and the V-sized costs are
-  *    paid ~once, not once per round. The
-  *    symmetrized edge list is deliberately NOT deduplicated: min
-  *    aggregation is duplicate-insensitive and the contraction's own
-  *    per-round `distinct` runs on the shrunken set, so the one
-  *    E-sized distinct shuffle the jump variant pays up front is
-  *    skipped entirely.
-  *
-  *  - [[connectedComponentsJump]] — min-label propagation with
-  *    pointer jumping (label(v) ← label(label(v)) per round). Kept as
-  *    the independent reference implementation: GraphSpec proves the
-  *    two agree on random graphs (and both agree with a local
-  *    union-find), so a systematic bug in either cannot self-certify.
-  *    Its per-round cost is E-sized every round (the edge list never
-  *    shrinks), which measured ~2× the contraction's wall time at the
-  *    50× ScaleStress scale.
+  * Its independent reference, a pointer-jumping min-label
+  * propagation, lives in the test tree: GraphSpec proves the two
+  * agree on random graphs (and both agree with a local union-find),
+  * so a systematic bug in either cannot self-certify.
   *
   * Scale shape (100 TB): the edge list is materialized ONCE
   * (`localCheckpoint` — the upstream pair generation, e.g. a full
@@ -158,62 +150,4 @@ object Graph {
     }
   }
 
-  /** Pointer-jumping reference implementation (see object scaladoc):
-    * min-label propagation with label(label) short-circuiting,
-    * O(log d) rounds, each round two hash equi-joins + one
-    * aggregation over the FULL edge list. Labels only ever decrease,
-    * so the fixpoint test ("did any label change?") is an exact
-    * anti-monotone comparison, not a heuristic checksum. */
-  def connectedComponentsJump(
-      edges: DataFrame, srcCol: String, dstCol: String,
-      maxIter: Int = 50): DataFrame = {
-    val e = edges.select(col(srcCol).as("u"), col(dstCol).as("v"))
-      .where(col("u") =!= col("v"))
-    val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      .distinct()
-      .localCheckpoint(true)
-    // initialization folds in the first propagation round for free:
-    // label₀(v) = min(v, min neighbor) costs the same one shuffle as
-    // a plain self-label over distinct nodes would
-    var labels = sym.groupBy("u")
-      .agg(min(col("v")).as("__mn"))
-      .select(col("u").as("node"), least(col("u"), col("__mn")).as("label"))
-      .localCheckpoint(true)
-    var iter = 0
-    val labelType = labels.schema("label").dataType
-    while (iter < maxIter) {
-      // propagate: min over own label and every neighbor's label. The
-      // self row threads the previous label through the aggregation
-      // (exactly one non-null __prev per node survives the max), so
-      // the fixpoint test below reads the round's own checkpointed
-      // output — no separate prev-label join and no extra Spark job
-      // per round.
-      val nbr = sym
-        .join(labels.select(col("node").as("v"), col("label")), "v")
-        .select(col("u").as("node"), col("label"),
-          lit(null).cast(labelType).as("__prev"))
-      val prop = labels
-        .select(col("node"), col("label"), col("label").as("__prev"))
-        .union(nbr)
-        .groupBy("node")
-        .agg(min("label").as("label"), max("__prev").as("__prev"))
-      // jump: label ← label(label). Every label IS a node id of this
-      // graph (initial labels are node ids; min and jump preserve
-      // that), so the inner join is total.
-      val next = prop
-        .join(prop.select(col("node").as("label"), col("label").as("__jl")), "label")
-        .select(col("node"), col("__jl").as("label"),
-          (col("__jl") < col("__prev")).as("__chg"))
-        .localCheckpoint(true)
-      // labels only ever decrease, so "any __chg" is the exact
-      // anti-monotone convergence test — a filter scan over the
-      // blocks just materialized, not a recomputation.
-      val done = next.where(col("__chg")).isEmpty
-      labels = next.select(col("node"), col("label"))
-      iter += 1
-      if (done) return labels.select(col("node"), col("label").as("component"))
-    }
-    throw new IllegalStateException(
-      s"connectedComponentsJump did not converge in $maxIter rounds")
-  }
 }

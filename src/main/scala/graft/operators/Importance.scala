@@ -33,9 +33,8 @@ import org.apache.spark.sql.functions._
   * per-doc occurrence counts are exact longs; the affinity score is a
   * single division of those longs. The true DSIR score — a SUM of
   * per-gram `ln` terms — is order-dependent in floating point and
-  * depends on each engine's libm, so [[scoreLogRatio]] exists for
-  * users (it is the paper's estimator) but is gated by unit spec, not
-  * by the cross-engine hash oracle.
+  * depends on each engine's libm, so no oracle-gated surface computes
+  * it; the single-division affinity score stands in for it.
   */
 object Importance {
 
@@ -48,9 +47,8 @@ object Importance {
   /** (doc, bucket-occurrence) rows for `n`-gram features WITH
     * multiplicity (DSIR counts occurrences; near-dup shingling
     * dedups — different semantics, deliberately). Tokens are
-    * projected to an attribute before the shingle lambda (see
-    * [[Dedup.wordShinglesFromTokens]]: an inlined split re-evaluates
-    * per output element). */
+    * projected to an attribute before the shingle kernel (an inlined
+    * split would be re-evaluated per use). */
   private def gramRows(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int, dim: Int, salt: String, carry: Seq[String] = Nil,
@@ -149,22 +147,6 @@ object Importance {
         count(lit(1)).as("raw_cnt"))
   }
 
-  /** DSIR log-ratio importance weights from trained counts:
-    * w_b = ln((tgt_b+1)/(Σtgt+dim)) − ln((raw_b+1)/(Σraw+dim))
-    * (add-one smoothing over the `dim`-bucket space). Totals ride a
-    * 1-row broadcast scalar join — the library's standard corpus-
-    * statistic pattern (BM25 does the same). Floating output:
-    * spec-gated, not oracle-gated (see the object scaladoc). */
-  def logRatioWeights(counts: DataFrame, dim: Int): DataFrame = {
-    val totals = counts.groupBy().agg(
-      sum("tgt_cnt").as("__tt"), sum("raw_cnt").as("__tr"))
-    counts.crossJoin(broadcast(totals))
-      .withColumn("w",
-        log((col("tgt_cnt") + 1).cast("double") / (col("__tt") + dim)) -
-          log((col("raw_cnt") + 1).cast("double") / (col("__tr") + dim)))
-      .select("bucket", "tgt_cnt", "raw_cnt", "w")
-  }
-
   /** Per-document exact affinity: sum the trained per-bucket counts
     * over the document's own gram occurrences —
     * `sum_tgt` = Σ_grams tgt_cnt(bucket(g)), `sum_raw` likewise —
@@ -190,64 +172,6 @@ object Importance {
       .withColumn("sum_raw", coalesce(col("sum_raw"), lit(0L)))
       .withColumn("affinity",
         (col("sum_tgt") + 1).cast("double") / (col("sum_raw") + 1))
-  }
-
-  /** The paper's per-document importance score
-    * Σ_grams w(bucket(g)) — floating, order-dependent under
-    * parallel summation, so NOT oracle-gated (spec-gated:
-    * ImportanceSpec hand-computes a corpus). `weights` is
-    * [[logRatioWeights]] output. A bucket absent from training
-    * contributes the smoothed prior ln((0+1)/(Σtgt+dim)) −
-    * ln((0+1)/(Σraw+dim)) only if the caller pre-seeds it; with the
-    * default left join it contributes 0 — equivalent to scoring only
-    * in-vocabulary features, the common implementation shortcut. */
-  def scoreLogRatio(
-      docs: DataFrame, idCol: String, textCol: String, weights: DataFrame,
-      n: Int = 2, dim: Int = 1024, salt: String = "dsir"): DataFrame = {
-    val scored = gramRows(docs, idCol, textCol, n, dim, salt)
-      .join(broadcast(weights.select("bucket", "w")), Seq("bucket"), "left")
-      .groupBy(col(idCol))
-      .agg(sum(coalesce(col("w"), lit(0.0))).as("dsir_score"))
-    docs.join(scored, Seq(idCol), "left")
-      .withColumn("dsir_score", coalesce(col("dsir_score"), lit(0.0)))
-  }
-
-  /** The trained counts as a pair of plan-literal maps (bucket →
-    * tgt_cnt, bucket → raw_cnt) — the STREAM-SIDE form of the
-    * artifact. The counts table is ≤ dim rows by construction, so
-    * collecting it is a bounded driver artifact exactly like a PQ
-    * codebook or the BPE merge list; as literals the gate needs no
-    * join at all — it is a pure per-row expression, legal on a
-    * streaming DataFrame with no state store and no watermark. */
-  def collectCounts(counts: DataFrame): Map[Long, (Long, Long)] =
-    counts.select("bucket", "tgt_cnt", "raw_cnt").collect()
-      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-
-  /** Per-row exact affinity of `toksCol` (a MATERIALIZED token-array
-    * attribute — project `Dedup.tokens(text)` into a column first;
-    * an inlined split re-evaluates per shingle, the library-wide
-    * O(tokens²) trap) against collected counts: the same
-    * (Σtgt+1)/(Σraw+1) as [[scoreAffinity]], computed by one
-    * fold over the gram array with two literal-map probes per gram.
-    * Bit-identical to the batch score: integer sums + one IEEE
-    * division, same md5 bucketing. */
-  def affinityColumn(
-      toksCol: Column, counts: Map[Long, (Long, Long)],
-      n: Int = 2, dim: Int = 1024, salt: String = "dsir"): Column = {
-    import org.apache.spark.sql.functions.typedLit
-    val tgt = typedLit(counts.map { case (b, (t, _)) => b -> t })
-    val raw = typedLit(counts.map { case (b, (_, r)) => b -> r })
-    val grams = graft.functions.GraftFunctions.shingles(toksCol, n)
-    val sums = aggregate(
-      grams,
-      struct(lit(0L).as("t"), lit(0L).as("r")),
-      (acc, g) => {
-        val b = gramBucket(g, salt, dim)
-        struct(
-          (acc.getField("t") + coalesce(element_at(tgt, b), lit(0L))).as("t"),
-          (acc.getField("r") + coalesce(element_at(raw, b), lit(0L))).as("r"))
-      })
-    (sums.getField("t") + 1).cast("double") / (sums.getField("r") + 1)
   }
 
   /** Deterministic importance resampling on the exact affinity score:

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Corpus n-gram statistics and per-document familiarity scoring —
@@ -41,8 +41,8 @@ object LanguageModel {
   /** Corpus-wide n-gram occurrence counts: (gram STRING, cnt LONG).
     * Counts every POSITION (multiplicity, not per-doc distinct) —
     * the LM-style statistic. Tokens are materialized as an attribute
-    * before the shingle lambda slices them (see
-    * [[Dedup.wordShinglesFromTokens]]'s O(tokens²) warning). */
+    * before the shingle lambda slices them (an inlined `split`
+    * re-evaluates per output element: O(tokens²)). */
   def ngramCounts(docs: DataFrame, textCol: String, n: Int): DataFrame = {
     require(n >= 1, s"n=$n must be >= 1")
     docs
@@ -72,8 +72,7 @@ object LanguageModel {
     * fired), hit_frac (ONE IEEE division — engine-exact), and the
     * `ln`-bearing avg_logprob / ppl = exp(-avg_logprob).
     *
-    * Oracle discipline (the [[Importance.logRatioWeights]]
-    * precedent): the integer tallies + hit_frac are oracle-gated
+    * Oracle discipline: the integer tallies + hit_frac are oracle-gated
     * (`p_lm_score_audit`); avg_logprob/ppl go through `ln`/`exp`,
     * which IEEE leaves implementation-defined, so they are
     * spec-gated (LanguageModelSpec: hand-computed model +
@@ -160,17 +159,6 @@ object LanguageModel {
           exp(-(col("__lpsum") / col("n_scored")))).as("ppl"))
   }
 
-  /** [[perplexity]] + the gate: keep ⇔ ppl ≤ maxPpl, with
-    * unscorable documents (no bigram positions, or an empty model)
-    * KEPT — the LM gate only drops what it can prove; compose with
-    * [[TextAnalysis.qualityFilter]]'s too_short rule for length. */
-  def perplexityFilter(
-      docs: DataFrame, idCol: String, textCol: String,
-      uni: DataFrame, bi: DataFrame, maxPpl: Double,
-      alpha: Double = 0.4): DataFrame =
-    perplexity(docs, idCol, textCol, uni, bi, alpha)
-      .withColumn("keep", col("ppl").isNull || col("ppl") <= maxPpl)
-
   /** Per-document familiarity vs the corpus' own n-gram counts:
     * (doc_id, n_grams, familiar_grams, familiar_rate) where
     * `familiar_grams` counts the document's n-gram positions whose
@@ -208,55 +196,4 @@ object LanguageModel {
           .otherwise(col("familiar_grams").cast("double") / col("n_grams")))
   }
 
-  /** The trained backoff model as driver-side maps + totals — the
-    * STREAM-SIDE form of the [[perplexity]] artifacts, same contract
-    * as [[Importance.collectCounts]]: collecting is legal exactly
-    * when the model is a bounded artifact (a curated reference
-    * vocabulary — NOT an open-domain web vocabulary; for those, keep
-    * the DataFrame form and score in foreachBatch with the batch
-    * operator instead). Returns (unigram counts, bigram counts,
-    * N = total reference tokens, V = distinct vocabulary). */
-  def collectModel(
-      uni: DataFrame, bi: DataFrame): (Map[String, Long], Map[String, Long], Long, Long) = {
-    val u = uni.select("gram", "cnt").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = bi.select("gram", "cnt").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    (u, b, u.values.sum, u.size.toLong)
-  }
-
-  /** Per-row exact backoff scoring of a MATERIALIZED token-array
-    * attribute against a collected model — the [[perplexity]]
-    * arithmetic as ONE pass over the document's own bigram
-    * positions ([[graft.functions.BackoffLmScore]]: the model rides
-    * the expression as real hash maps, two O(1) probes per
-    * position). Pure expression: no join, no state, no watermark —
-    * legal on a streaming DataFrame
-    * ([[graft.streaming.StreamingOps.perplexityFilterStream]]).
-    *
-    * NOT a literal-map fold: `element_at` over a map literal scans
-    * ArrayBasedMapData linearly, making that formulation
-    * O(|doc|·|model|) string compares per document — measured ~40 s
-    * for a 5k-doc micro-batch against a ~900-bigram TOY model on the
-    * stream path; real models are 100–1000× larger. The native
-    * kernel is O(|doc|).
-    *
-    * Exactness vs the batch operator: n_scored / n_hit / n_backoff /
-    * hit_frac are BIT-IDENTICAL (integer tallies + one IEEE
-    * division), and each position's logprob is the same
-    * StrictMath.log over the same division; avg_logprob / ppl sum
-    * those logprobs in document order where the batch aggregation
-    * sums in arbitrary shuffle order, so the two agree up to FP
-    * reassociation — the same split the oracle discipline already
-    * draws (integer surfaces oracle-gated, ln/exp spec-gated).
-    *
-    * Returns a struct (n_scored, n_hit, n_backoff, hit_frac,
-    * avg_logprob, ppl) with the batch operator's NULL semantics for
-    * unscorable documents. */
-  def perplexityColumn(
-      toksCol: Column,
-      uniCounts: Map[String, Long], biCounts: Map[String, Long],
-      nTotal: Long, vocab: Long, alpha: Double = 0.4): Column =
-    graft.functions.BackoffLmScore.score(
-      toksCol, uniCounts, biCounts, nTotal, vocab, alpha)
 }

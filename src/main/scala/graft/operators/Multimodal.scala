@@ -24,9 +24,9 @@ import org.apache.spark.sql.functions._
   * uncompressed BI_RGB AVI ([[videoMeta]]/[[frameSample]] via the
   * RIFF walker [[graft.functions.AviDecode]] — frames come out in
   * the PngPixels byte layout); compressed codecs (MJPG/H.264/…)
-  * fall back to [[frameSampleStub]], the single swap-in point for a
-  * JNI/py bridge at the `mapPartitions` boundary in production,
-  * with the AVI path as the layout contract that bridge must match.
+  * sample as NULL until a JNI/py bridge at the `mapPartitions`
+  * boundary decodes them, with the AVI path as the layout contract
+  * that bridge must match.
   */
 object Multimodal {
 
@@ -270,52 +270,6 @@ object Multimodal {
       .localCheckpoint(true)
     Dedup.hammingBandPairs(sig, maxHamming, maxBucket, chunkSize)
   }
-
-  /** The four 16-bit dHash blocks of an image payload as columns
-    * __b0..__b3 (map-side only — usable on a streaming DataFrame;
-    * NULL for undecodable payloads, which therefore never match any
-    * block probe). The multimodal mirror of
-    * [[Dedup.withSimhashBlocks]]. */
-  def withImageBlocks(df: DataFrame, payloadCol: String): DataFrame = {
-    val withH = df.withColumn("__dh", imageDHash(col(payloadCol)))
-    withH.select(
-      df.columns.toIndexedSeq.map(col) ++
-        (0 until 4).map(b =>
-          shiftrightunsigned(col("__dh"), 48 - 16 * b)
-            .bitwiseAND(lit(0xFFFFL)).cast("int").as(s"__b$b")): _*)
-  }
-
-  /** The reference image corpus's distinct dHash blocks, (band, bv)
-    * — the membership table for INCREMENTAL image dedup (filter new
-    * or streaming images against an already-ingested catalog,
-    * [[graft.streaming.StreamingOps.dropImageNearDups]]). Hard size
-    * bound: 4 bands × ≤65,536 16-bit values = ≤262,144 rows
-    * REGARDLESS of corpus size, so it always broadcasts — the same
-    * contract as [[Dedup.simhashBlockTable]], and the same
-    * pigeonhole recall guarantee: a new image within Hamming ≤3 of
-    * ANY reference image shares at least one block. */
-  def imageBlockTable(docs: DataFrame, payloadCol: String): DataFrame =
-    docs
-      .select(imageDHash(col(payloadCol)).as("__dh"))
-      .filter(col("__dh").isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("__dh"), 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
-      .distinct()
-
-  /** The reference audio catalog's distinct envelope-hash blocks,
-    * (band, bv) — the membership table for INCREMENTAL audio dedup
-    * ([[graft.streaming.StreamingOps.dropAudioNearDups]]). Same
-    * ≤262,144-row bound and pigeonhole recall contract as
-    * [[imageBlockTable]]. */
-  def audioBlockTable(docs: DataFrame, payloadCol: String): DataFrame =
-    docs
-      .select(audioDHash(col(payloadCol)).as("__dh"))
-      .filter(col("__dh").isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(col("__dh"), 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
-      .distinct()
 
   /** Portable image fingerprint INDEX of a corpus: (id, dhash) — the
     * artifact an INCREMENTAL image-dedup pipeline persists between
@@ -1784,71 +1738,6 @@ object Multimodal {
       .when(col("fam") === "audio" && col("__ash").isNull, "undecodable")
       .otherwise("unique")
 
-  /** Build the 4×65,536-bit block bitmaps of a 64-bit-hash column —
-    * the catalog artifact of the streaming trim-tolerant gates
-    * ([[graft.streaming.StreamingOps.dropAudioNearDupsShifted]] /
-    * `dropVideoNearDupsShifted`). `hashes` is a single LONG column
-    * of unit fingerprints (segment or frame hashes). The collect is
-    * BOUNDED BY CONSTRUCTION: the distinct (band, block) set is
-    * ≤262,144 rows no matter how many hashes feed it (the
-    * [[imageBlockTable]] bound), and the returned artifact is 32 KB
-    * — the collectModel bounded-artifact contract, compressed one
-    * step further (bitset instead of broadcast rows). */
-  def segmentBlockBitmaps(hashes: DataFrame): Array[Array[Long]] = {
-    require(hashes.columns.length == 1,
-      s"expected a single hash column, got ${hashes.columns.mkString(",")}")
-    val h = col(hashes.columns.head)
-    val blocks = hashes
-      .filter(h.isNotNull)
-      .select(posexplode(array((0 until 4).map(b =>
-        shiftrightunsigned(h, 48 - 16 * b)
-          .bitwiseAND(lit(0xFFFFL)).cast("int")): _*)).as(Seq("band", "bv")))
-      .distinct()
-      .collect()
-    val maps = Array.fill(4)(new Array[Long](1024))
-    blocks.foreach { r =>
-      val band = r.getInt(0); val bv = r.getInt(1)
-      maps(band)(bv >>> 6) |= 1L << (bv & 63)
-    }
-    maps
-  }
-
-  /** [[segmentBlockBitmaps]] over a WAV corpus's SEGMENT hashes. */
-  def audioSegmentBlockBitmaps(
-      docs: DataFrame, payloadCol: String, segFrames: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(audioSegmentDHashes(col(payloadCol), segFrames)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over TIME-based (ms) segment hashes —
-    * the rate-tolerant catalog artifact: clips recorded into the
-    * catalog at ANY sample rate set the same blocks a re-encode at
-    * any OTHER rate probes, because the hashes are keyed by time
-    * units ([[audioSegmentDHashesMs]]). Same 32 KB bound. */
-  def audioSegmentBlockBitmapsMs(
-      docs: DataFrame, payloadCol: String, msPerSeg: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(audioSegmentDHashesMs(col(payloadCol), msPerSeg)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over an AVI corpus's FRAME hashes. */
-  def videoFrameBlockBitmaps(
-      docs: DataFrame, payloadCol: String, stride: Int): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(
-      explode(videoFrameDHashes(col(payloadCol), stride)
-        .getField("dhash")).as("__dh")))
-
-  /** [[segmentBlockBitmaps]] over a STILL-IMAGE catalog's dHashes —
-    * frame and still hashes share one kernel ([[videoImageMatches]]'s
-    * exactness argument), so feeding THIS artifact to
-    * [[graft.streaming.StreamingOps.dropVideoNearDupsShifted]] gates a
-    * video stream against an IMAGE catalog: drop clips where ≥minFrac
-    * of sampled frames match a banned still — the streaming form of
-    * the cross-modal containment verb. */
-  def imageBlockBitmaps(
-      docs: DataFrame, payloadCol: String): Array[Array[Long]] =
-    segmentBlockBitmaps(docs.select(imageDHash(col(payloadCol)).as("__dh")))
-
   /** RIFF/AVI magic: 'RIFF' at offset 0, 'AVI ' at offset 8. */
   private def isAvi(payload: Column): Column =
     octet_length(payload) >= 24 &&
@@ -1978,24 +1867,13 @@ object Multimodal {
   /** REAL frame sampling for AVI and animated-GIF payloads: every
     * `stride`-th frame's index + mean RGB brightness
     * (`array<struct<frame_idx, mean>>`, one decode pass, pixels never
-    * materialized into the row); other payloads return NULL — route
-    * those through [[frameSampleStub]] until a codec bridge lands. */
+    * materialized into the row); other payloads return NULL until a
+    * codec bridge lands. */
   def frameSample(payload: Column, stride: Int): Column =
     when(isAvi(payload),
       graft.functions.GraftFunctions.aviFrameStats(payload, lit(stride)))
       .when(isGif(payload),
         graft.functions.GraftFunctions.gifFrameStats(payload, lit(stride)))
-
-  /** STUB frame sampling: every `stride`-th byte as lowercase hex —
-    * the plumbing (array column, deterministic order, bounded size)
-    * of a video frame sampler with the codec swapped out. Kept as the
-    * fallback for payloads outside [[frameSample]]'s decodable scope. */
-  def frameSampleStub(payload: Column, stride: Int): Column =
-    when(octet_length(payload) > 0,
-      transform(
-        sequence(lit(1), octet_length(payload), lit(stride)),
-        i => lower(hex(payload.substr(i, lit(1))))))
-      .otherwise(array().cast("array<string>"))
 
   /** Driver-side PNG ENCODER (fixture machinery, not a data path):
     * 8-bit gray / gray+alpha / RGB / RGBA, non-interlaced, one IDAT,

@@ -226,11 +226,9 @@ object Sampling {
   def uniformPerKey(
       df: DataFrame, keyCol: String, idCol: String, k: Int,
       salt: String): DataFrame =
-    // string-cast tiebreak so the rank order is IDENTICAL to the
-    // streaming counterpart's (md5, id-as-string) state order — on an
-    // md5 collision a native-numeric tiebreak would pick differently
-    // ("9" > "10" as strings) and break the stream==batch equivalence
-    // the spec diffs (ADVICE r11)
+    // string-cast tiebreak: the rank order is (md5, id-as-string), so
+    // on an md5 collision the pick follows string order ("9" > "10"),
+    // not numeric order (ADVICE r11)
     perKeyCap(df, keyCol, idCol, k,
       md5(concat_ws(":", lit(salt), col(idCol).cast("string"))), desc = false,
       tieBreak = Some(col(idCol).cast("string")))

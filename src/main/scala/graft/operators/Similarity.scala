@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * replaced is CodegenFallback — an interpreted fold plus a zipped
   * array allocation per candidate pair). Sums run left-to-right in
   * element order in double on both Spark and the DuckDB oracle, so
-  * results stay bit-identical ([[dot]]/[[norm]] remain as the
-  * HOF reference implementation, property-tested equivalent).
+  * results stay bit-identical (the HOF formulation stays in the
+  * test tree as the reference, property-tested equivalent).
   *
   * Scale design:
   *  - brute force is the exact baseline: |Q| x |N| partitioned
@@ -27,95 +27,25 @@ import org.apache.spark.sql.functions._
   */
 object Similarity {
 
-  /** Dot product in double, summed in element order. */
-  def dot(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0d),
-      (acc, x) => acc + x)
-
-  /** L2 norm in double. */
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Per-vector absolute-maximum component, in double. */
-  def maxAbs(vec: Column): Column =
-    array_max(transform(vec, x => abs(x.cast("double"))))
-
-  /** Symmetric int8 quantization of an embedding vector: each
-    * component maps to `trunc(x · 127 / max|x|)` ∈ [−127, 127], with
-    * the per-vector scale `max|x|` carried alongside for
-    * dequantization (`x ≈ code · scale / 127`). The all-zero vector
-    * quantizes to all-zero codes with scale 0.
-    *
-    * This is the storage/bandwidth half of ANN at scale: 4 bytes →
-    * 1 byte per dimension cuts the shuffle and cache footprint of the
-    * candidate side by 4× before any index structure is involved.
-    *
-    * Determinism: the float→double cast is exact, `x·127/s` is two
-    * IEEE double ops evaluated in the same order on any engine, and
-    * truncation toward zero is explicit (DuckDB's CAST rounds where
-    * Spark's truncates — the oracle must `trunc()` first). No
-    * rounding-mode or libm dependence, so codes hash-match
-    * bit-for-bit cross-engine. Non-finite components are guarded by
-    * BOUNDS, not finiteness tests: a valid quotient always satisfies
-    * |q| ≤ 127 (|x| ≤ max|x|), while NaN fails the comparison and
-    * ±Inf exceeds it, so `!(|q| ≤ 127)` catches every non-finite
-    * case and zeroes the code on BOTH engines — an unguarded cast
-    * would silently yield 0/Int.MaxValue in Spark but raise a
-    * conversion error in DuckDB.
-    *
-    * Returns a struct column (scale DOUBLE, codes ARRAY<INT>). */
-  def quantizeInt8(vec: Column): Column = {
-    val s = maxAbs(vec)
-    val codes = transform(
-      vec,
-      x => {
-        val q = x.cast("double") * 127.0d / s
-        when(s === 0.0d || !(abs(q) <= 127.0d), lit(0)).otherwise(q.cast("int"))
-      })
-    struct(s.as("scale"), codes.as("codes"))
-  }
-
   /** Cosine similarity = dot / (||a|| * ||b||); zero for zero
     * vectors. Native codegen'd expression — see class doc.
     *
     * STRICTLY `array<float>` inputs (the embeddings schema): the
     * native expression rejects other numeric arrays at analysis time
     * rather than inserting a silent double→float downcast that would
-    * change results. For array<double>/array<int> columns use
-    * [[cosineHof]], which accepts any numeric array. */
+    * change results. Cast other numeric arrays to array<float>
+    * first. */
   def cosine(a: Column, b: Column): Column =
     graft.functions.GraftFunctions.cosine(a, b)
-
-  /** The HOF reference formulation of [[cosine]] (kept for the
-    * equivalence property test and as the any-numeric-array variant;
-    * not used in any query plan). */
-  def cosineHof(a: Column, b: Column): Column = {
-    val d = dot(a, b)
-    val n = norm(a) * norm(b)
-    when(n === 0d, lit(0.0d)).otherwise(d / n)
-  }
 
   /** L2 (Euclidean) distance in double, squared-diff sum in element
     * order — same cross-engine bit-exactness contract as [[cosine]]
     * (identical expression order; `d*d`, never `pow`). Runs on the
     * fused codegen'd [[graft.functions.L2Squared]] kernel; the HOF
-    * reference formulation lives in [[l2sqHof]] (property-tested
+    * reference formulation lives in the test tree (property-tested
     * equivalent in FunctionsSpec). */
   def l2(a: Column, b: Column): Column =
     sqrt(graft.functions.GraftFunctions.l2sq(a, b))
-
-  /** HOF reference formulation of the squared-L2 fold (any numeric
-    * array type; kept for the equivalence property test — not used in
-    * any query plan). */
-  def l2sqHof(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => {
-        val d = x.cast("double") - y.cast("double")
-        d * d
-      }),
-      lit(0.0d),
-      (acc, x) => acc + x)
 
   /** Deterministic sign-bit LSH bucket: bit i set iff component i is
     * >= 0. With random-ish embeddings, 2^bits roughly-equal buckets.

@@ -248,8 +248,9 @@ object TextAnalysis {
     * absent from the output (callers left-join if they need them).
     *
     * Scale shape: tokens are materialized as an attribute before the
-    * shingle lambda (the O(tokens²) inline-split trap — see
-    * [[Dedup.wordShinglesFromTokens]]), then ONE explode feeds two
+    * shingle lambda (the O(tokens²) inline-split trap: a lambda
+    * re-evaluates an inlined `split` per output element), then ONE
+    * explode feeds two
     * cascaded aggregations keyed by (id, bigram) → (id). Both enjoy
     * map-side partial aggregation; per-doc constants ride along as
     * `min(...)` aggregates so no join back to the source is needed.
@@ -303,7 +304,7 @@ object TextAnalysis {
     * (n_docs DESC, n_occurrences DESC, gram ASC).
     *
     * Scale shape: tokens are materialized before the shingle lambda
-    * (see [[Dedup.wordShinglesFromTokens]]'s O(tokens²) warning), then
+    * (an inlined `split` re-evaluates per output element: O(tokens²)), then
     * ONE explode feeds ONE gram-keyed shuffle with map-side partial
     * aggregation; `minDocs` prunes the long tail BEFORE the top-k,
     * and the top-k itself is `orderBy(...).limit(k)` — planned as

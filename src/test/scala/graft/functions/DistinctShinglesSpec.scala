@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{ArrayType, StringType, StructField, StructTyp
 import org.scalacheck.Gen
 
 import graft.SparkSpec
-import graft.operators.Dedup
+import graft.operators.{Dedup, DedupOracle}
 
 /** The fused shingle kernels must be BIT-IDENTICAL to the interpreted
   * HOF chains they replace — including the chains' quirky edges: NULL
@@ -18,7 +18,7 @@ import graft.operators.Dedup
 class DistinctShinglesSpec extends SparkSpec {
 
   private def refShingles(n: Int) =
-    array_distinct(Dedup.wordShinglesFromTokens(col("toks"), n))
+    array_distinct(DedupOracle.wordShinglesFromTokens(col("toks"), n))
   private def refHashes(n: Int) =
     array_sort(transform(refShingles(n), s => xxhash64(s)))
 
@@ -53,7 +53,7 @@ class DistinctShinglesSpec extends SparkSpec {
     for (n <- Seq(1, 2, 3, 5)) {
       val out = df(rows).select(
         GraftFunctions.shingles(col("toks"), n).as("fused"),
-        Dedup.wordShinglesFromTokens(col("toks"), n).as("ref")).collect()
+        DedupOracle.wordShinglesFromTokens(col("toks"), n).as("ref")).collect()
       out.zipWithIndex.foreach { case (r, i) =>
         assert(!r.isNullAt(0), s"row $i n=$n: fused NULL (must be empty, never null)")
         assert(!r.isNullAt(1), s"row $i n=$n: ref NULL")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalacheck.Gen
 
 import graft.SparkSpec
-import graft.operators.Similarity
+import graft.operators.{Similarity, SimilarityOracle}
 
 /** The native [[CosineSimilarity]] expression: bit-exact equivalence
   * with the HOF reference formulation, SQL registration, and the NULL
@@ -23,7 +23,7 @@ class FunctionsSpec extends SparkSpec {
     val df = pairs.toDF("a", "b")
     val out = df.select(
       Similarity.cosine(col("a"), col("b")).as("native"),
-      Similarity.cosineHof(col("a"), col("b")).as("hof")).collect()
+      SimilarityOracle.cosineHof(col("a"), col("b")).as("hof")).collect()
     assert(out.length == 500)
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==
@@ -40,7 +40,7 @@ class FunctionsSpec extends SparkSpec {
     val df = pairs.toDF("a", "b")
     val out = df.select(
       GraftFunctions.l2sq(col("a"), col("b")).as("native"),
-      Similarity.l2sqHof(col("a"), col("b")).as("hof")).collect()
+      SimilarityOracle.l2sqHof(col("a"), col("b")).as("hof")).collect()
     assert(out.length == 500)
     out.foreach { r =>
       assert(java.lang.Double.doubleToLongBits(r.getDouble(0)) ==

@@ -103,7 +103,7 @@ class MinhashSignatureSpec extends SparkSpec {
   }
 
   test("quantizeInt8Summary == HOF quantize + summary chain on random float vectors") {
-    import graft.operators.Similarity
+    import graft.operators.SimilarityOracle
     // ADVICE r21: the generator must reach the kernel's intricate
     // branches — NULL elements (sum_code poisoning), NaN/±Inf (the
     // bounds guard and NaN-largest scale), all-zero vectors (scale
@@ -138,7 +138,7 @@ class MinhashSignatureSpec extends SparkSpec {
         case Some(l) => Row(l.map(_.map(f => f: java.lang.Float).orNull))
         case None => Row(null)
       }, 4), schema)
-    val q = Similarity.quantizeInt8(col("embedding"))
+    val q = SimilarityOracle.quantizeInt8(col("embedding"))
     val out = df.select(
       GraftFunctions.quantizeInt8Summary(col("embedding")).as("fused"),
       q.getField("scale").as("scale"),

@@ -132,46 +132,6 @@ class AudioResampleSpec extends SparkSpec {
     assert(kept == Set(0L, 3L, 4L), s"got $kept")
   }
 
-  test("streaming rate-tolerant gate: drops cross-rate re-uploads, join-free, zero state") {
-    import spark.implicits._
-    val catalog = Seq(100L -> clipAt(8000, 2, 1040)).toDF("clip_id", "payload")
-    val bitmaps = Multimodal.audioSegmentBlockBitmapsMs(catalog, "payload", 65)
-    val arrivals = Seq(
-      1L -> clipAt(16000, 4, 1040, gain = 3), // cross-rate re-encode → drop
-      2L -> clipAt(8000, 2, 1040, b = 9),     // fresh recording → keep
-      3L -> clipAt(900, 1, 1800),             // sub-65 derived → keep (NULL)
-      4L -> "junk".getBytes("UTF-8"))         // undecodable → keep
-      .toDF("clip_id", "payload")
-    val kept = graft.streaming.StreamingOps.dropAudioNearDupsResampled(
-      arrivals, "payload", bitmaps, msPerSeg = 65)
-      .select("clip_id").as[Long].collect().toSet
-    assert(kept == Set(2L, 3L, 4L), s"batch verdicts: got $kept")
-    // (no frame-count contrast here: the BLOCK-bitmap gate is
-    // deliberately high-recall — 16-bit block coincidences on the
-    // similar-shaped compressed-in-time envelopes can drop the
-    // re-encode anyway, measured; the structural frame-count miss is
-    // pinned on the EXACT-hash forms above, where it is provable)
-    // streaming form: same verdicts, join-free, zero state
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropAudioNearDupsResampled(
-      stream.toDS().toDF("clip_id", "payload"), "payload", bitmaps, msPerSeg = 65)
-    assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
-      "the bitmap gate must be join-free")
-    val ckpt = java.nio.file.Files.createTempDirectory("rategate").toString
-    val q = out.writeStream.format("memory").queryName("rate_gate_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(Seq(1L, 2L, 3L, 4L).zip(
-        arrivals.orderBy("clip_id").collect().map(_.getAs[Array[Byte]]("payload"))))
-      q.processAllAvailable()
-      val keptStream = spark.table("rate_gate_out")
-        .select("clip_id").as[Long].collect().toSet
-      assert(keptStream == kept, "stream verdicts must equal the batch gate")
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 0L)
-    } finally q.stop()
-  }
-
   test("NULL contract: junk, sub-65 derived segFrames, ms < 1") {
     assert(msHashes("not audio".getBytes("UTF-8"), 65) == null)
     // 900 Hz at ms=65 → segFrames 58 < 65 → NULL by contract

@@ -178,64 +178,6 @@ class AviAudioMjpegSpec extends SparkSpec {
       "bad ADPCM geometry must drop only the audio track")
   }
 
-  test("streaming media curation verdicts: per-kind catalog gates in one pass, zero state") {
-    import spark.implicits._
-    def ipix(b: Int)(x: Int, y: Int, c: Int): Int =
-      (x * 17 + y * 29 + c * 37 + b * 53) % 180
-    def vpix(b: Int)(f: Int, x: Int, y: Int, c: Int): Int =
-      (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180
-    def s0(c: Int, f: Int): Int = ((f * 53 + c * 17 + 101) % 3989) - 1994
-    val imgCat = Multimodal.imageBlockBitmaps(
-      Seq(900L -> Multimodal.encodePng(12, 10, 1, ipix(0))).toDF("id", "payload"), "payload")
-    val vidCat = Multimodal.videoFrameBlockBitmaps(
-      Seq(901L -> Multimodal.encodeAvi(12, 10, 24, vpix(0))).toDF("id", "payload"), "payload", 4)
-    val audCat = Multimodal.audioSegmentBlockBitmaps(
-      Seq(902L -> Multimodal.encodeWav(2, 8000, 640, s0)).toDF("id", "payload"), "payload", 128)
-    val arrivals = Seq(
-      0L -> Multimodal.encodePng(12, 10, 1, (x, y, c) => ipix(0)(x, y, c) + 40), // image twin → drop
-      1L -> Multimodal.encodePng(14, 11, 3, ipix(4)), // fresh family → keep
-      2L -> Multimodal.encodeAvi(12, 10, 20, // video trim+shift → drop
-        (f, x, y, c) => vpix(0)(f + 4, x, y, c) + 40, topDown = true),
-      3L -> Multimodal.encodeAvi(12, 10, 24, // noise video → keep
-        (f, x, y, c) => ((f * 7 + x) * (y * 5 + c) * 73 + x * y) % 256),
-      4L -> Multimodal.encodeWav(2, 8000, 512, (c, f) => s0(c, f + 128) * 3), // audio trim+gain → drop
-      5L -> Multimodal.encodeWav(1, 8000, 640, // fresh audio → keep
-        (c, f) => ((f * 173 + c * 13 + 999) % 3797) - 1898),
-      6L -> "not media".getBytes("UTF-8")) // junk → keep 'undecodable'
-    def verdicts(df: org.apache.spark.sql.DataFrame) =
-      graft.streaming.StreamingOps.mediaCurationVerdicts(
-        df, "payload", imgCat, vidCat, audCat,
-        videoStride = 4, audioSegFrames = 128, minFrac = 0.3)
-    val got = verdicts(arrivals.toDF("media_id", "payload"))
-      .select("media_id", "kind", "verdict", "reason")
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2), r.getString(3))).toMap
-    assert(got(0L) == (("png", "drop", "image_near_dup")), s"got ${got(0L)}")
-    assert(got(1L) == (("png", "keep", "unique")), s"got ${got(1L)}")
-    assert(got(2L) == (("avi", "drop", "video_near_dup")), s"got ${got(2L)}")
-    assert(got(3L) == (("avi", "keep", "unique")), s"got ${got(3L)}")
-    assert(got(4L) == (("wav", "drop", "audio_near_dup")), s"got ${got(4L)}")
-    assert(got(5L) == (("wav", "keep", "unique")), s"got ${got(5L)}")
-    assert(got(6L) == (("other", "keep", "undecodable")), s"got ${got(6L)}")
-    // streaming form: join-free, zero state, verdicts identical
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = verdicts(stream.toDS().toDF("media_id", "payload"))
-      .select("media_id", "kind", "verdict", "reason")
-    assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
-      "the verdict pass must be join-free")
-    val ckpt = java.nio.file.Files.createTempDirectory("mcv").toString
-    val q = out.writeStream.format("memory").queryName("mcv_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(arrivals)
-      q.processAllAvailable()
-      val streamed = spark.table("mcv_out")
-        .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2), r.getString(3))).toMap
-      assert(streamed == got, "stream verdicts must equal the batch pass")
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 0L)
-    } finally q.stop()
-  }
-
   test("audioVideoMatches: soundtrack-cut clips contain at 1.0, gain-invariant; junk never matches") {
     import spark.implicits._
     def base(b: Int)(c: Int, f: Int): Int = (((f * 53 + c * 17 + b * 101) % 3989) - 1994)

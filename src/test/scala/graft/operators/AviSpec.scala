@@ -234,9 +234,5 @@ class AviSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq("plain text payload".getBytes).toDF("payload")
     assert(df.select(Multimodal.frameSample(col("payload"), 2)).head().isNullAt(0))
-    // the stub remains available as the documented fallback
-    val stub = df.select(Multimodal.frameSampleStub(col("payload"), 5))
-      .head().getSeq[String](0)
-    assert(stub.nonEmpty)
   }
 }

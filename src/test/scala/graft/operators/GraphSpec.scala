@@ -73,7 +73,7 @@ class GraphSpec extends SparkSpec {
         val df = real.toDF("a", "b")
         val contract = Graph.connectedComponents(df, "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val jump = Graph.connectedComponentsJump(df, "a", "b")
+        val jump = GraphOracle.connectedComponentsJump(df, "a", "b")
           .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
         contract == jump
       }

@@ -288,29 +288,6 @@ class ImageNearDupSpec extends SparkSpec {
     }
   }
 
-  test("audio block gate: drops gain copies, keeps fresh/short/junk clips") {
-    import spark.implicits._
-    def s0(c: Int, f: Int): Int = ((f * 31 + c * 17 + 101) % 4001) - 2000
-    val ref = Seq(100L -> Multimodal.encodeWav(2, 8000, 437, s0))
-      .toDF("clip_id", "payload")
-    val blocks = Multimodal.audioBlockTable(ref, "payload")
-    assert(blocks.count() <= 4)
-    val kept = graft.streaming.StreamingOps.dropAudioNearDups(
-      Seq(
-        1L -> Multimodal.encodeWav(2, 8000, 437, (c, f) => s0(c, f) * 3), // gain copy → drop
-        // fresh clip with a structurally DIFFERENT envelope (a mere
-        // +offset of the reference formula shares a whole 16-bit band
-        // by coincidence — the documented high-recall over-drop)
-        2L -> Multimodal.encodeWav(1, 8000, 400,
-          (c, f) => ((f * 173 + c * 13 + 999) % 3797) - 1898), // fresh → keep
-        3L -> Multimodal.encodeWav(1, 8000, 64, s0), // too short → keep
-        4L -> "junk".getBytes("UTF-8")) // undecodable → keep
-        .toDF("clip_id", "payload"),
-      "clip_id", "payload", blocks)
-      .select("clip_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(2L, 3L, 4L), s"got $kept")
-  }
-
   test("set-overlap flood cap: a corpus-constant frame never pairs unrelated videos") {
     import spark.implicits._
     // every video OPENS with the same constant black frame (the
@@ -499,21 +476,6 @@ class ImageNearDupSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getInt(1).toLong, r.getLong(2), r.getLong(3))).toSet
     assert(got == Set((0L, 2L, 0L, 0L), (0L, 2L, 1L, 0L)),
       s"exports (exact + upscaled/shifted) must match frame 2 at Hamming 0, got $got")
-    // STREAMING composition: a banned-IMAGE catalog's bitmaps drive
-    // the video bitmap gate (frame and still hashes share one
-    // kernel) — the clip containing the banned still drops at every
-    // sampled frame, a noise clip and junk keep
-    val banned = Multimodal.imageBlockBitmaps(
-      imgs.filter(col("img_id") === 0L), "payload")
-    val arrivals = Seq(
-      0L -> Multimodal.encodeAvi(12, 10, 6, pix), // contains the banned frame family
-      1L -> Multimodal.encodeAvi(12, 10, 6,
-        (f, x, y, c) => ((f * 7 + x) * (y * 5 + c) * 73 + x * y) % 256),
-      2L -> "junk".getBytes("UTF-8")).toDF("video_id", "payload")
-    val kept = graft.streaming.StreamingOps.dropVideoNearDupsShifted(
-      arrivals, "payload", banned, stride = 2, minFrac = 0.3)
-      .select("video_id").collect().map(_.getLong(0)).toSet
-    assert(kept == Set(1L, 2L), s"cross-modal gate verdicts: got $kept")
     // catalog-side flood cap: two identical catalog entries push every
     // block's membership to 2 — maxBucket=1 drops all their blocks and
     // nothing matches; the default cap keeps the matches
@@ -528,111 +490,5 @@ class ImageNearDupSpec extends SparkSpec {
     assert(Multimodal.videoImageMatches(
       vids, "video_id", "payload", 2, dupCatalog, "img_id", "payload",
       maxHamming = 3).count() == 2, "default cap keeps both catalog matches")
-  }
-
-  test("trim-tolerant gates: bitmap artifact drops trimmed re-uploads, keeps fresh/short/junk, zero state") {
-    import spark.implicits._
-    // ---- audio: catalog = one 640-frame clip; arrival = its
-    // trim+gain copy (the whole-clip gate's blind spot)
-    def s0(c: Int, f: Int): Int = ((f * 53 + c * 17 + 101) % 3989) - 1994
-    val audioRef = Seq(100L -> Multimodal.encodeWav(2, 8000, 640, s0))
-      .toDF("clip_id", "payload")
-    val aBitmaps = Multimodal.audioSegmentBlockBitmaps(audioRef, "payload", 128)
-    assert(aBitmaps.map(_.map(java.lang.Long.bitCount(_)).sum).sum <= 4 * 5,
-      "5 segments set at most 4 blocks each")
-    val audioArrivals = Seq(
-      1L -> Multimodal.encodeWav(2, 8000, 512, (c, f) => s0(c, f + 128) * 3), // trim+gain → drop
-      2L -> Multimodal.encodeWav(1, 8000, 640,
-        (c, f) => ((f * 173 + c * 13 + 999) % 3797) - 1898), // fresh → keep
-      3L -> Multimodal.encodeWav(1, 8000, 64, s0), // sub-segment → keep
-      4L -> "junk".getBytes("UTF-8")) // undecodable → keep
-      .toDF("clip_id", "payload")
-    val aKept = graft.streaming.StreamingOps.dropAudioNearDupsShifted(
-      audioArrivals, "payload", aBitmaps, segFrames = 128)
-      .select("clip_id").collect().map(_.getLong(0)).toSet
-    assert(aKept == Set(2L, 3L, 4L), s"audio gate verdicts: got $aKept")
-    // ---- video: catalog = one 24-frame clip at stride 4; arrival =
-    // a 4-frame-trimmed brightness-shifted copy
-    def pix(b: Int)(f: Int, x: Int, y: Int, c: Int): Int =
-      (x * 17 + y * 29 + c * 37 + f * 41 + b * 53) % 180
-    val videoRef = Seq(100L -> Multimodal.encodeAvi(12, 10, 24, pix(0)))
-      .toDF("video_id", "payload")
-    val vBitmaps = Multimodal.videoFrameBlockBitmaps(videoRef, "payload", 4)
-    val videoArrivals = Seq(
-      1L -> Multimodal.encodeAvi(12, 10, 20,
-        (f, x, y, c) => pix(0)(f + 4, x, y, c) + 40, topDown = true), // trim+shift → drop
-      // fresh content must be structurally different: linear-gradient
-      // families share low-entropy blocks (0x0000/0xFFFF bands) with
-      // ANY same-family formula — the documented high-recall
-      // over-drop — so the keeper is noise-shaped
-      2L -> Multimodal.encodeAvi(12, 10, 24,
-        (f, x, y, c) => ((f * 7 + x) * (y * 5 + c) * 73 + x * y) % 256), // fresh → keep
-      3L -> "not a video".getBytes("UTF-8")) // undecodable → keep
-      .toDF("video_id", "payload")
-    val vKept = graft.streaming.StreamingOps.dropVideoNearDupsShifted(
-      videoArrivals, "payload", vBitmaps, stride = 4)
-      .select("video_id").collect().map(_.getLong(0)).toSet
-    assert(vKept == Set(2L, 3L), s"video gate verdicts: got $vKept")
-    // ---- streaming form: same verdicts, zero state rows (pure
-    // per-row expression — not even a broadcast join in the plan)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropAudioNearDupsShifted(
-      stream.toDS().toDF("clip_id", "payload"), "payload", aBitmaps, segFrames = 128)
-    assert(!out.queryExecution.analyzed.toString.toLowerCase.contains("join"),
-      "the bitmap gate must be join-free")
-    val ckpt = java.nio.file.Files.createTempDirectory("shiftgate").toString
-    val q = out.writeStream.format("memory").queryName("shift_gate_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(Seq(1L, 2L, 3L, 4L).zip(
-        audioArrivals.orderBy("clip_id").collect().map(_.getAs[Array[Byte]]("payload"))))
-      q.processAllAvailable()
-      val keptStream = spark.table("shift_gate_out")
-        .select("clip_id").collect().map(_.getLong(0)).toSet
-      assert(keptStream == aKept, "stream verdicts must equal the batch gate")
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 0L)
-    } finally q.stop()
-  }
-
-  test("image block gate: drops exactly block-sharers, keeps undecodables, zero state") {
-    import spark.implicits._
-    def pix(b: Int)(x: Int, y: Int, c: Int): Int =
-      (x * 17 + y * 29 + c * 37 + b * 53) % 180
-    // reference catalog: two images from different families
-    val ref = Seq(
-      100L -> Multimodal.encodePng(12, 10, 1, pix(0)),
-      101L -> Multimodal.encodePng(13, 10, 3, pix(1))).toDF("img_id", "payload")
-    val blocks = Multimodal.imageBlockTable(ref, "payload")
-    assert(blocks.count() <= 8, "two images yield at most 8 (band, bv) blocks")
-    // arriving stream: a brightness-shifted copy of ref 0 (Hamming 0
-    // -> must drop), a fresh family (keep), and junk (keep)
-    val arrivals = Seq(
-      1L -> Multimodal.encodePng(12, 10, 1, (x, y, c) => pix(0)(x, y, c) + 40),
-      2L -> Multimodal.encodePng(14, 11, 3, pix(4)),
-      3L -> "junk not an image".getBytes("UTF-8"))
-    // batch form first: the expected keep set
-    val keptBatch = graft.streaming.StreamingOps.dropImageNearDups(
-      arrivals.toDF("img_id", "payload"), "img_id", "payload", blocks)
-      .select("img_id").collect().map(_.getLong(0)).toSet
-    assert(!keptBatch.contains(1L), "hamming-0 copy must share every block and drop")
-    assert(keptBatch.contains(3L), "undecodable payloads must be kept")
-    assert(keptBatch.contains(2L), "the fresh family must survive (fixture families are >=11 bits apart)")
-    // streaming form: same verdicts, zero state rows
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val stream = MemoryStream[(Long, Array[Byte])](spark)
-    val out = graft.streaming.StreamingOps.dropImageNearDups(
-      stream.toDS().toDF("img_id", "payload"), "img_id", "payload", blocks)
-    val ckpt = java.nio.file.Files.createTempDirectory("imggate").toString
-    val q = out.writeStream.format("memory").queryName("img_gate_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(arrivals)
-      q.processAllAvailable()
-      val keptStream = spark.table("img_gate_out")
-        .select("img_id").collect().map(_.getLong(0)).toSet
-      assert(keptStream == keptBatch, "stream verdicts must equal the batch gate")
-      assert(q.lastProgress.stateOperators.map(_.numRowsTotal).sum == 0L)
-    } finally q.stop()
   }
 }

@@ -48,20 +48,6 @@ class ImportanceSpec extends SparkSpec {
     assert(counts === byBucket)
   }
 
-  test("logRatioWeights: the DSIR smoothed log-ratio formula") {
-    val counts = Importance.targetAffinityCounts(
-      corpus, "doc_id", "text", isTarget = col("lang") === "en",
-      n = 2, dim = dim, salt = "dsir")
-    val w = Importance.logRatioWeights(counts, dim)
-      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val totT = 5.0; val totR = 8.0 // from the corpus above
-    val ab = bucketOf("a b")
-    assert(w.contains(ab))
-    val expected = math.log((3.0 + 1) / (totT + dim)) -
-      math.log((3.0 + 1) / (totR + dim))
-    assert(math.abs(w(ab) - expected) < 1e-12)
-  }
-
   test("scoreAffinity: exact integer sums and the single-division score") {
     val counts = Importance.targetAffinityCounts(
       corpus, "doc_id", "text", isTarget = col("lang") === "en",
@@ -79,23 +65,6 @@ class ImportanceSpec extends SparkSpec {
     assert(scored(3L) === ((0L, 5L, 1.0 / 6.0)))
     // doc 4: no grams → smoothed prior
     assert(scored(4L) === ((0L, 0L, 1.0)))
-  }
-
-  test("scoreLogRatio matches a hand summation over the doc's grams") {
-    val counts = Importance.targetAffinityCounts(
-      corpus, "doc_id", "text", isTarget = col("lang") === "en",
-      n = 2, dim = dim, salt = "dsir")
-    val weights = Importance.logRatioWeights(counts, dim)
-    val wMap = weights.collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    val s = Importance.scoreLogRatio(
-      corpus, "doc_id", "text", weights, n = 2, dim = dim, salt = "dsir")
-      .select("doc_id", "dsir_score")
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val doc3 = Seq("x y", "y x", "x y").map(g => wMap(bucketOf(g))).sum
-    assert(math.abs(s(3L) - doc3) < 1e-9)
-    assert(s(4L) === 0.0) // gram-free doc scores 0 via the left join
-    // target-resembling docs outscore non-target ones
-    assert(s(1L) > s(3L) && s(2L) > s(3L))
   }
 
   test("resampleByAffinity: deterministic, monotone-shaped keep") {

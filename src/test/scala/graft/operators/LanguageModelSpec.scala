@@ -73,6 +73,15 @@ class LanguageModelSpec extends SparkSpec {
     assert(m(11L) == ((1L, 0L, 1L, 0.0)))
     assert(m(12L) == ((0L, 0L, 0L, null)))
     assert(m(13L) == ((2L, 1L, 1L, 0.5)))
+    // a NULL-text doc scores as an explicit zero row, not NULLs
+    val withNull = scoreDocs.unionByName(
+      Seq((14L, null.asInstanceOf[String])).toDF("doc_id", "text"))
+    val z = LanguageModel.perplexity(withNull, "doc_id", "text",
+      LanguageModel.ngramCounts(refDocs, "text", 1),
+      LanguageModel.ngramCounts(refDocs, "text", 2))
+      .filter($"doc_id" === 14L).collect()
+    assert(z.length == 1 &&
+      (z.head.getLong(1), z.head.getLong(2), z.head.getLong(3)) == ((0L, 0L, 0L)))
   }
 
   test("perplexity: hand-computed backoff log-probs (spec-gated floats)") {
@@ -87,16 +96,6 @@ class LanguageModelSpec extends SparkSpec {
     // doc 13: "c a" backs off via c1(a)=3 → ln(0.4 * 4/12); "a b" hits at ln(1)
     assert(math.abs(m(13L)._1 - math.log(0.4 / 3) / 2) < 1e-12)
     assert(math.abs(m(13L)._2 - math.sqrt(3.0 / 0.4)) < 1e-12)
-  }
-
-  test("perplexityFilter: gate keeps unscorable docs, drops only proven-high ppl") {
-    val kept = LanguageModel.perplexityFilter(
-      scoreDocs, "doc_id", "text",
-      LanguageModel.ngramCounts(refDocs, "text", 1),
-      LanguageModel.ngramCounts(refDocs, "text", 2), maxPpl = 5.0)
-      .filter($"keep").select("doc_id").collect().map(_.getLong(0)).toSet
-    // ppl: 10→1.73 keep, 11→30 drop, 12→null keep, 13→2.74 keep
-    assert(kept == Set(10L, 12L, 13L))
   }
 
   test("perplexity plan: gram joins are shuffled-hash, no unbounded nested loop") {
@@ -117,60 +116,5 @@ class LanguageModelSpec extends SparkSpec {
       fam >= 0 && fam <= n && rate >= 0.0 && rate <= 1.0 &&
         (n == 0 && rate == 0.0 || math.abs(rate - fam.toDouble / n) < 1e-15)
     })
-  }
-
-  test("perplexityColumn: native kernel == the batch joins (integers exact, floats to FP)") {
-    val uni = LanguageModel.ngramCounts(refDocs, "text", 1)
-    val bi = LanguageModel.ngramCounts(refDocs, "text", 2)
-    val (u, b, n, v) = LanguageModel.collectModel(uni, bi)
-    assert((n, v) == ((8L, 4L)), "hand-computed reference totals")
-    // include a NULL-text doc: the batch left-join path emits 0/0/0
-    // counts + NULL fracs for it, and the stream form must agree
-    val withNull = scoreDocs.unionByName(
-      Seq((14L, null.asInstanceOf[String])).toDF("doc_id", "text"))
-    val batch = LanguageModel.perplexity(withNull, "doc_id", "text", uni, bi)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    val stream = graft.streaming.StreamingOps.perplexityScoreStream(
-      withNull, "doc_id", "text", u, b, n, v)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(stream.keySet == batch.keySet && stream.contains(14L))
-    assert((stream(14L).getLong(1), stream(14L).getLong(2), stream(14L).getLong(3))
-      == ((0L, 0L, 0L)), "NULL text scores as an explicit zero row, not NULLs")
-    stream.foreach { case (id, s) =>
-      val g = batch(id)
-      assert((s.getLong(1), s.getLong(2), s.getLong(3)) ==
-        ((g.getLong(1), g.getLong(2), g.getLong(3))), s"integer tallies for $id")
-      assert(s.isNullAt(4) == g.isNullAt(4) &&
-        (s.isNullAt(4) || s.getDouble(4) == g.getDouble(4)),
-        s"hit_frac must be bit-identical for $id")
-      // avg_logprob/ppl: same logprobs summed in a different order
-      assert(s.isNullAt(5) == g.isNullAt(5) &&
-        (s.isNullAt(5) || math.abs(s.getDouble(5) - g.getDouble(5)) < 1e-12))
-      assert(s.isNullAt(6) == g.isNullAt(6) &&
-        (s.isNullAt(6) || math.abs(s.getDouble(6) - g.getDouble(6)) < 1e-12))
-    }
-  }
-
-  test("perplexityFilterStream: streaming gate == batch gate, zero state rows") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val uni = LanguageModel.ngramCounts(refDocs, "text", 1)
-    val bi = LanguageModel.ngramCounts(refDocs, "text", 2)
-    val (u, b, n, v) = LanguageModel.collectModel(uni, bi)
-    val stream = MemoryStream[(Long, String)](spark)
-    val out = graft.streaming.StreamingOps.perplexityFilterStream(
-      stream.toDS().toDF("doc_id", "text"), "text", u, b, n, v, maxPpl = 5.0)
-    val ckpt = java.nio.file.Files.createTempDirectory("lmgate").toString
-    val q = out.writeStream.format("memory").queryName("lm_gate_out")
-      .option("checkpointLocation", ckpt).start()
-    try {
-      stream.addData(Seq((10L, "a b c"), (11L, "a q"), (12L, "z"), (13L, "c a b")))
-      q.processAllAvailable()
-      val kept = spark.table("lm_gate_out").collect().map(_.getLong(0)).toSet
-      // the batch gate's verdicts: ppl 10→1.73 keep, 11→30 drop,
-      // 12→unscorable keep, 13→2.74 keep
-      assert(kept == Set(10L, 12L, 13L))
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows == 0L, s"pure expression gate must carry no state, got $stateRows")
-    } finally q.stop()
   }
 }

@@ -25,10 +25,12 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("wordShingles: n-grams, and short docs yield empty (no ANSI crash)") {
+    def shingles(text: String, n: Int) =
+      graft.functions.GraftFunctions.shingles(split(lit(text), " "), n)
     val df = docs(1L -> "ignored").select(
-      Dedup.wordShingles(lit("a b c d"), 2).as("s2"),
-      Dedup.wordShingles(lit("a"), 2).as("short"),
-      Dedup.wordShingles(lit("a b"), 3).as("nMinus1"))
+      shingles("a b c d", 2).as("s2"),
+      shingles("a", 2).as("short"),
+      shingles("a b", 3).as("nMinus1"))
     val r = df.head()
     assert(r.getSeq[String](0) == Seq("a b", "b c", "c d"))
     assert(r.getSeq[String](1) == Seq())
@@ -166,10 +168,9 @@ class OperatorsSpec extends SparkSpec {
   }
 
   test("simhash64: deterministic, lowercase 16-hex, order-insensitive over token sets") {
-    val out = Dedup.withSimhash64(
+    val out = Dedup.simhash64ByKey(
       docs(1L -> "alpha beta gamma", 2L -> "gamma alpha beta", 3L -> "different content entirely"),
-      "text", "sh")
-      .select("doc_id", "sh").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+      "doc_id", "text", "sh").collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(out(1L) == out(2L)) // same token set
     assert(out(1L) != out(3L))
     assert(out(1L).matches("[0-9a-f]{16}"))
@@ -179,7 +180,7 @@ class OperatorsSpec extends SparkSpec {
     val df = docs(
       1L -> "alpha beta gamma", 2L -> "the quick brown fox", 3L -> "", 4L -> "solo",
       5L -> "repeat repeat repeat distinct")
-    val a = Dedup.withSimhash64(df, "text", "sh").select("doc_id", "sh")
+    val a = DedupOracle.withSimhash64(df, "text", "sh").select("doc_id", "sh")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
     val b = Dedup.simhash64ByKey(df, "doc_id", "text", "sh")
       .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -196,9 +197,9 @@ class OperatorsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(out.toSeq == Seq((1L, 2L, 0L)))
     // the verify bound holds: recomputed hamming of the pair is what the op reports
-    val hams = Dedup.withSimhash64(
+    val hams = Dedup.simhash64ByKey(
       docs(1L -> "alpha beta gamma delta epsilon", 3L -> "utterly unrelated words compose this document here"),
-      "text", "sh").select("sh").collect().map(_.getString(0))
+      "doc_id", "text", "sh").select("sh").collect().map(_.getString(0))
     val full = java.lang.Long.bitCount(
       java.lang.Long.parseUnsignedLong(hams(0), 16) ^ java.lang.Long.parseUnsignedLong(hams(1), 16))
     assert(full > 3) // and that's why doc 3 paired with nobody
@@ -1049,7 +1050,7 @@ class OperatorsSpec extends SparkSpec {
     val rnd = new scala.util.Random(23)
     val vecs = (1L to 50L).map(i => (i, Seq.fill(16)((rnd.nextFloat() - 0.5f) * 10f)))
     val rows = vecs.toDF("vec_id", "embedding")
-      .select(col("vec_id"), col("embedding"), Similarity.quantizeInt8(col("embedding")).as("q"))
+      .select(col("vec_id"), col("embedding"), SimilarityOracle.quantizeInt8(col("embedding")).as("q"))
       .collect()
     rows.foreach { r =>
       val emb = r.getSeq[Float](1)
@@ -1072,7 +1073,7 @@ class OperatorsSpec extends SparkSpec {
     val df = Seq(
       (1L, Seq(1.0f, -0.5f, 0.25f, 0.0f)),
       (2L, Seq(0.0f, 0.0f))).toDF("vec_id", "embedding")
-    val out = df.select(col("vec_id"), Similarity.quantizeInt8(col("embedding")).as("q"))
+    val out = df.select(col("vec_id"), SimilarityOracle.quantizeInt8(col("embedding")).as("q"))
       .orderBy("vec_id")
       .collect().map(r => (r.getLong(0), r.getStruct(1).getDouble(0), r.getStruct(1).getSeq[Int](1)))
     assert(out(0) == ((1L, 1.0d, Seq(127, -63, 31, 0)))) // -63.5/31.75 truncate toward zero

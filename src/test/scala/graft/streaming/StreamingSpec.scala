@@ -14,8 +14,8 @@ import graft.control.{Health, LagListener}
 
 /** End-to-end streaming slice: memory-sourced and `graft-cdc` frames
   * → decode → filter → changelog sink + state MERGE, surviving a
-  * restart from checkpoint; the streaming operators; health endpoint;
-  * progress listener; shutdown hook. */
+  * restart from checkpoint; health endpoint; progress listener;
+  * shutdown hook. */
 class StreamingSpec extends SparkSpec {
 
   private def tmp(prefix: String): String =
@@ -466,8 +466,9 @@ class StreamingSpec extends SparkSpec {
     // late-drop below can only come from the commit-time column
     CdcDecode.resetStream("stream_ct")
     val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
-    val counts = CdcDecode
-      .withCommitEventTime(CdcDecode.decode(stream.toDS().coalesce(1), "stream_ct"))
+    val counts = CdcDecode.decode(stream.toDS().coalesce(1), "stream_ct").toDF()
+      .withColumn("event_time",
+        timestamp_micros(coalesce(col("commitMicros"), col("timestampMicros"))))
       .withWatermark("event_time", "10 minutes")
       .groupBy(window(col("event_time"), "10 minutes"))
       .agg(count(lit(1)).as("n"))
@@ -579,118 +580,6 @@ class StreamingSpec extends SparkSpec {
     assert(nChunks == Map(1L -> 3L, 2L -> 1L))
   }
 
-  test("dropSimhashNearDups: stream docs matching the static corpus are dropped") {
-    import spark.implicits._
-    val ref = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta"),
-      (101L, "one two three four five six")).toDF("doc_id", "text")
-    val refBlocks = graft.operators.Dedup.simhashBlockTable(ref, "doc_id", "text")
-    val stream = MemoryStream[(Long, String)](spark)
-    val out = graft.streaming.StreamingOps.dropSimhashNearDups(
-      stream.toDS().toDF("doc_id", "text"), "doc_id", "text", refBlocks)
-    val q = out.writeStream.format("memory").queryName("incdedup_out")
-      .option("checkpointLocation", tmp("chk_incdedup")).start()
-    try {
-      stream.addData(Seq(
-        (1L, "alpha beta gamma delta epsilon zeta"), // exact dup of ref 100 → dropped
-        (2L, "totally unrelated words with nothing shared here at all")))
-      q.processAllAvailable()
-    } finally q.stop()
-    val kept = spark.table("incdedup_out").select("doc_id").collect().map(_.getLong(0)).toSeq
-    assert(kept == Seq(2L), s"kept=$kept")
-    // batch sanity: the survivor's schema is unchanged (helper cols dropped)
-    assert(spark.table("incdedup_out").columns.toSeq == Seq("doc_id", "text"))
-    // plan shape: four per-band broadcast EQUI probes, never a
-    // nested-loop walk of the reference table per doc
-    val batch = Seq((1L, "alpha beta gamma delta epsilon zeta")).toDF("doc_id", "text")
-    val plan = graft.streaming.StreamingOps
-      .dropSimhashNearDups(batch, "doc_id", "text", refBlocks)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
-    assert("BroadcastHashJoin".r.findAllIn(plan).length == 4, plan)
-  }
-
-  test("flatMapGroupsWithState running counts accumulate across batches") {
-    import spark.implicits._
-    val stream = MemoryStream[String](spark)
-    val out = StreamingOps.runningCounts(stream.toDS().toDF("k"), "k")
-    val q = out.toDF().writeStream.format("memory").queryName("rc_out")
-      .outputMode("update")
-      .option("checkpointLocation", tmp("chk_rc")).start()
-    try {
-      stream.addData(Seq("a", "a", "b"))
-      q.processAllAvailable()
-      stream.addData(Seq("a", "b", "b", "c"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("rc_out")
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    // batch 1 emissions + batch 2 emissions with carried state
-    assert(rows == Set(
-      ("a", 2L, 2L), ("b", 1L, 1L),                 // batch 1
-      ("a", 3L, 1L), ("b", 3L, 2L), ("c", 1L, 1L))) // batch 2
-  }
-
-  test("streaming uniform sample converges to the batch uniformPerKey over the union of batches") {
-    import spark.implicits._
-    val stream = MemoryStream[(String, String)](spark)
-    val out = StreamingOps.uniformSampleStream(
-      stream.toDS().toDF("src", "id"), "src", "id", k = 3, salt = "us1")
-    val q = out.toDF().writeStream.format("memory").queryName("us_out")
-      .outputMode("update")
-      .option("checkpointLocation", tmp("chk_us")).start()
-    val b1 = (1 to 10).map(i => ("s1", s"d$i")) ++ (1 to 4).map(i => ("s2", s"e$i"))
-    val b2 = (11 to 20).map(i => ("s1", s"d$i")) ++ Seq(("s1", "d3"), ("s1", "d3")) // repeats absorbed
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      stream.addData(b2); q.processAllAvailable()
-    } finally q.stop()
-    // LAST emission per key = the sample after the full feed
-    val last = spark.table("us_out").collect()
-      .map(r => (r.getString(0), r.getSeq[String](1)))
-      .groupBy(_._1).map { case (k, v) => k -> v.last._2.sorted.toSeq }
-    // batch reference: uniformPerKey over the union, same salt/k
-    val union = (b1 ++ b2).toDF("src", "id")
-    val ref = graft.operators.Sampling.uniformPerKey(union.dropDuplicates(), "src", "id", 3, "us1")
-      .select("src", "id")
-      .collect().map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sorted.toSeq }
-    assert(last == ref, "streaming hash-min-k must equal batch rank-by-hash selection")
-    assert(last("s1").size == 3 && last("s2").size == 3)
-  }
-
-  test("transformWithState running counts == flatMapGroupsWithState on the same feed") {
-    import spark.implicits._
-    // named-state API needs the RocksDB provider (column families)
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val stream = MemoryStream[String](spark)
-      val out = StreamingOps.runningCountsTws(stream.toDS().toDF("k"), "k")
-      val q = out.toDF().writeStream.format("memory").queryName("rc_tws_out")
-        .outputMode("update")
-        .option("checkpointLocation", tmp("chk_rc_tws")).start()
-      try {
-        stream.addData(Seq("a", "a", "b"))
-        q.processAllAvailable()
-        stream.addData(Seq("a", "b", "b", "c"))
-        q.processAllAvailable()
-      } finally q.stop()
-      val rows = spark.table("rc_tws_out")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-      // the EXACT emission set the flatMapGroupsWithState test pins —
-      // the two state APIs must be observationally identical here
-      assert(rows == Set(
-        ("a", 2L, 2L), ("b", 1L, 1L),
-        ("a", 3L, 1L), ("b", 3L, 2L), ("c", 1L, 1L)))
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
-
   test("CdcConfig.fromEnv (C2) parses a full env map and applies defaults") {
     val cfg = graft.control.CdcConfig.fromEnv(Map(
       "CDC_STREAM_ID" -> "s1",
@@ -780,276 +669,5 @@ class StreamingSpec extends SparkSpec {
       health.close()
       spark.streams.removeListener(listener)
     }
-  }
-
-  test("streaming minhash candidates == batch minhashCandidatePairs on every prefix") {
-    import spark.implicits._
-    val stream = MemoryStream[(Long, String)](spark)
-    val out = StreamingOps.nearDupCandidatesStream(
-      stream.toDS().toDF("doc_id", "text"), "doc_id", "text",
-      n = 3, k = 12, rowsPerBand = 3)
-    val q = out.toDF().writeStream.format("memory").queryName("ndc_out")
-      .outputMode("append")
-      .option("checkpointLocation", tmp("chk_ndc")).start()
-    // two near-dup families + unrelated bulk, split across batches so
-    // cross-batch pairs must come from the state store
-    val fam1 = "the quick brown fox jumps over the lazy dog again and again"
-    val fam2 = "spark builds a logical plan and catalyst optimizes the physical plan"
-    val b1 = Seq(
-      1L -> fam1,
-      2L -> (fam1 + " tail"),
-      10L -> fam2,
-      50L -> "completely unrelated text with no shared shingles at all here")
-    val b2 = Seq(
-      3L -> (fam1 + " other"),
-      11L -> (fam2 + " extended"),
-      51L -> "another fully distinct document about nothing in particular today")
-    def streamedPairs(): Set[(String, String)] =
-      spark.table("ndc_out").collect()
-        .map(r => (r.getString(0), r.getString(1))).toSet
-    def batchPairs(rows: Seq[(Long, String)]): Set[(String, String)] = {
-      val sig = graft.operators.Dedup.minhashSignatureOver(
-        rows.toDF("doc_id", "text"), "doc_id",
-        graft.operators.Dedup.wordShingles(col("text"), 3), 12)
-      graft.operators.Dedup.minhashCandidatePairs(sig, "doc_id", 12, 3)
-        .collect().map(r => (r.get(0).toString, r.get(1).toString)).toSet
-    }
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      val p1 = streamedPairs()
-      assert(p1 == batchPairs(b1), "prefix 1 must equal the batch candidate set")
-      assert(p1.contains(("1", "2")), "family-1 pair expected in batch 1")
-      stream.addData(b2); q.processAllAvailable()
-      val p2 = streamedPairs()
-      assert(p2 == batchPairs(b1 ++ b2), "full feed must equal the batch candidate set")
-      assert(p2.contains(("10", "11")), "cross-batch family-2 pair must come from state")
-    } finally q.stop()
-  }
-
-  test("indexed streaming candidates == batch pairs; state store stays EMPTY") {
-    import spark.implicits._
-    val fam1 = "the quick brown fox jumps over the lazy dog again and again"
-    val fam2 = "spark builds a logical plan and catalyst optimizes the physical plan"
-    val b1 = Seq(
-      1L -> fam1,
-      2L -> (fam1 + " tail"),
-      10L -> fam2,
-      50L -> "completely unrelated text with no shared shingles at all here")
-    val b2 = Seq(
-      3L -> (fam1 + " other"),
-      11L -> (fam2 + " extended"),
-      51L -> "another fully distinct document about nothing in particular today")
-    def batchPairs(rows: Seq[(Long, String)]): Set[(String, String)] = {
-      val sig = graft.operators.Dedup.minhashSignatureOver(
-        rows.toDF("doc_id", "text"), "doc_id",
-        graft.operators.Dedup.wordShingles(col("text"), 3), 12)
-      graft.operators.Dedup.minhashCandidatePairs(sig, "doc_id", 12, 3)
-        .collect().map(r => (r.get(0).toString, r.get(1).toString)).toSet
-    }
-    val idxDir = tmp("ndx_idx")
-    val emitted = scala.collection.mutable.Set.empty[(String, String)]
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = stream.toDS().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        emitted ++= StreamingOps.nearDupCandidatesIndexed(
-          batch, id, "doc_id", "text", n = 3, k = 12, rowsPerBand = 3,
-          indexDir = idxDir)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-        ()
-      }
-      .option("checkpointLocation", tmp("chk_ndx")).start()
-    try {
-      stream.addData(b1); q.processAllAvailable()
-      assert(emitted.toSet == batchPairs(b1), "prefix 1 must equal the batch candidate set")
-      stream.addData(b2); q.processAllAvailable()
-      assert(emitted.toSet == batchPairs(b1 ++ b2),
-        "full feed must equal the batch candidate set")
-      assert(emitted.contains(("10", "11")),
-        "cross-batch family-2 pair must come from the persisted index")
-      // THE claim this operator exists for: zero state-store rows —
-      // membership lives in the parquet index, not executor state
-      val stateRows = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-      assert(stateRows == 0L, s"state store must stay empty, found $stateRows rows")
-      // retry idempotence: re-running a batchId against the same
-      // history reproduces its pair set and leaves the index unchanged
-      val idxBefore = spark.read.option("recursiveFileLookup", "true")
-        .parquet(idxDir).collect().map(_.toString).sorted.toSeq
-      val replay = StreamingOps.nearDupCandidatesIndexed(
-        b2.toDF("doc_id", "text"), 1L, "doc_id", "text",
-        n = 3, k = 12, rowsPerBand = 3, indexDir = idxDir)
-        .collect().map(r => (r.getString(0), r.getString(1))).toSet
-      val idxAfter = spark.read.option("recursiveFileLookup", "true")
-        .parquet(idxDir).collect().map(_.toString).sorted.toSeq
-      assert(idxBefore == idxAfter, "retry must leave the index unchanged")
-      assert((emitted.toSet -- batchPairs(b1)) subsetOf replay,
-        "retry must re-emit the batch's cross+within pairs")
-    } finally q.stop()
-  }
-
-  test("index compaction: identical pairs + memberships, collapsed dirs, idempotent") {
-    import spark.implicits._
-    val fam1 = "the quick brown fox jumps over the lazy dog again and again"
-    val fam2 = "spark builds a logical plan and catalyst optimizes the physical plan"
-    // six micro-batches that keep adding members to both families
-    val batches: Seq[Seq[(Long, String)]] = (0 until 6).map { b =>
-      Seq(
-        (10L * b + 1) -> (fam1 + (" x" * b)),
-        (10L * b + 2) -> (fam2 + (" y" * b)),
-        (10L * b + 3) -> s"unique filler document number $b about nothing shared")
-    }
-    def run(idxDir: String, compactEvery: Option[Int]): Set[(String, String)] = {
-      val out = scala.collection.mutable.Set.empty[(String, String)]
-      batches.zipWithIndex.foreach { case (rows, id) =>
-        out ++= StreamingOps.nearDupCandidatesIndexed(
-          rows.toDF("doc_id", "text"), id.toLong, "doc_id", "text",
-          n = 3, k = 12, rowsPerBand = 3, indexDir = idxDir)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-        compactEvery.foreach { n =>
-          if ((id + 1) % n == 0)
-            StreamingOps.compactNearDupIndex(spark, idxDir, targetFiles = 2)
-        }
-      }
-      out.toSet
-    }
-    def index(idxDir: String): Seq[String] =
-      spark.read.option("recursiveFileLookup", "true").parquet(idxDir)
-        .collect().map(_.toString).sorted.toSeq
-    val plain = tmp("ndc_plain")
-    val compacted = tmp("ndc_compact")
-    val pairsPlain = run(plain, None)
-    val pairsCompacted = run(compacted, Some(2))
-    assert(pairsPlain.nonEmpty && pairsCompacted == pairsPlain,
-      "compaction must not change the cumulative pair set")
-    assert(index(compacted) == index(plain),
-      "compaction must preserve the admitted memberships exactly")
-    def dirs(p: String): Seq[String] = new java.io.File(p).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs(plain).size == 6, s"plain run keeps one dir per batch: ${dirs(plain)}")
-    assert(dirs(compacted) == Seq("b5", "c4"),
-      s"compacted run must hold one c-dir + the newest b-dir, got ${dirs(compacted)}")
-    // idempotence / crash-rerun: an immediate second pass is a no-op
-    StreamingOps.compactNearDupIndex(spark, compacted, targetFiles = 2)
-    assert(dirs(compacted) == Seq("b5", "c4") && index(compacted) == index(plain),
-      "re-running compaction must change nothing")
-  }
-
-  test("fresh checkpoint against a populated indexDir is REFUSED, not silently overwritten") {
-    import spark.implicits._
-    val fam = "the quick brown fox jumps over the lazy dog again and again"
-    val idxDir = tmp("ndx_reset_idx")
-    // populate the index: batches 0 and 1 under the "old" checkpoint
-    Seq(0L, 1L).foreach { id =>
-      StreamingOps.nearDupCandidatesIndexed(
-        Seq((10 * id + 1) -> (fam + s" v$id")).toDF("doc_id", "text"),
-        id, "doc_id", "text", n = 3, k = 12, rowsPerBand = 3,
-        indexDir = idxDir).collect()
-    }
-    // direct form: batchId below the newest member id = lifecycle split
-    val ex = intercept[IllegalStateException] {
-      StreamingOps.nearDupCandidatesIndexed(
-        Seq(99L -> (fam + " reset")).toDF("doc_id", "text"),
-        0L, "doc_id", "text", n = 3, k = 12, rowsPerBand = 3,
-        indexDir = idxDir).collect()
-    }
-    assert(ex.getMessage.contains("checkpoint was reset"), ex.getMessage)
-    // retry of the NEWEST batch stays legal (idempotent overwrite)
-    StreamingOps.nearDupCandidatesIndexed(
-      Seq(11L -> (fam + " v1")).toDF("doc_id", "text"),
-      1L, "doc_id", "text", n = 3, k = 12, rowsPerBand = 3,
-      indexDir = idxDir).collect()
-    // end-to-end: a restarted query with a FRESH checkpoint (batchIds
-    // restart at 0) against the same indexDir must fail, not corrupt
-    val stream = MemoryStream[(Long, String)](spark)
-    val q = stream.toDS().toDF("doc_id", "text").writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
-        StreamingOps.nearDupCandidatesIndexed(
-          batch, id, "doc_id", "text", n = 3, k = 12, rowsPerBand = 3,
-          indexDir = idxDir).collect()
-        ()
-      }
-      .option("checkpointLocation", tmp("chk_ndx_fresh")).start()
-    try {
-      stream.addData(Seq(200L -> (fam + " after reset")))
-      val qe = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        q.processAllAvailable()
-      }
-      def causes(t: Throwable): Seq[Throwable] =
-        if (t == null) Seq.empty else t +: causes(t.getCause)
-      assert(causes(qe).exists(c => c.isInstanceOf[IllegalStateException] &&
-        c.getMessage.contains("checkpoint was reset")),
-        s"expected the lifecycle refusal in the cause chain: $qe")
-    } finally q.stop()
-    // and the index history survived untouched: b0, b1 intact
-    val dirs = new java.io.File(idxDir).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs == Seq("b0", "b1"), s"history must survive the refusal: $dirs")
-  }
-
-  test("compaction crash between rename and source-delete: reads stay correct, next pass converges") {
-    import spark.implicits._
-    val fam1 = "the quick brown fox jumps over the lazy dog again and again"
-    val fam2 = "spark builds a logical plan and catalyst optimizes the physical plan"
-    val batches: Seq[Seq[(Long, String)]] = (0 until 4).map { b =>
-      Seq(
-        (10L * b + 1) -> (fam1 + (" x" * b)),
-        (10L * b + 2) -> (fam2 + (" y" * b)))
-    }
-    def feed(idxDir: String, upTo: Int): Set[(String, String)] = {
-      val out = scala.collection.mutable.Set.empty[(String, String)]
-      (0 until upTo).foreach { id =>
-        out ++= StreamingOps.nearDupCandidatesIndexed(
-          batches(id).toDF("doc_id", "text"), id.toLong, "doc_id", "text",
-          n = 3, k = 12, rowsPerBand = 3, indexDir = idxDir)
-          .collect().map(r => (r.getString(0), r.getString(1)))
-      }
-      out.toSet
-    }
-    def copyDir(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        src.listFiles().foreach(f => copyDir(f, new java.io.File(dst, f.getName)))
-      } else java.nio.file.Files.copy(src.toPath, dst.toPath)
-    }
-    // control: clean run of all 4 batches, compacted at the end
-    val control = tmp("ndc_ctl")
-    val controlPairs = feed(control, 4)
-    // crashed: 3 batches, compact (c1 + b2), then PLANT the
-    // post-rename / pre-source-delete state by restoring b0, b1
-    val crashed = tmp("ndc_crash")
-    feed(crashed, 3)
-    val saved = new java.io.File(tmp("ndc_saved"))
-    Seq("b0", "b1").foreach(d =>
-      copyDir(new java.io.File(crashed, d), new java.io.File(saved, d)))
-    StreamingOps.compactNearDupIndex(spark, crashed, targetFiles = 2)
-    Seq("b0", "b1").foreach(d =>
-      copyDir(new java.io.File(saved, d), new java.io.File(crashed, d)))
-    def dirs(p: String): Seq[String] = new java.io.File(p).listFiles()
-      .filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirs(crashed) == Seq("b0", "b1", "b2", "c1"),
-      s"planted crash state: ${dirs(crashed)}")
-    // batch 3 reads the crashed index: the covered-by-c invariant must
-    // ignore the stale b0/b1 (double-counted buckets would corrupt
-    // admission), so its pairs equal the control's batch-3 pairs
-    val p3 = StreamingOps.nearDupCandidatesIndexed(
-      batches(3).toDF("doc_id", "text"), 3L, "doc_id", "text",
-      n = 3, k = 12, rowsPerBand = 3, indexDir = crashed)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    val ctl3 = StreamingOps.nearDupCandidatesIndexed(
-      batches(3).toDF("doc_id", "text"), 3L, "doc_id", "text",
-      n = 3, k = 12, rowsPerBand = 3, indexDir = control)
-      .collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(p3 == ctl3 && p3.nonEmpty,
-      s"covered b-dirs must not affect reads: got $p3 vs control $ctl3")
-    // next compaction pass converges: recovery sweep removes the
-    // stale sources, memberships equal the control index exactly
-    StreamingOps.compactNearDupIndex(spark, crashed, targetFiles = 2)
-    StreamingOps.compactNearDupIndex(spark, control, targetFiles = 2)
-    def index(p: String): Seq[String] =
-      spark.read.option("recursiveFileLookup", "true").parquet(p)
-        .collect().map(_.toString).sorted.toSeq
-    assert(index(crashed) == index(control),
-      "post-recovery memberships must equal the clean run")
-    assert(dirs(crashed) == dirs(control),
-      s"post-recovery layout must converge: ${dirs(crashed)} vs ${dirs(control)}")
   }
 }

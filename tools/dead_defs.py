@@ -3,14 +3,18 @@
 
 A name-reference scan, not a call graph: for each public member
 `def`/`val` declared in `src/main`, count the occurrences of the name
-as a whole word across the text of `src/main` and `perfbench/src`.
-A name seen exactly once - its own declaration - is reachable from
-specs at most, so no main, query, stress arm or perfbench entry point
-runs it. A name mentioned only in a comment counts as used, so the
-scan errs towards silence. Overrides, implicits, locals (a `def`/`val`
-nested in a `def`/`val` body; the compiler's unused lint covers those)
-and names the language calls implicitly (`main`, `apply`, ...) are
-skipped.
+as a whole word across the code of `src/main` and `perfbench/src`.
+Comments and the plain text of string literals do not count; the
+identifiers an interpolated string splices in (`$x`, `${...}`) do. A
+name seen exactly once - its own declaration - is reachable from specs
+at most, so no main, query, stress arm or perfbench entry point runs
+it. Overrides, implicits, locals (a `def`/`val` nested in a `def`/`val`
+body; the compiler's unused lint covers those) and names the language
+calls implicitly (`main`, `apply`, ...) are skipped.
+
+The count is by name, not by owner: a member that shares its name
+with another member, or with any identifier in the code, hides from
+the scan even when nothing calls it.
 
 Prints `file:line name` per finding. Names in KEEP are printed with
 their reason and do not fail the scan; any other finding makes the
@@ -35,6 +39,10 @@ KEEP = {
     "lastObservedDrops": "Dedup: drop counter the drop report reads (item 5)",
     "resetObservedDrops": "Dedup: drop counter the drop report reads (item 5)",
     "typeMsg": "PgOutput.Encoder: the encoder covers the whole pgoutput wire format",
+    "truncate": "PgOutput.Encoder: the encoder covers the whole pgoutput wire format",
+    "message": "PgOutput.Encoder: the encoder covers the whole pgoutput wire format",
+    "origin": "PgOutput.Encoder: the encoder covers the whole pgoutput wire format",
+    "droppedUnknownRelation": "PgOutput.Decoder: drop counter the drop report reads (item 5)",
     "readFeedback": "CdcFrameFiles: reads the feedback file the graft-cdc source publishes",
 }
 
@@ -50,9 +58,10 @@ TEMPLATE = re.compile(r"^\s*(?:(?:final|sealed|abstract|private|case)(?:\[\w+\])
 WORD = re.compile(r"[A-Za-z_][A-Za-z0-9_]*")
 
 
-def strip(src):
-    """Blank out comments and string literals, keeping line breaks (the
-    structure pass reads indentation and keywords only)."""
+def code(src):
+    """The code of `src`, keeping its line breaks: comments and string
+    text are removed, but the identifiers an interpolated string
+    splices in (`$x`, `${...}`) stay, on the line the string opens."""
     out, i, n = [], 0, len(src)
     while i < n:
         if src.startswith("//", i):
@@ -61,24 +70,44 @@ def strip(src):
         elif src.startswith("/*", i):
             j = src.find("*/", i + 2)
             j = n if j < 0 else j + 2
-            out.append("\n" * src.count("\n", i, j))
-            i = j
-        elif src.startswith('"""', i):
-            j = src.find('"""', i + 3)
-            j = n if j < 0 else j + 3
-            while j < n and src[j] == '"':
-                j += 1
-            out.append('""' + "\n" * src.count("\n", i, j))
+            out.append(" " + "\n" * src.count("\n", i, j))
             i = j
         elif src[i] == '"':
-            j = i + 1
-            while j < n and src[j] != '"' and src[j] != "\n":
-                j += 2 if src[j] == "\\" else 1
-            out.append('""')
-            i = j + 1
+            interpolated = i > 0 and (src[i - 1].isalnum() or src[i - 1] == "_")
+            triple = src.startswith('"""', i)
+            j = i + (3 if triple else 1)
+            spliced = []
+            while j < n:
+                if triple and src.startswith('"""', j):
+                    j += 3
+                    while j < n and src[j] == '"':
+                        j += 1
+                    break
+                if not triple and src[j] in '"\n':
+                    j += 1
+                    break
+                if src[j] == "\\" and not triple:
+                    j += 2
+                elif interpolated and src.startswith("${", j):
+                    depth, k = 1, j + 2
+                    while k < n and depth:
+                        depth += {"{": 1, "}": -1}.get(src[k], 0)
+                        k += 1
+                    spliced.append(code(src[j + 2:k - 1]))
+                    j = k
+                elif interpolated and src[j] == "$":
+                    m = WORD.match(src, j + 1)
+                    if m:
+                        spliced.append(m.group(0))
+                    j = m.end() if m else j + 2
+                else:
+                    j += 1
+            out.append(" " + " ".join(s.replace("\n", " ") for s in spliced) + " "
+                       + "\n" * src.count("\n", i, j))
+            i = j
         elif src.startswith("'", i) and i + 2 < n and (src[i + 2] == "'" or src[i + 1] == "\\"):
             j = src.find("'", i + 2)
-            out.append("' '")
+            out.append(" ")
             i = n if j < 0 else j + 1
         else:
             out.append(src[i])
@@ -115,12 +144,12 @@ def main():
     for top in (MAIN, PERFBENCH):
         for path in scala_files(top):
             with open(path, encoding="utf-8") as fh:
-                text = fh.read()
+                text = code(fh.read())
             for w in WORD.findall(text):
                 counts[w] = counts.get(w, 0) + 1
             if top == MAIN:
                 decls += [(os.path.relpath(path, ROOT), no, name)
-                          for no, name in members(strip(text))]
+                          for no, name in members(text)]
     unknown = 0
     for path, no, name in sorted(decls):
         if counts.get(name, 0) != 1:
