@@ -1,13 +1,17 @@
 package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.UUID
+import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, Future, ThreadFactory, TimeUnit, TimeoutException}
+import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.{DataType, LongType, StructType}
 
 import graft.cdc._
@@ -76,52 +80,56 @@ object CdcPipeline {
     * rows. K1 needs no cache and no repartition: a stream decodes as
     * one LSN-ordered partition, written once.
     *
-    * Snapshots ride beside K1 ([[graft.util.Jobs.concurrently]]): the
-    * first batch writes the caller's `base` as the initial snapshot,
-    * and a batch that finds the tail's bytes at or above the
-    * snapshot's compacts the tail into a new snapshot, so the state's
-    * write and read amplification stay within 2× with no knob.
+    * The first batch writes the caller's `base` as the initial
+    * snapshot beside K1 ([[graft.util.Jobs.concurrently]]). A batch
+    * that finds the tail's bytes at or above the snapshot's hands the
+    * manifest it found to the store's background compactor
+    * (`StateStore.compactInBackground`) and does not wait for it,
+    * so the state's write and read amplification stay within 2× with
+    * no knob and a compaction never blocks a batch.
     *
     * Exactly-once: Structured Streaming replays the last uncommitted
     * batch after a crash, so each effect is idempotent per `batchId`:
     *  - the manifest names only batches whose K1 write completed and
-    *    only whole snapshot versions, and moves atomically after both;
-    *  - K1 writes a `batch=<id>` subdirectory with OVERWRITE, and a
-    *    compaction writes `v=<last tail batch>` the same way, never
-    *    reading the version it writes, so a replay of a batch that
-    *    failed before the manifest moved redoes both;
-    *  - a replayed batch that the manifest already holds does nothing.
-    * When either write throws, the other's Spark jobs are cancelled
-    * and awaited before the exception leaves this method, so the
-    * replay never races a stale write. */
+    *    only whole snapshot versions; a batch moves it after K1, and a
+    *    compaction after its snapshot's files and schema;
+    *  - K1 writes a `batch=<id>` subdirectory with OVERWRITE, so a
+    *    replay of a batch that failed before the manifest moved redoes
+    *    it; a compaction writes `v=<last tail batch>` the same way,
+    *    and a version the manifest never named is deleted once a
+    *    later snapshot passes it;
+    *  - a replayed batch that the manifest already holds does nothing;
+    *  - a failed compaction is rethrown by the next batch before it
+    *    writes anything, so the stream stops and its restart retries.
+    * When K1 or the initial snapshot throws, the other's Spark jobs
+    * are cancelled and awaited before the exception leaves this
+    * method, so the replay never races a stale write. */
   def processBatch(batch: DataFrame, batchId: Long, base: DataFrame,
       cfg: SinkConfig, store: StateStore): Unit = {
+    store.rethrowFailure()
     val before = store.manifest
     if (before.forall(_.version < batchId)) {
       val published = cfg.publishedTables
         .map(ts => batch.filter(col("table").isin(ts.toSeq: _*)))
         .getOrElse(batch)
-      val (snapshot, tail, compact) = before match {
-        case None => (batchId - 1, Nil, Some(() => base))
-        case Some(m) if store.compacts(m) =>
-          (m.version, Nil, Some(() => store.open(batch.sparkSession, m)))
-        case Some(m) => (m.snapshot, m.tail, None)
-      }
-      Jobs.concurrently(
-        (() => published.write.mode("overwrite").partitionBy("table")
-          .parquet(s"${cfg.eventsOutDir}/batch=$batchId")) +:
-          compact.map(state => () => store.writeSnapshot(state(), snapshot)).toSeq: _*)
-      store.commit(StateStore.Manifest(snapshot, tail :+ batchId, Some(StateStore.Log(
-        cfg.eventsOutDir, cfg.table, cfg.keyCol, cfg.valueCols, published.schema))))
+      before.filter(store.compacts).foreach(store.compactInBackground(batch.sparkSession, _))
+      val k1 = () => published.write.mode("overwrite").partitionBy("table")
+        .parquet(s"${cfg.eventsOutDir}/batch=$batchId")
+      if (before.isEmpty) Jobs.concurrently(k1, () => store.writeSnapshot(base, batchId - 1))
+      else k1()
+      store.append(batchId, StateStore.Log(
+        cfg.eventsOutDir, cfg.table, cfg.keyCol, cfg.valueCols, published.schema))
     }
   }
 
   /** Run the full slice. Offsets live in the checkpoint (write-ahead,
     * replayable) and [[processBatch]] is idempotent per batch id, so
-    * the pipeline is exactly-once end-to-end across crash/restart. */
+    * the pipeline is exactly-once end-to-end across crash/restart.
+    * The state store is closed when the query terminates, so no
+    * compaction outlives it. */
   def run(events: Dataset[CdcEvent], base: DataFrame, cfg: SinkConfig): StreamingQuery = {
     val store = new StateStore(cfg.stateDir)
-    CdcDecode.toWireDf(events)
+    val query = CdcDecode.toWireDf(events)
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(Trigger.ProcessingTime("0 seconds"))
@@ -129,7 +137,27 @@ object CdcPipeline {
         processBatch(batch, batchId, base, cfg, store)
       }
       .start()
+    stores.put(query.id, store)
+    val streams = events.sparkSession.streams
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
+        if (e.id == query.id) { streams.removeListener(this); closeStore(query) }
+    }
+    streams.addListener(listener)
+    // a query that ended before the listener was added posts no event to it
+    if (!query.isActive) { streams.removeListener(listener); closeStore(query) }
+    query
   }
+
+  /** The state store of each query [[run]] started, until it is closed. */
+  private val stores = new ConcurrentHashMap[UUID, StateStore]()
+
+  /** Close the query's store; removed from [[stores]] only after, so a
+    * second caller also waits for the close. */
+  private def closeStore(query: StreamingQuery): Unit =
+    Option(stores.get(query.id)).foreach { s => s.close(); stores.remove(query.id) }
 
   /** The C4 stop action, exposed so its behavior is testable without
     * a JVM shutdown: stops the query if (and only if) still active. */
@@ -137,12 +165,16 @@ object CdcPipeline {
     new Thread(() => if (query.isActive) query.stop(), "graft-shutdown")
 
   /** Graceful shutdown (reference C4, cdc_consumer.py:108-116): stop
-    * the query on JVM shutdown, then block until termination. */
+    * the query on JVM shutdown, then block until termination and the
+    * close of its state store, if [[run]] started it. */
   def awaitWithShutdownHook(query: StreamingQuery): Unit = {
     val hook = shutdownHook(query)
     Runtime.getRuntime.addShutdownHook(hook)
     try query.awaitTermination()
-    finally scala.util.Try(Runtime.getRuntime.removeShutdownHook(hook))
+    finally {
+      scala.util.Try(Runtime.getRuntime.removeShutdownHook(hook))
+      closeStore(query)
+    }
   }
 
   /** Merge-on-read state store. The directory holds whole snapshot
@@ -154,9 +186,25 @@ object CdcPipeline {
     * opened with no Spark job while the tail stays within Spark's
     * serial file-listing threshold
     * (`spark.sql.sources.parallelPartitionDiscovery.threshold`, 32
-    * batches). A move deletes every version but the one the manifest
-    * names and the newest whole one before it, so a reader that
-    * opened the older one can finish. */
+    * batches).
+    *
+    * One background thread per store compacts: it writes the state a
+    * manifest names as the version of its last batch, then advances
+    * the snapshot while the manifest still starts with what it
+    * compacted, keeping the batches appended since as the tail. The
+    * batches' appends and the compactor's advance move the manifest
+    * under one lock, so neither loses the other's move, and the
+    * manifest names only whole snapshots: the state reads the same
+    * whether a compaction runs or not. At most one compaction runs at
+    * a time; its Spark jobs carry the store's own job tag, and
+    * [[close]] cancels them. A failed compaction is kept and rethrown
+    * by the next batch.
+    *
+    * A move deletes the versions below the snapshot it names but the
+    * newest whole one, so a reader that opened that one can finish. A
+    * version above the snapshot is an in-flight compaction's target,
+    * or the partial write of one that died; it stays until a later
+    * snapshot passes it. One store object writes a directory. */
   final class StateStore(dir: String) {
     import StateStore._
 
@@ -165,6 +213,18 @@ object CdcPipeline {
 
     private def versionDir(v: Long): Path = root.resolve(s"v=$v")
     private def schemaFile(v: Long): Path = versionDir(v).resolve("_schema.json")
+
+    /** The job tag of this store's compactions; also its thread's name. */
+    private val compactorTag = s"graft-compactor-${ids.incrementAndGet()}"
+
+    /** Held while the manifest moves. */
+    private val moves = new Object
+
+    // the compactor's state, guarded by `this`
+    private var compactor: Option[ExecutorService] = None
+    private var running: Option[(Future[_], SparkContext)] = None
+    private var failure: Option[Throwable] = None
+    private var closed = false
 
     def manifest: Option[Manifest] =
       if (Files.exists(manifestFile)) Some(Manifest.parse(Files.readString(manifestFile))) else None
@@ -194,7 +254,8 @@ object CdcPipeline {
       * an empty tail. */
     def write(df: DataFrame, batchId: Long): Unit = {
       writeSnapshot(df, batchId)
-      commit(Manifest(batchId, Nil, None))
+      move(_ => Some(Manifest(batchId, Nil, None)))
+      ()
     }
 
     /** Write `df` as snapshot version `v`: its files, then its schema
@@ -205,15 +266,122 @@ object CdcPipeline {
       ()
     }
 
-    /** Move the manifest onto `m`, then delete the superseded versions. */
-    private[streaming] def commit(m: Manifest): Unit = {
+    /** Append `batchId`, read with `log`, to the current tail. With no
+      * manifest yet, the tail starts on snapshot `batchId - 1`, which
+      * the caller wrote. */
+    private[streaming] def append(batchId: Long, log: Log): Unit = {
+      move(current => Some(current.fold(Manifest(batchId - 1, Seq(batchId), Some(log)))(
+        c => Manifest(c.snapshot, c.tail :+ batchId, Some(log)))))
+      ()
+    }
+
+    /** Move the manifest from the current one to `next` of it, if
+      * that is defined, under the store's lock. Returns whether it
+      * moved. */
+    private def move(next: Option[Manifest] => Option[Manifest]): Boolean = moves.synchronized {
+      next(manifest) match {
+        case Some(m) => commit(m); true
+        case None => false
+      }
+    }
+
+    /** Move the manifest onto `m`, then delete the versions below its
+      * snapshot but the newest whole one. */
+    private def commit(m: Manifest): Unit = {
       Files.createDirectories(root)
       val tmp = root.resolve(s".MANIFEST.${m.version}.tmp")
       Files.writeString(tmp, m.render)
       Files.move(tmp, manifestFile, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-      val whole = versions.filter(v => v < m.snapshot && Files.exists(schemaFile(v)))
-      val keep = Set(m.snapshot) ++ whole.maxOption
-      versions.filterNot(keep).foreach(v => deleteTree(versionDir(v)))
+      val below = versions.filter(_ < m.snapshot)
+      val keep = below.filter(v => Files.exists(schemaFile(v))).maxOption
+      below.filterNot(keep.contains).foreach(v => deleteTree(versionDir(v)))
+    }
+
+    /** Start compacting `m` on the compactor thread, unless a
+      * compaction is running or the store is closed. */
+    private[streaming] def compactInBackground(spark: SparkSession, m: Manifest): Unit = synchronized {
+      if (!closed && running.forall(_._1.isDone)) {
+        val pool = compactor.getOrElse(Executors.newSingleThreadExecutor(compactorThread))
+        compactor = Some(pool)
+        running = Some(pool.submit(new Runnable { def run(): Unit = compact(spark, m) }) -> spark.sparkContext)
+      }
+    }
+
+    /** The compactor's one daemon thread. It inherits no inheritable
+      * thread-locals: with a micro-batch's Spark local properties (its
+      * query's job group, its SQL execution id), a stop of the query
+      * would cancel the compaction as one of the batch's jobs. */
+    private def compactorThread: ThreadFactory = (r: Runnable) => {
+      val t = new Thread(null, r, compactorTag, 0L, false)
+      t.setDaemon(true)
+      t
+    }
+
+    /** Write the state `m` names as `v=<m.version>`, then advance the
+      * snapshot to it if the manifest still starts with `m`. A failure
+      * is kept for [[rethrowFailure]]; one caused by [[close]] is not. */
+    private def compact(spark: SparkSession, m: Manifest): Unit = {
+      val t0 = System.nanoTime()
+      val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+      if (!synchronized(closed)) try {
+        SparkSession.setActiveSession(spark)
+        // [[close]] cancels by this tag, and SQL jobs interrupt their
+        // tasks on cancel (`spark.sql.execution.interruptOnCancel`): a
+        // task interrupted while it loads a class for its generated code
+        // from the driver logs `RemoteClassLoaderError` and a codegen
+        // fallback just before it is killed. That is the cancel, not a
+        // failure of the compaction.
+        spark.sparkContext.addJobTag(compactorTag)
+        writeSnapshot(open(spark, m), m.version)
+        val advanced = move(_.filter(c => c.snapshot == m.snapshot && c.tail.startsWith(m.tail))
+          .map(c => c.copy(snapshot = m.version, tail = c.tail.drop(m.tail.size))))
+        logger.info(s"$compactorTag: compacted snapshot v=${m.snapshot} and tail batches " +
+          s"${m.tail.mkString(",")} into v=${m.version}: ${treeBytes(versionDir(m.version))} bytes in " +
+          s"${(System.nanoTime() - t0) / 1000000} ms" +
+          (if (advanced) "" else "; the manifest moved on without it, so it stays unnamed"))
+      } catch {
+        // everything, fatal errors included: the executor's future
+        // would swallow them, and the next batch must see them
+        case e: Throwable => synchronized {
+          if (!closed) {
+            logger.warn(s"$compactorTag: compacting v=${m.snapshot} into v=${m.version} failed; " +
+              "the next batch rethrows it", e)
+            failure = Some(e)
+          }
+        }
+      }
+    }
+
+    /** Throw the exception a compaction failed with, once. */
+    private[streaming] def rethrowFailure(): Unit = synchronized {
+      failure.foreach { e => failure = None; throw e }
+    }
+
+    /** Wait for the running compaction, if any, to finish. */
+    private[streaming] def awaitCompaction(): Unit =
+      synchronized(running).foreach(_._1.get())
+
+    /** Stop compacting: cancel the running compaction's Spark jobs,
+      * wait for it, and let the compactor thread exit. No compaction
+      * starts after. The manifest names only whole snapshots, so a
+      * cancelled compaction leaves the state as it was. */
+    def close(): Unit = {
+      val inFlight = synchronized { closed = true; running }
+      inFlight.foreach { case (f, sc) =>
+        // a cancel reaches only the jobs running at that moment, so it
+        // repeats until the compaction has ended, and once after for
+        // a job it left running
+        def cancel(): Unit = sc.cancelJobsWithTag(compactorTag, "the state store was closed")
+        while (!f.isDone) {
+          cancel()
+          try f.get(100, TimeUnit.MILLISECONDS) catch { case _: TimeoutException => () }
+        }
+        cancel()
+      }
+      synchronized(compactor).foreach { pool =>
+        pool.shutdown()
+        pool.awaitTermination(60, TimeUnit.SECONDS)
+      }
     }
 
     /** Snapshot versions present in the directory, whole or not. */
@@ -226,7 +394,7 @@ object CdcPipeline {
         finally s.close()
       }
 
-    /** Whether the next batch compacts `m`'s tail: its files have
+    /** Whether `m`'s tail is due for compaction: its files have
       * reached the bytes of the snapshot's. */
     private[streaming] def compacts(m: Manifest): Boolean = m.tail.nonEmpty && m.log.exists { l =>
       m.tail.map(b => treeBytes(Paths.get(l.root, s"batch=$b", s"table=${l.table}"))).sum >=
@@ -235,6 +403,7 @@ object CdcPipeline {
   }
 
   object StateStore {
+    private val ids = new AtomicLong()
     private val Version = "v=(-?[0-9]+)".r
 
     /** Where a tail's batches are and how they merge: the changelog

@@ -234,30 +234,112 @@ class StreamingSpec extends SparkSpec {
     assert(store.latestVersion.contains(4L))
   }
 
-  test("a compaction that fails while K1 runs: the replay is exactly-once") {
-    val cfg = sinkCfg("stream_compaction_fault")
-    val store = new CdcPipeline.StateStore(cfg.stateDir)
-    val batches = goldenEventBatches
-    // run up to the first batch that compacts
+  /** Run `batches` as batch ids 0.. until the manifest's tail is due
+    * for compaction; returns the next batch id, which starts it. */
+  private def runUntilCompacts(cfg: CdcPipeline.SinkConfig, store: CdcPipeline.StateStore,
+      batches: Seq[org.apache.spark.sql.DataFrame]): Int = {
     var id = 0
     while (store.manifest.forall(m => !store.compacts(m))) {
       CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store)
       id += 1
     }
-    assert(id < batches.size)
+    id
+  }
+
+  test("a compaction that fails while K1 runs: the replay is exactly-once") {
+    val cfg = sinkCfg("stream_compaction_fault")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    val id = runUntilCompacts(cfg, store, batches)
+    assert(id + 1 < batches.size)
     val m = store.manifest.get
     // the compaction cannot open the snapshot it reads
     val schema = java.nio.file.Paths.get(cfg.stateDir, s"v=${m.snapshot}", "_schema.json")
     val hidden = java.nio.file.Paths.get(cfg.stateDir, "schema.hidden")
     Files.move(schema, hidden)
+    // batch `id` hands the compaction off and commits without it
+    CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store)
+    store.awaitCompaction()
+    assert(store.manifest.get.snapshot == m.snapshot && store.latestVersion.contains(id.toLong))
+    // the next batch surfaces the failure before it writes anything
+    val next = id + 1
     intercept[java.nio.file.NoSuchFileException](
-      CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store))
-    assert(store.manifest.contains(m))
+      CdcPipeline.processBatch(batches(next), next.toLong, UsersFixture.baseState(spark), cfg, store))
+    assert(store.latestVersion.contains(id.toLong))
+    assert(!Files.exists(java.nio.file.Paths.get(cfg.eventsOutDir, s"batch=$next")))
     Files.move(hidden, schema)
-    runEach(cfg, store, batches)()
-    assert(store.manifest.get.snapshot >= id - 1L, s"the replayed batch $id compacted")
+    // the restarted stream replays that batch, which retries the compaction
+    val restarted = new CdcPipeline.StateStore(cfg.stateDir)
+    runEach(cfg, restarted, batches)()
+    restarted.awaitCompaction()
+    assert(restarted.manifest.get.snapshot >= id.toLong, s"the replayed batch $next compacted")
     assertGolden(cfg)
     assert(spark.read.parquet(cfg.eventsOutDir).select("lsn").distinct().count() == 5)
+  }
+
+  test("a compaction killed mid-write: its partial version is never named, and goes once a snapshot passes it") {
+    val cfg = sinkCfg("stream_compaction_killed")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    val id = runUntilCompacts(cfg, store, batches)
+    assert(id + 1 < batches.size)
+    val m = store.manifest.get
+    // batch `id` commits, and the process dies while the compaction of
+    // `m` writes: `v=<m.version>` holds data but no `_schema.json`
+    // (the store is closed first, so no compaction really starts)
+    store.close()
+    CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store)
+    val partial = java.nio.file.Paths.get(cfg.stateDir, s"v=${m.version}")
+    Files.createDirectories(partial)
+    Files.write(partial.resolve("part-00000.snappy.parquet"), Array[Byte](1, 2, 3))
+    val restarted = new CdcPipeline.StateStore(cfg.stateDir)
+    assert(restarted.manifest.get.snapshot == m.snapshot && restarted.latestVersion.contains(id.toLong))
+    runEach(cfg, restarted, batches) { _ =>
+      restarted.awaitCompaction()
+      val now = restarted.manifest.get
+      assert(now.snapshot != m.version, "the manifest named the partial version")
+      if (now.snapshot < m.version) assert(restarted.versions.contains(m.version))
+    }
+    assertGolden(cfg)
+    val last = restarted.manifest.get
+    assert(last.snapshot > m.version, s"no snapshot passed v=${m.version}: $last")
+    assert(!restarted.versions.contains(m.version), restarted.versions)
+  }
+
+  test("a batch that commits while a compaction runs stays in the tail after the snapshot advances") {
+    val cfg = sinkCfg("stream_compaction_inflight")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    // batch 1 inserts many more keys than the base holds, so its tail
+    // is due for compaction and the compaction takes a while
+    val insert = batches.find(_.filter(col("operation") === "INSERT").count() == 1).get
+    val n = 200000
+    val bulk = insert.crossJoin(spark.range(n).withColumnRenamed("id", "i"))
+      .withColumn("new_values", transform_values(col("new_values"),
+        (k, v) => when(k === "id", (col("i") + 1000).cast("string")).otherwise(v)))
+      .withColumn("lsn", col("i") + 100000)
+      .select(insert.columns.map(col).toSeq: _*)
+    val base = UsersFixture.baseState(spark)
+    CdcPipeline.processBatch(batches(0), 0L, base, cfg, store)
+    CdcPipeline.processBatch(bulk, 1L, base, cfg, store)
+    val m = store.manifest.get
+    assert(m.snapshot == -1L && m.tail == Seq(0L, 1L) && store.compacts(m))
+    // batch 2 starts compacting `m`; it and batch 3 commit while it runs
+    CdcPipeline.processBatch(batches(1), 2L, base, cfg, store)
+    CdcPipeline.processBatch(batches(2), 3L, base, cfg, store)
+    val during = store.manifest.get
+    assert(during.snapshot == -1L && during.tail == Seq(0L, 1L, 2L, 3L),
+      s"the compaction ended before batch 3 committed: $during")
+    store.awaitCompaction()
+    val after = store.manifest.get
+    assert(after.snapshot == 1L && after.tail == Seq(2L, 3L), after)
+    CdcPipeline.processBatch(batches(3), 4L, base, cfg, store)
+    CdcPipeline.processBatch(batches(4), 5L, base, cfg, store)
+    store.awaitCompaction()
+    val state = store.latest(spark).get
+    assert(state.count() == goldenFinalState.size + n)
+    assert(state.filter(col("id").cast("int") < 1000).orderBy(col("id").cast("int"))
+      .collect().map(_.toSeq).toSeq == goldenFinalState)
   }
 
   test("a replayed batch that the manifest already holds rewrites nothing") {
@@ -293,6 +375,7 @@ class StreamingSpec extends SparkSpec {
     var snapshots = Set.empty[Long]
     var restarted = false
     runEach(cfg, store, batches) { id =>
+      store.awaitCompaction()
       val m = store.manifest.get
       snapshots += m.snapshot
       assert(store.versions.size <= 2, store.versions)
@@ -318,8 +401,87 @@ class StreamingSpec extends SparkSpec {
     // the next manifest move deletes the leftover
     CdcPipeline.processBatch(goldenBatch.limit(0), batches.size.toLong,
       UsersFixture.baseState(spark), cfg, store)
+    store.awaitCompaction()
     assert(store.versions.size <= 2, store.versions)
     assertGolden(cfg)
+  }
+
+  test("batches, restarts and waits for the compactor in any order end golden, with at most two whole versions") {
+    import org.scalacheck.{Gen, Prop, Test => SCTest}
+    val batches = goldenEventBatches
+    // per batch: whether the stream then restarts (closing the store
+    // and replaying the batch) and whether it waits for the compactor
+    val steps = Gen.listOfN(batches.size, Gen.zip(Gen.oneOf(false, true), Gen.oneOf(false, true)))
+    var run = 0
+    val prop = Prop.forAll(steps) { plan =>
+      run += 1
+      val cfg = sinkCfg(s"stream_interleave_$run")
+      var store = new CdcPipeline.StateStore(cfg.stateDir)
+      batches.zip(plan).zipWithIndex.foreach { case ((b, (restart, await)), i) =>
+        CdcPipeline.processBatch(b, i.toLong, UsersFixture.baseState(spark), cfg, store)
+        if (restart) {
+          store.close()
+          store = new CdcPipeline.StateStore(cfg.stateDir)
+          CdcPipeline.processBatch(b, i.toLong, UsersFixture.baseState(spark), cfg, store)
+        }
+        if (await) store.awaitCompaction()
+      }
+      store.awaitCompaction()
+      assertGolden(cfg)
+      assert(spark.read.parquet(cfg.eventsOutDir).select("lsn").distinct().count() == 5)
+      val m = store.manifest.get
+      val whole = store.versions.filter(v => v <= m.snapshot &&
+        Files.exists(java.nio.file.Paths.get(cfg.stateDir, s"v=$v", "_schema.json")))
+      Prop(whole.contains(m.snapshot) && whole.size <= 2) :| s"plan=$plan manifest=$m whole=$whole"
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(8), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("no compaction outlives its query: after stop and close, no compactor job runs and the state is right") {
+    import PgOutput.{Encoder => E, WText}
+    val cfg = sinkCfg("stream_close")
+    CdcDecode.resetStream(cfg.streamId)
+    val sc = spark.sparkContext
+    val tags = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.tags")))
+          .foreach(_.split(",").filter(_.startsWith("graft-compactor-")).foreach(tags.add))
+    }
+    // the golden frames, then one new user per transaction
+    val extra = (10 until 22).map(_.toString)
+    val txns = extra.zipWithIndex.map { case (id, i) =>
+      Seq(E.begin(), E.insert(UsersFixture.RelId,
+        Seq(id, s"User $id", s"u$id@example.com", "active", UsersFixture.T1, UsersFixture.T1).map(WText(_))),
+        E.commit()).zipWithIndex.map { case (p, j) => CdcFrame(5000L + 3 * i + j, 0L, p) }
+    }
+    val frames = UsersFixture.frames
+    sc.addSparkListener(listener)
+    try {
+      val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
+      val q = CdcPipeline.run(CdcDecode.decode(stream.toDS().coalesce(1), cfg.streamId),
+        UsersFixture.baseState(spark), cfg)
+      // the query stops as soon as the last batch commits, whether a
+      // compaction runs then or not
+      try (Seq(frames.take(7), frames.drop(7)) ++ txns).foreach { b =>
+        stream.addData(b); q.processAllAvailable()
+      } finally q.stop()
+      CdcPipeline.awaitWithShutdownHook(q) // returns once the store is closed
+      val deadline = System.nanoTime() + 10e9.toLong
+      def running = tags.asScala.toSeq.flatMap(t => sc.statusTracker.getJobIdsForTag(t).toSeq)
+        .flatMap(id => sc.statusTracker.getJobInfo(id).toSeq)
+        .filter(_.status == org.apache.spark.JobExecutionStatus.RUNNING)
+      while (running.nonEmpty && System.nanoTime() < deadline) Thread.sleep(100)
+      assert(!tags.isEmpty, "the stream ran no compaction")
+      assert(running.isEmpty, s"compactor jobs still running: ${running.map(_.jobId)}")
+    } finally sc.removeSparkListener(listener)
+    val state = new CdcPipeline.StateStore(cfg.stateDir).latest(spark).get
+    assert(state.filter(!col("id").isin(extra: _*)).orderBy(col("id").cast("int"))
+      .collect().map(_.toSeq).toSeq == goldenFinalState)
+    assert(state.filter(col("id").isin(extra: _*)).count() == extra.size)
+    val lsns = spark.read.parquet(cfg.eventsOutDir).select("lsn")
+    assert(lsns.count() == 5 + extra.size && lsns.distinct().count() == 5 + extra.size)
   }
 
   test("DSv2 graft-cdc source: LSN offsets, admission cap, restart, and feedback commit") {
