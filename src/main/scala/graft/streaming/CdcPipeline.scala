@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.UUID
-import java.util.concurrent.{ConcurrentHashMap, ExecutorService, Executors, Future, ThreadFactory, TimeUnit, TimeoutException}
+import java.util.concurrent.{ConcurrentHashMap, Executors, Future, ThreadFactory, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
@@ -125,10 +125,16 @@ object CdcPipeline {
   /** Run the full slice. Offsets live in the checkpoint (write-ahead,
     * replayable) and [[processBatch]] is idempotent per batch id, so
     * the pipeline is exactly-once end-to-end across crash/restart.
-    * The state store is closed when the query terminates, so no
-    * compaction outlives it. */
+    *
+    * The run owns a state store, closed when its query terminates, so
+    * no compaction outlives it. An earlier run's store on the same
+    * directory is closed before the query starts: its compaction may
+    * still run after its query stopped, and only one store may move
+    * a directory's manifest. */
   def run(events: Dataset[CdcEvent], base: DataFrame, cfg: SinkConfig): StreamingQuery = {
     val store = new StateStore(cfg.stateDir)
+    val dir = Paths.get(cfg.stateDir).toAbsolutePath.normalize
+    Option(runs.get(dir)).foreach(close(dir, _))
     val query = CdcDecode.toWireDf(events)
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
@@ -137,27 +143,40 @@ object CdcPipeline {
         processBatch(batch, batchId, base, cfg, store)
       }
       .start()
-    stores.put(query.id, store)
+    val owner = Owner(query.runId, store)
+    runs.put(dir, owner)
+    // the listener bus must not wait for the close, so it runs on its own thread
+    def closeLater(): Unit = {
+      val t = new Thread(() => close(dir, owner), s"graft-state-close-${query.runId}")
+      t.setDaemon(true)
+      t.start()
+    }
     val streams = events.sparkSession.streams
     val listener = new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
       override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = ()
       override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit =
-        if (e.id == query.id) { streams.removeListener(this); closeStore(query) }
+        if (e.runId == query.runId) { streams.removeListener(this); closeLater() }
     }
     streams.addListener(listener)
     // a query that ended before the listener was added posts no event to it
-    if (!query.isActive) { streams.removeListener(listener); closeStore(query) }
+    if (!query.isActive) { streams.removeListener(listener); closeLater() }
     query
   }
 
-  /** The state store of each query [[run]] started, until it is closed. */
-  private val stores = new ConcurrentHashMap[UUID, StateStore]()
+  /** A query run's state store. */
+  private final case class Owner(runId: UUID, store: StateStore)
 
-  /** Close the query's store; removed from [[stores]] only after, so a
-    * second caller also waits for the close. */
-  private def closeStore(query: StreamingQuery): Unit =
-    Option(stores.get(query.id)).foreach { s => s.close(); stores.remove(query.id) }
+  /** The open store of each state directory [[run]] writes. */
+  private val runs = new ConcurrentHashMap[Path, Owner]()
+
+  /** Close a run's store, then forget it unless a later run took the
+    * directory. A second caller waits for the close too. */
+  private def close(dir: Path, owner: Owner): Unit = {
+    owner.store.close()
+    runs.remove(dir, owner)
+    ()
+  }
 
   /** The C4 stop action, exposed so its behavior is testable without
     * a JVM shutdown: stops the query if (and only if) still active. */
@@ -173,7 +192,7 @@ object CdcPipeline {
     try query.awaitTermination()
     finally {
       scala.util.Try(Runtime.getRuntime.removeShutdownHook(hook))
-      closeStore(query)
+      runs.asScala.find(_._2.runId == query.runId).foreach { case (dir, owner) => close(dir, owner) }
     }
   }
 
@@ -204,7 +223,9 @@ object CdcPipeline {
     * newest whole one, so a reader that opened that one can finish. A
     * version above the snapshot is an in-flight compaction's target,
     * or the partial write of one that died; it stays until a later
-    * snapshot passes it. One store object writes a directory. */
+    * snapshot passes it. One store writes a directory at a time: the
+    * lock and the compactor are the store object's, and [[run]] closes
+    * an earlier run's store before its query starts. */
   final class StateStore(dir: String) {
     import StateStore._
 
@@ -220,8 +241,12 @@ object CdcPipeline {
     /** Held while the manifest moves. */
     private val moves = new Object
 
+    private val logger = org.slf4j.LoggerFactory.getLogger(getClass)
+
+    /** The compactor; its one thread starts with the first compaction. */
+    private val compactor = Executors.newSingleThreadExecutor(compactorThread)
+
     // the compactor's state, guarded by `this`
-    private var compactor: Option[ExecutorService] = None
     private var running: Option[(Future[_], SparkContext)] = None
     private var failure: Option[Throwable] = None
     private var closed = false
@@ -300,11 +325,8 @@ object CdcPipeline {
     /** Start compacting `m` on the compactor thread, unless a
       * compaction is running or the store is closed. */
     private[streaming] def compactInBackground(spark: SparkSession, m: Manifest): Unit = synchronized {
-      if (!closed && running.forall(_._1.isDone)) {
-        val pool = compactor.getOrElse(Executors.newSingleThreadExecutor(compactorThread))
-        compactor = Some(pool)
-        running = Some(pool.submit(new Runnable { def run(): Unit = compact(spark, m) }) -> spark.sparkContext)
-      }
+      if (!closed && running.forall(_._1.isDone))
+        running = Some(compactor.submit(new Runnable { def run(): Unit = compact(spark, m) }) -> spark.sparkContext)
     }
 
     /** The compactor's one daemon thread. It inherits no inheritable
@@ -319,10 +341,10 @@ object CdcPipeline {
 
     /** Write the state `m` names as `v=<m.version>`, then advance the
       * snapshot to it if the manifest still starts with `m`. A failure
-      * is kept for [[rethrowFailure]]; one caused by [[close]] is not. */
+      * is kept for [[rethrowFailure]]; one after [[close]] is its
+      * cancel, and only logged. */
     private def compact(spark: SparkSession, m: Manifest): Unit = {
       val t0 = System.nanoTime()
-      val logger = org.slf4j.LoggerFactory.getLogger(getClass)
       if (!synchronized(closed)) try {
         SparkSession.setActiveSession(spark)
         // [[close]] cancels by this tag, and SQL jobs interrupt their
@@ -343,7 +365,10 @@ object CdcPipeline {
         // everything, fatal errors included: the executor's future
         // would swallow them, and the next batch must see them
         case e: Throwable => synchronized {
-          if (!closed) {
+          if (closed)
+            logger.info(s"$compactorTag: compacting v=${m.snapshot} into v=${m.version} was cancelled " +
+              s"by the store's close (${e.getClass.getName}); Spark's task errors logged with it are the cancel")
+          else {
             logger.warn(s"$compactorTag: compacting v=${m.snapshot} into v=${m.version} failed; " +
               "the next batch rethrows it", e)
             failure = Some(e)
@@ -364,9 +389,17 @@ object CdcPipeline {
     /** Stop compacting: cancel the running compaction's Spark jobs,
       * wait for it, and let the compactor thread exit. No compaction
       * starts after. The manifest names only whole snapshots, so a
-      * cancelled compaction leaves the state as it was. */
+      * cancelled compaction leaves the state as it was. A failure no
+      * batch has rethrown yet is logged as an error. */
     def close(): Unit = {
-      val inFlight = synchronized { closed = true; running }
+      val (inFlight, kept) = synchronized {
+        closed = true
+        val kept = failure
+        failure = None
+        (running, kept)
+      }
+      kept.foreach(e => logger.error(s"$compactorTag: the store closed with a compaction failure " +
+        "no batch rethrew; the next run's first due compaction retries it", e))
       inFlight.foreach { case (f, sc) =>
         // a cancel reaches only the jobs running at that moment, so it
         // repeats until the compaction has ended, and once after for
@@ -378,10 +411,9 @@ object CdcPipeline {
         }
         cancel()
       }
-      synchronized(compactor).foreach { pool =>
-        pool.shutdown()
-        pool.awaitTermination(60, TimeUnit.SECONDS)
-      }
+      compactor.shutdown()
+      compactor.awaitTermination(60, TimeUnit.SECONDS)
+      ()
     }
 
     /** Snapshot versions present in the directory, whole or not. */

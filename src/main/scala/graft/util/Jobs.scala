@@ -40,7 +40,12 @@ object Jobs {
     * interrupting the submitting thread alone does not stop the Spark job
     * it submitted, so without the tag a failed caller's background
     * jobs would outlive it — overlapping whatever runs next, or
-    * racing a retry's writes to the same output. */
+    * racing a retry's writes to the same output. The siblings'
+    * threads are not interrupted: an interrupted writer aborts its job
+    * while the scheduler still lets the job's tasks commit, and a
+    * retry that writes the same directory then commits them with its
+    * own files. A writer that waits sees its job fail only after the
+    * scheduler ended the job's stages, so no late task commits. */
   def concurrently[A](thunks: (() => A)*): Seq[A] =
     if (thunks.sizeIs <= 1) thunks.map(_()).toSeq
     else {
@@ -62,7 +67,7 @@ object Jobs {
           futs.map(_.get()).toSeq
         } catch { case e: Throwable =>
           sc.foreach(_.cancelJobsWithTag(tag, "a sibling in Jobs.concurrently failed"))
-          futs.foreach(_.cancel(true))
+          futs.foreach(_.cancel(false))
           throw e // after the finally below has awaited the siblings
         }
       } finally {

@@ -310,10 +310,10 @@ class StreamingSpec extends SparkSpec {
     val cfg = sinkCfg("stream_compaction_inflight")
     val store = new CdcPipeline.StateStore(cfg.stateDir)
     val batches = goldenEventBatches
-    // batch 1 inserts many more keys than the base holds, so its tail
-    // is due for compaction and the compaction takes a while
+    // batch 1 inserts more keys than the base holds, so its tail is
+    // due for compaction
     val insert = batches.find(_.filter(col("operation") === "INSERT").count() == 1).get
-    val n = 200000
+    val n = 1000
     val bulk = insert.crossJoin(spark.range(n).withColumnRenamed("id", "i"))
       .withColumn("new_values", transform_values(col("new_values"),
         (k, v) => when(k === "id", (col("i") + 1000).cast("string")).otherwise(v)))
@@ -324,12 +324,15 @@ class StreamingSpec extends SparkSpec {
     CdcPipeline.processBatch(bulk, 1L, base, cfg, store)
     val m = store.manifest.get
     assert(m.snapshot == -1L && m.tail == Seq(0L, 1L) && store.compacts(m))
-    // batch 2 starts compacting `m`; it and batch 3 commit while it runs
-    CdcPipeline.processBatch(batches(1), 2L, base, cfg, store)
-    CdcPipeline.processBatch(batches(2), 3L, base, cfg, store)
-    val during = store.manifest.get
-    assert(during.snapshot == -1L && during.tail == Seq(0L, 1L, 2L, 3L),
-      s"the compaction ended before batch 3 committed: $during")
+    // batch 2 starts compacting `m`; it and batch 3 commit while it
+    // runs: the compactor waits for the store's monitor before it
+    // writes, and this thread holds it (batches re-enter it)
+    val during = store.synchronized {
+      CdcPipeline.processBatch(batches(1), 2L, base, cfg, store)
+      CdcPipeline.processBatch(batches(2), 3L, base, cfg, store)
+      store.manifest.get
+    }
+    assert(during.snapshot == -1L && during.tail == Seq(0L, 1L, 2L, 3L), during)
     store.awaitCompaction()
     val after = store.manifest.get
     assert(after.snapshot == 1L && after.tail == Seq(2L, 3L), after)
@@ -482,6 +485,95 @@ class StreamingSpec extends SparkSpec {
     assert(state.filter(col("id").isin(extra: _*)).count() == extra.size)
     val lsns = spark.read.parquet(cfg.eventsOutDir).select("lsn")
     assert(lsns.count() == 5 + extra.size && lsns.distinct().count() == 5 + extra.size)
+  }
+
+  test("a compaction failure no batch rethrew is logged as an error when the store closes") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val cfg = sinkCfg("stream_compaction_fault_at_close")
+    val store = new CdcPipeline.StateStore(cfg.stateDir)
+    val batches = goldenEventBatches
+    val id = runUntilCompacts(cfg, store, batches)
+    val m = store.manifest.get
+    val schema = java.nio.file.Paths.get(cfg.stateDir, s"v=${m.snapshot}", "_schema.json")
+    val hidden = java.nio.file.Paths.get(cfg.stateDir, "schema.hidden")
+    Files.move(schema, hidden)
+    // the last batch of a run hands off a compaction that fails
+    CdcPipeline.processBatch(batches(id), id.toLong, UsersFixture.baseState(spark), cfg, store)
+    store.awaitCompaction()
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[LogEvent]()
+    val appender = new AbstractAppender("compaction-errors", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = if (e.getLevel == Level.ERROR) errors.add(e.toImmutable)
+    }
+    // by the binary class name, as slf4j names it (log4j's own lookup
+    // by class takes the canonical name)
+    val logger = LogManager.getLogger(classOf[CdcPipeline.StateStore].getName).asInstanceOf[CoreLogger]
+    appender.start()
+    logger.addAppender(appender)
+    try store.close()
+    finally { logger.removeAppender(appender); appender.stop() }
+    assert(errors.asScala.exists(_.getThrown.isInstanceOf[java.nio.file.NoSuchFileException]),
+      errors.asScala.map(_.getMessage.getFormattedMessage))
+    assert(errors.size == 1)
+    // the restarted stream's first due compaction retries it
+    Files.move(hidden, schema)
+    val restarted = new CdcPipeline.StateStore(cfg.stateDir)
+    runEach(cfg, restarted, batches)()
+    restarted.awaitCompaction()
+    assert(restarted.manifest.get.snapshot > m.snapshot)
+    assertGolden(cfg)
+  }
+
+  test("a restart while the last run still compacts: only the new run's store moves the manifest, and it compacts") {
+    import PgOutput.{Encoder => E, WText}
+    val cfg = sinkCfg("stream_restart_compacting")
+    CdcDecode.resetStream(cfg.streamId)
+    var lsn = 100000L
+    def txn(ids: Seq[String]): Seq[CdcFrame] =
+      ((E.begin() +: ids.map(id => E.insert(UsersFixture.RelId,
+        Seq(id, s"User $id", s"u$id@example.com", "active", UsersFixture.T1, UsersFixture.T1).map(WText(_)))))
+        :+ E.commit()).map { p => lsn += 1; CdcFrame(lsn, 0L, p) }
+    val n = 20000
+    def bulk(from: Int) = (from until from + n).map(_.toString)
+    val extra = Seq("10", "11")
+    val stream = MemoryStream[CdcFrame](spark)(Encoders.product[CdcFrame])
+    def start() = CdcPipeline.run(CdcDecode.decode(stream.toDS().coalesce(1), cfg.streamId),
+      UsersFixture.baseState(spark), cfg)
+    def manifest = new CdcPipeline.StateStore(cfg.stateDir).manifest.get
+    def feed(q: org.apache.spark.sql.streaming.StreamingQuery, frames: Seq[CdcFrame]): Unit = {
+      stream.addData(frames); q.processAllAvailable()
+    }
+    // batch 2 inserts many keys; batch 3 starts compacting them, and
+    // the query stops at once, while that compaction runs
+    val q1 = start()
+    try Seq(UsersFixture.frames.take(7), UsersFixture.frames.drop(7), txn(bulk(1000)), txn(extra.take(1)))
+      .foreach(feed(q1, _))
+    finally q1.stop()
+    // the restart on the same checkpoint closes q1's store first
+    val q2 = start()
+    try {
+      feed(q2, txn(extra.drop(1)))
+      feed(q2, txn(bulk(100000)))
+      val bulk2 = manifest.version
+      // empty transactions make batches until q2's store folds batch
+      // `bulk2` into a snapshot
+      val deadline = System.nanoTime() + 120e9.toLong
+      while (manifest.snapshot < bulk2 && System.nanoTime() < deadline) {
+        feed(q2, txn(Nil))
+        Thread.sleep(100)
+      }
+      assert(manifest.snapshot >= bulk2, s"the restarted run never compacted batch $bulk2: $manifest")
+    } finally q2.stop()
+    CdcPipeline.awaitWithShutdownHook(q2)
+    val state = new CdcPipeline.StateStore(cfg.stateDir).latest(spark).get
+    val added = extra ++ bulk(1000) ++ bulk(100000)
+    assert(state.filter(!col("id").isin(added: _*)).orderBy(col("id").cast("int"))
+      .collect().map(_.toSeq).toSeq == goldenFinalState)
+    assert(state.count() == goldenFinalState.size + added.size)
+    val lsns = spark.read.parquet(cfg.eventsOutDir).select("lsn")
+    assert(lsns.count() == 5 + added.size && lsns.distinct().count() == 5 + added.size)
   }
 
   test("DSv2 graft-cdc source: LSN offsets, admission cap, restart, and feedback commit") {
