@@ -88,25 +88,24 @@ object CdcDecode {
 
   /** Decode a dataset of frames. `dropMalformed=true` skips frames
     * that throw [[PgOutput.MalformedFrame]] (PERMISSIVE-style);
-    * otherwise the task fails (FAILFAST). `sortByLsn` restores the
-    * stream's total order within each partition before decoding, for
-    * frames read from plain parquet (`spark.read.parquet` lists files
-    * in name order, not lsn order; a Relation frame must decode before
-    * its changes) — ScaleStress's `cdc_decode_throughput` arm reads
-    * its feed that way. The sort buffers the whole partition. The
-    * `graft-cdc` source already emits frames in lsn order.
+    * otherwise the task fails (FAILFAST). Each partition must hold its
+    * stream's frames in lsn order: a Relation frame decodes before its
+    * changes. The `graft-cdc` source emits them that way; frames read
+    * from plain parquet (`spark.read.parquet` lists files in name
+    * order, not lsn order) are sorted first with
+    * `sortWithinPartitions("lsn")`, which spills rather than holding
+    * the partition on the heap — ScaleStress's `cdc_decode_throughput`
+    * arm reads its feed that way.
     * `registryDir` persists Relation frames for JVM-restart recovery
     * (see [[decoderFor]]). */
   def decode(
       frames: Dataset[CdcFrame],
       streamId: String,
       dropMalformed: Boolean = false,
-      sortByLsn: Boolean = false,
       registryDir: Option[String] = None): Dataset[CdcEvent] =
     frames.mapPartitions { it =>
       val decoder = decoderFor(streamId, registryDir)
-      val ordered = if (sortByLsn) it.toArray.sortBy(_.lsn).iterator else it
-      ordered.flatMap { f =>
+      it.flatMap { f =>
         if (registryDir.isDefined && f.payload != null &&
             f.payload.nonEmpty && f.payload(0) == 'R') {
           // An R frame inside a v2 stream segment carries the Int32

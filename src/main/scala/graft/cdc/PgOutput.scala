@@ -102,7 +102,7 @@ object PgOutput {
     // the aborted subtxn's frames do not resurrect its events.
     // The watermark's replay inference assumes LSN-ordered arrival
     // WITHIN a segment (file feeds deliver name/mtime order;
-    // CdcDecode offers sortByLsn for unordered feeds). streamSeenLsn
+    // unordered feeds sort by lsn before CdcDecode). streamSeenLsn
     // records every frame LSN actually routed per open xid, so a
     // frame at-or-under the watermark that was NEVER seen is
     // distinguishable from a replay: that is an out-of-order or
@@ -217,7 +217,7 @@ object PgOutput {
             throw new MalformedFrame(
               s"in-segment frame at lsn=$lsn is under xid=$top's replay watermark " +
                 s"(${streamMaxLsn(top)}) but was never buffered — out-of-order or " +
-                "duplicate-LSN feed; use CdcDecode(sortByLsn = true) for unordered feeds")
+                "duplicate-LSN feed; sort unordered feeds by lsn before decoding")
           Seq.empty
         case None => evts
       }

@@ -52,12 +52,9 @@ object Curation {
         .select(col("fingerprint").as("__fp"), col("keep_id")), "__fp")
       .filter(col(idCol) =!= col("keep_id"))
       .select(col(idCol))
-    val nearLosers = Graph.connectedComponents(
+    val nearLosers = Graph.nonRepresentatives(
       Dedup.nearDupPairsShingled(spread, idCol, textCol,
-        n, k, rowsPerBand, threshold, maxBucket),
-      "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+        n, k, rowsPerBand, threshold, maxBucket), idCol)
     quality
       .join(exactLosers.withColumn("__ex", lit(true)), Seq(idCol), "left")
       .join(nearLosers.withColumn("__nd", lit(true)), Seq(idCol), "left")
@@ -278,12 +275,9 @@ object Curation {
       .filter(col(idCol) =!= col("keep_id"))
       .select(col(idCol))
     val exactLosers = exHist.union(exDelta).distinct()
-    val ndDelta = Graph.connectedComponents(
+    val ndDelta = Graph.nonRepresentatives(
       Dedup.nearDupPairsShingled(delta, idCol, textCol,
-        n, k, rowsPerBand, threshold, maxBucket),
-      "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+        n, k, rowsPerBand, threshold, maxBucket), idCol)
     val ndHist = Dedup.indexNearDupIds(delta, idCol, textCol, oldIndex,
       n, k, rowsPerBand, minAgree, maxBucket, excludeSameId = true)
     val nearLosers = ndDelta.union(ndHist).distinct()

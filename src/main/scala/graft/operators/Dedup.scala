@@ -370,9 +370,7 @@ object Dedup {
       maxBucket: Int = 1024): DataFrame = {
     val pairs =
       nearDupPairsShingled(docs, idCol, textCol, n, k, rowsPerBand, threshold, maxBucket)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -986,9 +984,7 @@ object Dedup {
       rows: DataFrame, idCol: String, vecCol: String,
       signBits: Int, threshold: Double): DataFrame = {
     val pairs = embeddingNearDupPairs(rows, idCol, vecCol, signBits, threshold)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     rows.join(losers, Seq(idCol), "left_anti")
   }
 

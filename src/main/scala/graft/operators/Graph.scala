@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Distributed graph resolution for dedup pipelines.
@@ -48,6 +48,15 @@ import org.apache.spark.sql.functions._
   * completing the dedup family.
   */
 object Graph {
+
+  /** The nodes a dedup drops: every node of an `id_a`/`id_b` pair
+    * graph's components except the component's representative (its
+    * smallest id), as `idCol` followed by `extra` (over `node` and
+    * `component`). */
+  def nonRepresentatives(pairs: DataFrame, idCol: String, extra: Column*): DataFrame =
+    connectedComponents(pairs, "id_a", "id_b")
+      .filter(col("node") =!= col("component"))
+      .select(col("node").as(idCol) +: extra: _*)
 
   /** Connected components of the undirected graph given by an edge
     * list. Output: one row per DISTINCT endpoint, `(node, component)`

@@ -395,9 +395,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = imageNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -840,9 +838,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = audioNearDupPairsResampled(
       docs, idCol, payloadCol, msPerSeg, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1040,9 +1036,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       stride: Int, minFrac: Double = 0.5): DataFrame = {
     val pairs = videoNearDupPairs(docs, idCol, payloadCol, stride, minFrac)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1053,9 +1047,7 @@ object Multimodal {
       docs: DataFrame, idCol: String, payloadCol: String,
       maxHamming: Int = 3, maxBucket: Int = 65536, chunkSize: Int = 256): DataFrame = {
     val pairs = audioNearDupPairs(docs, idCol, payloadCol, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1073,9 +1065,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = videoNearDupPairsShifted(
       docs, idCol, payloadCol, stride, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1090,9 +1080,7 @@ object Multimodal {
       maxBucket: Int = 65536, chunkSize: Int = 1024): DataFrame = {
     val pairs = audioNearDupPairsShifted(
       docs, idCol, payloadCol, segFrames, minFrac, maxHamming, maxBucket, chunkSize)
-    val losers = Graph.connectedComponents(pairs, "id_a", "id_b")
-      .filter(col("node") =!= col("component"))
-      .select(col("node").as(idCol))
+    val losers = Graph.nonRepresentatives(pairs, idCol)
     docs.join(losers, Seq(idCol), "left_anti")
   }
 
@@ -1533,10 +1521,7 @@ object Multimodal {
       fp: DataFrame, idCol: String,
       imageMaxHamming: Int, videoMinFrac: Double, audioMinFrac: Double): DataFrame = {
     def losers(pairs: DataFrame, reason: String): DataFrame =
-      Graph.connectedComponents(pairs, "id_a", "id_b")
-        .filter(col("node") =!= col("component"))
-        .select(col("node").as(idCol), col("component").as("dup_of"),
-          lit(reason).as("__reason"))
+      Graph.nonRepresentatives(pairs, idCol, col("component").as("dup_of"), lit(reason).as("__reason"))
     val imgSig = fp.filter(col("__idh").isNotNull)
       .select(
         col(idCol).as("id") +:
