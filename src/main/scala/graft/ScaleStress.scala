@@ -298,6 +298,8 @@ object ScaleStress {
         .repartition(cores)
     }
     val emb = feed("amp-emb")(amplifyEmbeddings(sfEmb, scale).repartition(cores))
+    // ivfpq_recall_curve's corpus: every copy its own point
+    val embPerturbed = feed("amp-emb-perturbed")(amplifyEmbeddingsPerturbed(sfEmb, scale).repartition(cores))
     // full pgoutput v1 frames (R/B/I/U('O' old image)/D('K' image)/C),
     // 2000 transactions per unit scale, on one ordered stream
     val cdc = feed("cdctp") {
@@ -812,8 +814,8 @@ object ScaleStress {
       // recall-vs-nProbe on the PERTURBED amplification (VERDICT r14
       // #5): every copy is its own point, so the curve measures
       // quantizer quality. Fully trained inputs, as ivfpq_trained_recall
-      armWith("ivfpq_recall_curve") {
-        val corpus = amplifyEmbeddingsPerturbed(sfEmb, scale).repartition(cores).localCheckpoint(true)
+      armWith("ivfpq_recall_curve", embPerturbed) {
+        val corpus = embPerturbed.df.repartition(cores).localCheckpoint(true)
         val queries = copy0(corpus, 20)
         val cents = Similarity.trainCentroids(corpus, "vec_id", "embedding", nCells = 16, iters = 5)
         val cb = Similarity.pqTrainCodebook(corpus, "vec_id", "embedding", m = 4, ks = 256, iters = 5)

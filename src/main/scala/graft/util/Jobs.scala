@@ -11,9 +11,11 @@ import org.apache.spark.sql.SparkSession
   * Spark's scheduler happily runs several jobs at once inside one
   * application; actions are only sequential because the driver calls
   * them sequentially. Several operators and query bodies materialize
-  * independent artifacts with EAGER actions (localCheckpoint rounds,
-  * connected-components loops) that otherwise run strictly
-  * one-after-another during DataFrame construction — each a
+  * independent artifacts with EAGER actions (localCheckpoints;
+  * connected components: an edge-list checkpoint whose job counts it,
+  * one read of a residue within the driver's local-finish bound, and
+  * contraction rounds while the residue exceeds it) that otherwise
+  * run strictly one-after-another during DataFrame construction — each a
   * multi-stage job whose short stages leave most cores idle. A
   * thread pool sized to the artifact count lets each job's tasks
   * back-fill executors freed by the others' straggler tails (FIFO
